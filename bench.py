@@ -341,10 +341,11 @@ def main() -> None:
     timings_min: dict[str, float] = {}
     timings_spread: dict[str, float] = {}
     batch_mode = "subprocess"
-    for _bname, bnames in batches:
+    for bname, bnames in batches:
         if not bnames:
             continue
         part: dict = {}
+        out = None
         try:
             env = dict(os.environ, SPARK_GRAFT_BATCH=",".join(bnames))
             out = subprocess.run(
@@ -352,10 +353,15 @@ def main() -> None:
                 env=env, capture_output=True, text=True, timeout=3600,
             )
             part = json.loads(out.stdout.strip().splitlines()[-1])
-        except Exception:
+        except Exception as exc:
             # inline fallback keeps the bench alive if subprocess
             # spawning fails for any environmental reason; the stamp
-            # below makes the degraded isolation visible
+            # below makes the degraded isolation visible, and the
+            # cause goes to stderr
+            print(f"bench: {bname} batch subprocess failed ({exc!r}); "
+                  "running it inline", file=sys.stderr)
+            if out is not None and out.stderr:
+                print(out.stderr, file=sys.stderr)
             batch_mode = "inline"
             part = time_queries(bnames)
         timings.update(part["timings"])

@@ -242,8 +242,10 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from xenoeye_spark.pyworker import use_daemon
+
     spark = (
-        SparkSession.builder.master(args.master)
+        use_daemon(SparkSession.builder).master(args.master)
         .appName("xe_curate")
         .config("spark.sql.shuffle.partitions", "32")
         .getOrCreate()

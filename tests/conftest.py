@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 from xenoeye_spark.protobuf_compat import ensure_protobuf
+from xenoeye_spark.pyworker import use_daemon
 
 # Must run BEFORE the JVM launches: transformWithState spawns python
 # workers whose PYTHONPATH is frozen from the driver env at JVM start —
@@ -15,8 +16,10 @@ ensure_protobuf()
 
 @pytest.fixture(scope="session")
 def spark():
+    # the production worker path (get_spark): workers keep the
+    # pyspark.zip directory cache instead of re-reading it per task
     s = (
-        SparkSession.builder.master("local[4]")
+        use_daemon(SparkSession.builder).master("local[4]")
         .appName("xenoeye-spark-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")

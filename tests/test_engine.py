@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import glob
 import os
+import time
+from datetime import datetime
 
 from pyspark.sql import functions as F
 
@@ -481,3 +483,67 @@ def test_engine_rejects_tws_precombine(spark, tmp_path):
     stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
     with pytest.raises(ValueError, match="apply-backend knob"):
         eng.builders(stream)
+
+
+def test_engine_idle_mavg_query_is_paced(spark, tmp_path):
+    """A started mavg query with the silent-key watch (its
+    ProcessingTimeTimeout makes Spark schedule no-data batches) runs at
+    most about one batch per second once its input is consumed, instead
+    of running no-data batches back to back."""
+    root = tmp_path / "modir"
+    mo = root / "border"
+    mo.mkdir(parents=True)
+    (mo / "mo.conf").write_text("""
+{
+  "filter": "proto 6",
+  "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 10,
+             "overlimit": [ {"name": "hi", "default": [0.5]} ]} ]
+}
+""")
+    src_dir = tmp_path / "flows"
+    df = spark.createDataFrame(
+        _flows_rows(),
+        "ts long, ip4_src_addr long, ip4_dst_addr long, in_bytes long, "
+        "protocol long, l4_dst_port long",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.coalesce(1).write.parquet(str(src_dir))
+
+    eng = Engine(
+        str(root),
+        exp_dir=str(tmp_path / "exp"),
+        state_dir=str(tmp_path / "state"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+        run_scripts=False,
+    )
+    stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
+    # one state partition keeps a no-data batch well under a second, so
+    # back-to-back batches would show as starts < 1 s apart
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        [q] = eng.start(stream)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+
+    def starts():
+        return [
+            datetime.fromisoformat(p["timestamp"].replace("Z", "+00:00"))
+            for p in (q.recentProgress or [])
+        ]
+
+    try:
+        deadline = time.monotonic() + 120
+        while len(starts()) < 2 and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert starts(), q.exception()
+        # let the trigger settle after the input batch, then watch
+        time.sleep(2)
+        n0 = len(starts())
+        time.sleep(5)
+        assert q.isActive, q.exception()
+        idle = starts()[n0:]
+        assert len(idle) >= 3
+        gaps = [(b - a).total_seconds() for a, b in zip(idle, idle[1:])]
+        assert min(gaps) >= 0.9, gaps
+    finally:
+        eng.stop([q])

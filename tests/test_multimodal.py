@@ -359,6 +359,41 @@ def test_image_hash_neardup_banding_exact(spark):
         image_hash_neardup(hashes, radius=4)
 
 
+def test_image_hash_neardup_duplicate_ids(spark):
+    """Dirty input: an id repeated under one hash and listed under two
+    near hashes is never paired with itself, and each pair comes out
+    once per distinct (id, hash) combination — the all-pairs filter
+    over the distinct rows, as a multiset."""
+    from xenoeye_spark.datapipe.multimodal import image_hash_neardup
+
+    hi, lo = 0x12345678, 0x0F0F0F00
+    rows = [
+        (1, hi, lo), (1, hi, lo),        # the same row twice
+        (2, hi, lo),                     # shares id 1's hash
+        (1, hi, lo ^ 1),                 # id 1 again, 1 bit away
+        (3, hi, lo ^ 3), (5, hi, lo ^ 7),
+        (4, hi ^ 0xF0F0, lo),            # 8 bits away from everyone
+    ]
+    hashes = spark.createDataFrame(
+        rows, "media_id long, dhash_hi long, dhash_lo long")
+    out = image_hash_neardup(hashes, radius=3)
+    try:
+        got = sorted((r.id_a, r.id_b, r.hamming) for r in out.collect())
+    finally:
+        out._xe_cached.unpersist()
+    distinct = sorted(set(rows))
+    want = sorted(
+        (a[0], b[0], bin(a[1] ^ b[1]).count("1")
+         + bin(a[2] ^ b[2]).count("1"))
+        for a in distinct for b in distinct
+        if a[0] < b[0]
+        and bin(a[1] ^ b[1]).count("1") + bin(a[2] ^ b[2]).count("1") <= 3
+    )
+    assert all(a < b for a, b, _ in got)
+    assert got == want
+    assert (1, 2, 0) in got and (1, 2, 1) in got
+
+
 def test_audio_fingerprint_twin_and_neardup(spark):
     """The pinned envelope-gradient fingerprint matches a literal
     python twin; a slightly-perturbed clip (one sample nudged) stays

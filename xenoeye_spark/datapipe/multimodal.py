@@ -356,7 +356,19 @@ def image_hash_neardup(
     two 32-bit halves). At a planted-dup corpus the candidate set is
     O(dups); on pathological skew (65k+ images sharing one block —
     e.g. flat-color images all hashing to 0) the block bucket grows
-    quadratically, the same documented skew gate as LSH banding."""
+    quadratically, the same documented skew gate as LSH banding.
+
+    Duplicate ids: an id is never paired with itself. Rows repeating
+    an (id, hash) count once; an id listed under two different hashes
+    pairs once per (hash, hash) combination, each row with its own
+    hamming distance.
+
+    The per-hash groups are persisted (``MEMORY_AND_DISK``) so the
+    upstream hash lineage runs once. The returned frame carries that
+    table as ``result._xe_cached``; a caller in a long-lived session
+    calls ``result._xe_cached.unpersist()`` once it has consumed the
+    result (after its last action on it). Nothing unpersists it
+    otherwise; a session that ends frees it with the session."""
     if radius > 3:
         raise ValueError(
             f"radius {radius} > 3 breaks the 4-band pigeonhole "
@@ -388,19 +400,18 @@ def image_hash_neardup(
         F.col(id_col).alias("_id"), F.col(hi_col).alias("_hi"),
         F.col(lo_col).alias("_lo"),
     ).filter(F.col("_hi").isNotNull() & F.col("_lo").isNotNull())
+    # an id listed twice under one hash is one image: collect_set keeps
+    # it once, so no (x, x) pair and no repeated pair comes out
     groups = (
         base.groupBy("_hi", "_lo")
-        .agg(
-            F.sort_array(F.collect_list("_id")).alias("_ids"),
-            F.count(F.lit(1)).alias("_n"),
-        )
+        .agg(F.sort_array(F.collect_set("_id")).alias("_ids"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # same-hash pairs: ids sorted, so (ids[i], ids[j>i]) is already
-    # (id_a < id_b); the tail-slice explode streams the pairs out of
-    # the Generate without materializing the quadratic set in memory
+    # same-hash pairs: ids sorted and distinct, so (ids[i], ids[j>i]) is
+    # already (id_a < id_b); the tail-slice explode streams the pairs
+    # out of the Generate without materializing the quadratic set
     intra = (
-        groups.filter(F.col("_n") >= 2)
+        groups.filter(F.size("_ids") >= 2)
         .select(F.posexplode("_ids").alias("_i", "id_a"), "_ids")
         .select(
             "id_a",
@@ -455,6 +466,8 @@ def image_hash_neardup(
             F.explode("_ids_a").alias("_xa"), "_ids_b", "hamming"
         )
         .select("_xa", F.explode("_ids_b").alias("_xb"), "hamming")
+        # an id listed under two near hashes would pair with itself
+        .filter(F.col("_xa") != F.col("_xb"))
         .select(
             F.least("_xa", "_xb").alias("id_a"),
             F.greatest("_xa", "_xb").alias("id_b"),

@@ -237,6 +237,12 @@ class Engine:
                     w = (
                         alerts.writeStream.foreachBatch(sink.process_batch)
                         .outputMode("append").queryName(qname)
+                        # the silent-key watch's ProcessingTimeTimeout
+                        # makes the default ASAP trigger run no-data
+                        # batches back to back; its tick is >= 1 s
+                        # (make_mavg_state_fn), so pacing at 1 s delays
+                        # no timeout
+                        .trigger(processingTime="1 second")
                     )
                     ck = self._ckpt(qname)
                     return w.option("checkpointLocation", ck) if ck else w

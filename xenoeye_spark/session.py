@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from xenoeye_spark.pyworker import use_daemon
+
 
 def get_spark(app_name: str = "xenoeye-spark", shuffle_partitions: int | None = None) -> SparkSession:
     # transformWithState needs google.protobuf in driver AND workers; the
@@ -28,8 +30,12 @@ def get_spark(app_name: str = "xenoeye-spark", shuffle_partitions: int | None = 
         os.environ.setdefault(var, "1")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+    # workers fork from a daemon that keeps zipimport's directory cache
+    # for the pyspark.zip they import from: CPython 3.10/3.11 re-read it
+    # once per zipimporter on every task otherwise (pyworker.py)
+    builder = use_daemon(SparkSession.builder)
     return (
-        SparkSession.builder.master(f"local[{cpus}]")
+        builder.master(f"local[{cpus}]")
         .appName(app_name)
         # local[N] runs executor threads inside the driver JVM; give it
         # headroom over the 1g default for broadcasts + collects, but keep
