@@ -3,15 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
-from xenoeye_spark.protobuf_compat import ensure_protobuf
 from xenoeye_spark.pyworker import use_daemon
-
-# Must run BEFORE the JVM launches: transformWithState spawns python
-# workers whose PYTHONPATH is frozen from the driver env at JVM start —
-# set here so the vendored protobuf reaches them no matter which test
-# subset runs (a module-level call in test_mavg_tws only covers runs
-# that collect that file).
-ensure_protobuf()
 
 
 @pytest.fixture(scope="session")
@@ -47,34 +39,25 @@ _SLOW_TESTS = {
     "test_semdedup_split_never_groups_a_mega_cell",
     "test_bucketed_silent_key_goes_back_to_norm",
     "test_apply_silent_key_goes_back_to_norm",
-    "test_tws_silent_key_goes_back_to_norm",
     "test_match_bucketed_equals_match_expr",
     "test_cms_watch_stream_matches_batch",
     "test_kmv_distinct_stream_matches_batch",
     "test_bottomk_sample_stream_matches_stratified",
     "test_heavy_hitters_stream_mg_guarantees",
-    "test_mavg_idle_state_ttl",
     "test_kmv_stream_lateness_is_window_deterministic",
     "test_mavg_bucketed_idle_purge",
-    "test_mavg_precombine_matches_replay_events",
     "test_match_bucketed6_equals_match_expr6_50k",
-    "test_tws_state_continuity_matches_oracle",
     "test_hist_quantile_stream_matches_python_twin",
     "test_mavg_bucketed_equivalent_to_per_key",
     "test_mavg_limits_df_equivalent_to_dict",
     "test_curate_end_to_end",
     "test_hll_bloom_scale_smoke_500k",
-    "test_mavg_precombine_collapses_flows_to_keys",
-    "test_mavg_precombine_rate_continuity",
-    "test_mavg_precombine_under_grace",
     "test_session_window_agg_closes_sessions",
     "test_connected_components_chain_and_blobs",
     "test_asof_enrich_stream_matches_batch",
     "test_heavy_hitters_stream_null_items_excluded",
     "test_sessionize_stream_matches_batch",
     "test_sessionize_stream_late_event_does_not_rewind_frontier",
-    "test_engine_mavg_tws_backend",
-    "test_mavg_precombine_state_machine",
     "test_heavy_hitters_stream_weighted",
     "test_bottomk_sample_stream_hash_collision_keeps_both",
     "test_curate_raw_crawl_full_chain",
@@ -88,7 +71,6 @@ _SLOW_TESTS = {
     "test_vocab_and_kmv_1m_tokens",
     "test_incremental_dedup_stream_matches_batch",
     "test_url_dedup_streaming_composition",
-    "test_mavg_precombine_limits_df",
     "test_dedup_stream_suppresses_duplicates",
     "test_mixture_order_rank_col_feeds_shard_writer",
     "test_semantic_dedup_mega_cell_guard",

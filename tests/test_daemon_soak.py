@@ -22,8 +22,6 @@ import subprocess
 import sys
 import time
 
-import pytest
-
 from tests.test_sources import build_v5
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -62,8 +60,7 @@ def _send_v5(port: int, srcs: list[int], n: int = 3) -> None:
     sock.close()
 
 
-def _spawn_daemon(conf: str, state: str, exp: str,
-                  backend: str = "apply") -> subprocess.Popen:
+def _spawn_daemon(conf: str, state: str, exp: str) -> subprocess.Popen:
     env = dict(
         os.environ,
         PYTHONPATH=REPO,
@@ -72,7 +69,7 @@ def _spawn_daemon(conf: str, state: str, exp: str,
     )
     return subprocess.Popen(
         [sys.executable, "-m", "xenoeye_spark", "-c", conf,
-         "--state", state, "--exp", exp, "--mavg-backend", backend],
+         "--state", state, "--exp", exp],
         cwd=REPO, env=env, start_new_session=True,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
@@ -93,14 +90,11 @@ def _sql_shas(exp: str) -> dict[str, str]:
     }
 
 
-@pytest.mark.parametrize("backend", ["apply", "tws"])
-def test_daemon_kill9_restart_no_duplicate_exports_or_alerts(tmp_path, backend):
-    """Both stateful backends must survive the kill: 'apply' restores
-    applyInPandasWithState state from the HDFS-backed store, 'tws'
-    restores transformWithStateInPandas state from RocksDB — same
-    no-duplicate contract either way. (Flow ts is the bridge's wall-clock
-    recv_ts and back2norm is 3600s, so the restart gap cannot GONE-clear
-    the alarm and re-fire NEW.)"""
+def test_daemon_kill9_restart_no_duplicate_exports_or_alerts(tmp_path):
+    """The bucketed mavg state survives the kill: the restart restores
+    it from the HDFS-backed state store, so no alert fires twice. (Flow
+    ts is the bridge's wall-clock recv_ts and back2norm is 3600s, so the
+    restart gap cannot GONE-clear the alarm and re-fire NEW.)"""
     port = _free_udp_port()
     state = str(tmp_path / "state")
     exp = str(tmp_path / "exp")
@@ -137,7 +131,7 @@ def test_daemon_kill9_restart_no_duplicate_exports_or_alerts(tmp_path, backend):
     key1, key2 = 0x0A000001, 0x0A000002
 
     # ---- run 1: feed key1 until the NEW alert and an export exist ----
-    proc = _spawn_daemon(str(conf), state, exp, backend)
+    proc = _spawn_daemon(str(conf), state, exp)
     try:
         _wait_for(
             lambda: (_send_v5(port, [key1]) or _sql_shas(exp)),
@@ -162,7 +156,7 @@ def test_daemon_kill9_restart_no_duplicate_exports_or_alerts(tmp_path, backend):
     assert os.path.exists(notif)
 
     # ---- run 2: same state dir; key1 keeps breaching, key2 is new ----
-    proc = _spawn_daemon(str(conf), state, exp, backend)
+    proc = _spawn_daemon(str(conf), state, exp)
     try:
         _wait_for(
             lambda: (_send_v5(port, [key1, key2]) or

@@ -282,73 +282,9 @@ def test_engine_exact_mfreq_standing_query(spark, tmp_path):
     assert "1554" not in approx_sql and "777" not in approx_sql
 
 
-def test_engine_mavg_tws_backend(spark, tmp_path):
-    """Engine(mavg_backend='tws') runs the mavg levels through
-    transformWithStateInPandas (the reference's signature feature on the
-    Spark 4 stateful API): both breaching keys raise NEW notifications,
-    and then — because the flows' timestamps are far in the past relative
-    to the wall clock the timers run on — the timer-driven silent-key
-    decay clears BOTH alerts (GONE unlinks the files) with no further
-    input, the exact act-thread behavior the apply path needs its
-    silent-watch helper for."""
-    import time
-
-    root = tmp_path / "modir"
-    mo_sub = root / "border"
-    mo_sub.mkdir(parents=True)
-    (mo_sub / "mo.conf").write_text("""
-{
-  "filter": "proto 6",
-  "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 10,
-             "overlimit": [ {"name": "hi", "default": [0.5],
-                             "back2norm-time": 1} ]} ]
-}
-""")
-    src_dir = tmp_path / "flows"
-    df = spark.createDataFrame(
-        _flows_rows(),
-        "ts long, ip4_src_addr long, ip4_dst_addr long, in_bytes long, "
-        "protocol long, l4_dst_port long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.coalesce(1).write.parquet(str(src_dir))
-
-    eng = Engine(
-        str(root),
-        exp_dir=str(tmp_path / "exp"),
-        state_dir=str(tmp_path / "state"),
-        run_scripts=False,
-        mavg_backend="tws",
-    )
-    stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
-    builders = eng.builders(stream)
-    assert [n for n, _ in builders] == ["border.mavg.m1.octets.hi"]
-    [q] = [make().trigger(availableNow=True).start() for _, make in builders]
-
-    expected = {f"border-m1-hi-{0x0A000001}", f"border-m1-hi-{0x0A000002}"}
-    notif_dir = tmp_path / "state" / "notifications"
-
-    def _wait(cond, what, timeout=120):
-        t0 = time.monotonic()
-        while time.monotonic() - t0 < timeout:
-            if cond():
-                return
-            time.sleep(1)
-        raise AssertionError(f"timed out waiting for {what}")
-
-    try:
-        _wait(lambda: notif_dir.is_dir()
-              and expected <= set(os.listdir(notif_dir)),
-              "NEW notifications for both breaching keys")
-        _wait(lambda: not (set(os.listdir(notif_dir)) & expected),
-              "timer-driven GONE to clear both alerts")
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-
 def test_engine_mavg_bucketed_knobs_e2e(spark, tmp_path):
-    """r8: mo.conf "buckets"/"precombine" reach the apply backend and the
-    pipeline still produces the same alert notifications end to end."""
+    """r8: mo.conf "buckets" reaches the mavg state op and the pipeline
+    still produces the same alert notifications end to end."""
     root = tmp_path / "modir"
     mo = root / "border"
     mo.mkdir(parents=True)
@@ -356,7 +292,7 @@ def test_engine_mavg_bucketed_knobs_e2e(spark, tmp_path):
 {
   "filter": "proto 6",
   "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 10,
-             "buckets": 8, "precombine": true,
+             "buckets": 8,
              "overlimit": [ {"name": "hi", "default": [0.5]} ]} ]
 }
 """)
@@ -393,9 +329,11 @@ def test_engine_mavg_bucketed_knobs_e2e(spark, tmp_path):
 
 def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
     """r9: "buckets": "auto" resolves to 8x the session's cores at
-    stream-build time and reaches mavg_alert_stream as that int; a
-    non-int non-auto value is refused at parse time (a typo silently
-    running per-key would defeat the knob)."""
+    stream-build time (in mavg_alert_stream, the one place the rule
+    lives: the config passes None); a non-int non-auto value is refused
+    at parse time (a typo must not silently resize the state layout)."""
+    import re
+
     import pytest as _pytest
 
     import xenoeye_spark.engine as engmod
@@ -407,7 +345,7 @@ def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
         )
     assert MavgConfig.from_dict(
         {"name": "m", "fields": ["octets"], "buckets": "auto"}
-    ).buckets == "auto"
+    ).buckets is None
 
     root = tmp_path / "modir"
     mo = root / "border"
@@ -421,11 +359,13 @@ def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
 }
 """)
     seen: dict = {}
+    built: list = []
     real = engmod.mavg_alert_stream
 
     def spy(*a, **kw):
         seen.update(kw)
-        return real(*a, **kw)
+        built.append(real(*a, **kw))
+        return built[-1]
 
     monkeypatch.setattr(engmod, "mavg_alert_stream", spy)
 
@@ -444,45 +384,12 @@ def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
     )
     stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
     eng.builders(stream)  # builds the plan; the spy sees the kwargs
+    assert seen.get("buckets") is None
     expect = 8 * max(1, spark.sparkContext.defaultParallelism)
-    assert seen.get("buckets") == expect
-
-
-def test_engine_rejects_tws_precombine(spark, tmp_path):
-    """r11: the tws JVM-fold precombine was deleted (measured adverse
-    twice — SCALE.md §Round-11); 'precombine' is an apply-backend knob
-    and wiring it to the tws backend must raise at build time, not
-    silently run per-event."""
-    import pytest
-
-    root = tmp_path / "modir"
-    mo_sub = root / "border"
-    mo_sub.mkdir(parents=True)
-    (mo_sub / "mo.conf").write_text("""
-{
-  "filter": "proto 6",
-  "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 10,
-             "precombine": true,
-             "overlimit": [ {"name": "hi", "default": [0.5]} ]} ]
-}
-""")
-    src_dir = tmp_path / "flows"
-    df = spark.createDataFrame(
-        _flows_rows(),
-        "ts long, ip4_src_addr long, ip4_dst_addr long, in_bytes long, "
-        "protocol long, l4_dst_port long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.coalesce(1).write.parquet(str(src_dir))
-    eng = Engine(
-        str(root),
-        exp_dir=str(tmp_path / "exp"),
-        state_dir=str(tmp_path / "state"),
-        run_scripts=False,
-        mavg_backend="tws",
-    )
-    stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
-    with pytest.raises(ValueError, match="apply-backend knob"):
-        eng.builders(stream)
+    [alerts] = built
+    plan = alerts._jdf.queryExecution().analyzed().toString()
+    got = re.findall(r"pmod\(xxhash64\([^)]*\), (?:cast\()?(\d+)", plan)
+    assert got == [str(expect)], plan
 
 
 def test_engine_idle_mavg_query_is_paced(spark, tmp_path):

@@ -125,3 +125,66 @@ def test_geodb_dir_separate_tries(tmp_path):
     eng = cfg.build_engine(exp_dir=str(tmp_path / "e"),
                            state_dir=str(tmp_path / "s"))
     assert eng.ctx.geo_fn is not None
+
+
+def test_daemon_exits_nonzero_when_a_query_dies(spark, tmp_path, capsys,
+                                                monkeypatch):
+    """One standing query whose sink raises on its first batch must end
+    the daemon while the other query is still healthy: main() stops the
+    rest, reports the dead query's name and error on stderr and returns
+    1, instead of polling on while any query is alive."""
+    import threading
+
+    from tests.test_sources import build_v5
+    from xenoeye_spark import __main__ as daemon
+    from xenoeye_spark.streaming.act import AlertActionSink
+
+    mo = tmp_path / "mo" / "edge"
+    mo.mkdir(parents=True)
+    (mo / "mo.conf").write_text("""
+{
+  "filter": "proto 6",
+  "fwm": [ {"name": "f1", "fields": ["octets desc", "src host"],
+            "time": 2, "limit": 5} ],
+  "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 2,
+             "overlimit": [ {"name": "hi", "default": [0.5]} ]} ]
+}
+""")
+    conf = tmp_path / "xenoeye.conf"
+    conf.write_text('{"mo-dir": "%s", "db-type": "pg"}' % (tmp_path / "mo"))
+    spool = tmp_path / "spool"
+    pkt = build_v5([{"src": 0x0A000001, "dst": 0x0B000001, "pkts": 2,
+                     "octets": 100, "sport": 1111, "dport": 80,
+                     "proto": 6}])
+    spark.createDataFrame(
+        [(bytearray(pkt), 0x7F000001)], "data binary, dev_ip long"
+    ).selectExpr("data", "dev_ip", "current_timestamp() AS recv_ts") \
+        .coalesce(1).write.parquet(str(spool))
+
+    def broken_sink(self, df, epoch_id):
+        raise RuntimeError("alert sink broke")
+
+    monkeypatch.setattr(AlertActionSink, "process_batch", broken_sink)
+    result: dict = {}
+    before = {q.id for q in spark.streams.active}
+
+    def serve():
+        result["rc"] = daemon.main([
+            "-c", str(conf), "--spool", str(spool),
+            "--state", str(tmp_path / "state"), "--exp", str(tmp_path / "exp"),
+        ])
+
+    th = threading.Thread(target=serve, daemon=True)
+    th.start()
+    try:
+        th.join(timeout=180)
+        assert not th.is_alive(), "daemon kept running past a dead query"
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
+        th.join(timeout=60)
+    assert result.get("rc") == 1
+    err = capsys.readouterr().err
+    assert "edge.mavg.m1.octets.hi" in err and "alert sink broke" in err
+    assert not [q for q in spark.streams.active if q.id not in before]

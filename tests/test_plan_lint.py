@@ -287,3 +287,50 @@ def test_no_tokenizer_reinlined_into_filters(plans):
         if hits:
             bad[name] = hits[0]
     assert not bad, f"tokenizer re-inlined into Filter: {bad}"
+
+
+# ------------------------------- nondeterministic pandas-UDF pins (r13)
+
+def test_similarity_udfs_evaluate_once_per_side(spark):
+    """The four similarity pandas UDFs marked asNondeterministic
+    (_bucket_udf, ivf_topk's assign_cell, pq_encode's and ivfpq_encode's
+    encode) feed joins whose implied isnotnull the optimizer would push
+    below the projection, duplicating the ArrowEvalPython node so the
+    matmul runs twice per side (or a consumer's filter on the UDF's
+    column does). Pin exactly one ArrowEvalPython per side of each plan:
+    lsh_bucket_topk buckets both the corpus and the query side; the
+    other three encode only the corpus side (queries are collected to
+    the driver or broadcast raw)."""
+    import re
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from xenoeye_spark.datapipe import similarity as sim
+
+    dim = 8
+    rng = np.random.RandomState(5)
+    vecs = rng.randn(40, dim)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.filter("vec_id < 3")
+    cent = vecs[:4]
+    codebook = rng.randn(2, 4, dim // 2)
+
+    def evals(df, udf_name):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(rf"ArrowEvalPython \[{udf_name}\(", plan))
+
+    assert evals(sim.lsh_bucket_topk(corpus, queries, dim, k=2,
+                                     n_planes=4), "buckets") == 2
+    assert evals(sim.ivf_topk(corpus, queries, k=2, n_cells=4,
+                              centroids=cent), "assign_cell") == 1
+    assert evals(sim.pq_topk(corpus, queries, codebook, k=2),
+                 "encode") == 1
+    # pq_topk never filters on codes; a consumer's null-filter does
+    codes = sim.pq_encode(corpus, codebook)
+    assert evals(codes.filter(F.col("codes").isNotNull()), "encode") == 1
+    assert evals(sim.ivfpq_topk(corpus, queries, cent, codebook, k=2,
+                                n_probe=2), "encode") == 1

@@ -542,18 +542,6 @@ def test_pcap_replay_idempotent_across_restarts(spark, tmp_path):
     assert len(list(spool.glob("*.parquet"))) == n1
 
 
-def test_protobuf_wrong_major_not_ok(monkeypatch):
-    import types
-
-    from xenoeye_spark import protobuf_compat as pc
-
-    fake = types.SimpleNamespace(__version__="5.29.0")
-    import sys as _sys
-    monkeypatch.setitem(_sys.modules, "google.protobuf", fake)
-    monkeypatch.setitem(_sys.modules, "google", types.SimpleNamespace(protobuf=fake))
-    assert pc._runtime_ok() is False
-
-
 def test_dump_flows_stream_file_sink(spark, tmp_path):
     from pyspark.sql import types as T
 

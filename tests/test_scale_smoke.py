@@ -442,17 +442,12 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     """The reference's signature load is the EWMA state machine at
     carrier key counts (monit-objects-mavg.c:776-885 exists precisely
     because state outgrows memory). 120k distinct keys through
-    mavg_alert_stream in one micro-batch: state rows track the key
-    count exactly (nothing collapses to the driver), idle-TTL
-    compaction then removes every idle key on the next run
-    (try_reset_db parity), and per-key limits arrive via the map-side
-    limits_df join — the at-scale path past the ~1e6 closure-dict
-    bound (SURVEY §7.3).
-
-    Measured (prototype, local[4]): ~2.7k keys/s/4-cores through the
-    applyInPandasWithState state protocol — the smoke is sized to keep
-    suite time sane; the 500k-key run was verified once and behaves
-    identically (500000 -> 1 state rows after TTL).
+    mavg_alert_stream's default layout in one micro-batch: every key
+    lands in one of the 8 x cores bucket rows (nothing collapses to the
+    driver), idle-TTL compaction then removes every idle key on the
+    next run (try_reset_db parity), and per-key limits arrive via the
+    map-side limits_df join — the at-scale path past the ~1e6
+    closure-dict bound (SURVEY §7.3).
     """
     import glob as g
     import os
@@ -547,7 +542,8 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     with_input = [p for p in prog if p.get("numInputRows", 0) > 0]
     assert with_input, "no input-carrying micro-batch completed"
     so = with_input[-1]["stateOperators"][0]
-    assert so["numRowsTotal"] == n_keys
+    # 120k keys fill every bucket: one state row per bucket
+    assert so["numRowsTotal"] == 8 * spark.sparkContext.defaultParallelism
     # exactly one alarm: key 7 breached ITS OWN joined limit
     assert [(r["k"], r["event"]) for r in events] == [(7, "NEW")]
     assert events[0]["threshold"] == pytest.approx(0.05)
@@ -565,9 +561,9 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     events2: list = []
     prog = run_retry(events2)
     assert prog
-    # TTL compaction: the 120k idle keys are gone (with
-    # silent_watch=False the timeout branch removes every timed-out
-    # key, alarmed or not); at most the new key's state remains. The
+    # TTL compaction: the idle keys are gone and their buckets with them
+    # (with silent_watch=False nothing walks key 7's alarm, so its
+    # bucket stays); at most that bucket and the new key's remain. The
     # removal batch may land before or after the input-carrying one, so
     # take the smallest observed footprint of the run.
     total = min(p["stateOperators"][0]["numRowsTotal"] for p in prog)
@@ -616,93 +612,6 @@ def test_substring_dedup_50k_docs_boilerplate(spark):
     # span is at most footer + (L-1) boundary chars
     assert agg["chars_cut"] <= 4_999 * per_doc
     assert agg["chars_cut"] >= 4_999 * len(footer)
-
-
-def test_mavg_precombine_collapses_flows_to_keys(spark):
-    """r8: the reference's signature workload is flows >> keys (DDoS
-    detection: millions of flows over thousands of dst keys,
-    monit-objects-mavg.c:571-593). Under precombine the state op's
-    input is ONE folded row per (key, micro-batch) — asserted exactly
-    here on 200k flows over 2k keys — so the Python state protocol
-    pays O(keys), not O(flows). Event output equality vs the per-event
-    path is asserted on the same stream; wall-clock for both paths is
-    printed (recorded in SCALE.md §Round-8)."""
-    import glob as g
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from xenoeye_spark.streaming.mavg_stream import (
-        mavg_alert_stream, precombine_events,
-    )
-
-    n_keys, per_key = 2_000, 100
-    base = 1_700_000_000
-    flows = spark.range(n_keys * per_key).select(
-        (F.col("id") % n_keys).alias("k"),
-        (F.lit(float(base)) + (F.col("id") / n_keys))
-        .cast("timestamp").alias("ts"),
-        F.when(F.col("k") == 13, 1000.0).otherwise(0.001).alias("v"),
-    )
-
-    # O(keys) contract, asserted in batch mode on the same transform the
-    # stream uses: one folded row per key, all flows accounted for
-    prepped = flows.select(
-        "k",
-        (F.unix_micros(F.col("ts")) * F.lit(1000)).alias("_ts_ns"),
-        F.col("v").cast("double").alias("_val"),
-    )
-    folded = precombine_events(prepped, ["k"], int(10e9))
-    agg = folded.agg(
-        F.count("*").alias("rows"), F.sum("pk").alias("flows")
-    ).collect()[0]
-    assert agg["rows"] == n_keys
-    assert agg["flows"] == n_keys * per_key
-    # plan shape: the fold (MapInPandas) runs AFTER the key repartition
-    # (order-sensitive fold needs key-contiguous partitions) and before
-    # anything else — the stateful op downstream re-shuffles only the
-    # folded O(keys) rows
-    plan = folded._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert plan.index("MapInPandas") < plan.index("hashpartitioning(k")
-
-    src = tempfile.mkdtemp(prefix="mavg_pc_src_")
-    d = tempfile.mkdtemp(prefix="mavg_pc_stage_")
-    flows.write.parquet(d, mode="overwrite")
-    for i, f in enumerate(g.glob(os.path.join(d, "*.parquet"))):
-        shutil.copy(f, os.path.join(src, f"b0_{i}.parquet"))
-
-    def run(precombine):
-        ckpt = tempfile.mkdtemp(prefix="mavg_pc_ckpt_")
-        events: list = []
-        stream = (
-            spark.readStream.schema("k long, ts timestamp, v double")
-            .parquet(src)
-        )
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=50.0,
-            silent_watch=False, precombine=precombine,
-        )
-        t0 = time.time()
-        q = (
-            alerts.writeStream
-            .foreachBatch(lambda df, e: events.extend(df.collect()))
-            .option("checkpointLocation", ckpt).outputMode("append")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(600)
-        return time.time() - t0, sorted(
-            (r["k"], r["event"], r["ts_ns"]) for r in events
-        )
-
-    t_pe, ev_pe = run(False)
-    t_pc, ev_pc = run(True)
-    # key 13 bursts past its limit; everyone else stays silent
-    assert ev_pc == ev_pe
-    assert [e[:2] for e in ev_pc] == [(13, "NEW")]
-    print(f"\nmavg 200k flows/2k keys: per-event {t_pe:.2f}s, "
-          f"precombine {t_pc:.2f}s")
 
 
 def test_mavg_bucketed_high_cardinality(spark):

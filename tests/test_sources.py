@@ -469,21 +469,6 @@ def test_kafka_framing_fixture(spark, tmp_path):
     assert rows[333]["dev_ip"] == 0            # null key -> fallback
 
 
-def test_tws_constraint_loudly_asserted(spark, monkeypatch):
-    """When python-protobuf is absent the transformWithState twin must
-    fail with a clear message pointing at the tested equivalent, not an
-    obscure runtime error mid-query. Simulated by forcing the compat
-    probe to report no runtime (this container vendors one, so the happy
-    path executes in test_mavg_tws)."""
-    from xenoeye_spark import protobuf_compat
-    from xenoeye_spark.streaming.mavg_tws import mavg_alert_stream_tws
-
-    monkeypatch.setattr(protobuf_compat, "ensure_protobuf", lambda: False)
-    df = spark.createDataFrame([("k", 1.7e9, 1.0)], "k string, ts double, v double")
-    with pytest.raises(RuntimeError, match="protobuf.*applyInPandasWithState"):
-        mavg_alert_stream_tws(df, ["k"], "v", window_sec=10, threshold=1.0)
-
-
 def test_template_journal_restart_persistence(spark, tmp_path):
     """Templates survive a daemon restart (netflow-templates.c parity):
     run 1 sees a template-bearing v9 packet and journals it; run 2

@@ -56,6 +56,55 @@ def _run_stream_over_dirs(spark, dirs, build_query, out_rows, timeout=120):
     return out_rows
 
 
+
+def _await_input_processed(q, time_mod, deadline_sec=120, settle_sec=8):
+    """Wait until this run has COMPLETED a micro-batch that actually
+    read rows (recentProgress carries numInputRows per batch), then a
+    bounded settle window for timer-driven emissions. Fixed waits
+    flaked on loaded hosts where the first micro-batch had not even
+    started; polling for ROWS instead would burn the deadline on
+    batches that legitimately emit nothing."""
+    deadline = time_mod.time() + deadline_sec
+    while time_mod.time() < deadline:
+        try:
+            if any(
+                (p or {}).get("numInputRows", 0) > 0
+                for p in (q.recentProgress or [])
+            ):
+                break
+        except Exception:
+            pass
+        q.awaitTermination(1)
+    q.awaitTermination(settle_sec)
+
+
+def _run_batches(spark, dirs, build_query, out_rows, sleep_between=0.0,
+                 timeout=8):
+    """availableNow drain per batch dir. Armed processing-time timeouts
+    keep an availableNow query alive (the silent-key watch keeps
+    scheduling batches), so each run waits a bounded ``timeout`` for the
+    timer-driven emissions and then stops the query explicitly."""
+    import shutil, tempfile
+
+    stage = tempfile.mkdtemp(prefix="timer_src_")
+    ckpt = tempfile.mkdtemp(prefix="timer_ckpt_")
+    for d in dirs:
+        for f in glob.glob(os.path.join(d, "*.parquet")):
+            shutil.copy(f, os.path.join(stage, os.path.basename(d) + "_" + os.path.basename(f)))
+        stream = (
+            spark.readStream.schema(FLOW_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+        )
+        q = build_query(stream, ckpt, out_rows)
+        _await_input_processed(q, time, settle_sec=timeout)
+        q.stop()
+        q.awaitTermination(60)
+        if sleep_between:
+            time.sleep(sleep_between)
+    return out_rows
+
+
 BASE = 1_700_000_000
 
 
@@ -282,59 +331,6 @@ def test_classification_feedback_loop(spark, tmp_path):
     b3 = spark.createDataFrame([(6, 1)], "proto long, octets long")
     loop.process_batch(b3, 3)
     assert stamped_by_epoch[3][6] == "all-tcp"
-
-
-def test_mavg_idle_state_ttl(spark, tmp_path):
-    """Idle keys drop state after idle_timeout_sec (try_reset_db parity):
-    a key silent across the TTL restarts its EWMA from scratch."""
-    b1 = [("k1", float(BASE + i), 100.0) for i in range(5)]
-    b2 = [("k1", float(BASE + 1000), 7.0)]
-    dirs = _write_batches(spark, str(tmp_path / "src"), [b1, b2])
-
-    collected = []
-
-    def build(stream, ckpt, out):
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=0.0,
-            idle_timeout_sec=1, silent_watch=False,
-        )
-
-        def sink(df, epoch):
-            out.extend(df.collect())
-
-        return (
-            alerts.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-
-    import time as time_mod
-    import glob as g, shutil, tempfile
-    stage = tempfile.mkdtemp(prefix="ttl_src_")
-    ckpt = tempfile.mkdtemp(prefix="ttl_ckpt_")
-    for i, d in enumerate(dirs):
-        for f in g.glob(os.path.join(d, "*.parquet")):
-            shutil.copy(f, os.path.join(stage, f"b{i}_" + os.path.basename(f)))
-        stream = (
-            spark.readStream.schema(FLOW_SCHEMA)
-            .option("maxFilesPerTrigger", "1").parquet(stage)
-        )
-        q = build(stream, ckpt, collected)
-        # armed TTL timers keep the availableNow run scheduling batches
-        # forever; wait until THIS batch's input was actually processed
-        # (a fixed 6s wait flaked on loaded hosts where the first
-        # micro-batch hadn't even started), then a settle window for
-        # the 1s TTL timer, then stop explicitly
-        from tests.test_mavg_tws import _await_input_processed
-        _await_input_processed(q, time_mod, settle_sec=6)
-        q.stop()
-        q.awaitTermination(60)
-        time_mod.sleep(2)  # let the TTL elapse between runs
-    # batch 2's single value arrives 1000s later: with live state the EWMA
-    # would reset to V anyway (dt >= T), so assert on rate directly — and
-    # crucially the query still runs with timeouts enabled
-    final = max(collected, key=lambda r: r["ts_ns"])
-    assert final["rate"] == pytest.approx(7.0 / 10, rel=1e-6)
 
 
 def test_fwm_event_time_watermark(spark, tmp_path):
@@ -1516,7 +1512,7 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
 
 def test_mavg_limits_dict_bound_guard(spark, monkeypatch):
     """r7: a thresholds dict past LIMITS_DICT_MAX rides the pickled
-    closure into every task — both backends refuse it and point at the
+    closure into every task — the stream refuses it and points at the
     map-side limits_df join (SURVEY §7.3)."""
     from xenoeye_spark.streaming import mavg_stream
 
@@ -1527,10 +1523,6 @@ def test_mavg_limits_dict_bound_guard(spark, monkeypatch):
     big = {(f"k{i}",): 1.0 for i in range(11)}
     with pytest.raises(ValueError, match="limits_df"):
         mavg_alert_stream(flows, ["k"], "v", 10, 1.0, thresholds=big)
-    from xenoeye_spark.streaming.mavg_tws import mavg_alert_stream_tws
-
-    with pytest.raises(ValueError, match="limits_df"):
-        mavg_alert_stream_tws(flows, ["k"], "v", 10, 1.0, thresholds=big)
 
 
 def test_mavg_limits_df_equivalent_to_dict(spark, tmp_path):
@@ -1580,8 +1572,8 @@ def test_mavg_limits_df_equivalent_to_dict(spark, tmp_path):
 
 def test_mavg_limits_df_rejects_duplicate_keys(spark):
     """r7 review fix: a duplicated limits_df key would multiply its
-    flow rows through the left join and double-count the EWMA — both
-    backends refuse at stream-build time."""
+    flow rows through the left join and double-count the EWMA — the
+    stream refuses it at build time."""
     flows = spark.createDataFrame(
         [("k1", float(BASE), 1.0)], "k string, ts double, v double"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
@@ -1590,322 +1582,41 @@ def test_mavg_limits_df_rejects_duplicate_keys(spark):
     )
     with pytest.raises(ValueError, match="duplicate key"):
         mavg_alert_stream(flows, ["k"], "v", 10, 1.0, limits_df=dup)
-    from xenoeye_spark.streaming.mavg_tws import mavg_alert_stream_tws
-
-    with pytest.raises(ValueError, match="duplicate key"):
-        mavg_alert_stream_tws(flows, ["k"], "v", 10, 1.0, limits_df=dup)
 
 
-# ---------------------------------------------------------------------------
-# r8: mavg map-side pre-combine (one folded row per key per micro-batch)
-# ---------------------------------------------------------------------------
+def _per_key_reference(batches, window_sec, threshold, back2norm_sec):
+    """Plain-Python mavg reference: each micro-batch's rows grouped by
+    key, replayed in time order through replay_rows with every key's
+    state carried to the next batch (one state per key, no buckets).
+    Returns the events as (k, event, ts_ns, rate)."""
+    from xenoeye_spark.streaming.mavg_stream import S_NONE, replay_rows
 
-
-def _seq_compose(a_seg, b_seg):
-    """Sequential affine composition twin (left-to-right, like the
-    per-event fold): returns (A, B) with n_end = A*n_1 + B."""
-    A, B = 1.0, 0.0
-    for aj, bj in zip(a_seg, b_seg):
-        A, B = aj * A, aj * B + bj
-    return A, B
-
-
-def test_affine_scan_matches_sequential():
-    """The segmented Hillis-Steele scan composes the same affine maps as
-    the sequential fold — tree-regrouped FP, so ~1e-12 relative, and the
-    composite applied to a base agrees with the per-event ewma_step
-    replay at the same tolerance. Resets (a=0) segment naturally."""
-    from xenoeye_spark.streaming.mavg_stream import (
-        _segmented_affine_scan, ewma_step,
-    )
-
-    rng = np.random.RandomState(11)
-    W = int(10e9)
-    n = 500
-    # three segments, one containing a hard reset (dt >= W -> a = 0)
-    heads = np.zeros(n, bool)
-    heads[[0, 180, 390]] = True
-    dt = rng.randint(1, int(3e9), size=n)
-    dt[250] = W + 5  # intra-segment reset
-    ts = np.cumsum(dt)
-    v = rng.uniform(1, 100, size=n)
-    a = np.where(dt >= W, 0.0, 1.0 - dt / np.float64(W))
-    b = v.copy()
-    a[heads] = 1.0
-    b[heads] = 0.0
-    A, B = _segmented_affine_scan(a, b, heads)
-    starts = np.flatnonzero(heads)
-    bounds = list(starts) + [n]
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        A_seq, B_seq = _seq_compose(a[s + 1:e], b[s + 1:e])
-        assert A[e - 1] == pytest.approx(A_seq, rel=1e-12, abs=1e-300)
-        assert B[e - 1] == pytest.approx(B_seq, rel=1e-12)
-        # applying the composite == replaying every event via ewma_step
-        n1 = float(v[s])
-        n_ref, tprev = n1, int(ts[s])
-        for i in range(s + 1, e):
-            n_ref = ewma_step(n_ref, tprev, int(ts[i]), float(v[i]), W)
-            tprev = int(ts[i])
-        assert A[e - 1] * n1 + B[e - 1] == pytest.approx(n_ref, rel=1e-11)
-
-
-def test_fold_sorted_reset_candidates_are_exact():
-    """Under the reset variant (n_1 = v1) the pr/vr sample points ARE the
-    true extrema of the per-event series: the state-fn formula
-    pA*n_1 + pB at those indices reproduces the scan's own values bit
-    for bit (same multiply/add on the same doubles)."""
-    from xenoeye_spark.streaming.mavg_stream import fold_sorted
-
-    rng = np.random.RandomState(7)
-    W = int(10e9)
-    rows = []
-    for k in ("a", "b", "c"):
-        t = BASE * 10**9
-        for _ in range(200):
-            t += int(rng.randint(1, int(4e9)))
-            rows.append((k, t, float(rng.uniform(0, 50))))
-    pdf = (
-        __import__("pandas")
-        .DataFrame(rows, columns=["k", "_ts_ns", "_val"])
-        .sort_values(["k", "_ts_ns", "_val"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    out = fold_sorted(pdf, ["k"], W)
-    assert len(out) == 3 and out["pk"].sum() == len(pdf)
-    from xenoeye_spark.streaming.mavg_stream import ewma_step
-
-    for r in out.itertuples(index=False):
-        grp = pdf[pdf["k"] == r.k]
-        # per-event series under a fresh start
-        series, n, tprev = [], None, None
-        for t, v in zip(grp["_ts_ns"], grp["_val"]):
-            n = float(v) if tprev is None else ewma_step(n, tprev, int(t), float(v), W)
-            tprev = int(t)
-            series.append(n)
-        n1 = float(grp["_val"].iloc[0])
-        peak = r.pApr * n1 + r.pBpr
-        valley = r.pAvr * n1 + r.pBvr
-        assert peak == pytest.approx(max(series), rel=1e-11)
-        assert valley == pytest.approx(min(series), rel=1e-11)
-        assert r.pA * n1 + r.pB == pytest.approx(series[-1], rel=1e-11)
-
-
-def test_mavg_precombine_one_row_per_key(spark):
-    """The state op's input under precombine is O(keys): one folded row
-    per key per batch regardless of event count."""
-    from xenoeye_spark.streaming.mavg_stream import precombine_events
-
-    rows = [
-        (f"k{i % 50}", float(BASE + j), float(i % 7 + 1))
-        for i in range(50)
-        for j in range(40)
-    ]
-    df = spark.createDataFrame(rows, "k string, ts double, v double")
-    prepped = df.select(
-        "k",
-        (F.col("ts").cast("timestamp").cast("double") * F.lit(1e9))
-        .cast("long").alias("_ts_ns"),
-        F.col("v").cast("double").alias("_val"),
-    )
-    folded = precombine_events(prepped, ["k"], int(10e9)).toPandas()
-    assert len(folded) == 50
-    assert folded["pk"].sum() == 2000
-
-
-def test_mavg_precombine_state_machine(spark, tmp_path):
-    """Pre-combined path walks NEW -> GONE like the per-event path."""
-    burst = [("k1", float(BASE + i), 1000.0) for i in range(10)]
-    quiet = [("k1", float(BASE + 100 + i * 10), 0.001) for i in range(10)]
-    dirs = _write_batches(spark, str(tmp_path / "src"), [burst, quiet])
-
-    collected = []
-
-    def build(stream, ckpt, out):
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=50.0,
-            back2norm_sec=20, silent_watch=False, precombine=True,
-        )
-
-        def sink(df, epoch):
-            out.extend(df.collect())
-
-        return (
-            alerts.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-
-    _run_stream_over_dirs(spark, dirs, build, collected)
-    events = [r["event"] for r in sorted(collected, key=lambda r: r["ts_ns"])]
-    assert events[0] == "NEW"
-    assert "GONE" in events
-    assert events.index("NEW") < events.index("GONE")
-
-
-def test_mavg_precombine_rate_continuity(spark, tmp_path):
-    """EWMA continuity across micro-batches under precombine: the last
-    emitted rate matches the scalar per-event oracle over all rows to
-    composite-FP tolerance."""
-    rng = np.random.RandomState(3)
-    all_rows = []
-    t = BASE
-    for _ in range(40):
-        t += int(rng.randint(1, 5))
-        all_rows.append(("k1", float(t), float(rng.randint(50, 150))))
-    batches = [all_rows[:20], all_rows[20:]]
-    dirs = _write_batches(spark, str(tmp_path / "src"), batches)
-
-    collected = []
-
-    def build(stream, ckpt, out):
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=30, threshold=0.0,
-            back2norm_sec=5, silent_watch=False, precombine=True,
-        )
-
-        def sink(df, epoch):
-            out.extend(df.collect())
-
-        return (
-            alerts.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-
-    _run_stream_over_dirs(spark, dirs, build, collected)
-    assert collected, "no alert rows emitted"
-    final = max(collected, key=lambda r: r["ts_ns"])
-    ts_ns = np.array([int(r[1] * 1e9) for r in all_rows], dtype=np.int64)
-    vals = np.array([r[2] for r in all_rows])
-    n_exp, _ = ewma_replay_py(ts_ns, vals, int(30e9))
-    assert final["rate"] == pytest.approx(n_exp / 30, rel=1e-9)
-
-
-def test_mavg_precombine_matches_replay_events(spark, tmp_path):
-    """Batch-equivalence vs the per-event path on a two-key scenario
-    whose transitions land on batch boundaries (where batch-granular ==
-    per-event semantics): identical (key, event, ts_ns) streams, rates
-    equal to composite-FP tolerance, NEW rates bit-equal (they resolve
-    at the batch's first event, where both paths compute v1/W)."""
-    W, TH, GRACE = 10, 50.0, 20
-    batches = [
-        # kA bursts (NEW at first event); kB idles
-        [("kA", float(BASE + i), 1000.0) for i in range(5)]
-        + [("kB", float(BASE + i), 1.0) for i in range(5)],
-        # kA: two below events spanning the grace -> GONE at the last
-        # event in BOTH paths; kB bursts -> NEW (dt >= W resets, so the
-        # rate is concrete in both paths)
-        [("kA", float(BASE + 20), 0.001), ("kA", float(BASE + 41), 0.001)]
-        + [("kB", float(BASE + 20), 1000.0), ("kB", float(BASE + 21), 1000.0)],
-        # kA re-bursts after GONE -> a second NEW; kB: below pair
-        # spanning the grace -> GONE
-        [("kA", float(BASE + 60), 1000.0)]
-        + [("kB", float(BASE + 60), 0.001), ("kB", float(BASE + 85), 0.001)],
-    ]
-    dirs = _write_batches(spark, str(tmp_path / "src"), batches)
-
-    def run(precombine):
-        collected = []
-
-        def build(stream, ckpt, out):
-            alerts = mavg_alert_stream(
-                stream, ["k"], "v", window_sec=W, threshold=TH,
-                back2norm_sec=GRACE, silent_watch=False,
-                precombine=precombine,
+    state: dict = {}
+    events = []
+    for rows in batches:
+        by_key: dict = {}
+        for k, ts, v in rows:
+            by_key.setdefault(k, []).append((int(ts * 1e9), v))
+        for k, kr in by_key.items():
+            kr.sort()
+            st, ev = replay_rows(
+                state.get(k, (0.0, None, S_NONE, None, None)),
+                [t for t, _ in kr], [v for _, v in kr], (k,), threshold,
+                window_sec, int(window_sec * 1e9), int(back2norm_sec * 1e9),
+                False,
             )
-
-            def sink(df, epoch):
-                out.extend(df.collect())
-
-            return (
-                alerts.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-
-        _run_stream_over_dirs(spark, dirs, build, collected)
-        return sorted(
-            [(r["k"], r["event"], r["ts_ns"], r["rate"]) for r in collected],
-            key=lambda x: (x[2], x[0], x[1]),
-        )
-
-    per_event = run(False)
-    pre = run(True)
-    assert [x[:3] for x in pre] == [x[:3] for x in per_event]
-    for (_, ev, _, r_pc), (_, _, _, r_pe) in zip(pre, per_event):
-        assert r_pc == pytest.approx(r_pe, rel=1e-9)
-        if ev == "NEW":
-            assert r_pc == r_pe  # resolves at the batch's first event
-
-
-def test_mavg_precombine_under_grace(spark, tmp_path):
-    """under=True with precombine: drop detected, never during the
-    key's first window (grace, under.c:298-303)."""
-    high = [("k1", float(BASE + i), 100.0) for i in range(0, 40, 2)]
-    low = [("k1", float(BASE + 60 + i * 5), 0.01) for i in range(10)]
-    dirs = _write_batches(spark, str(tmp_path / "src"), [high, low])
-
-    collected = []
-
-    def build(stream, ckpt, out):
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=10.0,
-            back2norm_sec=1000, under=True, silent_watch=False,
-            precombine=True,
-        )
-
-        def sink(df, epoch):
-            out.extend(df.collect())
-
-        return (
-            alerts.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-
-    _run_stream_over_dirs(spark, dirs, build, collected)
-    news = [r for r in collected if r["event"] == "NEW"]
-    assert news, "traffic drop not detected"
-    assert news[0]["ts_ns"] >= int((BASE + 60) * 1e9)
-    assert all(r["ts_ns"] >= int((BASE + 10) * 1e9) for r in news)
-
-
-def test_mavg_precombine_limits_df(spark, tmp_path):
-    """The map-side-joined per-key limit rides the folded row."""
-    burst = [("k1", float(BASE + i), 1000.0) for i in range(10)]
-    dirs = _write_batches(spark, str(tmp_path / "src"), [burst])
-    lim_df = spark.createDataFrame([("k1", 50.0)], "k string, limit double")
-
-    collected = []
-
-    def build(stream, ckpt, out):
-        alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=1e18,
-            back2norm_sec=20, silent_watch=False, precombine=True,
-            limits_df=lim_df,
-        )
-
-        def sink(df, epoch):
-            out.extend(df.collect())
-
-        return (
-            alerts.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-
-    _run_stream_over_dirs(spark, dirs, build, collected)
-    assert collected and collected[0]["event"] == "NEW"
-    assert all(r["threshold"] == 50.0 for r in collected)
+            state[k] = st
+            events.extend(ev)
+    return sorted((k, e, t, rate) for k, e, rate, _lim, t in events)
 
 
 def test_mavg_bucketed_equivalent_to_per_key(spark, tmp_path):
     """r8: bucketed state (one pickled {key: state} dict per hash
     bucket — the reference's per-thread-trie layout) replays the exact
-    event sequence of the per-key layout across micro-batches,
-    including GONE on a later batch; the raw-row bucketed path shares
-    replay_rows with the per-key path, so rates are bit-equal. The
-    precombined bucketed path matches to composite-FP tolerance."""
+    event sequence of a per-key replay across micro-batches, including
+    GONE on a later batch: every key's rates are bit-equal to the
+    plain-Python per-key reference whether all keys share one bucket
+    or spread over four."""
     burst = (
         [("k1", float(BASE + i), 1000.0) for i in range(10)]
         + [("k2", float(BASE + i), 0.001) for i in range(10)]
@@ -1940,19 +1651,12 @@ def test_mavg_bucketed_equivalent_to_per_key(spark, tmp_path):
             (r["k"], r["event"], r["ts_ns"], r["rate"]) for r in collected
         )
 
-    per_key = run()
-    bucketed = run(buckets=4)
-    assert bucketed == per_key          # same replay core -> bit-equal
-    # precombined bucketed: same per-key event SEQUENCES; the quiet
-    # batch spans the grace period, so GONE's timestamp legitimately
-    # moves to the batch end (documented batch granularity)
-    pc_bucketed = run(buckets=4, precombine=True)
-    assert sorted((k, e) for k, e, *_ in pc_bucketed) == sorted(
-        (k, e) for k, e, *_ in per_key
-    )
-    evs = [(k, e) for k, e, *_ in per_key]
+    want = _per_key_reference([burst, quiet], 10, 50.0, 20)
+    evs = [(k, e) for k, e, *_ in want]
     assert ("k1", "NEW") in evs and ("k1", "GONE") in evs
     assert ("k3", "NEW") in evs and ("k2", "NEW") not in evs
+    assert run(buckets=1) == want       # same replay core -> bit-equal
+    assert run(buckets=4) == want
 
 
 def test_mavg_bucketed_limits_df_and_validation(spark, tmp_path):
@@ -1992,78 +1696,30 @@ def test_mavg_bucketed_limits_df_and_validation(spark, tmp_path):
 
 
 def test_mavg_config_bucket_knobs(spark, tmp_path):
-    """r8: mo.conf mavg sections accept "buckets"/"precombine" and the
-    engine passes them to the apply backend (the per-thread-trie
-    analogue of the reference's mem-m cap)."""
+    """mo.conf mavg sections accept "buckets" (the per-thread-trie
+    analogue of the reference's mem-m cap); the removed "precombine"
+    key fails at load instead of being silently ignored."""
     from xenoeye_spark.config.mo import MavgConfig
 
     mc = MavgConfig.from_dict({
         "name": "m1", "fields": ["octets", "src host"],
-        "time": 10, "buckets": 64, "precombine": True,
+        "time": 10, "buckets": 64,
     })
-    assert mc.buckets == 64 and mc.precombine is True
+    assert mc.buckets == 64
     assert MavgConfig.from_dict(
         {"name": "m2", "fields": ["octets"]}
     ).buckets is None
-
-
-def test_affine_scan_property():
-    """Property (hypothesis): for arbitrary event streams — any gaps
-    (including >= window resets and zero-dt ties), any nonnegative
-    values, any segment layout — the segmented scan's composites agree
-    with the sequential per-event fold to composite-FP tolerance, and
-    a full annihilation (a=0) makes the suffix exact regardless of the
-    base."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from xenoeye_spark.streaming.mavg_stream import (
-        _segmented_affine_scan, ewma_step,
-    )
-
-    W = int(10e9)
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=int(2.5e10)),  # dt
-                st.floats(min_value=0, max_value=1e6,
-                          allow_nan=False, allow_infinity=False),  # v
-            ),
-            min_size=1, max_size=120,
-        ),
-        st.floats(min_value=0, max_value=1e6, allow_nan=False),   # base
-    )
-    def check(events, base):
-        n = len(events)
-        dts = np.array([e[0] for e in events], dtype=np.int64)
-        vs = np.array([e[1] for e in events], dtype=np.float64)
-        heads = np.zeros(n, bool)
-        heads[0] = True
-        a = np.where(dts >= W, 0.0, 1.0 - dts / np.float64(W))
-        b = vs.copy()
-        a[0], b[0] = 1.0, 0.0
-        A, B = _segmented_affine_scan(a, b, heads)
-        # sequential replay from the base
-        ts = np.cumsum(np.maximum(dts, 0)) + 10**15
-        n_ref, tprev = float(base), int(ts[0])
-        for i in range(1, n):
-            n_ref = ewma_step(n_ref, tprev, int(ts[i]), float(vs[i]), W)
-            tprev = int(ts[i])
-        got = A[-1] * base + B[-1]
-        assert got == pytest.approx(n_ref, rel=1e-9, abs=1e-9)
-        if (a[1:] == 0.0).any():
-            assert A[-1] == 0.0  # annihilation: base-independent
-
-    check()
+    with pytest.raises(ValueError, match='"precombine" key was removed'):
+        MavgConfig.from_dict({
+            "name": "m3", "fields": ["octets"], "precombine": False,
+        })
 
 
 def test_mavg_bucketed_idle_purge(spark, tmp_path):
     """r8: bucketed try_reset_db parity — idle keys age out of the
     bucket table at the TTL tick, so a key silent past the TTL restarts
-    its EWMA from scratch (same observable as the per-key TTL test),
-    and the alarmed-key walk still reaches GONE from inside a bucket."""
+    its EWMA from scratch, and the alarmed-key walk still reaches GONE
+    from inside a bucket."""
     b1 = [("k1", float(BASE + i), 100.0) for i in range(5)]
     b2 = [("k1", float(BASE + 1000), 7.0)]
     dirs = _write_batches(spark, str(tmp_path / "src"), [b1, b2])
@@ -2100,7 +1756,6 @@ def test_mavg_bucketed_idle_purge(spark, tmp_path):
             .option("maxFilesPerTrigger", "1").parquet(stage)
         )
         q = build(stream, ckpt, collected)
-        from tests.test_mavg_tws import _await_input_processed
         _await_input_processed(q, time_mod, settle_sec=6)
         q.stop()
         q.awaitTermination(60)
@@ -2314,169 +1969,60 @@ def test_mavg_bucketed_rocksdb_restore(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
+def _silent_key_scenario(spark, tmp_path, stream_fn):
+    """A key that breaches then goes silent must emit GONE from the
+    timeout/data-path walk: later batches carry only a different key,
+    yet k1's alarm must clear once the synthetic decay has kept it below
+    limit past back2norm."""
+    hot = [("k1", float(BASE + i), 1000.0) for i in range(5)]
+    other = [("k2", float(BASE + 60), 1.0)]
+    dirs = _write_batches(spark, str(tmp_path / "src"), [hot, other,
+                                                         [("k2", float(BASE + 61), 1.0)]])
+
+    collected = []
+
+    def build(stream, ckpt, out):
+        alerts = stream_fn(
+            stream, ["k"], "v",
+            window_sec=2,        # EWMA decays to zero 2s after last flow
+            threshold=10.0,
+            back2norm_sec=1,
+        )
+
+        def sink(df, epoch):
+            out.extend(df.collect())
+
+        return (
+            alerts.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+
+    _run_batches(spark, dirs, build, collected, sleep_between=2.5)
+    by_key = {}
+    for r in collected:
+        by_key.setdefault(r["k"], []).append(r["event"])
+    assert "NEW" in by_key.get("k1", [])
+    assert "GONE" in by_key.get("k1", []), (
+        f"silent key never cleared: {by_key}"
+    )
+    # k2 stays quiet: tiny rate far below limit, no alarms
+    assert "NEW" not in by_key.get("k2", [])
+
+
+def test_apply_silent_key_goes_back_to_norm(spark, tmp_path):
+    """The silent-key scenario on the default layout (buckets=None:
+    8 x cores buckets, so k1 and k2 may or may not share one)."""
+    _silent_key_scenario(spark, tmp_path, mavg_alert_stream)
+
+
 def test_bucketed_silent_key_goes_back_to_norm(spark, tmp_path):
     """r9 e2e: the ADVICE scenario through a real stream — buckets=1 so
     k2's rows keep the single bucket busy every batch; silent k1 must
     still clear to GONE (data-path walk, since the group never times
     out while k2 flows)."""
-    from tests.test_mavg_tws import _silent_key_scenario
-
     def bucket_variant(stream, key_cols, val_col, **kw):
         kw.pop("timer_sec", None)
         return mavg_alert_stream(stream, key_cols, val_col, buckets=1, **kw)
 
     _silent_key_scenario(spark, tmp_path, bucket_variant)
-
-
-def test_precombine_step_properties():
-    """Property (hypothesis): for arbitrary single-key event streams cut
-    into arbitrary micro-batches, against the per-event replay:
-      P1 — the accumulator and t_prev after every batch agree to
-           composite-FP tolerance (always);
-      P2 — the pre-combined path never invents an alarm: it emits NEW
-           for a batch only if the per-event replay breached in that
-           batch (its peak candidates are exact sample points, hence a
-           LOWER bound on the true peak);
-      P3 — on rate-unambiguous batches (every event breaches or none
-           does — enforced by a >= window reset gap between batches, so
-           a cold batch cannot START breaching on the previous batch's
-           decayed accumulator) the event TYPE sequences are
-           identical."""
-    import pandas as pd
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from xenoeye_spark.streaming.mavg_stream import (
-        S_NEW, S_NONE, fold_sorted, precombine_step, replay_rows,
-    )
-
-    W_SEC, W_NS = 10, int(10e9)
-    GRACE_NS = int(20e9)
-    LIMIT = 50.0
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        st.lists(                          # batches of (dt_sec, hot?)
-            st.lists(
-                st.tuples(
-                    st.integers(min_value=1, max_value=30),
-                    st.booleans(),
-                ),
-                min_size=1, max_size=12,
-            ),
-            min_size=1, max_size=5,
-        ),
-        st.booleans(),                     # unambiguous mode for P3
-    )
-    def check(batches, unambiguous):
-        t = 1_700_000_000 * 10**9
-        st_replay = (0.0, None, S_NONE, None, None)
-        st_pc = (0.0, None, S_NONE, None, None)
-        ev_replay_types, ev_pc_types = [], []
-        pc_new_batches, replay_breach_batches = set(), set()
-        for bi, batch in enumerate(batches):
-            if unambiguous:
-                hot_all = batch[0][1]
-                batch = [(dt, hot_all) for dt, _ in batch]
-            rows = []
-            for j, (dt_sec, hot) in enumerate(batch):
-                if unambiguous and j == 0:
-                    dt_sec += 31  # >= window gap: batch starts reset,
-                    # so its rates are its own (and >= grace, so GONE
-                    # resolves at batch boundaries in both paths)
-                else:
-                    dt_sec = min(dt_sec, 9)  # no intra-batch resets
-                t += dt_sec * 10**9
-                # hot: rate far above limit; cold: far below
-                rows.append((t, 5000.0 if hot else 0.001))
-            ts = np.array([r[0] for r in rows], dtype=np.int64)
-            vs = np.array([r[1] for r in rows], dtype=np.float64)
-            new_r, ev_r = replay_rows(
-                st_replay, ts, vs, ("k",), LIMIT, W_SEC, W_NS, GRACE_NS,
-                False,
-            )
-            # breach detection for P2: replay the rates directly
-            n, tp = st_replay[0], st_replay[1]
-            breached = False
-            from xenoeye_spark.streaming.mavg_stream import ewma_step
-            for tt, vv in zip(ts, vs):
-                n = ewma_step(n, tp, int(tt), float(vv), W_NS)
-                tp = int(tt)
-                if n / W_SEC >= LIMIT:
-                    breached = True
-            if breached:
-                replay_breach_batches.add(bi)
-            st_replay = new_r
-            ev_replay_types.extend(e[1] for e in ev_r)
-
-            pdf = pd.DataFrame(
-                {"k": "k", "_ts_ns": ts, "_val": vs}
-            )
-            folded = fold_sorted(pdf, ["k"], W_NS)
-            assert len(folded) == 1
-            r = next(folded.itertuples(index=False))
-            new_pc, ev_pc = precombine_step(
-                st_pc, r, ("k",), LIMIT, W_SEC, W_NS, GRACE_NS, False,
-            )
-            ev_pc = list(ev_pc)
-            # the state fn's steady-refresh clause (replay_rows embeds
-            # the same rule)
-            if new_pc[2] in (S_NEW, "UPDATE") and not ev_pc:
-                ev_pc.append(
-                    ("k", "UPDATE", new_pc[0] / W_SEC, LIMIT, new_pc[1])
-                )
-            if any(e[1] == S_NEW for e in ev_pc):
-                pc_new_batches.add(bi)
-            st_pc = new_pc
-            ev_pc_types.extend(e[1] for e in ev_pc)
-
-            # P1
-            assert st_pc[1] == st_replay[1]
-            assert st_pc[0] == pytest.approx(
-                st_replay[0], rel=1e-9, abs=1e-12
-            )
-        # P2
-        assert pc_new_batches <= replay_breach_batches
-        # P3
-        if unambiguous:
-            # replay's per-batch trailing UPDATE refresh is emitted by
-            # both paths; compare full type sequences
-            assert ev_pc_types == ev_replay_types
-
-    check()
-
-
-def test_precombine_step_grace_closed_then_rebreach():
-    """r8 review fix: state ALMOST_GONE, then one batch whose first
-    event is below the limit and past the grace period, followed by a
-    re-attack — the per-event replay emits GONE then NEW; the
-    pre-combined step must too (previously the whole cycle collapsed
-    into a silent UPDATE and the action scripts never ran)."""
-    import pandas as pd
-
-    from xenoeye_spark.streaming.mavg_stream import (
-        S_ALMOST_GONE, fold_sorted, precombine_step, replay_rows,
-    )
-
-    W_SEC, W_NS, GRACE_NS = 10, int(10e9), int(20e9)
-    LIMIT = 50.0
-    t0 = 1_700_000_000 * 10**9
-    # state: alarmed, dipped at t0 (below_since=t0), value decayed low
-    st = (1.0, t0, S_ALMOST_GONE, t0, t0 - 10**9)
-    # batch arrives 25s later (silence > grace): quiet first, then burst
-    ts = np.array([t0 + int(25e9), t0 + int(26e9), t0 + int(27e9)],
-                  dtype=np.int64)
-    vs = np.array([0.001, 5000.0, 5000.0])
-    _, ev_replay = replay_rows(st, ts, vs, ("k",), LIMIT, W_SEC, W_NS,
-                               GRACE_NS, False)
-    assert [e[1] for e in ev_replay] == ["GONE", "NEW"]
-
-    pdf = pd.DataFrame({"k": "k", "_ts_ns": ts, "_val": vs})
-    r = next(fold_sorted(pdf, ["k"], W_NS).itertuples(index=False))
-    new_st, ev_pc = precombine_step(st, r, ("k",), LIMIT, W_SEC, W_NS,
-                                    GRACE_NS, False)
-    assert [e[1] for e in ev_pc] == ["GONE", "NEW"]
-    # GONE resolves at the batch's first event with its exact rate
-    assert ev_pc[0][4] == int(ts[0])
-    assert ev_pc[0][2] == ev_replay[0][2]
-    assert new_st[2] == "NEW"

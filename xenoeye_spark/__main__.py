@@ -12,6 +12,10 @@ Options:
     --state DIR        state dir (notifications, ext gates)
     --exp DIR          SQL export dir
     --dry-run          print the planned queries and exit (no sources)
+
+The daemon runs until a standing query ends or it is interrupted; then
+it stops the rest. Exit status 1 if a query died with an error (each
+one's name and exception go to stderr), else 0.
 """
 
 from __future__ import annotations
@@ -113,19 +117,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--exact-mfreq", action="store_true",
                     help="per-trigger frequency tables for mfreq() in "
                          "MO filters (default: min2 approximation)")
-    ap.add_argument("--mavg-backend", choices=("apply", "tws"),
-                    default="apply",
-                    help="mavg stateful operator: applyInPandasWithState "
-                         "(default) or transformWithStateInPandas (native "
-                         "timers + state TTL; needs python-protobuf)")
     args = ap.parse_args(argv)
 
     from xenoeye_spark.config.main import XenoeyeConfig
 
     cfg = XenoeyeConfig.from_file(args.config)
     eng = cfg.build_engine(exp_dir=args.exp, state_dir=args.state,
-                           exact_mfreq=args.exact_mfreq,
-                           mavg_backend=args.mavg_backend)
+                           exact_mfreq=args.exact_mfreq)
 
     if args.dry_run:
         # plan without a live source: a memory-schema stream stand-in
@@ -240,17 +238,34 @@ def main(argv: list[str] | None = None) -> int:
         threading.Thread(target=_export_loop, daemon=True).start()
     print(f"{len(queries)} standing queries running", file=sys.stderr)
     try:
-        while any(q.isActive for q in queries):
+        # one ended query ends the daemon: the rest would keep running
+        # with a silent gap where the dead one's exports/alerts were
+        while all(q.isActive for q in queries):
             time.sleep(1)
     except KeyboardInterrupt:
         pass
     finally:
+        # look before stopping the rest: only a query that ended on its
+        # own counts as dead
+        rc = report_dead_queries(queries)
         if stop_export is not None:
             stop_export.set()
         eng.stop(queries)
         for b in bridges:
             b.stop()
-    return 0
+    return rc
+
+
+def report_dead_queries(queries) -> int:
+    """Print each query that ended with an exception (name and error) to
+    stderr; the daemon's exit status: 1 if any did, else 0."""
+    rc = 0
+    for q in queries:
+        err = q.exception()
+        if err is not None:
+            print(f"standing query {q.name!r} died: {err}", file=sys.stderr)
+            rc = 1
+    return rc
 
 
 if __name__ == "__main__":

@@ -51,16 +51,16 @@ def parse_jsonc(text: str) -> dict:
     return json.loads(stripped)
 
 
-def _parse_buckets(v) -> int | str | None:
-    """mavg "buckets": an int, the string "auto" (resolved to ~8x the
-    session's cores at stream-build time), or absent. Anything else is a
-    config error — a typo silently running per-key would defeat the one
-    knob that makes carrier-scale mavg viable."""
+def _parse_buckets(v) -> int | None:
+    """mavg "buckets": an int, or "auto"/absent for the default (~8x the
+    session's cores, resolved by mavg_alert_stream at stream-build
+    time). Anything else is a config error — a typo must not silently
+    change the state layout's sizing."""
     if v is None:
         return None
     if isinstance(v, str):
         if v.strip().lower() == "auto":
-            return "auto"
+            return None
         if not v.strip().lstrip("+-").isdigit():
             raise ValueError(
                 f'mavg "buckets" must be an int or "auto", got {v!r}'
@@ -100,17 +100,10 @@ class MavgConfig:
     time: int = 5                      # monit-objects.h default window
     dump: int = 0
     mem_m: int = 256
-    # r8 scale knobs for the apply backend: "buckets" groups state by
-    # hash(key)%N (the per-thread-trie analogue of mem-m's trie cap),
-    # "precombine" folds each (key, batch) map-side before the state op.
-    # Both are APPLY-backend-only — the engine raises on backend='tws'
-    # (the tws JVM-fold twin was retired r11, SCALE.md §Round-11).
-    # r9: "buckets": "auto" sizes N at ~8x the session's cores at stream
-    # build time — the production default for any high-cardinality mavg
-    # (the per-key layout is the measured-worst at carrier scale,
-    # SCALE.md §Round-8/§Round-9)
-    buckets: int | str | None = None
-    precombine: bool = False
+    # "buckets" groups state by hash(key)%N (the per-thread-trie
+    # analogue of mem-m's trie cap); None ("auto" or absent) sizes N at
+    # ~8x the session's cores at stream-build time
+    buckets: int | None = None
     overlimit: list[OverlimitConfig] = field(default_factory=list)
     # traffic-drop levels, same shape as overlimit with inverted compare
     # (monit-objects-mavg-under.c, EXTRA.md:653-676)
@@ -118,6 +111,14 @@ class MavgConfig:
 
     @classmethod
     def from_dict(cls, d: dict) -> "MavgConfig":
+        if "precombine" in d:
+            # removed with the map-side fold: ignoring it would leave a
+            # config that reads as tuned but runs otherwise
+            raise ValueError(
+                f'mavg section {d.get("name", "mavg")!r}: the "precombine" '
+                "key was removed (mavg state is always bucketed raw "
+                "replay); delete it from the config"
+            )
         return cls(
             name=d.get("name", "mavg"),
             fields=[parse_field(s) for s in d["fields"]],
@@ -125,7 +126,6 @@ class MavgConfig:
             dump=int(d.get("dump", 0)),
             mem_m=int(d.get("mem-m", 256)),
             buckets=_parse_buckets(d.get("buckets")),
-            precombine=bool(d.get("precombine", False)),
             overlimit=[OverlimitConfig.from_dict(o) for o in d.get("overlimit", [])],
             underlimit=[OverlimitConfig.from_dict(o) for o in d.get("underlimit", [])],
         )

@@ -50,7 +50,6 @@ class Engine:
         run_scripts: bool = True,
         silent_watch: bool = True,
         exact_mfreq: bool = False,
-        mavg_backend: str = "apply",
     ):
         self.mos = load_mo_dir(mo_dir)
         self.mo_dir = mo_dir
@@ -75,13 +74,6 @@ class Engine:
         # filters keep the documented min2 approximation — they are
         # compiled once and shared across the whole query tree.
         self.exact_mfreq = exact_mfreq
-        # mavg_backend: "apply" = applyInPandasWithState (runs anywhere);
-        # "tws" = transformWithStateInPandas (Spark 4 API: native timers
-        # for silent keys + state TTL; needs python-protobuf — the
-        # vendored runtime via protobuf_compat covers this container)
-        if mavg_backend not in ("apply", "tws"):
-            raise ValueError(f"mavg_backend must be apply|tws, got {mavg_backend!r}")
-        self.mavg_backend = mavg_backend
         self.ext_gate = ExtGate(os.path.join(state_dir, "ext"))
 
     # -- MO tree -------------------------------------------------------------
@@ -162,64 +154,17 @@ class Engine:
                             f"section default {default}",
                             file=sys.stderr,
                         )
-                if self.mavg_backend == "tws":
-                    from xenoeye_spark.streaming.mavg_tws import (
-                        mavg_alert_stream_tws,
-                    )
-
-                    if mavg.buckets is not None:
-                        # silently running per-key would make the user
-                        # believe the scale knob is active (r8 review)
-                        raise ValueError(
-                            f"mavg section {mavg.name!r}: 'buckets' is "
-                            "an apply-backend knob; the tws backend "
-                            "keys state per flow key (use "
-                            "mavg_backend='apply' or drop the knob)"
-                        )
-                    if mavg.precombine:
-                        # the tws JVM fold was deleted r11 (measured
-                        # adverse twice — SCALE.md §Round-11); only the
-                        # apply backend has a precombine
-                        raise ValueError(
-                            f"mavg section {mavg.name!r}: 'precombine' "
-                            "is an apply-backend knob (the tws JVM "
-                            "fold was retired; use mavg_backend="
-                            "'apply' or drop the knob)"
-                        )
-                    # timers replace the apply-path's silent watch
-                    alerts = mavg_alert_stream_tws(
-                        proj, key_names, "_mval",
-                        window_sec=mavg.time,
-                        threshold=default,
-                        back2norm_sec=ol.back2norm_time,
-                        ts_col=ts_col,
-                        thresholds=per_key,
-                        under=under,
-                    )
-                else:
-                    buckets = mavg.buckets
-                    if buckets == "auto":
-                        # ~8x the session's cores: blobs stay a few
-                        # thousand keys at carrier cardinality while
-                        # every core gets bucket-groups to work on
-                        # (SCALE.md §Round-8 sizing rule)
-                        buckets = 8 * max(
-                            1,
-                            proj.sparkSession.sparkContext
-                            .defaultParallelism,
-                        )
-                    alerts = mavg_alert_stream(
-                        proj, key_names, "_mval",
-                        window_sec=mavg.time,
-                        threshold=default,
-                        back2norm_sec=ol.back2norm_time,
-                        ts_col=ts_col,
-                        thresholds=per_key,
-                        under=under,
-                        silent_watch=self.silent_watch,
-                        precombine=mavg.precombine,
-                        buckets=buckets,
-                    )
+                alerts = mavg_alert_stream(
+                    proj, key_names, "_mval",
+                    window_sec=mavg.time,
+                    threshold=default,
+                    back2norm_sec=ol.back2norm_time,
+                    ts_col=ts_col,
+                    thresholds=per_key,
+                    under=under,
+                    silent_watch=self.silent_watch,
+                    buckets=mavg.buckets,
+                )
                 sink = AlertActionSink(
                     mo_name=name.replace("/", "_"),
                     mavg_name=mavg.name,
@@ -240,7 +185,7 @@ class Engine:
                         # the silent-key watch's ProcessingTimeTimeout
                         # makes the default ASAP trigger run no-data
                         # batches back to back; its tick is >= 1 s
-                        # (make_mavg_state_fn), so pacing at 1 s delays
+                        # (make_mavg_bucket_fn), so pacing at 1 s delays
                         # no timeout
                         .trigger(processingTime="1 second")
                     )

@@ -15,7 +15,7 @@ vector fallback (monit-objects-mavg-limfile.c, CONFIG.md:438-469). Overlimit
 Spark shape: the recurrence is order-sensitive within a key, so batch replay
 uses applyInPandas per key with rows sorted by arrival time — numpy inside,
 Arrow transfer, keys processed data-parallel across executors. The streaming
-variant (transformWithState) lives in xenoeye_spark.streaming.
+variant lives in xenoeye_spark.streaming.mavg_stream.
 
 Scale: state per key is O(1) (one float + one timestamp per aggregable
 field); the shuffle is by key-tuple — same key cardinality the reference

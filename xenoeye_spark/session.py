@@ -14,12 +14,6 @@ from xenoeye_spark.pyworker import use_daemon
 
 
 def get_spark(app_name: str = "xenoeye-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    # transformWithState needs google.protobuf in driver AND workers; the
-    # compat helper adds the vendored runtime to PYTHONPATH, which must
-    # happen before the JVM launches (workers inherit it in local mode).
-    from xenoeye_spark.protobuf_compat import ensure_protobuf
-
-    ensure_protobuf()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # one BLAS thread per Python worker: Spark already runs one worker per
     # core, so letting numpy/OpenBLAS spawn its own thread pool in each of

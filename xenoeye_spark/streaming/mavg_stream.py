@@ -1,5 +1,5 @@
 """Streaming mavg — per-key EWMA + threshold alerting with
-``applyInPandasWithState``.
+``applyInPandasWithState`` over hash buckets of keys.
 
 Reference semantics reproduced (SURVEY.md §2.9):
 - decay update per flow (monit-objects-mavg.c:571-593):
@@ -11,16 +11,17 @@ Reference semantics reproduced (SURVEY.md §2.9):
 - silent keys decay synthetically between batches (act:391-397): the state
   carries (N, t_prev) so the next batch's first event applies the decay.
 
-Event ordering: the recurrence is order-sensitive, so each micro-batch
-group is sorted by timestamp before replay. State is per key-tuple —
-Spark shuffles each micro-batch by key, giving the same per-key ordering
-guarantees the reference gets from per-thread tries + merge, without the
-cross-thread race (SURVEY.md §7 risk register).
+Event ordering: the recurrence is order-sensitive, so each key's rows are
+sorted by timestamp before replay. Spark shuffles each micro-batch by the
+key's bucket, giving the same per-key ordering guarantees the reference
+gets from per-thread tries + merge, without the cross-thread race
+(SURVEY.md §7 risk register).
 
-Scale: state per key is O(1); Spark's state store partitions by key hash
-across executors — the direct analogue of the reference's 256MB/mavg cap,
-but horizontally scalable. Use state TTL (`GroupStateTimeout`) to drop
-idle keys like try_reset_db (monit-objects-mavg.c:776-885).
+Scale: one state row per bucket holds many keys, like the reference's
+per-thread tries; the state store partitions buckets across executors —
+the analogue of the reference's 256MB/mavg cap, but horizontally
+scalable. Idle keys age out at the watch tick like try_reset_db
+(monit-objects-mavg.c:776-885).
 """
 
 from __future__ import annotations
@@ -39,15 +40,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 S_NONE, S_NEW, S_UPDATE, S_ALMOST_GONE, S_GONE = (
     "NONE", "NEW", "UPDATE", "ALMOST_GONE", "GONE",
 )
-
-STATE_SCHEMA = T.StructType([
-    T.StructField("n", T.DoubleType()),          # EWMA accumulator
-    T.StructField("t_prev", T.LongType()),       # last update, unix ns
-    T.StructField("alarm", T.StringType()),      # NONE/NEW/UPDATE/ALMOST_GONE
-    T.StructField("below_since", T.LongType()),  # ns when rate first normal
-    T.StructField("first_seen", T.LongType()),   # ns of the key's first flow
-    T.StructField("limit", T.DoubleType()),      # resolved per-key limit
-])
 
 # Per-key limits as a closure dict ride the pickled task binary — fine
 # to ~1e6 keys (SURVEY §7.3), pathological past it (the dict is
@@ -80,9 +72,7 @@ def replay_rows(
 ) -> tuple[tuple, list[tuple]]:
     """Shared per-key replay: EWMA decay + alarm state machine over rows
     already sorted by time. ``st`` = (n, t_prev, alarm, below_since,
-    first_seen); returns (new_st, events). Used by both the
-    applyInPandasWithState and transformWithState operators so the
-    order-sensitive core has exactly one implementation."""
+    first_seen); returns (new_st, events)."""
     n, t_prev, alarm, below_since, first_seen = st
     events: list[tuple] = []
     for t, v in zip(ts_arr, val_arr):
@@ -152,24 +142,12 @@ def silent_transition(
     return (n, t_prev, S_ALMOST_GONE, below_since, first_seen), [], True
 
 
-def _pad_state(st: tuple) -> tuple:
-    """Pad a pre-r7 5-field state tuple (no persisted limit) to 6."""
-    return (*st, None) if len(st) == 5 else st
-
-
-def _first_notnull(series) -> float | None:
-    """First non-null of a pandas Series, else None (the map-side-joined
-    _limit column is constant per key, so 'first' is 'the value')."""
-    s = series.dropna()
-    return float(s.iloc[0]) if len(s) else None
-
-
 def resolve_limit(
     joined: float | None, stored: float | None, dict_limit: float
 ) -> float:
     """ONE definition of the per-key limit precedence (SURVEY §7.3):
     map-side-joined value > limit persisted in state > closure dict /
-    default. Used by every mavg state fn so the backends cannot drift."""
+    default."""
     if joined is not None:
         return float(joined)
     if stored is not None:
@@ -177,113 +155,51 @@ def resolve_limit(
     return dict_limit
 
 
-def _arm_timeout(
-    state: GroupState,
-    alarmed: bool,
-    silent_watch: bool,
-    watch_ms: int,
-    idle_timeout_sec: int | None,
-) -> None:
-    """Shared timeout arming: the alarmed-key act-thread watch wins;
-    otherwise the idle-compaction TTL if configured."""
-    if silent_watch and alarmed:
-        state.setTimeoutDuration(watch_ms)
-    elif idle_timeout_sec is not None:
-        state.setTimeoutDuration(idle_timeout_sec * 1000)
+def _time_now_ns() -> int:
+    import time
 
+    return time.time_ns()
 
 
 # ---------------------------------------------------------------------------
-# Map-side pre-combine (r8): collapse each (key, micro-batch) to ONE row
-# before the Python state protocol.
+# Bucketed state: amortize the per-GROUP state-protocol cost.
 #
-# The decay step  n <- a*n + v  with  a = max(0, 1 - dt/T)  is an AFFINE
-# map, and affine maps compose associatively:
-#     (a2, b2) o (a1, b1) = (a2*a1, a2*b1 + b2)
-# so the whole batch collapses to one composite (A, B) with
-# n_end = A*n_1 + B, where n_1 is the (state-dependent) value after the
-# key's FIRST event of the batch. Intra-batch resets (dt >= T -> a = 0)
-# need no special casing — a zero factor annihilates the left composite,
-# which is exactly the reset semantics.
-#
-# A JVM groupBy().agg() fold is NOT usable here: on a streaming frame it
-# would be an unbounded STREAMING aggregation (state forever per key),
-# not a per-batch collapse. The streaming-legal shape is the house
-# pattern (streaming/wutil.py): a stateless mapInPandas pre-combine —
-# here after repartition(key), with the (key, ts) sort INSIDE the
-# mapInPandas (sortWithinPartitions is also rejected on streams), so
-# every key is contiguous and time-ordered within one partition —
-# required because the fold is order-sensitive (partials of one key
-# from different partitions could interleave in time and cannot be
-# merged exactly). The fold
-# itself is a segmented Hillis-Steele scan over the affine monoid —
-# fully numpy-vectorized across ALL rows of an Arrow batch, no per-event
-# Python. Underflow of long composites to 0.0 is the mathematically
-# correct limit (same argument as operators/mavg.ewma_replay_vec).
-#
-# FP contract (house precedent: ewma_replay_vec): composing
-# (a2*a1, a2*b1+b2) REGROUPS the sequential  n - (dt/T)*n + v  fold, so
-# the pre-combined accumulator agrees with the sequential replay to
-# ~1e-12 relative, not bit-for-bit; the error is self-healing because
-# the EWMA forgets exponentially. The oracled batch operator
-# (operators/mavg.mavg_rates, gate query mavg_ewma) keeps the scalar
-# fold. Alarm semantics under pre-combine are BATCH-granular: the state
-# machine steps once per (key, micro-batch) from exact sample points of
-# the n_i series (see precombine_step), so transition timestamps can
-# shift by up to one batch interval vs per-event replay. Guarantees:
-# the alarm STATE at batch boundaries matches replay on unambiguous
-# batches, alarms are never invented (the peak samples are a lower
-# bound), and a grace period closed by the batch's FIRST event fires
-# its GONE before any re-breach; a full recovery+re-breach cycle whose
-# grace closes only MID-batch still collapses (documented in
-# precombine_step). Default stays precombine=False.
+# applyInPandasWithState costs ~0.4ms per GROUP per micro-batch (state
+# get/update round-trip + per-group pandas assembly) — keyed by flow
+# key, at carrier key cardinality (500k keys) that protocol cost IS the
+# workload (SCALE.md §Round-8: 238.6s vs 5.9s for 500k keys). The
+# reference solves the same problem with per-thread tries holding MANY
+# keys each (monit-objects-mavg.c tries, fwm.c per-thread tkvdb banks
+# merged at flush); the Spark analogue is bucketing: group by
+# hash(key) % buckets and keep ONE state row per bucket — a dict of
+# per-key state tuples — so the protocol cost is paid per BUCKET and
+# the per-key work inside is plain python over the bucket's slice.
+# State per bucket is O(keys_in_bucket) (~50 bytes per entry pickled);
+# hash bucketing keeps it even. The silent-watch timeout walks the
+# bucket's alarmed keys exactly like the reference's act thread walks
+# its tries, and idle keys age out at each tick (try_reset_db parity,
+# purge granularity = the tick period instead of an exact per-key
+# timeout).
 # ---------------------------------------------------------------------------
 
-_PC_FIELDS: list[tuple[str, T.DataType]] = [
-    ("pk", T.LongType()),     # events in batch
-    ("pt1", T.LongType()),    # first event ts (ns)
-    ("pv1", T.DoubleType()),  # first event value
-    ("ptk", T.LongType()),    # last event ts (ns)
-    ("pA", T.DoubleType()),   # composite: n_end = pA*n_1 + pB
-    ("pB", T.DoubleType()),
-    # exact series sample points n_i = pA?*n_1 + pB? at real events:
-    # pr = argmax of the reset-variant series (the peak when n_1 = pv1),
-    # bm = argmax of B_i (the peak's location when n_1's carry is small),
-    # vr/bn = the min-side twins for under-limit mode.
-    ("pApr", T.DoubleType()), ("pBpr", T.DoubleType()), ("ptpr", T.LongType()),
-    ("pAbm", T.DoubleType()), ("pBbm", T.DoubleType()), ("ptbm", T.LongType()),
-    ("pAvr", T.DoubleType()), ("pBvr", T.DoubleType()), ("ptvr", T.LongType()),
-    ("pAbn", T.DoubleType()), ("pBbn", T.DoubleType()), ("ptbn", T.LongType()),
-]
+BUCKET_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
+
+# buckets per core of the session when the caller does not choose: blobs
+# stay a few thousand keys at carrier cardinality while every core gets
+# bucket-groups to work on (SCALE.md §Round-8 sizing rule)
+BUCKETS_PER_CORE = 8
 
 
-def _segmented_affine_scan(
-    a: np.ndarray, b: np.ndarray, heads: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Segmented inclusive scan of affine maps (Hillis-Steele): returns
-    per-position composites (A_i, B_i) such that applying events
-    head+1..i of the segment to base n gives A_i*n + B_i. Segment heads
-    must carry the identity (1, 0). O(n log n) numpy ops, no Python
-    per-event loop."""
-    A = np.asarray(a, dtype=np.float64).copy()
-    B = np.asarray(b, dtype=np.float64).copy()
-    f = heads.copy()
-    n = len(A)
-    d = 1
-    while d < n:
-        src = np.flatnonzero(~f[d:]) + d  # positions still absorbing left
-        if len(src):
-            left = src - d
-            # read everything BEFORE writing: Hillis-Steele uses the
-            # previous iteration's values even when src and left overlap
-            nA = A[src] * A[left]
-            nB = A[src] * B[left] + B[src]
-            nf = f[left]
-            A[src] = nA
-            B[src] = nB
-            f[src] |= nf
-        d *= 2
-    return A, B
+def _native_key(parts: tuple) -> tuple:
+    """Normalize a pandas-groupby key to stable python-native scalars so
+    the bucket table's dict keys survive pickle round-trips and match
+    the thresholds dict (numpy scalars hash like their python twins,
+    but storing natives keeps the state blob implementation-agnostic)."""
+    from xenoeye_spark.config.limits import norm_group_key
+
+    return norm_group_key(tuple(
+        p.item() if hasattr(p, "item") else p for p in parts
+    ))
 
 
 def _key_heads(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
@@ -300,420 +216,6 @@ def _key_heads(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
     return heads
 
 
-def fold_sorted(
-    pdf: pd.DataFrame,
-    key_cols: list[str],
-    window_ns: int,
-    has_limit: bool = False,
-) -> pd.DataFrame:
-    """Fold a (key, ts)-sorted frame to one row per key carrying the
-    batch's affine composite and exact series sample points. Vectorized
-    across keys: the segmented scan runs over the whole frame at once."""
-    n = len(pdf)
-    ts = pdf["_ts_ns"].to_numpy(np.int64)
-    v = pdf["_val"].to_numpy(np.float64)
-    heads = _key_heads(pdf, key_cols)
-    dt = np.empty(n, dtype=np.int64)
-    dt[0] = 0
-    dt[1:] = ts[1:] - ts[:-1]
-    a = np.where(dt >= window_ns, 0.0, 1.0 - dt / np.float64(window_ns))
-    b = v.copy()
-    a[heads] = 1.0  # identity at the head: n_1 is the state-dep. base
-    b[heads] = 0.0
-    A, B = _segmented_affine_scan(a, b, heads)
-    starts = np.flatnonzero(heads)
-    ends = np.append(starts[1:], n) - 1
-    seg_id = np.cumsum(heads) - 1
-    v1 = v[starts][seg_id]
-    nr = A * v1 + B  # the series under the reset variant (n_1 = v1)
-    i_pr = pd.Series(nr).groupby(seg_id).idxmax().to_numpy()
-    i_vr = pd.Series(nr).groupby(seg_id).idxmin().to_numpy()
-    i_bm = pd.Series(B).groupby(seg_id).idxmax().to_numpy()
-    i_bn = pd.Series(B).groupby(seg_id).idxmin().to_numpy()
-    out = pdf.iloc[starts][key_cols].reset_index(drop=True)
-    out["pk"] = (ends - starts + 1).astype(np.int64)
-    out["pt1"] = ts[starts]
-    out["pv1"] = v[starts]
-    out["ptk"] = ts[ends]
-    out["pA"] = A[ends]
-    out["pB"] = B[ends]
-    for nm, idx in (("pr", i_pr), ("bm", i_bm), ("vr", i_vr), ("bn", i_bn)):
-        out[f"pA{nm}"] = A[idx]
-        out[f"pB{nm}"] = B[idx]
-        out[f"pt{nm}"] = ts[idx]
-    if has_limit:
-        out["_limit"] = pdf["_limit"].to_numpy()[starts]
-    return out
-
-
-def precombine_events(
-    prepped: DataFrame, key_cols: list[str], window_ns: int
-) -> DataFrame:
-    """One folded row per (key, micro-batch): repartition by key so each
-    key lives in exactly one partition (the order-sensitive fold cannot
-    merge time-interleaved partials), then sort + scan the partition's
-    slice inside the stateless mapInPandas. The state op re-shuffles
-    only the O(keys) folded rows."""
-    has_limit = "_limit" in prepped.columns
-    fields = [prepped.schema[k] for k in key_cols] + [
-        T.StructField(nm, dt) for nm, dt in _PC_FIELDS
-    ]
-    if has_limit:
-        fields.append(T.StructField("_limit", T.DoubleType()))
-    schema = T.StructType(fields)
-    out_cols = [f.name for f in schema.fields]
-    sort_cols = [*key_cols, "_ts_ns", "_val"]  # _val pins FP tie order
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Structured Streaming forbids sortWithinPartitions, so the sort
-        # happens here: buffer THIS partition's micro-batch slice, sort
-        # once, fold once. Peak task memory = the slice's raw rows —
-        # the same rows the state op would otherwise buffer per group,
-        # bounded by (batch volume / shuffle partitions).
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        yield fold_sorted(pdf, key_cols, window_ns, has_limit)[out_cols]
-
-    return prepped.repartition(*key_cols).mapInPandas(gen, schema=schema)
-
-
-def precombine_step(
-    st: tuple,
-    row,
-    key: tuple,
-    limit: float,
-    window_sec: int,
-    window_ns: int,
-    back2norm_ns: int,
-    under: bool,
-) -> tuple[tuple, list[tuple]]:
-    """One batch-granular state-machine step from a folded row.
-
-    n_1 (the value after the batch's first event) is computed exactly
-    from state with the same operation order as ewma_step; n_end and the
-    sample points are composite-affine (pA?*n_1 + pB?) — each an EXACT
-    n_i at a real event of the batch, up to the documented composite-FP
-    regrouping. Breach detection samples {first, last, reset-argmax,
-    B-argmax} (+ min-side twins for under mode): exact peak/valley when
-    the batch starts from a reset (then n_1 = pv1 and the reset-argmax
-    IS the true extremum); a lower bound on the peak under carry-over —
-    a mid-batch spike shorter than a batch interval can be missed, the
-    accepted trade for O(keys) state-protocol rows. Transitions resolve
-    at batch granularity: below_since starts at the batch's first/last
-    event and GONE fires at the batch end, so timestamps can shift by up
-    to one batch interval vs per-event replay_rows."""
-    n_prev, t_prev, alarm, below_since, first_seen = st
-    t1 = int(row.pt1)
-    tk = int(row.ptk)
-    v1 = float(row.pv1)
-    if first_seen is None:
-        first_seen = t1
-    if t_prev is None or t1 - t_prev >= window_ns:
-        n1 = v1
-    else:
-        dt = t1 - t_prev
-        n1 = n_prev - (dt / window_ns) * n_prev + v1
-    n_end = row.pA * n1 + row.pB
-    if under:
-        cands = [
-            (t1, n1),
-            (tk, n_end),
-            (int(row.ptvr), row.pAvr * n1 + row.pBvr),
-            (int(row.ptbn), row.pAbn * n1 + row.pBbn),
-        ]
-    else:
-        cands = [
-            (t1, n1),
-            (tk, n_end),
-            (int(row.ptpr), row.pApr * n1 + row.pBpr),
-            (int(row.ptbm), row.pAbm * n1 + row.pBbm),
-        ]
-
-    def breach(nv: float, t: int) -> bool:
-        if under and t - first_seen < window_ns:
-            return False  # grace: first window after start (under.c:298-303)
-        rate = nv / window_sec
-        return (rate < limit) if under else (rate >= limit)
-
-    hits = [(t, nv) for t, nv in cands if breach(nv, t)]
-    events: list[tuple] = []
-    if hits:
-        tb, nb = min(hits, key=lambda x: x[0])
-        if (
-            alarm == S_ALMOST_GONE
-            and below_since is not None
-            and not breach(n1, t1)
-            and t1 - below_since >= back2norm_ns
-        ):
-            # the batch's FIRST event is below the limit and closes the
-            # grace period before any detected breach — per-event replay
-            # fires GONE at exactly that event, so emit it (rate n1/W at
-            # t1, both exact) and let the breach below re-open a NEW
-            # alarm. Without this, an inter-batch silence spanning the
-            # grace followed by a re-attack in the same batch would
-            # collapse the whole GONE+NEW cycle into a silent UPDATE.
-            events.append((*key, S_GONE, n1 / window_sec, limit, t1))
-            alarm = S_NONE
-        below_since = None
-        if alarm == S_NONE:
-            alarm = S_NEW
-            events.append((*key, S_NEW, nb / window_sec, limit, tb))
-        elif alarm == S_ALMOST_GONE:
-            alarm = S_UPDATE  # dipped but came back
-        if alarm in (S_NEW, S_UPDATE) and not breach(n_end, tk):
-            alarm = S_ALMOST_GONE  # dipped by batch end
-            below_since = tk
-    else:
-        if alarm in (S_NEW, S_UPDATE):
-            alarm = S_ALMOST_GONE
-            below_since = t1  # no breach in batch: below since its start
-        if (
-            alarm == S_ALMOST_GONE
-            and below_since is not None
-            and tk - below_since >= back2norm_ns
-        ):
-            alarm = S_NONE
-            events.append((*key, S_GONE, n_end / window_sec, limit, tk))
-            below_since = None
-    return (float(n_end), tk, alarm, below_since, first_seen), events
-
-
-def make_mavg_state_fn_pc(
-    key_cols: list[str],
-    window_sec: int,
-    threshold: float,
-    back2norm_sec: int = 30,
-    thresholds: dict[tuple, float] | None = None,
-    under: bool = False,
-    idle_timeout_sec: int | None = None,
-    silent_watch: bool = True,
-):
-    """applyInPandasWithState fn consuming PRE-COMBINED rows (one per
-    key per micro-batch, from precombine_events). Same state schema,
-    output schema, limit resolution and timeout handling as the
-    per-event fn; the replay loop is replaced by precombine_step."""
-    window_ns = int(window_sec * 1e9)
-    back2norm_ns = int(back2norm_sec * 1e9)
-    watch_ms = int(max(min(back2norm_sec / 4, 5), 1) * 1000)
-
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from xenoeye_spark.config.limits import norm_group_key
-
-        dict_limit = (thresholds or {}).get(norm_group_key(key), threshold)
-        cols = [*key_cols, "event", "rate", "threshold", "ts_ns"]
-
-        if state.hasTimedOut:
-            out = _handle_timeout(
-                state, dict_limit, key, window_sec, window_ns,
-                back2norm_ns, under, watch_ms, idle_timeout_sec,
-                silent_watch, cols,
-            )
-            if out is not None:
-                yield out
-            return
-
-        st = _pad_state(state.get) if state.exists else (
-            0.0, None, S_NONE, None, None, None,
-        )
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values("pt1", kind="mergesort")
-        if "_limit" in rows.columns:
-            limit = resolve_limit(
-                _first_notnull(rows["_limit"]), st[5], dict_limit
-            )
-        else:
-            limit = dict_limit
-        core = st[:5]
-        events: list[tuple] = []
-        # normally exactly one folded row; sequential partials (defensive:
-        # e.g. a re-batched source) apply in time order
-        for r in rows.itertuples(index=False):
-            core, ev = precombine_step(
-                core, r, key, limit, window_sec, window_ns, back2norm_ns,
-                under,
-            )
-            events.extend(ev)
-        # steady-state notification refresh (act:427-433)
-        if core[2] in (S_NEW, S_UPDATE) and not events:
-            events.append(
-                (*key, S_UPDATE, core[0] / window_sec, limit, core[1])
-            )
-        state.update((*core, float(limit)))
-        _arm_timeout(state, core[2] != S_NONE, silent_watch, watch_ms,
-                     idle_timeout_sec)
-        if events:
-            yield pd.DataFrame(events, columns=cols)
-
-    return fn
-
-
-def _handle_timeout(
-    state: GroupState,
-    dict_limit: float,
-    key: tuple,
-    window_sec: int,
-    window_ns: int,
-    back2norm_ns: int,
-    under: bool,
-    watch_ms: int,
-    idle_timeout_sec: int | None,
-    silent_watch: bool,
-    cols: list[str],
-) -> pd.DataFrame | None:
-    """Shared timed-out-group handler (per-event and pre-combined fns):
-    1. alarmed key gone silent -> synthetic decay + state machine
-       (the act thread's job, monit-objects-mavg-act.c:391-397)
-    2. idle-key compaction (try_reset_db, mavg.c:776-885)
-    """
-    st = _pad_state(state.get) if state.exists else None
-    if silent_watch and st is not None and st[2] != S_NONE:
-        # the resolved limit was persisted at replay time, so a
-        # map-side-joined limit survives the key going silent
-        limit = resolve_limit(None, st[5], dict_limit)
-        now_ns = int(_time_now_ns())
-        new_st, events, watch = silent_transition(
-            st[:5], now_ns, key, limit, window_sec, window_ns,
-            back2norm_ns, under,
-        )
-        state.update((*new_st, limit))
-        if watch:
-            state.setTimeoutDuration(watch_ms)
-        elif idle_timeout_sec is not None:
-            state.setTimeoutDuration(idle_timeout_sec * 1000)
-        if events:
-            return pd.DataFrame(events, columns=cols)
-        return None
-    state.remove()
-    return None
-
-
-def make_mavg_state_fn(
-    key_cols: list[str],
-    window_sec: int,
-    threshold: float,
-    back2norm_sec: int = 30,
-    thresholds: dict[tuple, float] | None = None,
-    under: bool = False,
-    idle_timeout_sec: int | None = None,
-    silent_watch: bool = True,
-):
-    """Build the applyInPandasWithState function for one mavg limit level.
-    ``thresholds``: per-key-tuple limits (the limits CSV,
-    monit-objects-mavg-limfile.c); fallback to ``threshold``.
-    ``under=True`` inverts the comparison for traffic-drop detection
-    (monit-objects-mavg-under.c), suppressing alarms during the key's
-    first window (grace period, under.c:298-303).
-
-    Emits one row per micro-batch per key whose alarm state changed or is
-    active: (keys..., event, rate, threshold, ts_ns).
-    """
-    window_ns = int(window_sec * 1e9)
-    back2norm_ns = int(back2norm_sec * 1e9)
-
-    # silent-key poll period: the reference's act thread ticks at 10 Hz
-    # (monit-objects.c act loop), so its back2norm grace clock starts at
-    # the actual crossing. Polling only every back2norm_sec made GONE
-    # fire up to ~2x late (below_since starts at the first poll AFTER
-    # the crossing). A quarter-period poll capped at 5s bounds the extra
-    # latency at ~25% while timer fires stay = active alarms (small).
-    watch_ms = int(max(min(back2norm_sec / 4, 5), 1) * 1000)
-
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from xenoeye_spark.config.limits import norm_group_key
-
-        dict_limit = (thresholds or {}).get(norm_group_key(key), threshold)
-        cols = [*key_cols, "event", "rate", "threshold", "ts_ns"]
-
-        if state.hasTimedOut:
-            out = _handle_timeout(
-                state, dict_limit, key, window_sec, window_ns,
-                back2norm_ns, under, watch_ms, idle_timeout_sec,
-                silent_watch, cols,
-            )
-            if out is not None:
-                yield out
-            return
-
-        st = _pad_state(state.get) if state.exists else (
-            0.0, None, S_NONE, None, None, None,
-        )
-
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values("_ts_ns", kind="mergesort")
-        if "_limit" in rows.columns:
-            limit = resolve_limit(
-                _first_notnull(rows["_limit"]), st[5], dict_limit
-            )
-        else:
-            limit = dict_limit
-        new_st, events = replay_rows(
-            st[:5], rows["_ts_ns"].to_numpy(), rows["_val"].to_numpy(), key,
-            limit, window_sec, window_ns, back2norm_ns, under,
-        )
-        state.update((*new_st, float(limit)))
-        _arm_timeout(state, new_st[2] != S_NONE, silent_watch, watch_ms,
-                     idle_timeout_sec)
-        if events:
-            yield pd.DataFrame(events, columns=cols)
-
-    return fn
-
-
-def _time_now_ns() -> int:
-    import time
-
-    return time.time_ns()
-
-
-# ---------------------------------------------------------------------------
-# Bucketed state (r8): amortize the per-GROUP state-protocol cost.
-#
-# Measured r7/r8: applyInPandasWithState costs ~0.4ms per GROUP per
-# micro-batch (state get/update round-trip + per-group pandas
-# assembly) — at carrier key cardinality (500k keys) that protocol
-# cost IS the workload (~2.7k keys/s per 4 cores), and collapsing ROWS
-# (the pre-combine above) cannot touch it because the group count is
-# the key count either way. The reference solves the same problem with
-# per-thread tries holding MANY keys each (monit-objects-mavg.c tries,
-# fwm.c per-thread tkvdb banks merged at flush); the Spark analogue is
-# bucketing: group by hash(key) % buckets and keep ONE state row per
-# bucket — a dict of per-key state tuples — so the protocol cost is
-# paid per BUCKET and the per-key work inside is plain python over the
-# bucket's slice. State per bucket is O(keys_in_bucket) (~50 bytes per
-# entry pickled), the same memory the per-key layout spends, just
-# packed; hash bucketing keeps it even. The silent-watch timeout walks
-# the bucket's alarmed keys exactly like the reference's act thread
-# walks its tries, and idle keys age out at each tick (try_reset_db
-# parity, purge granularity = the tick period instead of an exact
-# per-key timeout).
-# ---------------------------------------------------------------------------
-
-BUCKET_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
-
-
-def _native_key(parts: tuple) -> tuple:
-    """Normalize a pandas-groupby key to stable python-native scalars so
-    the bucket table's dict keys survive pickle round-trips and match
-    the thresholds dict (numpy scalars hash like their python twins,
-    but storing natives keeps the state blob implementation-agnostic)."""
-    from xenoeye_spark.config.limits import norm_group_key
-
-    return norm_group_key(tuple(
-        p.item() if hasattr(p, "item") else p for p in parts
-    ))
-
-
 def make_mavg_bucket_fn(
     key_cols: list[str],
     window_sec: int,
@@ -723,13 +225,11 @@ def make_mavg_bucket_fn(
     under: bool = False,
     idle_timeout_sec: int | None = None,
     silent_watch: bool = True,
-    precombined: bool = False,
 ):
     """applyInPandasWithState fn over BUCKET groups: state is one pickled
     (last_walk_ns, {key_tuple: (n, t_prev, alarm, below_since,
-    first_seen, limit)}) per bucket. ``precombined`` selects the per-key
-    step (folded rows -> precombine_step, raw rows -> replay_rows);
-    semantics per key are identical to the per-key-group fns.
+    first_seen, limit)}) per bucket; each key's rows replay through
+    replay_rows in time order.
 
     Silent keys (r9): a GROUP timeout fires only when the BUCKET gets no
     data for the whole interval — with thousands of keys per bucket that
@@ -744,6 +244,10 @@ def make_mavg_bucket_fn(
 
     window_ns = int(window_sec * 1e9)
     back2norm_ns = int(back2norm_sec * 1e9)
+    # silent-key poll period: the reference's act thread ticks at 10 Hz
+    # (monit-objects.c act loop), so its back2norm grace clock starts at
+    # the actual crossing. A quarter-period poll capped at 5s bounds the
+    # extra GONE latency at ~25% while timer fires stay = active alarms.
     watch_ms = int(max(min(back2norm_sec / 4, 5), 1) * 1000)
     idle_ns = None if idle_timeout_sec is None else int(idle_timeout_sec * 1e9)
     if silent_watch:
@@ -753,6 +257,7 @@ def make_mavg_bucket_fn(
         walk_gate_ns = int(max(min(idle_timeout_sec / 4, 5), 1) * 1e9)
     else:
         walk_gate_ns = None
+    thr = thresholds or {}
 
     def _load_blob(raw: bytes) -> tuple[int, dict]:
         obj = pickle.loads(raw)
@@ -760,18 +265,23 @@ def make_mavg_bucket_fn(
             return 0, obj
         return obj
 
-    def _arm(state: GroupState, table: dict) -> None:
-        _arm_timeout(
-            state, any(st[2] != S_NONE for st in table.values()),
-            silent_watch, watch_ms, idle_timeout_sec,
-        )
+    def _save(state: GroupState, last_walk: int, table: dict) -> None:
+        """Persist the table and arm the timeout: the alarmed-key
+        act-thread watch wins, otherwise the idle-compaction TTL."""
+        if not table:
+            state.remove()
+            return
+        state.update((pickle.dumps((last_walk, table)),))
+        if silent_watch and any(st[2] != S_NONE for st in table.values()):
+            state.setTimeoutDuration(watch_ms)
+        elif idle_timeout_sec is not None:
+            state.setTimeoutDuration(idle_timeout_sec * 1000)
 
     def _walk_silent(
         table: dict, seen: set, now_ns: int, events: list[tuple]
     ) -> None:
         """silent_transition + idle purge for every key WITHOUT rows this
         tick; mutates ``table`` in place, appends to ``events``."""
-        thr = thresholds or {}
         drop: list[tuple] = []
         for k, st in table.items():
             if k in seen:
@@ -810,11 +320,7 @@ def make_mavg_bucket_fn(
             _lw, table = _load_blob(bytes(state.get[0]))
             now_ns = int(_time_now_ns())
             _walk_silent(table, set(), now_ns, events)
-            if table:
-                state.update((pickle.dumps((now_ns, table)),))
-                _arm(state, table)
-            else:
-                state.remove()
+            _save(state, now_ns, table)
             if events:
                 yield pd.DataFrame(events, columns=cols)
             return
@@ -827,79 +333,45 @@ def make_mavg_bucket_fn(
         # iteration: per-group pandas overhead (sort_values/to_numpy per
         # group) costs ~0.2ms per KEY and would re-create the very
         # per-key tax bucketing exists to amortize
-        sort_cols = (
-            [*key_cols, "pt1"] if precombined
-            else [*key_cols, "_ts_ns", "_val"]
-        )
-        rows = rows.sort_values(sort_cols, kind="mergesort",
-                                ignore_index=True)
+        rows = rows.sort_values([*key_cols, "_ts_ns", "_val"],
+                                kind="mergesort", ignore_index=True)
         heads = _key_heads(rows, key_cols)
         starts = np.flatnonzero(heads)
         ends = np.append(starts[1:], len(rows))
         karrs = [rows[kc].to_numpy() for kc in key_cols]
+        ts_arr = rows["_ts_ns"].to_numpy()
+        val_arr = rows["_val"].to_numpy()
         lim_arr = (
             rows["_limit"].to_numpy(dtype=float)
             if "_limit" in rows.columns else None
         )
-        thr = thresholds or {}
-
-        def _seg_limit(s: int, e: int, st: tuple, k: tuple) -> float:
-            if lim_arr is None:
-                return thr.get(k, threshold)
-            seg = lim_arr[s:e]
-            ok = seg[~np.isnan(seg)]
-            return resolve_limit(
-                float(ok[0]) if len(ok) else None, st[5],
-                thr.get(k, threshold),
-            )
 
         seen: set = set()
-        if precombined:
-            recs = list(rows.itertuples(index=False))
-            for s, e in zip(starts, ends):
-                k = _native_key(tuple(arr[s] for arr in karrs))
-                seen.add(k)
-                st = table.get(k, (0.0, None, S_NONE, None, None, None))
-                limit = _seg_limit(s, e, st, k)
-                core = st[:5]
-                kev: list[tuple] = []
-                for r in recs[s:e]:
-                    core, ev = precombine_step(
-                        core, r, k, limit, window_sec, window_ns,
-                        back2norm_ns, under,
-                    )
-                    kev.extend(ev)
-                if core[2] in (S_NEW, S_UPDATE) and not kev:
-                    kev.append(
-                        (*k, S_UPDATE, core[0] / window_sec, limit, core[1])
-                    )
-                table[k] = (*core, float(limit))
-                events.extend(kev)
-        else:
-            ts_arr = rows["_ts_ns"].to_numpy()
-            val_arr = rows["_val"].to_numpy()
-            for s, e in zip(starts, ends):
-                k = _native_key(tuple(arr[s] for arr in karrs))
-                seen.add(k)
-                st = table.get(k, (0.0, None, S_NONE, None, None, None))
-                limit = _seg_limit(s, e, st, k)
-                core, kev = replay_rows(
-                    st[:5], ts_arr[s:e], val_arr[s:e], k, limit,
-                    window_sec, window_ns, back2norm_ns, under,
+        for s, e in zip(starts, ends):
+            k = _native_key(tuple(arr[s] for arr in karrs))
+            seen.add(k)
+            st = table.get(k, (0.0, None, S_NONE, None, None, None))
+            if lim_arr is None:
+                limit = thr.get(k, threshold)
+            else:
+                ok = lim_arr[s:e][~np.isnan(lim_arr[s:e])]
+                limit = resolve_limit(
+                    float(ok[0]) if len(ok) else None, st[5],
+                    thr.get(k, threshold),
                 )
-                table[k] = (*core, float(limit))
-                events.extend(kev)
+            core, kev = replay_rows(
+                st[:5], ts_arr[s:e], val_arr[s:e], k, limit,
+                window_sec, window_ns, back2norm_ns, under,
+            )
+            table[k] = (*core, float(limit))
+            events.extend(kev)
         # data-path silent walk: a busy bucket never times out as a
         # GROUP, so this is where its silent keys transition/age out
         now_ns = int(_time_now_ns())
         if walk_gate_ns is not None and now_ns - last_walk >= walk_gate_ns:
             _walk_silent(table, seen, now_ns, events)
             last_walk = now_ns
-        if table:
-            state.update((pickle.dumps((last_walk, table)),))
-            _arm(state, table)
-        else:
-            state.remove()
+        _save(state, last_walk, table)
         if events:
             yield pd.DataFrame(events, columns=cols)
 
@@ -943,7 +415,6 @@ def mavg_alert_stream(
     silent_watch: bool = True,
     limits_df: DataFrame | None = None,
     limit_col: str = "limit",
-    precombine: bool = False,
     buckets: int | None = None,
 ) -> DataFrame:
     """Wire the stateful fn onto a (streaming or batch-test) DataFrame.
@@ -958,48 +429,30 @@ def mavg_alert_stream(
     - ``limits_df`` (key cols + ``limit_col``) — joined map-side into
       the flow rows before the state shuffle; scales like any equi-join
       (Catalyst broadcasts it while small, shuffles it when not). The
-      resolved limit is persisted in state so silent-key timeouts keep
+      resolved limit is persisted in state so silent-key walks keep
       using it.
 
     ``silent_watch`` (default on) arms a processing-time timeout for every
-    alarmed key so back-to-normal fires even when the key goes silent —
-    the reference's act-thread behavior. Note for availableNow test runs:
-    armed timeouts keep the query alive, so bounded drains should either
-    pass silent_watch=False or stop() after a short awaitTermination.
+    bucket holding an alarmed key so back-to-normal fires even when the
+    key goes silent — the reference's act-thread behavior. Note for
+    availableNow test runs: armed timeouts keep the query alive, so
+    bounded drains should either pass silent_watch=False or stop() after
+    a short awaitTermination.
 
-    ``precombine`` (r8, default off): collapse each (key, micro-batch)
-    to ONE row map-side via the segmented affine scan before the Python
-    state protocol, so applyInPandasWithState sees O(keys) rows instead
-    of O(flows) — the shape the reference's signature workload needs
-    (its C loop sustains ~700k flows/s/core; the Python state protocol
-    pays per row). Trades: accumulator agrees with the sequential replay
-    to ~1e-12 relative (composite-FP regrouping, see the pre-combine
-    section comment) and alarm transitions resolve at BATCH granularity
-    (precombine_step docstring). Leave off where an oracle compares
-    exact bits or alert timestamps must be per-event.
+    ``buckets``: the state op groups by ``hash(key) %% buckets``, holding
+    one pickled {key: state} dict per bucket — the reference's
+    per-thread-trie layout (see the bucketed-state section comment).
+    ``None`` means BUCKETS_PER_CORE x the session's default parallelism.
+    Per-key events are those of a per-key time-ordered replay; the
+    trades are idle-key purge granularity (the watch/TTL tick instead of
+    an exact per-key timeout) and bucket-level state rewrite per batch
+    (any active key rewrites its bucket's blob — size buckets so a blob
+    is ~thousands of keys). State-store partition count still bounds
+    parallelism downstream.
 
-    ``buckets`` (r8): group the state op by ``hash(key) %% buckets``
-    instead of by key, holding one pickled {key: state} dict per
-    bucket — the reference's per-thread-trie layout. This amortizes
-    the ~0.4ms-per-GROUP state-protocol cost over thousands of keys,
-    the dominating term at carrier key cardinality (see the bucketed-
-    state section comment; measured 40-45x on the 500k-key
-    first-touch: 2.1k -> 84-95k keys/s on local[4], SCALE.md §Round-8).
-    Composes with ``precombine``. Per-key semantics are identical and
-    equivalence-tested; the trades are idle-key purge granularity (the
-    watch/TTL tick instead of an exact per-key timeout) and bucket-
-    level state rewrite per batch (any active key rewrites its
-    bucket's blob — size buckets so a blob is ~thousands of keys).
-    Pick buckets ~ 4-16x total cores; state-store partition count
-    still bounds parallelism downstream.
-
-    Checkpoint format: STATE_SCHEMA gained a 6th field (``limit``) in
-    r7. A checkpoint written by the 5-field era cannot be restored
-    (Spark's state-store schema validation rejects it — start a fresh
-    checkpoint directory); if validation is disabled, restored 5-tuples
-    are padded with a NULL limit defensively. ``buckets`` mode uses a
-    different state schema entirely (one binary blob per bucket) —
-    switching layouts requires a fresh checkpoint.
+    Checkpoint format: one binary blob per bucket. A checkpoint written
+    by the retired per-key layout (one struct row per key) cannot be
+    restored — start a fresh checkpoint directory.
     """
     key_struct = [flows.schema[k] for k in key_cols]
     out_schema = T.StructType(
@@ -1016,6 +469,12 @@ def mavg_alert_stream(
             f"{LIMITS_DICT_MAX} closure-shipping bound (SURVEY §7.3); "
             "pass the limits as limits_df for a map-side join"
         )
+    if buckets is None:
+        buckets = BUCKETS_PER_CORE * max(
+            1, flows.sparkSession.sparkContext.defaultParallelism
+        )
+    if buckets < 1:
+        raise ValueError(f"buckets must be >= 1: {buckets}")
     prepped = flows.select(
         *key_cols,
         (F.col(ts_col).cast("timestamp").cast("double") * F.lit(1e9))
@@ -1025,43 +484,10 @@ def mavg_alert_stream(
     if limits_df is not None:
         lim = _validated_limits(limits_df, key_cols, limit_col, "_limit")
         prepped = prepped.join(lim, key_cols, "left")
-    if precombine:
-        prepped = precombine_events(prepped, key_cols, int(window_sec * 1e9))
-    if buckets is not None:
-        if buckets < 1:
-            raise ValueError(f"buckets must be >= 1: {buckets}")
-        fn = make_mavg_bucket_fn(
-            key_cols, window_sec, threshold, back2norm_sec, thresholds,
-            under, idle_timeout_sec, silent_watch, precombined=precombine,
-        )
-        use_timeouts = silent_watch or idle_timeout_sec is not None
-        return (
-            prepped.withColumn(
-                "_bkt", F.pmod(F.xxhash64(*key_cols), F.lit(buckets))
-            )
-            .groupBy("_bkt")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=out_schema,
-                stateStructType=BUCKET_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=(
-                    GroupStateTimeout.ProcessingTimeTimeout
-                    if use_timeouts
-                    else GroupStateTimeout.NoTimeout
-                ),
-            )
-        )
-    if precombine:
-        fn = make_mavg_state_fn_pc(
-            key_cols, window_sec, threshold, back2norm_sec, thresholds,
-            under, idle_timeout_sec, silent_watch,
-        )
-    else:
-        fn = make_mavg_state_fn(
-            key_cols, window_sec, threshold, back2norm_sec, thresholds,
-            under, idle_timeout_sec, silent_watch,
-        )
+    fn = make_mavg_bucket_fn(
+        key_cols, window_sec, threshold, back2norm_sec, thresholds,
+        under, idle_timeout_sec, silent_watch,
+    )
     # timeouts serve the alarmed-key watch (silent keys must reach GONE,
     # act-thread parity) and idle-state compaction. Request the timeout
     # conf only when one of them is in play: a ProcessingTimeTimeout conf
@@ -1069,14 +495,20 @@ def mavg_alert_stream(
     # armed timers, which would make batch-drain usage hang to its
     # awaitTermination bound.
     use_timeouts = silent_watch or idle_timeout_sec is not None
-    return prepped.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_timeouts
-            else GroupStateTimeout.NoTimeout
-        ),
+    return (
+        prepped.withColumn(
+            "_bkt", F.pmod(F.xxhash64(*key_cols), F.lit(buckets))
+        )
+        .groupBy("_bkt")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=BUCKET_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if use_timeouts
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
     )
