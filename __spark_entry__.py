@@ -2079,13 +2079,17 @@ def q_ppl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = docs.filter(F.col("doc_id") % 5 != 0)
     # r13 (guide §2.3): quantile_bucket consumes its input twice (the
     # per-group cuts aggregation, then the labeling join) and Spark
-    # re-executes the subtree per consumer — without the checkpoint the
-    # ENTIRE LM train+score pipeline ran twice (12 parquet scans in the
-    # executed plan, no runtime exchange reuse). The lazy checkpoint
-    # materializes the narrow per-doc scored table once.
+    # re-executes the subtree per consumer — unshared, the ENTIRE LM
+    # train+score pipeline ran twice (12 parquet scans in the executed
+    # plan, no runtime exchange reuse). Persisting the narrow per-doc
+    # scored table runs it once; persist, not localCheckpoint, keeps
+    # the lineage (a block lost with its executor recomputes instead
+    # of failing the query) and the subplan visible to the plan lint.
+    from pyspark.storagelevel import StorageLevel
+
     scored = bigram_lm_score(ev, tr, k=0.5).join(
         ev.select("doc_id", "lang"), "doc_id"
-    ).localCheckpoint(eager=False)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     return quantile_bucket(scored, ["lang"], "lm_ppl").select(
         "doc_id", "lang", "lm_ppl", "bucket"
     )

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -9,7 +11,10 @@ from xenoeye_spark.pyworker import use_daemon
 @pytest.fixture(scope="session")
 def spark():
     # the production worker path (get_spark): workers keep the
-    # pyspark.zip directory cache instead of re-reading it per task
+    # pyspark.zip directory cache instead of re-reading it per task, and
+    # fork from a daemon that has numpy loaded with one BLAS thread
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+        os.environ.setdefault(var, "1")
     s = (
         use_daemon(SparkSession.builder).master("local[4]")
         .appName("xenoeye-spark-tests")

@@ -45,10 +45,10 @@ BNL_ALLOWED = {
     "sim_topk", "bm25", "tfidf_topterms", "bigram_lm",
     "quantize", "temperature", "ann_recall", "pq_topk",
     "hash_classify", "bpe_steps",
-    # ppl_split left the list in r13: its one-row vocab cross-join
-    # (the bigram_lm allow-shape) now sits inside the scored table's
-    # localCheckpoint subplan, which the lint's visible plan no longer
-    # includes — the checkpointed main plan reads ExistingRDD only.
+    # back since the scored table is persisted instead of
+    # localCheckpointed: the cached subplan, with its one-row vocab
+    # cross-join (the bigram_lm allow-shape), is in the visible plan
+    "ppl_split",
 }
 
 
@@ -287,6 +287,54 @@ def test_no_tokenizer_reinlined_into_filters(plans):
         if hits:
             bad[name] = hits[0]
     assert not bad, f"tokenizer re-inlined into Filter: {bad}"
+
+
+def _parquet_scans_run(df) -> int:
+    """Parquet scans that running ``df`` executes: a cached relation's
+    subplan counts once, however many scans of the cache the plan has
+    (one build serves them all)."""
+    builders = []
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls == "InMemoryTableScanExec":
+            b = p.relation().cacheBuilder()
+            if any(b.equals(seen) for seen in builders):
+                return 0
+            builders.append(b)
+            return walk(b.cachedPlan())
+        kids = p.children()
+        return (cls == "FileSourceScanExec") + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_ppl_split_runs_the_lm_pipeline_once(spark):
+    """quantile_bucket reads ppl_split's scored table twice; unshared,
+    the whole LM train+score pipeline runs once per read (12 parquet
+    scans). The persisted table runs it once (6)."""
+    from pyspark.sql import functions as F
+
+    from xenoeye_spark.datapipe.ranking import bigram_lm_score
+    from xenoeye_spark.operators.summary import quantile_bucket
+
+    docs = entrymod._t(spark, SF_DIR, "documents")
+    ev = docs.filter(F.col("doc_id") % 5 == 0)
+    tr = docs.filter(F.col("doc_id") % 5 != 0)
+    # another k than ppl_split's, so the session's cache of ppl_split's
+    # scored table cannot stand in for this one
+    scored = bigram_lm_score(ev, tr, k=0.25).join(
+        ev.select("doc_id", "lang"), "doc_id"
+    )
+    assert _parquet_scans_run(scored) == 6
+    assert _parquet_scans_run(
+        quantile_bucket(scored, ["lang"], "lm_ppl")
+    ) == 12
+    assert _parquet_scans_run(entrymod.q_ppl_split(spark, SF_DIR)) == 6
 
 
 # ------------------------------- nondeterministic pandas-UDF pins (r13)

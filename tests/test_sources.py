@@ -124,6 +124,37 @@ def test_v5_decode():
     assert r["sampling_rate"] == 64
 
 
+def test_v5_decode_exact_rows():
+    """Every field of each record, no ``_pad*`` keys, ``dev_id`` = the
+    header's engine_id (0 in ``build_v5``), and ``sampling_rate`` only
+    when the header's interval is non-zero."""
+    recs = [
+        dict(src=0x01020304, dst=0x05060708, nh=0x0A0B0C0D, pkts=10,
+             octets=1000, sport=12345, dport=80, proto=6, flags=0x12,
+             tos=4, sas=64512, das=65001),
+        dict(src=9, dst=10, pkts=1, octets=40, sport=53, dport=5353,
+             proto=17, **{"in": 7, "out": 8}),
+    ]
+    expect = [
+        {"ip4_src_addr": 0x01020304, "ip4_dst_addr": 0x05060708,
+         "ip4_next_hop": 0x0A0B0C0D, "input_snmp": 1, "output_snmp": 2,
+         "in_pkts": 10, "in_bytes": 1000, "first_switched": 0,
+         "last_switched": 0, "l4_src_port": 12345, "l4_dst_port": 80,
+         "tcp_flags": 0x12, "protocol": 6, "src_tos": 4, "src_as": 64512,
+         "dst_as": 65001, "src_mask": 24, "dst_mask": 24, "dev_id": 0},
+        {"ip4_src_addr": 9, "ip4_dst_addr": 10, "ip4_next_hop": 0,
+         "input_snmp": 7, "output_snmp": 8, "in_pkts": 1, "in_bytes": 40,
+         "first_switched": 0, "last_switched": 0, "l4_src_port": 53,
+         "l4_dst_port": 5353, "tcp_flags": 0, "protocol": 17, "src_tos": 0,
+         "src_as": 0, "dst_as": 0, "src_mask": 24, "dst_mask": 24,
+         "dev_id": 0},
+    ]
+    assert parse_netflow_v5(build_v5(recs)) == expect
+    assert parse_netflow_v5(build_v5(recs, sampling_rate=100)) == [
+        {**row, "sampling_rate": 100} for row in expect
+    ]
+
+
 def test_v9_template_then_data():
     tpl = [(8, 4), (12, 4), (7, 2), (11, 2), (4, 1), (1, 4), (2, 4)]
     pkt = build_v9(tpl, [

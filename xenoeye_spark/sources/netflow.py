@@ -83,6 +83,10 @@ _V5_FIELDS = (
     "l4_src_port", "l4_dst_port", "_pad", "tcp_flags", "protocol", "src_tos",
     "src_as", "dst_as", "src_mask", "dst_mask", "_pad2",
 )
+# (position in the unpacked record, field name), padding left out
+_V5_KEPT = tuple(
+    (i, k) for i, k in enumerate(_V5_FIELDS) if not k.startswith("_")
+)
 
 
 def parse_netflow_v5(data: bytes) -> list[dict]:
@@ -100,9 +104,7 @@ def parse_netflow_v5(data: bytes) -> list[dict]:
         if off + _V5_REC.size > len(data):
             break
         vals = _V5_REC.unpack_from(data, off)
-        row = {
-            k: v for k, v in zip(_V5_FIELDS, vals) if not k.startswith("_")
-        }
+        row = {k: vals[i] for i, k in _V5_KEPT}
         # virtual dev_id = v5 engine_id (netflow.c:742 sets
         # fpi->source_id = pkt->header.engine_id, stamped on every flow
         # by virtual_fields_init, netflow.c:110-121)
