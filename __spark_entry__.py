@@ -55,7 +55,7 @@ from xenoeye_spark.datapipe.text import (
     text_stats,
     token_count,
 )
-from xenoeye_spark.enrich.devices import apply_sampling_rate
+from xenoeye_spark.enrich.devices import DeviceConfig, apply_devices
 from xenoeye_spark.enrich.geoip import GeoDB
 from xenoeye_spark.enrich.iplist import IpList
 from xenoeye_spark.functions.scalar import (
@@ -596,16 +596,14 @@ def q_ppstr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fwm_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fwm with per-device sampling-rate multiplier via broadcast dim join
-    (devices.c:199-235, monit-objects.c:995)."""
+    """fwm with the per-device sampling-rate multiplier of devices.conf
+    (devices.c:199-235, monit-objects.c:995): eight ip-only entries,
+    resolved by the daemon's own ``apply_devices``."""
     ev = _t(spark, sf_dir, "events").withColumn(
         "dev_ip", (F.col("user_id") % 8).cast("long")
     )
-    devices = spark.range(8).select(
-        F.col("id").alias("dev_ip"),
-        (F.col("id") * 10 + 1).alias("sampling_rate"),
-    )
-    enriched = apply_sampling_rate(ev, devices)
+    devices = [DeviceConfig(ip=i, sampling_rate=i * 10 + 1) for i in range(8)]
+    enriched = apply_devices(ev, devices)
     return enriched.groupBy("event_type").agg(
         F.round(F.sum(F.col("value") * F.col("sampling_rate")), 6).alias("sum_scaled")
     )
@@ -2090,9 +2088,14 @@ def q_ppl_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = bigram_lm_score(ev, tr, k=0.5).join(
         ev.select("doc_id", "lang"), "doc_id"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    return quantile_bucket(scored, ["lang"], "lm_ppl").select(
+    out = quantile_bucket(scored, ["lang"], "lm_ppl").select(
         "doc_id", "lang", "lm_ppl", "bucket"
     )
+    # the house cache-release contract (kmv_distinct): a long-lived
+    # session calls result._xe_cached.unpersist() once it has consumed
+    # the result
+    out._xe_cached = scored
+    return out
 
 
 def q_strip_common_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -86,6 +86,7 @@ def test_engine_builds_and_runs_all_queries(spark, tmp_path):
     ]
 
     queries = [make().trigger(availableNow=True).start() for _, make in builders]
+    assert [q.name for q in queries] == names
     for q in queries:
         q.awaitTermination(60)
         q.stop()
@@ -110,6 +111,34 @@ def test_engine_builds_and_runs_all_queries(spark, tmp_path):
     assert notif == [
         f"border-m1-hi-{0x0A000001}", f"border-m1-hi-{0x0A000002}",
     ]
+
+
+def test_engine_start_names_every_query(spark, tmp_path):
+    """Every standing query Engine.start starts — fwm, mavg and
+    classification alike — carries its builder's name, so a dead one
+    can be reported by name."""
+    mo_root = _write_mo_dir(tmp_path / "modir")
+    src_dir = tmp_path / "flows"
+    df = spark.createDataFrame(
+        _flows_rows(),
+        "ts long, ip4_src_addr long, ip4_dst_addr long, in_bytes long, "
+        "protocol long, l4_dst_port long",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.coalesce(1).write.parquet(str(src_dir))
+    eng = Engine(
+        mo_root,
+        exp_dir=str(tmp_path / "exp"),
+        state_dir=str(tmp_path / "state"),
+        run_scripts=False,
+        silent_watch=False,
+    )
+    stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
+    names = [n for n, _ in eng.builders(stream)]
+    queries = eng.start(stream)
+    try:
+        assert [q.name for q in queries] == names
+    finally:
+        eng.stop(queries)
 
 
 def test_engine_restart_no_duplicate_processing(spark, tmp_path):

@@ -132,11 +132,13 @@ def test_daemon_exits_nonzero_when_a_query_dies(spark, tmp_path, capsys,
     """One standing query whose sink raises on its first batch must end
     the daemon while the other query is still healthy: main() stops the
     rest, reports the dead query's name and error on stderr and returns
-    1, instead of polling on while any query is alive."""
+    1, instead of polling on while any query is alive. Once for a dying
+    mavg sink, once for a dying fwm export."""
     import threading
 
     from tests.test_sources import build_v5
     from xenoeye_spark import __main__ as daemon
+    from xenoeye_spark.streaming import fwm_stream
     from xenoeye_spark.streaming.act import AlertActionSink
 
     mo = tmp_path / "mo" / "edge"
@@ -164,27 +166,40 @@ def test_daemon_exits_nonzero_when_a_query_dies(spark, tmp_path, capsys,
     def broken_sink(self, df, epoch_id):
         raise RuntimeError("alert sink broke")
 
-    monkeypatch.setattr(AlertActionSink, "process_batch", broken_sink)
-    result: dict = {}
-    before = {q.id for q in spark.streams.active}
+    def broken_export(*a, **kw):
+        raise RuntimeError("fwm export broke")
 
-    def serve():
-        result["rc"] = daemon.main([
-            "-c", str(conf), "--spool", str(spool),
-            "--state", str(tmp_path / "state"), "--exp", str(tmp_path / "exp"),
-        ])
+    cases = [
+        ("edge.mavg.m1.octets.hi", "alert sink broke",
+         AlertActionSink, "process_batch", broken_sink),
+        ("edge.fwm.f1", "fwm export broke",
+         fwm_stream, "fwm_sql_export", broken_export),
+    ]
+    for i, (qname, msg, owner, attr, broken) in enumerate(cases):
+        with monkeypatch.context() as mp:
+            mp.setattr(owner, attr, broken)
+            result: dict = {}
+            before = {q.id for q in spark.streams.active}
 
-    th = threading.Thread(target=serve, daemon=True)
-    th.start()
-    try:
-        th.join(timeout=180)
-        assert not th.is_alive(), "daemon kept running past a dead query"
-    finally:
-        for q in spark.streams.active:
-            if q.id not in before:
-                q.stop()
-        th.join(timeout=60)
-    assert result.get("rc") == 1
-    err = capsys.readouterr().err
-    assert "edge.mavg.m1.octets.hi" in err and "alert sink broke" in err
-    assert not [q for q in spark.streams.active if q.id not in before]
+            def serve():
+                result["rc"] = daemon.main([
+                    "-c", str(conf), "--spool", str(spool),
+                    "--state", str(tmp_path / f"state{i}"),
+                    "--exp", str(tmp_path / f"exp{i}"),
+                ])
+
+            th = threading.Thread(target=serve, daemon=True)
+            th.start()
+            try:
+                th.join(timeout=180)
+                assert not th.is_alive(), \
+                    f"daemon kept running past a dead {qname}"
+            finally:
+                for q in spark.streams.active:
+                    if q.id not in before:
+                        q.stop()
+                th.join(timeout=60)
+        assert result.get("rc") == 1
+        err = capsys.readouterr().err
+        assert f"standing query {qname!r} died" in err and msg in err
+        assert not [q for q in spark.streams.active if q.id not in before]

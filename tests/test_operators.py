@@ -261,57 +261,6 @@ def test_token_count_golden(spark):
     assert out[2]["n_ws_tokens"] == 0 and out[2]["n_bpe_tokens"] == 0
 
 
-def test_ewma_replay_vec_matches_scalar():
-    """Segmented-suffix-product replay vs the scalar fold: same reset
-    semantics, <=1e-11 relative divergence, long-history underflow OK."""
-    from xenoeye_spark.operators.mavg import ewma_replay_vec
-    rng = np.random.RandomState(5)
-    T = int(60e9)
-    # random histories incl. exact-boundary dt == T (reset) and dt just under
-    for trial in range(50):
-        m = rng.randint(1, 400)
-        gaps = rng.choice(
-            [1, int(1e9), int(30e9), T - 1, T, T + int(1e9)], size=m
-        )
-        ts = np.cumsum(gaps.astype(np.int64)) + 1_700_000_000_000_000_000
-        vals = rng.rand(m) * 1e6
-        n_py, t_py = ewma_replay_py(ts, vals, T)
-        n_vec, t_vec = ewma_replay_vec(ts, vals, T)
-        assert t_py == t_vec
-        assert n_vec == pytest.approx(n_py, rel=1e-11, abs=1e-9)
-    # 50k-row single segment: suffix products underflow benignly
-    ts = (np.arange(50_000, dtype=np.int64) * int(1e9)
-          + 1_700_000_000_000_000_000)
-    vals = np.ones(50_000)
-    n_py, _ = ewma_replay_py(ts, vals, T)
-    n_vec, _ = ewma_replay_vec(ts, vals, T)
-    assert n_vec == pytest.approx(n_py, rel=1e-9)
-    assert ewma_replay_vec(np.array([], dtype=np.int64), np.array([]), T) \
-        == (0.0, None)
-
-
-def test_mavg_rates_vectorized_flag(spark):
-    """mavg_rates(vectorized=True) agrees with the default scalar path
-    to rounding precision on every key."""
-    rng = np.random.RandomState(9)
-    rows = []
-    for k in range(8):
-        t = 1_700_000_000.0
-        for _ in range(rng.randint(3, 60)):
-            t += float(rng.choice([0.5, 10.0, 61.0]))
-            rows.append((f"k{k}", t, float(rng.rand() * 1000)))
-    df = spark.createDataFrame(rows, "k string, ts double, v double") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    slow = {r["k"]: r["rate"]
-            for r in mavg_rates(df, ["k"], "v", window_sec=60).collect()}
-    fast = {r["k"]: r["rate"]
-            for r in mavg_rates(df, ["k"], "v", window_sec=60,
-                                vectorized=True).collect()}
-    assert set(slow) == set(fast)
-    for k in slow:
-        assert fast[k] == pytest.approx(slow[k], rel=1e-11)
-
-
 # ------------------------------------------------------------- temporal ops
 
 def test_asof_join_backward_semantics(spark):

@@ -334,7 +334,12 @@ def test_ppl_split_runs_the_lm_pipeline_once(spark):
     assert _parquet_scans_run(
         quantile_bucket(scored, ["lang"], "lm_ppl")
     ) == 12
-    assert _parquet_scans_run(entrymod.q_ppl_split(spark, SF_DIR)) == 6
+    out = entrymod.q_ppl_split(spark, SF_DIR)
+    assert _parquet_scans_run(out) == 6
+    # the persisted scored table is handed to the caller to release
+    assert out._xe_cached.storageLevel.useMemory
+    out._xe_cached.unpersist(blocking=True)
+    assert not out._xe_cached.storageLevel.useMemory
 
 
 # ------------------------------- nondeterministic pandas-UDF pins (r13)

@@ -544,6 +544,34 @@ def test_template_journal_restart_persistence(spark, tmp_path):
     assert seed3 == seed
 
 
+def test_template_redefined_after_restart_decodes_with_new_layout(
+        spark, tmp_path):
+    """A router that redefines a template after a restart: the live
+    journal holds the new layout, the startup seed the old one. Data
+    must decode with the NEW layout — the journal is newer than the
+    seed."""
+    from xenoeye_spark.sources.netflow import TemplateJournal
+
+    tj = TemplateJournal(str(tmp_path / "templates"))
+    # before the restart: template 256 = (src addr, in_bytes)
+    tj.append_packet(build_v9([(8, 4), (1, 4)], [(1, 2)]), dev_ip=7)
+    seed = tj.load()
+    # after it: the router swaps the two fields
+    tj.append_packet(build_v9([(1, 4), (8, 4)], [(3, 4)]), dev_ip=7)
+    tj.close()
+    data_body = int(1000).to_bytes(4, "big") + int(0x0A000001).to_bytes(4, "big")
+    data_pkt = (struct.pack(">HHIIII", 9, 1, 0, 1700000000, 2, 7)
+                + struct.pack(">HH", 256, 4 + len(data_body)) + data_body)
+    df = spark.createDataFrame(
+        [(data_pkt, 7, 1.7e9)], "data binary, dev_ip long, recv_ts double"
+    ).withColumn("recv_ts", F.col("recv_ts").cast("timestamp"))
+    rows = decode_packets_df(
+        df, seed_templates=seed, journal_paths=(tj.json_path, tj.pkts_path)
+    ).collect()
+    assert [(r["in_bytes"], r["ip4_src_addr"]) for r in rows] == \
+        [(1000, 0x0A000001)]
+
+
 def test_bridge_journals_templates(spark, tmp_path):
     """The UDP bridge appends template-bearing packets to the journal."""
     import socket as sock_mod

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 
 from xenoeye_spark.config.mo import MoConfig, parse_jsonc
 from xenoeye_spark.operators.mavg import ewma_replay_py
-from xenoeye_spark.streaming.fwm_stream import fwm_sql_export, fwm_streaming_query
+from xenoeye_spark.streaming.fwm_stream import fwm_batch_handler, fwm_sql_export
 from xenoeye_spark.streaming.mavg_stream import mavg_alert_stream
 
 FLOW_SCHEMA = T.StructType([
@@ -209,11 +209,13 @@ def test_fwm_streaming_sql_export(spark, tmp_path):
     ])
     stream = spark.readStream.schema(schema).parquet(src)
     exp_dir = str(tmp_path / "exp")
-    writer = fwm_streaming_query(
-        stream, mo, mo.fwm[0], exp_dir=exp_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+    handler = fwm_batch_handler(
+        mo, mo.fwm[0],
+        lambda result, epoch: fwm_sql_export(result, "momo_fw1", exp_dir, epoch),
     )
-    q = writer.start()
+    q = (stream.writeStream.foreachBatch(handler)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
     q.awaitTermination(120)
 
     files = glob.glob(os.path.join(exp_dir, "momo_fw1_*.sql"))
@@ -405,10 +407,36 @@ def _mfreq_scalar_replay(flows, pred_values):
     return decisions
 
 
+def _mfreq_fwm_handler(filter_str, ctx, got):
+    """An fwm handler over an exact-mfreq filter whose sink records, per
+    one-flow batch, whether the flow passed the filter."""
+    from xenoeye_spark.dsl.compiler import find_mfreq_field_pairs
+    from xenoeye_spark.streaming.mfreq_stream import MfreqState
+
+    mo = MoConfig.from_dict({
+        "filter": filter_str,
+        "fwm": [{"name": "f", "fields": ["src port", "octets"], "time": 30}],
+    }, name="m")
+    state = MfreqState()
+    handler = fwm_batch_handler(
+        mo, mo.fwm[0], lambda result, epoch: got.append(result.count() > 0),
+        ctx, mfreq_state=state,
+        mfreq_pairs=find_mfreq_field_pairs(filter_str, ctx),
+    )
+    return handler, state
+
+
+def _one_flow_batch(spark, a, b):
+    return spark.createDataFrame(
+        [(a, b, 1, float(BASE))],
+        "l4_src_port long, l4_dst_port long, in_bytes long, ts double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def test_mfreq_exact_streaming_matches_scalar_replay(spark):
-    """One-row triggers == per-flow evaluation: the MfreqLoop must make
-    exactly the reference's order-dependent decisions."""
-    from xenoeye_spark.streaming.mfreq_stream import MfreqLoop
+    """One-row triggers == per-flow evaluation: the fwm handler's exact
+    mfreq must make exactly the reference's order-dependent decisions."""
+    from xenoeye_spark.dsl.compiler import FilterContext, compile_filter
 
     # crafted so min2 would diverge: 443 becomes globally frequent, so
     # later (443, 80) flows resolve to 443 even though min is 80
@@ -417,18 +445,13 @@ def test_mfreq_exact_streaming_matches_scalar_replay(spark):
     expected = _mfreq_scalar_replay(flows, {443})
 
     got = []
-    loop = MfreqLoop(
-        "mfreq(src port, dst port) 443", "l4_src_port", "l4_dst_port",
-        output_fn=lambda df, epoch: got.append(df.count() > 0),
+    handler, _ = _mfreq_fwm_handler(
+        "mfreq(src port, dst port) 443", FilterContext(), got
     )
     for i, (a, b) in enumerate(flows):
-        batch = spark.createDataFrame(
-            [(a, b)], "l4_src_port long, l4_dst_port long"
-        )
-        loop.process_batch(batch, i)
+        handler(_one_flow_batch(spark, a, b), i)
     assert got == expected
     # sanity: the order-dependent answer differs from the min2 approx
-    from xenoeye_spark.dsl.compiler import FilterContext, compile_filter
     df = spark.createDataFrame(flows, "l4_src_port long, l4_dst_port long")
     approx = [r[0] for r in df.select(
         compile_filter("mfreq(src port, dst port) 443", FilterContext())
@@ -439,7 +462,7 @@ def test_mfreq_exact_streaming_matches_scalar_replay(spark):
 def test_mfreq_batch_granularity(spark):
     """Multi-row triggers: decisions inside one batch share the
     batch-start table; the table still accumulates across batches."""
-    from xenoeye_spark.streaming.mfreq_stream import MfreqLoop, MfreqState, mfreq_decide
+    from xenoeye_spark.streaming.mfreq_stream import MfreqState, mfreq_decide
     import numpy as np
 
     batches = [
@@ -473,11 +496,10 @@ def test_mfreq_batch_granularity(spark):
 
 
 def test_mfreq_two_loops_share_ctx_without_racing(spark):
-    """Round-3 verdict minor #4: two MfreqLoops over ONE FilterContext
-    must keep independent frequency tables and never mutate the shared
-    ctx — the snapshot-bound fn is passed per compile, not stored."""
+    """Two exact-mfreq fwm handlers over ONE FilterContext must keep
+    independent frequency tables and never mutate the shared ctx — the
+    snapshot-bound fn is bound per batch, not stored."""
     from xenoeye_spark.dsl.compiler import FilterContext
-    from xenoeye_spark.streaming.mfreq_stream import MfreqLoop
 
     ctx = FilterContext()
     flows_a = [(443, 8080), (443, 9090), (80, 443)]   # 443-heavy
@@ -486,28 +508,23 @@ def test_mfreq_two_loops_share_ctx_without_racing(spark):
     exp_b = _mfreq_scalar_replay(flows_b, {53})
 
     got_a, got_b = [], []
-    loop_a = MfreqLoop(
-        "mfreq(src port, dst port) 443", "l4_src_port", "l4_dst_port",
-        ctx=ctx, output_fn=lambda df, e: got_a.append(df.count() > 0),
+    loop_a, state_a = _mfreq_fwm_handler(
+        "mfreq(src port, dst port) 443", ctx, got_a
     )
-    loop_b = MfreqLoop(
-        "mfreq(src port, dst port) 53", "l4_src_port", "l4_dst_port",
-        ctx=ctx, output_fn=lambda df, e: got_b.append(df.count() > 0),
+    loop_b, state_b = _mfreq_fwm_handler(
+        "mfreq(src port, dst port) 53", ctx, got_b
     )
-    assert loop_a.ctx is loop_b.ctx
     # interleave the two standing queries over the shared ctx
     for i, ((a1, b1), (a2, b2)) in enumerate(zip(flows_a, flows_b)):
-        loop_a.process_batch(spark.createDataFrame(
-            [(a1, b1)], "l4_src_port long, l4_dst_port long"), i)
-        loop_b.process_batch(spark.createDataFrame(
-            [(a2, b2)], "l4_src_port long, l4_dst_port long"), i)
+        loop_a(_one_flow_batch(spark, a1, b1), i)
+        loop_b(_one_flow_batch(spark, a2, b2), i)
     assert got_a == exp_a
     assert got_b == exp_b
     # the shared ctx was never mutated
     assert ctx.mfreq_fn is None
-    # and the tables stayed per-loop
-    assert loop_a.state.freq[443] == 3 and loop_a.state.freq[53] == 0
-    assert loop_b.state.freq[53] == 3 and loop_b.state.freq[443] == 0
+    # and the tables stayed per-handler
+    assert state_a.freq[443] == 3 and state_a.freq[53] == 0
+    assert state_b.freq[53] == 3 and state_b.freq[443] == 0
 
 
 def test_sessionize_stream_matches_batch(spark, tmp_path):

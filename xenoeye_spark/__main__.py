@@ -189,10 +189,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     # journal_paths: each decode task re-reads the live journal so
     # templates ANNOUNCED MID-RUN decode data in every later micro-batch
-    # (not just the batch carrying the announcement)
+    # (not just the batch carrying the announcement); tj.load() above
+    # already merged the restored templates into it
     flows = decode_packets_df(
         packets.repartition("dev_ip"),
-        seed_templates=seed,
         journal_paths=(tj.json_path, tj.pkts_path),
     )
     if cfg.devices and os.path.isfile(cfg.devices):

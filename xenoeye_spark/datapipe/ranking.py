@@ -282,26 +282,23 @@ def kmv_distinct(
     from xenoeye_spark.datapipe.util import env_int
 
     hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    # per-group distinct-hash counts: the prefilter's broadcast table,
-    # and (r13, VERDICT r12 #5) the source of the bypass total — the
-    # old separate hashed.count() routing job was one extra full pass
-    # over the persisted table, which at 100 TB is the corpus's whole
-    # distinct vocabulary. summing the tiny per-group table costs one
-    # rows-bounded-by-|groups| aggregate instead.
-    counts = hashed.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
     # size-adaptive prefilter bypass (r12 optimization, the CC fast-path
     # decision shape): the prefilter exists so a web-scale group's
     # distinct vocabulary never sorts on one ranking reducer, but its
     # broadcast/threshold/fallback machinery is ~2s of pure overhead
     # when the whole distinct-hash table is small (the gate corpus: 620
     # rows). Bound tunable via XE_KMV_LOCAL_ROWS; selection equivalence
-    # is the existing test_kmv_prefilter_matches_plain contract.
+    # is the existing test_kmv_prefilter_matches_plain contract. The
+    # routing count() fills the persisted table that both paths read,
+    # and shuffles nothing but one row per partition.
     local_rows = env_int("XE_KMV_LOCAL_ROWS", 200_000)
-    total_row = counts.agg(F.sum("_gn").alias("_t")).first()
-    if int(total_row["_t"] or 0) <= local_rows:
+    if hashed.count() <= local_rows:
         out = _plain(hashed)
         out._xe_cached = hashed
         return out
+    # per-group distinct-hash counts: the prefilter's broadcast table
+    # and the source of n_distinct_exact
+    counts = hashed.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
     cut = (
         F.least(
             F.lit(1.0), F.lit(float(prefilter_factor * k)) / F.col("_gn")

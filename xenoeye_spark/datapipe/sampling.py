@@ -89,20 +89,14 @@ def stratified_sample(
         from xenoeye_spark.datapipe.util import env_int
 
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        # per-group counts: the prefilter's broadcast table, and (r13,
-        # VERDICT r12 #5) the source of the bypass total — the old
-        # separate df.count() routing job was one extra full pass over
-        # the persisted frame; summing the tiny per-group table costs
-        # one rows-bounded-by-|groups| aggregate instead.
-        counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
         # size-adaptive bypass (r12 optimization, same decision shape as
         # kmv_distinct / connected_components): the hash-cut protects a
         # billion-row group's ranking reducer, but its count/threshold/
         # fallback joins are pure overhead when the WHOLE input is
         # small. Selection-identical by the existing prefilter contract.
+        # The routing count() fills the persist both paths read.
         local_rows = env_int("XE_STRAT_LOCAL_ROWS", 200_000)
-        total_row = counts.agg(F.sum("_gn").alias("_t")).first()
-        if int(total_row["_t"] or 0) <= local_rows:
+        if df.count() <= local_rows:
             w_small = Window.partitionBy(group_col).orderBy(
                 hkey.asc(), F.col(id_col).asc()
             )
@@ -112,6 +106,8 @@ def stratified_sample(
             )
             out._xe_cached = df
             return out
+        # per-group counts: the prefilter's broadcast table
+        counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_gn"))
         cut = (
             F.least(
                 F.lit(1.0),

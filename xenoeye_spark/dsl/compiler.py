@@ -276,7 +276,7 @@ def resolve_func_column(ctx: FilterContext, fp: FuncPred) -> tuple[Column, str]:
         return fs.min2(field_arg(0), field_arg(1)), RANGE
     if name == "mfreq":
         # Reference: shared historical frequency map, order-dependent
-        # (filter.c:711-751). With ctx.mfreq_fn set (MfreqLoop's
+        # (filter.c:711-751). With ctx.mfreq_fn set (the fwm handler's
         # per-trigger snapshot), semantics are exact; otherwise the
         # documented order-free approximation: min of the pair (ties in
         # the reference also resolve to min). See SURVEY.md §7.3.
@@ -337,24 +337,10 @@ def compile_ast(ctx: FilterContext, ast) -> Column:
     raise CompileError(f"unknown AST node {ast!r}")
 
 
-def compile_filter(
-    text: str,
-    ctx: FilterContext | None = None,
-    mfreq_fn=None,
-) -> Column:
-    """filter DSL string -> boolean Column.
-
-    ``mfreq_fn``: per-compile binding for ``mfreq()`` (a snapshot-bound
-    expression factory, streaming/mfreq_stream.py). Passed here rather
-    than mutated onto ``ctx`` so two standing queries can share one
-    context without racing on its ``mfreq_fn`` field — the binding lives
-    only in this compile's private shallow copy."""
+def compile_filter(text: str, ctx: FilterContext | None = None) -> Column:
+    """filter DSL string -> boolean Column."""
     if ctx is None:
         ctx = FilterContext()
-    if mfreq_fn is not None:
-        from dataclasses import replace as dc_replace
-
-        ctx = dc_replace(ctx, mfreq_fn=mfreq_fn)
     ast = parse_filter(text, set(ctx.fields))
     return compile_ast(ctx, ast)
 

@@ -108,10 +108,6 @@ def parse_range(text: str) -> tuple[int, int] | None:
         return None  # e.g. octal bound with digits 8/9: not a range
 
 
-def is_int_like(text: str) -> bool:
-    return bool(_INT_RE.match(text) or _RANGE_RE.match(text))
-
-
 def is_ip4(text: str) -> bool:
     return bool(_IP4_RE.match(text))
 

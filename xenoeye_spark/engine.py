@@ -16,8 +16,8 @@ Usage::
     ...
     eng.stop(queries)
 
-``builders()`` returns (name, start_fn) pairs instead, for callers that
-manage triggers/checkpoints themselves (and for tests, which drive each
+``builders()`` returns (name, make_writer) pairs instead, for callers
+that start the queries themselves (tests and the benchmark drive each
 query with availableNow over file sources).
 """
 
@@ -33,8 +33,9 @@ from xenoeye_spark.config.mo import MavgConfig, MoConfig, load_mo_dir
 from xenoeye_spark.dsl.compiler import FilterContext
 from xenoeye_spark.streaming.act import AlertActionSink, ExtGate
 from xenoeye_spark.streaming.classify_stream import ClassificationLoop
-from xenoeye_spark.streaming.fwm_stream import fwm_streaming_query
+from xenoeye_spark.streaming.fwm_stream import fwm_batch_handler
 from xenoeye_spark.streaming.mavg_stream import mavg_alert_stream
+from xenoeye_spark.streaming.mfreq_stream import MfreqState
 
 
 class Engine:
@@ -95,10 +96,23 @@ class Engine:
         for mo in self.mos:
             yield from rec(mo, "", None)
 
-    def _ckpt(self, qname: str) -> str | None:
+    def _standing(self, stream: DataFrame, handler, qname: str,
+                  every_sec: int):
+        """The one wiring of a standing query: every micro-batch of
+        ``stream`` goes to ``handler(batch_df, epoch_id)``, the query is
+        named ``qname``, triggers every ``every_sec`` seconds and
+        checkpoints under ``checkpoint_root`` (unless disabled)."""
+        w = (
+            stream.writeStream.foreachBatch(handler)
+            .outputMode("append").queryName(qname)
+            .trigger(processingTime=f"{every_sec} seconds")
+        )
         if self.checkpoint_root is None:
-            return None
-        return os.path.join(self.checkpoint_root, qname.replace("/", "_"))
+            return w
+        return w.option(
+            "checkpointLocation",
+            os.path.join(self.checkpoint_root, qname.replace("/", "_")),
+        )
 
     # -- builders ------------------------------------------------------------
 
@@ -179,18 +193,11 @@ class Engine:
                 )
 
                 def make_writer(alerts=alerts, sink=sink, qname=qname):
-                    w = (
-                        alerts.writeStream.foreachBatch(sink.process_batch)
-                        .outputMode("append").queryName(qname)
-                        # the silent-key watch's ProcessingTimeTimeout
-                        # makes the default ASAP trigger run no-data
-                        # batches back to back; its tick is >= 1 s
-                        # (make_mavg_bucket_fn), so pacing at 1 s delays
-                        # no timeout
-                        .trigger(processingTime="1 second")
-                    )
-                    ck = self._ckpt(qname)
-                    return w.option("checkpointLocation", ck) if ck else w
+                    # the silent-key watch's ProcessingTimeTimeout makes
+                    # the default ASAP trigger run no-data batches back
+                    # to back; its tick is >= 1 s (make_mavg_bucket_fn),
+                    # so pacing at 1 s delays no timeout
+                    return self._standing(alerts, sink.process_batch, qname, 1)
 
                 yield qname, make_writer
 
@@ -225,23 +232,18 @@ class Engine:
             )
 
             def make_writer(proj=proj, loop=loop, qname=qname, cl=cl):
-                w = (
-                    proj.writeStream.foreachBatch(loop.process_batch)
-                    .outputMode("append").queryName(qname)
-                    # honor the configured cycle period — the default
-                    # ASAP trigger would rebuild + collect the model
-                    # every micro-batch (classification.c cycle time)
-                    .trigger(processingTime=f"{cl.time} seconds")
-                )
-                ck = self._ckpt(qname)
-                return w.option("checkpointLocation", ck) if ck else w
+                # honor the configured cycle period — the default ASAP
+                # trigger would rebuild + collect the model every
+                # micro-batch (classification.c cycle time)
+                return self._standing(proj, loop.process_batch, qname, cl.time)
 
             yield qname, make_writer
 
     def builders(self, flows_stream: DataFrame, ts_col: str = "ts"):
         """All standing queries as (query_name, make_writer) pairs.
-        ``make_writer()`` returns a DataStreamWriter ready for
-        ``.trigger(...).start()``."""
+        ``make_writer()`` returns the query's DataStreamWriter from
+        ``_standing``, ready for ``.start()``; a bounded drain overrides
+        its trigger with ``.trigger(availableNow=True)``."""
         out = []
         for name, parent_col, mo in self._walk():
             base = (
@@ -277,22 +279,17 @@ class Engine:
                             db_type=self.db_type, ch_codec=self.ch_codec,
                         )
 
-                    mf_state = None
-                    if mf_pairs:
-                        from xenoeye_spark.streaming.mfreq_stream import (
-                            MfreqState,
-                        )
-
-                        # per-query frequency map; the shared ctx is safe
-                        # as-is — fwm_streaming_query binds the snapshot
-                        # factory into a per-batch copy, never the ctx
-                        mf_state = MfreqState()
-                    return fwm_streaming_query(
-                        base, mo, fwm, self.ctx, ts_col=ts_col,
-                        sink_fn=sink, checkpoint_dir=self._ckpt(qname),
-                        available_now=False,
-                        mfreq_state=mf_state, mfreq_pairs=mf_pairs,
+                    # per-query frequency map; the shared ctx is safe
+                    # as-is — the handler binds the snapshot factory into
+                    # a per-batch copy, never the ctx
+                    handler = fwm_batch_handler(
+                        mo, fwm, sink, self.ctx, ts_col=ts_col,
+                        mfreq_state=MfreqState() if mf_pairs else None,
+                        mfreq_pairs=mf_pairs,
                     )
+                    # the reference exports on window boundaries
+                    # (monit-objects-fwm.c:704)
+                    return self._standing(base, handler, qname, fwm.spec.time)
 
                 out.append((qname, make_writer))
             out.extend(self._mavg_writers(name, base, mo, ts_col))

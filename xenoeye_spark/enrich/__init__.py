@@ -1,5 +1,4 @@
 from xenoeye_spark.enrich.iplist import IpList
 from xenoeye_spark.enrich.geoip import GeoDB
-from xenoeye_spark.enrich.devices import apply_device_marks
 
-__all__ = ["IpList", "GeoDB", "apply_device_marks"]
+__all__ = ["IpList", "GeoDB"]

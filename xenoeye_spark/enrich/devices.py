@@ -13,7 +13,7 @@ import socket
 import struct
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xenoeye_spark.dsl.compiler import FilterContext, compile_filter
@@ -83,38 +83,6 @@ def load_devices_conf(path: str) -> list[DeviceConfig]:
     return [DeviceConfig.from_dict(d) for d in entries]
 
 
-def devices_df(spark, devices: list[DeviceConfig]) -> DataFrame:
-    """(dev_ip, dev_id, sampling_rate) dimension for apply_sampling_rate."""
-    return spark.createDataFrame(
-        [(d.ip, d.id, d.sampling_rate) for d in devices],
-        "dev_ip long, dev_id long, sampling_rate long",
-    )
-
-
-def sampling_rate_expr(devices: list[DeviceConfig], default_rate=None):
-    """First-match-wins sampling rate as a pure Column expression
-    (device_get_sampling_rate, devices.c:199-232 + sampling_rate_init,
-    netflow.c:126-142): entries are tried in config order; an entry
-    matches on exactly the keys it declares. No match → ``default_rate``
-    (the reference hard-codes 1, netflow.c:142; we default to the flow's
-    own header-advertised rate when present — a documented superset,
-    since the reference never reads the v5 header sampling field).
-
-    No join, no shuffle: devices.conf is O(10) entries, so the lookup
-    compiles to a chained CASE WHEN inside whole-stage codegen."""
-    if default_rate is None:
-        default_rate = F.coalesce(F.col("sampling_rate"), F.lit(1))
-    expr = None
-    for d in devices:
-        cond = d.match_expr()
-        rate = F.lit(int(d.sampling_rate))
-        expr = expr.when(cond, rate) if expr is not None else F.when(cond, rate)
-    if expr is None:
-        return default_rate if isinstance(default_rate, Column) \
-            else F.lit(default_rate)
-    return expr.otherwise(default_rate)
-
-
 def apply_devices(
     flows: DataFrame,
     devices: list[DeviceConfig],
@@ -165,34 +133,3 @@ def apply_devices(
         .drop("_dev_idx")
     )
 
-
-def apply_sampling_rate(
-    flows: DataFrame, devices: DataFrame, default_rate: int = 1
-) -> DataFrame:
-    """Broadcast-join sampling_rate by (dev_ip [, dev_id])."""
-    keys = ["dev_ip"] + (["dev_id"] if "dev_id" in devices.columns else [])
-    dim = devices.select(*keys, F.col("sampling_rate").alias("_sr"))
-    out = flows.join(F.broadcast(dim), on=keys, how="left")
-    return out.withColumn(
-        "sampling_rate", F.coalesce(F.col("_sr"), F.lit(default_rate))
-    ).drop("_sr")
-
-
-def apply_device_marks(
-    flows: DataFrame,
-    mark_filters: list[str],
-    ctx: FilterContext | None = None,
-    skip_unmarked: bool = False,
-) -> DataFrame:
-    """dev_mark = count of matching mark expressions; optionally drop
-    unmarked flows (devices.c:286-314)."""
-    if ctx is None:
-        ctx = FilterContext()
-    mark = F.lit(0)
-    for expr_str in mark_filters:
-        cond = compile_filter(expr_str, ctx)
-        mark = mark + F.when(cond, F.lit(1)).otherwise(F.lit(0))
-    out = flows.withColumn("dev_mark", mark.cast("long"))
-    if skip_unmarked:
-        out = out.filter(F.col("dev_mark") > 0)
-    return out

@@ -25,8 +25,6 @@ proportional to that key's row count (no replay amplification).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
 
@@ -55,34 +53,6 @@ def ewma_replay_py(times_ns: np.ndarray, vals: np.ndarray, window_ns: int):
     return n, tprev
 
 
-def ewma_replay_vec(times_ns: np.ndarray, vals: np.ndarray, window_ns: int):
-    """Vectorized twin of ``ewma_replay_py`` via segmented suffix
-    products: only the segment after the LAST reset (dt >= T) matters
-    for the final accumulator, and within it
-        n_final = sum_j v_j * prod_{k>j} (1 - dt_k/T).
-    Suffix products underflow to 0.0 for very old contributions — the
-    mathematically correct limit — so no renormalization is needed.
-
-    FP caveat: the scalar fold computes ``n - (dt/T)*n + v`` stepwise;
-    the product form regroups those operations, so results agree to
-    ~1e-12 relative, not bit-for-bit. Use for historical replay speed;
-    keep the scalar fold where an oracle compares exact bits
-    (__spark_entry__.py mavg_ewma).
-    """
-    m = len(times_ns)
-    if m == 0:
-        return 0.0, None
-    vals = np.asarray(vals, dtype=np.float64)
-    dt = np.diff(np.asarray(times_ns, dtype=np.int64))
-    reset = np.concatenate(([True], dt >= window_ns))
-    last_reset = m - 1 - int(np.argmax(reset[::-1]))
-    seg_v = vals[last_reset:]
-    decay = 1.0 - dt[last_reset:] / window_ns  # factors within the segment
-    # suffix[j] = prod of decay factors applied after contribution j
-    suffix = np.concatenate((np.cumprod(decay[::-1])[::-1], [1.0]))
-    return float(np.dot(seg_v, suffix)), int(times_ns[-1])
-
-
 def mavg_rates(
     df: DataFrame,
     key_cols: list[str],
@@ -90,21 +60,17 @@ def mavg_rates(
     window_sec: int,
     ts_col: str = "ts",
     decay_to: int | None = None,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Batch replay: final per-key moving-average rate (value/sec).
 
     ``decay_to``: optional unix-nanosecond instant to decay the accumulator
     to before reporting (the reference's background threads decay silently
     idle keys, monit-objects-mavg-act.c:391-397).
-    ``vectorized``: use the segmented-suffix-product replay (fast for
-    long histories; ~1e-12 relative FP divergence from the scalar fold —
-    see ewma_replay_vec). Default stays the scalar fold, which is
-    bit-exact against the DuckDB list_reduce oracle.
+    The replay is the scalar fold, bit-exact against the DuckDB
+    list_reduce oracle.
     Output: key_cols..., ``mavg_val`` (accumulator), ``rate`` (val/sec).
     """
     window_ns = int(window_sec * 1e9)
-    replay_fn = ewma_replay_vec if vectorized else ewma_replay_py
 
     out_fields = [df.schema[k] for k in key_cols] + [
         T.StructField("mavg_val", T.DoubleType()),
@@ -118,7 +84,7 @@ def mavg_rates(
         # arithmetic) but FP association differs, so an oracle comparing
         # bit-for-bit needs both sides to agree on tie order
         pdf = pdf.sort_values(["_ts_ns", "_val"], kind="mergesort")
-        n, tprev = replay_fn(
+        n, tprev = ewma_replay_py(
             pdf["_ts_ns"].to_numpy(), pdf["_val"].to_numpy(), window_ns
         )
         if decay_to is not None and tprev is not None:
@@ -143,13 +109,6 @@ def mavg_rates(
     )
 
     return prepped.groupBy(*key_cols).applyInPandas(replay, schema=out_schema)
-
-
-@dataclass
-class Limit:
-    """One limit level of an mavg section (CONFIG.md:376-435)."""
-    name: str
-    default_threshold: float
 
 
 def mavg_overlimit(

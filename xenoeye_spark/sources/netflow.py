@@ -436,7 +436,8 @@ def decode_packets_df(
     template packets precede its data packets in the same partition.
 
     ``seed_templates``: TemplateStore.dump() output to pre-seed (static;
-    the restart-parity path).
+    the restart-parity path). With ``journal_paths`` as well, the
+    journal's templates win over the seed's.
 
     ``journal_paths``: (json_path, pkts_path) of the live
     TemplateJournal. Each TASK starts a fresh TemplateStore, so a
@@ -454,14 +455,14 @@ def decode_packets_df(
     names = [f.name for f in schema.fields]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        store = TemplateStore()
+        if seed_templates:
+            store.load(seed_templates)
         if journal_paths is not None:
-            store = TemplateJournal.replay(*journal_paths)
-            if seed_templates:
-                store.load(seed_templates)
-        else:
-            store = TemplateStore()
-            if seed_templates:
-                store.load(seed_templates)
+            # the journal is newer than any seed: a template the router
+            # redefined after the seed was taken decodes with its new
+            # layout
+            store.load(TemplateJournal.replay(*journal_paths).dump())
         for pdf in batches:
             out_rows = []
             for data, dev_ip, ts in zip(

@@ -6,12 +6,14 @@ written as a SQL file (CREATE TABLE IF NOT EXISTS + INSERTs) that a runner
 ships to PostgreSQL/ClickHouse, keeping failed files for retry
 (INTERNALS.md:46).
 
-Spark shape: ``readStream → filter → foreachBatch``. Inside foreachBatch we
-run the *batch* fwm pipeline (windowed agg → top-N+others) on the
-micro-batch and append to the sink. Micro-batch boundaries are the bank
-swap (SURVEY.md §2.8 double-banking == micro-batch state flush); the
-checkpoint gives the exactly-once durability the reference builds by hand
-with export files + ``expfailed/``.
+Spark shape: ``readStream → filter → foreachBatch``. Inside foreachBatch
+``fwm_batch_handler`` runs the *batch* fwm pipeline (windowed agg →
+top-N+others) on the micro-batch and hands it to the sink; the Engine
+wires the query (trigger = the fwm's window size, checkpoint, name).
+Micro-batch boundaries are the bank swap (SURVEY.md §2.8 double-banking
+== micro-batch state flush); the checkpoint gives the exactly-once
+durability the reference builds by hand with export files +
+``expfailed/``.
 
 The SQL-file sink is kept for operational parity: identical DDL/INSERT
 shape so the reference's db-export scripts work unchanged.
@@ -123,41 +125,18 @@ def fwm_sql_export(
     return path
 
 
-def write_jdbc(
-    result: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    properties: dict | None = None,
-) -> None:
-    """Direct JDBC append — the production sink when a DB driver jar is on
-    the classpath (the SQL-file path above is the driverless/durable
-    alternative, mirroring the reference's export-file + retry design)."""
-    writer = result.write.mode(mode)
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.jdbc(url, table)
-
-
-def fwm_streaming_query(
-    flows_stream: DataFrame,
+def fwm_batch_handler(
     mo: MoConfig,
     fwm: FwmConfig,
+    sink_fn,
     ctx: FilterContext | None = None,
     ts_col: str = "ts",
-    exp_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-    sink_fn=None,
-    trigger_sec: int | None = None,
-    available_now: bool = False,
     mfreq_state=None,
     mfreq_pairs: list[tuple[str, str]] = (),
 ):
-    """Build (not start) the streaming query for one fwm entry.
-
-    ``sink_fn(result_df, epoch_id)``: custom sink; default writes SQL files
-    to ``exp_dir``. Trigger defaults to the fwm's window size — the
-    reference exports on window boundaries (monit-objects-fwm.c:704).
+    """The foreachBatch handler of one fwm entry: runs the batch fwm
+    pipeline over each micro-batch and hands the result to
+    ``sink_fn(result_df, epoch_id)``.
 
     ``mfreq_state``/``mfreq_pairs``: exact streaming mfreq (Engine
     exact_mfreq=True): the filter recompiles per trigger against the
@@ -170,7 +149,6 @@ def fwm_streaming_query(
     """
     if ctx is None:
         ctx = FilterContext()
-    table = f"{mo.name}_{fwm.name}"
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # bind the snapshot factory into a private shallow copy — the
@@ -181,29 +159,14 @@ def fwm_streaming_query(
             bctx = dc_replace(ctx, mfreq_fn=mfreq_state.expr)
         else:
             bctx = ctx
-        result = mo.fwm_result(batch_df, fwm, bctx, ts_col=ts_col)
-        if sink_fn is not None:
-            sink_fn(result, epoch_id)
-        elif exp_dir is not None:
-            fwm_sql_export(result, table, exp_dir, epoch_id)
+        sink_fn(mo.fwm_result(batch_df, fwm, bctx, ts_col=ts_col), epoch_id)
         if mfreq_state is not None:
             # the reference bumps the map for every EVALUATED flow,
             # matching or not (filter.c:736-741) -> observe the whole batch
             for c1, c2 in mfreq_pairs:
                 mfreq_state.observe(batch_df, c1, c2)
 
-    writer = flows_stream.writeStream.foreachBatch(handle_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(
-            processingTime=f"{trigger_sec or fwm.spec.time} seconds"
-        )
-    return writer
+    return handle_batch
 
 
 def fwm_event_time_stream(

@@ -7,7 +7,8 @@ function result (tie -> smaller value) — and then the table is bumped
 (filter.c:711-751). The result therefore depends on arrival order.
 
 Spark shape (the ClassificationLoop feedback pattern,
-streaming/classify_stream.py): inside ``foreachBatch``, stamp/filter the
+streaming/classify_stream.py): inside the fwm query's ``foreachBatch``
+(``fwm_stream.fwm_batch_handler``), stamp/filter the
 micro-batch with the table as accumulated from PREVIOUS batches — a
 vectorized lookup into a 65536-slot numpy array inside an Arrow-batched
 pandas UDF, no join, no shuffle — then fold this batch's value counts
@@ -89,43 +90,3 @@ class MfreqState:
         )
         for r in counts:
             self.freq[int(r["v"]) & 0xFFFF] += int(r["n"])
-
-
-class MfreqLoop:
-    """foreachBatch driver for a standing filter containing ``mfreq``.
-
-    Recompiles the filter per trigger with ``FilterContext.mfreq_fn``
-    bound to the current table snapshot, emits the filtered batch via
-    ``output_fn(df, epoch_id)``, then updates the table from ALL rows of
-    the batch (the reference bumps the map for every evaluated flow,
-    matching or not, filter.c:736-741)."""
-
-    def __init__(
-        self,
-        filter_str: str,
-        arg_col1: str,
-        arg_col2: str,
-        ctx=None,
-        output_fn=None,
-    ):
-        from xenoeye_spark.dsl.compiler import FilterContext
-
-        self.filter_str = filter_str
-        self.arg_col1 = arg_col1
-        self.arg_col2 = arg_col2
-        self.ctx = ctx or FilterContext()
-        self.output_fn = output_fn
-        self.state = MfreqState()
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from xenoeye_spark.dsl.compiler import compile_filter
-
-        # snapshot-bound fn passed per compile — the shared ctx is never
-        # mutated, so two loops over one ctx keep independent tables
-        cond = compile_filter(
-            self.filter_str, self.ctx, mfreq_fn=self.state.expr
-        )
-        out = batch_df.filter(cond)
-        if self.output_fn is not None:
-            self.output_fn(out, epoch_id)
-        self.state.observe(batch_df, self.arg_col1, self.arg_col2)
