@@ -319,8 +319,8 @@ def test_flow_path_tasks_import_nothing_after_fork(
         def __init__(self, df):
             self.df = df
 
-        def mapInPandas(self, fn, schema):
-            return self.df.mapInPandas(_recorded(fn, str(log)), schema)
+        def mapInArrow(self, fn, schema):
+            return self.df.mapInArrow(_recorded(fn, str(log)), schema)
 
     real_fn = mavg_stream.make_mavg_bucket_fn
     monkeypatch.setattr(

@@ -1,6 +1,6 @@
 """Decoder tests: NetFlow v5/v9/IPFIX and sFlow v5 built byte-by-byte from
 the public wire formats, decoded directly and through the Spark
-mapInPandas path."""
+mapInArrow path."""
 
 from __future__ import annotations
 
@@ -238,7 +238,7 @@ def test_sflow_icmp_type_in_dst_port():
 
 
 def test_decode_packets_df_spark(spark):
-    """The mapInPandas path: mixed v5/v9 packets -> wide flow DF."""
+    """The mapInArrow path: mixed v5/v9 packets -> wide flow DF."""
     tpl = [(8, 4), (12, 4), (1, 4), (2, 4), (4, 1)]
     pkts = [
         (build_v5([dict(src=0x0A000001, dst=0x0A000002, pkts=2, octets=200,

@@ -21,6 +21,12 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------------------
 # Field kinds (reference: netflow.h:18-25)
 # ---------------------------------------------------------------------------
+# Integer decode rule (INT and IP4, both decoders in sources.netflow): a
+# field of 0-7 bytes is an unsigned big-endian value (0 for 0 bytes); an
+# 8-byte field keeps its 64 bits as a two's-complement int64, so a
+# counter of 2^63 or more reads negative (2^64-1 -> -1) instead of
+# failing the Arrow conversion; a field wider than 8 bytes decodes to
+# NULL.
 INT = "int"          # unsigned counters/ids, 1-8 bytes big-endian -> LongType
 IP4 = "ip4"          # IPv4 -> LongType holding uint32
 IP6 = "ip6"          # IPv6 -> BinaryType(16)

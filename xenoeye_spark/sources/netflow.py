@@ -3,9 +3,19 @@
 Written from the public wire formats (NetFlow v9: RFC 3954, IPFIX:
 RFC 7011, v5: the fixed 48-byte record layout) with the same field
 coverage as the reference decoder (netflow.c, netflow.def, SURVEY.md
-§2.1). Not a translation: parsing is plain Python ``struct`` over
-``memoryview``, run inside ``mapInPandas`` so decode parallelizes per
-partition of raw packets and emits rows of the catalog schema.
+§2.1). Not a translation. Two decoders share the header and set walks:
+
+- ``parse_packet``: one packet -> one dict per flow, plain ``struct``
+  over ``memoryview``. It is the reference the columnar decoder is
+  tested against, and it decodes what that one leaves to it.
+- ``decode_batch``: a batch of packets -> one ``pyarrow.RecordBatch`` of
+  the catalog schema, run inside ``mapInArrow`` by ``decode_packets_df``
+  so decode parallelizes per partition of raw packets. v5 record areas
+  and v9/IPFIX data sets whose template has only fixed-length fields are
+  read with one ``np.frombuffer`` per record layout; sFlow and IPFIX
+  templates with variable-length fields go through ``parse_packet``'s
+  own decoders and become Arrow arrays one column at a time. Rows keep
+  packet order, so both decoders give the same rows.
 
 Template handling (v9/IPFIX are self-describing): templates announced by
 a router apply to its subsequent data sets. The store is keyed by
@@ -18,19 +28,24 @@ persistent template DB.
 
 Unknown field IDs are skipped (reference netflow.c:100-109); enterprise
 IDs are masked off to the IANA space (netflow.c:389-433); IPFIX
-variable-length fields are honored (netflow.c:367-383).
+variable-length fields are honored (netflow.c:367-383). Integer widths
+follow ``catalog.INT``: an 8-byte counter keeps its 64 bits as a
+two's-complement int64, a wider INT or IP4 field decodes to NULL.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import struct
 import threading
 from typing import Iterator
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from xenoeye_spark.catalog import FLOW_FIELDS, INT, IP4, IP6, MAC, STRING, flow_schema
+from xenoeye_spark.catalog import FLOW_FIELDS, INT, IP4, STRING, flow_schema
 
 # IANA IPFIX / NetFlow v9 information element ids -> catalog field names.
 # Same coverage as netflow.def:2-64.
@@ -53,19 +68,12 @@ FIELD_IDS: dict[int, str] = {
 }
 
 
-def _int_be(b: memoryview) -> int:
-    v = 0
-    for x in b.tobytes():
-        v = (v << 8) | x
-    return v
-
-
 def _decode_value(name: str, raw: memoryview):
     kind = FLOW_FIELDS[name]
     if kind == INT or kind == IP4:
-        return _int_be(raw)
-    if kind in (IP6, MAC):
-        return raw.tobytes()
+        if len(raw) > 8:
+            return None
+        return int.from_bytes(raw, "big", signed=len(raw) == 8)
     if kind == STRING:
         return raw.tobytes().split(b"\x00", 1)[0].decode("utf-8", "replace")
     return raw.tobytes()
@@ -87,23 +95,35 @@ _V5_FIELDS = (
 _V5_KEPT = tuple(
     (i, k) for i, k in enumerate(_V5_FIELDS) if not k.startswith("_")
 )
+# the same record as a numpy structured dtype (one frombuffer per batch)
+_V5_DTYPE = np.dtype([
+    (k, ">" + c) for k, c in zip(_V5_FIELDS, "IIIHHIIIIHHBBBBHHBBH")
+])
+assert _V5_DTYPE.itemsize == _V5_REC.size
 
 
-def parse_netflow_v5(data: bytes) -> list[dict]:
+def _v5_header(data: bytes):
+    """(records present, engine_id, sampling interval) of a v5 packet,
+    or None. The interval is the low 14 bits of the sampling word (the
+    top 2 are the mode)."""
     if len(data) < _V5_HDR.size:
-        return []
+        return None
     (ver, count, _sysup, _secs, _nsecs, _seq, _etype, eid,
      sampling) = _V5_HDR.unpack_from(data, 0)
     if ver != 5:
+        return None
+    n = min(count, (len(data) - _V5_HDR.size) // _V5_REC.size)
+    return n, eid, sampling & 0x3FFF
+
+
+def parse_netflow_v5(data: bytes) -> list[dict]:
+    hdr = _v5_header(data)
+    if hdr is None:
         return []
-    # sampling: 2 bits mode, 14 bits interval
-    rate = sampling & 0x3FFF
+    n, eid, rate = hdr
     rows = []
-    off = _V5_HDR.size
-    for _ in range(count):
-        if off + _V5_REC.size > len(data):
-            break
-        vals = _V5_REC.unpack_from(data, off)
+    for j in range(n):
+        vals = _V5_REC.unpack_from(data, _V5_HDR.size + j * _V5_REC.size)
         row = {k: vals[i] for i, k in _V5_KEPT}
         # virtual dev_id = v5 engine_id (netflow.c:742 sets
         # fpi->source_id = pkt->header.engine_id, stamped on every flow
@@ -112,7 +132,6 @@ def parse_netflow_v5(data: bytes) -> list[dict]:
         if rate:
             row["sampling_rate"] = rate
         rows.append(row)
-        off += _V5_REC.size
     return rows
 
 
@@ -220,64 +239,66 @@ def _decode_data_records(data: memoryview, template: list[tuple[int, int]],
     return rows
 
 
-def parse_netflow_v9(data: bytes, store: TemplateStore, dev_ip: int = 0) -> list[dict]:
-    if len(data) < 20:
-        return []
-    ver, count, _sysup, _secs, _seq, source_id = struct.unpack_from(">HHIIII", data, 0)
-    if ver != 9:
-        return []
+def _export_sets(data: bytes, store: TemplateStore, dev_ip: int,
+                 version: int):
+    """Walk the sets of a v9 (``version`` 9) or IPFIX (10) packet in
+    order. Template sets go into ``store`` as they are met; each data set
+    whose template is known comes back with the template in force at that
+    point, so a redefinition later in the packet does not change it.
+    Returns (source_id, [(template, data set body)]), or None for a short
+    header or another version."""
+    hdr = 20 if version == 9 else 16
+    if len(data) < hdr or struct.unpack_from(">H", data, 0)[0] != version:
+        return None
+    # v9: source_id; IPFIX: observation domain — the last header word
+    source_id = struct.unpack_from(">I", data, hdr - 4)[0]
     mv = memoryview(data)
-    rows: list[dict] = []
-    off = 20
-    while off + 4 <= len(data):
-        fsid, flen = struct.unpack_from(">HH", data, off)
-        if flen < 4:
-            break
-        body = mv[off + 4: off + flen]
-        if fsid == 0:
-            _parse_v9_templates(body, store, dev_ip, source_id)
-        elif fsid == 1:
-            pass  # options templates: skipped (reference skips option data)
-        elif fsid > 255:
-            tpl = store.get(dev_ip, source_id, 9, fsid)
-            if tpl is not None:
-                rows.extend(_decode_data_records(body, tpl, varlen_ok=False))
-        off += flen
-    # virtual dev_id = v9 header source_id on every flow
-    # (netflow.c:329 + virtual_fields_init netflow.c:110-121); without it
-    # devices.conf id-matching never fires and sampling is silently 1.
-    for row in rows:
-        row["dev_id"] = source_id
-    return rows
-
-
-def parse_ipfix(data: bytes, store: TemplateStore, dev_ip: int = 0) -> list[dict]:
-    if len(data) < 16:
-        return []
-    ver, total_len, _exp_time, _seq, source_id = struct.unpack_from(">HHIII", data, 0)
-    if ver != 10:
-        return []
-    mv = memoryview(data)[:total_len]
-    rows: list[dict] = []
-    off = 16
+    if version == 9:
+        tpl_set, parse_templates = 0, _parse_v9_templates
+    else:
+        mv = mv[:struct.unpack_from(">H", data, 2)[0]]
+        tpl_set, parse_templates = 2, _parse_ipfix_templates
+    sets = []
+    off = hdr
     while off + 4 <= len(mv):
         sid, slen = struct.unpack_from(">HH", mv, off)
         if slen < 4:
             break
         body = mv[off + 4: off + slen]
-        if sid == 2:
-            _parse_ipfix_templates(body, store, dev_ip, source_id)
-        elif sid == 3:
-            pass  # options template set
+        if sid == tpl_set:
+            parse_templates(body, store, dev_ip, source_id)
         elif sid > 255:
-            tpl = store.get(dev_ip, source_id, 10, sid)
+            # (options template sets, v9 id 1 / IPFIX id 3, are skipped:
+            # the reference skips option data)
+            tpl = store.get(dev_ip, source_id, version, sid)
             if tpl is not None:
-                rows.extend(_decode_data_records(body, tpl, varlen_ok=True))
+                sets.append((tpl, body))
         off += slen
-    # virtual dev_id = IPFIX observation_domain (netflow.c:638)
+    return source_id, sets
+
+
+def _set_rows(walk, varlen_ok: bool) -> list[dict]:
+    if walk is None:
+        return []
+    source_id, sets = walk
+    rows: list[dict] = []
+    for tpl, body in sets:
+        rows.extend(_decode_data_records(body, tpl, varlen_ok))
+    # virtual dev_id = v9 header source_id / IPFIX observation domain on
+    # every flow (netflow.c:329, :638 + virtual_fields_init
+    # netflow.c:110-121); without it devices.conf id-matching never
+    # fires and sampling is silently 1.
     for row in rows:
         row["dev_id"] = source_id
     return rows
+
+
+def parse_netflow_v9(data: bytes, store: TemplateStore, dev_ip: int = 0) -> list[dict]:
+    return _set_rows(_export_sets(data, store, dev_ip, 9), varlen_ok=False)
+
+
+def parse_ipfix(data: bytes, store: TemplateStore, dev_ip: int = 0) -> list[dict]:
+    return _set_rows(_export_sets(data, store, dev_ip, 10), varlen_ok=True)
 
 
 def packet_has_templates(data: bytes) -> bool:
@@ -419,6 +440,216 @@ def parse_packet(data: bytes, store: TemplateStore, dev_ip: int = 0) -> list[dic
 
 
 # ---------------------------------------------------------------------------
+# Columnar decode: a batch of packets -> one Arrow record batch
+# ---------------------------------------------------------------------------
+# (record size, structured dtype, {catalog name: (dtype field, kind,
+# width)}) of the v5 record; ``_fixed_layout`` builds the same for a
+# fixed-length v9/IPFIX template
+_V5_LAYOUT = (
+    _V5_REC.size,
+    _V5_DTYPE,
+    {k: (k, FLOW_FIELDS[k], _V5_DTYPE[k].itemsize) for _, k in _V5_KEPT},
+)
+
+
+@functools.lru_cache(maxsize=256)
+def _fixed_layout(template: tuple, varlen_ok: bool):
+    """The layout that reads every record of a data set of ``template``
+    with one ``np.frombuffer``, or None when a field has variable length.
+    Keyed by the field list itself, so a redefined template gets its own
+    entry. A field repeated in the template keeps its last value, as in
+    ``_decode_data_records``."""
+    if varlen_ok and any(flen == 0xFFFF for _, flen in template):
+        return None
+    plan, offsets = {}, []
+    off = 0
+    for i, (ftype, flen) in enumerate(template):
+        offsets.append(off)
+        name = FIELD_IDS.get(ftype)
+        if name is not None:
+            plan[name] = (f"f{i}", FLOW_FIELDS[name], flen)
+        off += flen
+    fields = {}
+    for f, kind, w in plan.values():
+        if w == 0 or (kind in (INT, IP4) and w > 8):
+            continue  # a constant or NULL column: nothing to read
+        if kind not in (INT, IP4):
+            fields[f] = f"V{w}"
+        elif w in (1, 2, 4):
+            fields[f] = f">u{w}"
+        elif w == 8:
+            fields[f] = ">i8"  # 64 bits, two's complement (catalog.INT)
+        else:
+            fields[f] = ("u1", (w,))
+    dtype = np.dtype({
+        "names": list(fields),
+        "formats": list(fields.values()),
+        "offsets": [offsets[int(f[1:])] for f in fields],
+        "itemsize": max(off, 1),
+    })
+    return off, dtype, plan
+
+
+def _layout_column(recs: np.ndarray, f: str, kind: str, w: int, typ):
+    """One catalog column of the records ``recs`` read with a layout."""
+    n = len(recs)
+    if kind in (INT, IP4):
+        if w > 8:
+            return pa.nulls(n, typ)
+        if w == 0:
+            return pa.array(np.zeros(n, np.int64))
+        col = recs[f]
+        if col.ndim == 1:
+            return pa.array(col.astype(np.int64))
+        v = col[:, 0].astype(np.int64)
+        for j in range(1, w):
+            v = (v << 8) | col[:, j]
+        return pa.array(v)
+    raw = recs[f].tobytes() if w else b""
+    if kind == STRING:
+        return pa.array(
+            [raw[k * w:(k + 1) * w].split(b"\x00", 1)[0]
+             .decode("utf-8", "replace") for k in range(n)], typ)
+    offsets = np.arange(n + 1, dtype=np.int32) * w
+    return pa.Array.from_buffers(
+        typ, n, [None, pa.py_buffer(offsets), pa.py_buffer(raw)])
+
+
+@functools.lru_cache(maxsize=4)
+def _arrow_schema(ts_type: pa.DataType) -> pa.Schema:
+    """``flow_schema(with_ts=True)`` as Arrow, ``ts`` typed like the
+    input's arrival time column."""
+    conv = {"bigint": pa.int64(), "binary": pa.binary(),
+            "string": pa.string(), "array<string>": pa.list_(pa.string())}
+    return pa.schema([
+        pa.field(f.name, ts_type if f.name == "ts"
+                 else conv[f.dataType.simpleString()])
+        for f in flow_schema(with_ts=True).fields
+    ])
+
+
+def decode_batch(batch: pa.RecordBatch, store: TemplateStore,
+                 data_col: str = "data", dev_ip_col: str = "dev_ip",
+                 ts_col: str = "recv_ts") -> pa.RecordBatch:
+    """Decode one Arrow batch of packets (data binary, dev_ip long,
+    arrival timestamp) into a record batch of ``flow_schema(with_ts=True)``
+    with the rows ``parse_packet`` gives, in the same order.
+
+    Records are grouped by layout: all v5 record areas of the batch are
+    joined and read with one ``np.frombuffer``, and so are the data sets
+    of each fixed-length v9/IPFIX template. Template sets update
+    ``store`` in packet order, exactly as ``parse_packet`` does. sFlow
+    packets and data sets of variable-length IPFIX templates are decoded
+    to rows and converted one column at a time. Each packet's data sets
+    get increasing sequence numbers, and a stable sort on them restores
+    packet order across the groups."""
+    packets = batch.column(data_col).to_pylist()
+    ips = batch.column(dev_ip_col).fill_null(0).to_numpy(zero_copy_only=False)
+    ip_list = ips.tolist()
+    ts = batch.column(ts_col)
+    schema = _arrow_schema(ts.type)
+
+    # layout key -> [layout, record areas, packet, records, seq,
+    # dev_id, sampling_rate], the last five one entry per area
+    runs: dict = {}
+    rows: list[dict] = []
+    row_pkt: list[int] = []
+    row_seq: list[int] = []
+    seq = 0
+
+    def area(key, layout, body, i, n, dev_id, rate):
+        run = runs.get(key)
+        if run is None:
+            run = runs[key] = [layout, [], [], [], [], [], []]
+        for col, v in zip(run[1:], (body, i, n, seq, dev_id, rate)):
+            col.append(v)
+
+    def scalar(found, i):
+        for row in found:
+            # sFlow rows carry the datagram's agent address as dev_ip
+            # (the reference's device identity, sflow-impl.h:334);
+            # NetFlow rows take the UDP source address seen by the bridge
+            row.setdefault("dev_ip", ip_list[i])
+            row.setdefault("sampling_rate", 1)
+            rows.append(row)
+            row_pkt.append(i)
+            row_seq.append(seq)
+
+    for i, data in enumerate(packets):
+        if data is None or len(data) < 2:
+            continue
+        ver = (data[0] << 8) | data[1]
+        if ver == 5:
+            hdr = _v5_header(data)
+            if hdr is not None and hdr[0]:
+                n, eid, rate = hdr
+                body = memoryview(data)[_V5_HDR.size:
+                                        _V5_HDR.size + n * _V5_REC.size]
+                area("v5", _V5_LAYOUT, body, i, n, eid, rate or 1)
+                seq += 1
+        elif ver in (9, 10):
+            walk = _export_sets(data, store, ip_list[i], ver)
+            if walk is None:
+                continue
+            source_id, sets = walk
+            for tpl, body in sets:
+                key = tuple(tpl)
+                layout = _fixed_layout(key, ver == 10)
+                if layout is None:
+                    found = _decode_data_records(body, tpl, varlen_ok=True)
+                    for row in found:
+                        row["dev_id"] = source_id
+                    scalar(found, i)
+                elif layout[0] and len(body) >= layout[0]:
+                    n = len(body) // layout[0]
+                    area(key, layout, body[:n * layout[0]], i, n,
+                         source_id, 1)
+                seq += 1
+        else:
+            scalar(parse_packet(data, store, ip_list[i]), i)
+            seq += 1
+
+    parts: list[tuple[np.ndarray, pa.RecordBatch]] = []
+    for layout, bodies, pkt, counts, seqs, dev_ids, rates in runs.values():
+        _, dtype, plan = layout
+        recs = np.frombuffer(b"".join(bodies), dtype=dtype)
+        pkt_rows = np.repeat(np.asarray(pkt, np.int64), counts)
+        cols = {
+            name: _layout_column(recs, f, kind, w, schema.field(name).type)
+            for name, (f, kind, w) in plan.items()
+        }
+        cols["dev_id"] = pa.array(np.repeat(np.asarray(dev_ids, np.int64),
+                                            counts))
+        cols["sampling_rate"] = pa.array(
+            np.repeat(np.asarray(rates, np.int64), counts))
+        cols["dev_ip"] = pa.array(ips[pkt_rows].astype(np.int64))
+        parts.append((np.repeat(np.asarray(seqs, np.int64), counts),
+                      _record_batch(schema, len(recs), cols, ts, pkt_rows)))
+    if rows:
+        names = set().union(*rows).intersection(schema.names)
+        cols = {name: pa.array([r.get(name) for r in rows],
+                               schema.field(name).type) for name in names}
+        parts.append((np.asarray(row_seq, np.int64),
+                      _record_batch(schema, len(rows), cols, ts,
+                                    np.asarray(row_pkt, np.int64))))
+    if not parts:
+        return pa.RecordBatch.from_pylist([], schema=schema)
+    if len(parts) == 1:
+        return parts[0][1]
+    order = np.argsort(np.concatenate([s for s, _ in parts]), kind="stable")
+    table = pa.Table.from_batches([b for _, b in parts]).take(order)
+    return table.combine_chunks().to_batches()[0]
+
+
+def _record_batch(schema: pa.Schema, n: int, cols: dict, ts: pa.Array,
+                  pkt_rows: np.ndarray) -> pa.RecordBatch:
+    cols["ts"] = ts.take(pa.array(pkt_rows))
+    return pa.RecordBatch.from_arrays(
+        [cols.get(f.name) if f.name in cols else pa.nulls(n, f.type)
+         for f in schema], schema=schema)
+
+
+# ---------------------------------------------------------------------------
 # Spark wiring: raw packet DF -> wide flow DF
 # ---------------------------------------------------------------------------
 
@@ -430,10 +661,11 @@ def decode_packets_df(
     seed_templates: list | None = None,
     journal_paths: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """``mapInPandas`` decode: (data binary, dev_ip long, recv_ts timestamp)
-    -> catalog-schema flow rows. Each Arrow batch shares one TemplateStore
-    per partition lineage; partition by dev_ip upstream so a device's
-    template packets precede its data packets in the same partition.
+    """``mapInArrow`` decode: (data binary, dev_ip long, recv_ts timestamp)
+    -> catalog-schema flow rows, one ``decode_batch`` per Arrow batch.
+    The batches of a task share one TemplateStore per partition lineage;
+    partition by dev_ip upstream so a device's template packets precede
+    its data packets in the same partition.
 
     ``seed_templates``: TemplateStore.dump() output to pre-seed (static;
     the restart-parity path). With ``journal_paths`` as well, the
@@ -449,12 +681,10 @@ def decode_packets_df(
     so far. The read is KBs; on a multi-executor cluster the journal
     must live on storage the executors can read (shared FS/object
     store)."""
-    import pandas as pd
 
-    schema = flow_schema(with_ts=True)
-    names = [f.name for f in schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # refers to module-level names only: cloudpickle ships those by
+    # reference (a captured struct.Struct would not pickle)
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         store = TemplateStore()
         if seed_templates:
             store.load(seed_templates)
@@ -463,30 +693,12 @@ def decode_packets_df(
             # redefined after the seed was taken decodes with its new
             # layout
             store.load(TemplateJournal.replay(*journal_paths).dump())
-        for pdf in batches:
-            out_rows = []
-            for data, dev_ip, ts in zip(
-                pdf[data_col], pdf[dev_ip_col], pdf[ts_col]
-            ):
-                for row in parse_packet(bytes(data), store, int(dev_ip)):
-                    # sFlow rows carry the datagram's agent address as
-                    # dev_ip (the reference's device identity,
-                    # sflow-impl.h:334); NetFlow rows take the UDP
-                    # source address seen by the bridge
-                    row.setdefault("dev_ip", int(dev_ip))
-                    row["ts"] = ts
-                    row.setdefault("sampling_rate", 1)
-                    out_rows.append(row)
-            if out_rows:
-                out = pd.DataFrame(out_rows)
-                for col in names:
-                    if col not in out.columns:
-                        # explicit None (not NaN) so Arrow maps missing
-                        # array/binary columns to null
-                        out[col] = None
-                yield out[names]
+        for batch in batches:
+            out = decode_batch(batch, store, data_col, dev_ip_col, ts_col)
+            if out.num_rows:
+                yield out
 
-    return packets.mapInPandas(decode, schema=schema)
+    return packets.mapInArrow(decode, schema=flow_schema(with_ts=True))
 
 
 def kafka_records_to_packets(records: DataFrame) -> DataFrame:
