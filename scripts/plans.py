@@ -188,6 +188,11 @@ NOTES = {
     "(decompress is one mapInPandas projection; split/explode/"
     "from_json are narrow JVM stages); the fixture's groupBy builds "
     "the shard files, not the operator.",
+    "substring_dedup": "one Generate (codegen'd explode + substring) "
+    "mints the windows; ONE shuffle on the window key carries the "
+    "rank() that finds each first occurrence (rank > 1 is excised: no "
+    "per-window aggregate, no join back to the windows); the span "
+    "merge is per-doc and the only join is the per-doc one on the id.",
     "dedup_profile": "the exact_dedup md5 aggregation (map-side "
     "combined) plus a count-of-counts groupBy on O(distinct sizes) "
     "keys — both shuffles bounded, output dozens of rows at any "

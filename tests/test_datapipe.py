@@ -707,3 +707,40 @@ def test_substring_dedup_random_unicode_corpus(spark):
                 nw, nsp, nch, len(out_t),
                 hashlib.md5(out_t.encode()).hexdigest(),
             ), (key, did, texts[did])
+
+
+_SUBSTR_A = "the quick brown fox jumps over the lazy dog"
+
+
+def _substr_rows(spark, rows, key):
+    from xenoeye_spark.datapipe.dedup import substring_dedup
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return [
+        (r.doc_id, r.n_removed_chars, r.text_out)
+        for r in substring_dedup(docs, length=16, key=key,
+                                 return_text=True).collect()
+    ]
+
+
+def test_substring_dedup_null_id_claims_nothing(spark):
+    """A NULL-id row passes through with its own text and claims no
+    first occurrence: of (NULL, A), (1, A), (2, A), doc 1 keeps A and
+    doc 2 loses all of it, as if the NULL row were absent."""
+    A = _SUBSTR_A
+    for key in ("exact", "hash"):
+        got = sorted(
+            _substr_rows(spark, [(None, A), (1, A), (2, A)], key),
+            key=lambda r: -1 if r[0] is None else r[0],
+        )
+        assert got == [(None, 0, A), (1, 0, A), (2, len(A), "")], key
+
+
+def test_substring_dedup_duplicate_ids_tie(spark):
+    """Two rows sharing an id and a text tie for the first occurrence
+    (rank, not row_number): both keep their text, and a higher id with
+    the same text loses it."""
+    A = _SUBSTR_A
+    for key in ("exact", "hash"):
+        got = sorted(_substr_rows(spark, [(1, A), (1, A), (2, A)], key))
+        assert got == [(1, 0, A), (1, 0, A), (2, len(A), "")], key

@@ -289,6 +289,24 @@ def test_no_tokenizer_reinlined_into_filters(plans):
     assert not bad, f"tokenizer re-inlined into Filter: {bad}"
 
 
+def test_substring_dedup_one_window_shuffle(plans):
+    """substring_dedup generates its windows once and resolves first
+    occurrences with a rank over the window key: one Generate, no
+    SortAggregate (a min(struct) per window cannot hash-aggregate), and
+    no join back to the windows; the only join is the per-doc one on
+    the doc id."""
+    import re
+
+    plan = plans["substring_dedup"]
+    assert len(re.findall(r"\bGenerate ", plan)) == 1, plan
+    assert "SortAggregate" not in plan, plan
+    joins = re.findall(r"\b(\w*Join) \[([^\]]*)\], \[([^\]]*)\]", plan)
+    assert len(joins) == 1, plan
+    _, left, right = joins[0]
+    assert re.fullmatch(r"_id#\d+L?", left), plan
+    assert re.fullmatch(r"_id#\d+L?", right), plan
+
+
 def _parquet_scans_run(df) -> int:
     """Parquet scans that running ``df`` executes: a cached relation's
     subplan counts once, however many scans of the cache the plan has

@@ -573,11 +573,12 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
 def test_substring_dedup_50k_docs_boilerplate(spark):
     """50k docs (~5M stride-1 windows) with a shared 64-char
     boilerplate footer on every 10th doc: the window table is linear in
-    corpus chars, the dup group resolves with ONE map-side-combined
-    agg (no corpus-wide window function), and span merge is per-doc.
-    Completion + exact removal accounting are the assertions: every
-    footer-carrying doc except the globally first loses exactly the
-    footer span."""
+    corpus chars, and the first occurrence resolves with a rank over
+    the window key, so each footer window is one hot window partition
+    of 5000 rows (the rank shape's worst case: buffered whole by one
+    task); span merge is per-doc. Completion + exact removal
+    accounting are the assertions: every footer-carrying doc except
+    the globally first loses exactly the footer span."""
     from xenoeye_spark.datapipe.dedup import substring_dedup
 
     # 64 chars, all distinct so the footer has no repeated window

@@ -1153,10 +1153,12 @@ def substring_dedup(
     excised from its document in place.
 
     Pipeline, all JVM expressions (no Python in the hot path):
-    1. stride-1 windows per doc — O(total_chars) rows, the operator's
-       honest linear blow-up (the reference algorithm's suffix array is
-       the same asymptotic footprint);
-    2. ONE shuffle grouped on the window key: ``key='hash'`` (default)
+    1. stride-1 windows per doc, generated once with codegen'd
+       expressions (explode ``sequence(1, len - length + 1)``, then one
+       ``substring`` per row, or its md5) — O(total_chars) rows, the
+       operator's honest linear blow-up (the reference algorithm's
+       suffix array is the same asymptotic footprint);
+    2. ONE shuffle on the window key: ``key='hash'`` (default)
        shuffles 16-byte md5 digests — the 100-TB path. A collision
        here EXCISES unique text, so the digest must be wide: at 1e14
        windows the md5 birthday bound is ~1e28/2^129 ≈ 1.5e-11 expected
@@ -1164,9 +1166,17 @@ def substring_dedup(
        silent corruption, which is why xxhash64 is NOT used here).
        ``key='exact'`` shuffles the window strings themselves —
        collision-free, used by the oracle twin and asserted equal to
-       the hash path in tests. The first occurrence resolves with a
-       min(struct(doc_id, pos)) map-side-combinable aggregate, never a
-       window over the corpus;
+       the hash path in tests. The first occurrence resolves inside
+       that shuffle: ``rank()`` over the window key ordered by
+       (doc_id, pos), and every row ranked above 1 is excised — no
+       aggregate per window and no join back to the windows. The
+       trade: one window key is one window partition, buffered whole
+       by one task, so a hot key (boilerplate repeated across many
+       docs) is sorted and held in full, spilling once it outgrows
+       the task's memory, where a map-side-combined aggregate would
+       have folded it per map task. At 5000 copies of every footer
+       window the rank shape still costs less CPU (SCALE.md
+       §substring_dedup in one shuffle);
     3. non-first occurrences come back to their docs and merge into
        excision spans with per-DOC gaps-and-islands (window functions
        partitioned by doc — bounded by the doc's own dup count);
@@ -1180,6 +1190,12 @@ def substring_dedup(
     ``text_out`` (the curation-pipeline consumer shape; xe_curate's
     substr_dedup stage). Docs shorter than ``length`` pass through
     untouched.
+
+    Dirty ids: copies of one doc id tie at rank 1, so every copy keeps
+    a window the id holds first (and a cut is applied to every row of
+    that id). A NULL doc id passes through unchanged
+    (``n_removed_* = 0``, its own text): its windows neither claim a
+    first occurrence nor get excised.
     """
     from pyspark.sql import Window
 
@@ -1195,40 +1211,37 @@ def substring_dedup(
     # NB: guard the short-doc case with CASE, not greatest(.., 0):
     # Spark's sequence(1, 0) is DESCENDING [1, 0] (implicit step -1)
     # and would mint two phantom whole-doc windows per short doc
-    win_elem = (
-        f"unhex(md5(substring(_t, i, {L})))" if key == "hash"
-        else f"substring(_t, i, {L})"
-    )
-    win_type = "array<binary>" if key == "hash" else "array<string>"
-    wins = spread(base).select(
-        "_id",
-        F.posexplode(
-            F.expr(
-                f"CASE WHEN length(_t) >= {L} THEN "
-                f"transform(sequence(1, length(_t) - {L} + 1), "
-                f"i -> {win_elem}) "
-                f"ELSE cast(array() as {win_type}) END"
-            )
-        ).alias("_off", "_w"),
-    ).select("_id", (F.col("_off") + 1).alias("_pos"), "_w")
-
-    # one map-side-combinable agg per distinct window: total count +
-    # the global first occurrence
-    firsts = wins.groupBy("_w").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min(F.struct("_id", "_pos")).alias("_first"),
-    )
-    removed = (
-        wins.join(firsts.filter(F.col("_cnt") > 1), "_w")
-        .filter(
-            (F.col("_id") != F.col("_first._id"))
-            | (F.col("_pos") != F.col("_first._pos"))
+    win = f"substring(_t, _pos, {L})"
+    wins = (
+        spread(base.filter(F.col("_id").isNotNull()))
+        .select(
+            "_id", "_t",
+            F.explode(F.expr(
+                f"CASE WHEN length(_t) >= {L} "
+                f"THEN sequence(1, length(_t) - {L} + 1) "
+                f"ELSE cast(array() as array<int>) END"
+            )).alias("_pos"),
         )
+        .select(
+            "_id", "_pos",
+            F.expr(f"unhex(md5({win}))" if key == "hash" else win)
+            .alias("_w"),
+        )
+    )
+
+    # every occurrence after a window's first is excised; rank, not
+    # row_number: copies of one doc id tie at rank 1 and all keep
+    # their text
+    w_first = Window.partitionBy("_w").orderBy("_id", "_pos")
+    removed = (
+        wins.withColumn("_rk", F.rank().over(w_first))
+        .filter(F.col("_rk") > 1)
         .select("_id", "_pos")
     )
 
-    # gaps-and-islands span merge, per doc (ties impossible: one row
-    # per (_id, _pos) by construction)
+    # gaps-and-islands span merge, per doc (a tie is a duplicate doc
+    # id's repeated (_id, _pos): it never opens an island, so the spans
+    # do not depend on the tie order)
     w_prev = (
         Window.partitionBy("_id").orderBy("_pos")
         .rowsBetween(Window.unboundedPreceding, -1)
