@@ -20,10 +20,8 @@ from xenoeye_spark.datapipe.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
     minhash_params31,
-    minhash_signatures,
-    minhash_signatures_expr,
     ngram_jaccard_pairs,
-    shingle_table,
+    sig_and_shingle_table,
 )
 from xenoeye_spark.datapipe.graph import dedup_groups
 from xenoeye_spark.datapipe.multimodal import decode_and_featurize, sample_frames
@@ -47,10 +45,8 @@ from xenoeye_spark.datapipe.text import (
     PII_PATTERNS as _PII_PATTERNS,
     STOPWORDS,
     doc_fingerprint,
-    doc_fingerprint_expr,
     language_id,
-    simhash64,
-    simhash_expr,
+    simhash60,
     simhash_neardup_pairs,
     text_stats,
     token_count,
@@ -350,19 +346,25 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH candidate pairs verified by exact Jaccard — the 100-TB
-    near-dup path. No SQL oracle (hash family not SQL-expressible);
-    driver records rows-only. Cross-checked in tests/test_datapipe.py
-    against the exact all-pairs baseline."""
-    docs = _t(spark, sf_dir, "documents")
-    sh = shingle_table(docs, n=3)
-    sigs = minhash_signatures(docs, n=3, num_hashes=64, shingles=sh)
+def _minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """MinHash-64 signatures and the shingle table from one staged
+    tokenization, 16-band LSH candidates, exact-Jaccard verify at 0.35."""
+    tbl = sig_and_shingle_table(docs, n=3, num_hashes=64)
+    sigs = tbl.select(F.col("_id").alias("doc_id"), "signature")
     cands = lsh_candidate_pairs(sigs, bands=16, sig_len=64)
     verified = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.35, candidates=cands, shingles=sh
+        docs, n=3, threshold=0.35, candidates=cands, shingles=tbl
     )
     return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH candidate pairs verified by exact Jaccard — the 100-TB
+    near-dup path, over the whole corpus. Rows-only in the gate (its
+    GATE_ROWS_ONLY slot); the same pipeline is DuckDB-oracle-checked as
+    q_dedup_minhash_lsh_expr, and cross-checked in tests/test_datapipe.py
+    against the exact all-pairs baseline."""
+    return _minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,25 +509,14 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_minhash_lsh_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable MinHash+LSH: same operator pipeline as
-    q_dedup_minhash_lsh (signatures -> banded candidates -> exact-Jaccard
-    verify) but signatures come from the pure-expression 31-bit family
-    (minhash_signatures_expr), whose char-polynomial base hash and
-    overflow-free permutations the DuckDB oracle re-derives verbatim —
-    the first fully hash-checked row for the minhash family. First-2500
-    docs (the whole corpus at the sf0.01 gate): the 64 interpreted
-    permutation lambdas per shingle are the twin's known price — the
-    Arrow-vectorized xxhash64 flagship is the scale path."""
+    """Oracle-checked MinHash+LSH: q_dedup_minhash_lsh's pipeline
+    (signatures -> banded candidates -> exact-Jaccard verify), whose
+    char-polynomial base hash and overflow-free 31-bit permutations the
+    DuckDB oracle re-derives verbatim. Scoped to the deterministic
+    first-2500 docs, which at the sf0.01 gate is the whole corpus, so
+    the oracle's pure-SQL permutation lists stay cheap."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 2500)
-    sh = shingle_table(docs, n=3)
-    sigs = minhash_signatures_expr(docs, n=3, num_hashes=64)
-    cands = lsh_candidate_pairs(sigs, bands=16, sig_len=64)
-    verified = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.35, candidates=cands, shingles=sh
-    )
-    return verified.select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    )
+    return _minhash_lsh_pairs(docs)
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,9 +538,10 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash 64-bit fingerprints (datapipe; xxhash64-based, no SQL
-    oracle — rows-only check, property-tested in tests/)."""
-    return simhash64(_t(spark, sf_dir, "documents"))
+    """SimHash 60-bit fingerprints (datapipe) — rows-only in the gate
+    (its GATE_ROWS_ONLY slot); the same kernel is DuckDB-oracle-checked
+    as q_simhash_expr."""
+    return simhash60(_t(spark, sf_dir, "documents"))
 
 
 def q_mavg_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -615,8 +607,9 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint digests (rows-only: rolling-hash family not
-    SQL-expressible; property-tested in tests/test_datapipe.py)."""
+    """Winnowing fingerprint digests over the whole corpus — rows-only
+    in the gate (its GATE_ROWS_ONLY slot); the same kernel is
+    DuckDB-oracle-checked as q_doc_fingerprint_expr."""
     out = doc_fingerprint(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", "fp_digest", "fp_size")
 
@@ -691,15 +684,13 @@ def _planted_sql() -> str:
 
 
 def q_doc_fingerprint_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable winnowing twin: polynomial gram hashes +
-    expression window-min, re-derived verbatim by the DuckDB oracle
-    (the xxhash64 flagship q_doc_fingerprint stays rows-only). Scoped to
-    the deterministic first-500 docs — the O(len*(k+window)) interpreted
-    lambda cost is the twin's known price (the flagship's Arrow kernel is
-    the scale path), and at the sf0.01 correctness gate this subset IS
-    the whole corpus."""
+    """Oracle-checked winnowing: polynomial k-gram hashes, window-of-4
+    minima and the digest, re-derived verbatim by the DuckDB oracle.
+    Scoped to the deterministic first-500 docs (the oracle's per-char
+    SQL lambdas are its price), which at the sf0.01 gate is the whole
+    corpus."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    return doc_fingerprint_expr(docs)
+    return doc_fingerprint(docs).select("doc_id", "fp_digest", "fp_size")
 
 
 def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,11 +801,10 @@ def q_fwm_func_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable SimHash twin: 60-bit fingerprints from two
-    30-bit char polynomials, bit votes in pure expressions — the DuckDB
-    oracle re-derives every fingerprint verbatim (the xxhash64 flagship
-    q_simhash stays rows-only by design)."""
-    return simhash_expr(_t(spark, sf_dir, "documents"))
+    """Oracle-checked SimHash: 60-bit fingerprints from two 30-bit char
+    polynomials per token and majority bit votes — the DuckDB oracle
+    re-derives every fingerprint verbatim."""
+    return simhash60(_t(spark, sf_dir, "documents"))
 
 
 def q_simhash_neardup_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,17 +814,15 @@ def q_simhash_neardup_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs (the whole corpus at the sf0.01 gate), same rationale as
     q_doc_fingerprint_expr."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    fps = simhash_expr(docs)
-    return simhash_neardup_pairs(
-        docs, radius=3, bands=4, fingerprints=fps, fp_bits=60
-    )
+    return simhash_neardup_pairs(docs, radius=3, bands=4)
 
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via banded bit blocks — exact for
-    radius <= bands-1 by pigeonhole (rows-only: xxhash64-seeded
-    fingerprints not SQL-expressible; equivalence to brute-force hamming
-    asserted in tests/test_datapipe.py)."""
+    """SimHash near-dup pairs via banded bit blocks over the whole
+    corpus — exact for radius <= bands-1 by pigeonhole. Rows-only in
+    the gate (its GATE_ROWS_ONLY slot); the same operator is
+    DuckDB-oracle-checked as q_simhash_neardup_expr, and equivalence to
+    brute-force hamming is asserted in tests/test_datapipe.py."""
     docs = _t(spark, sf_dir, "documents")
     return simhash_neardup_pairs(docs, radius=3, bands=4)
 

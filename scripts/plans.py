@@ -41,8 +41,13 @@ NOTES = {
     "16-byte hash.",
     "dedup_ngram_jaccard": "prefix-filter equi-join generates candidates "
     "(no n^2 product); exact verify on the candidate set only.",
-    "dedup_minhash_lsh": "signatures via Arrow-batched pandas UDF; LSH "
+    "dedup_minhash_lsh": "signatures (one Arrow-batched numpy kernel) and "
+    "the Jaccard shingle table come from one staged tokenization; LSH "
     "banding keys the shuffle by (band, bucket).",
+    "simhash": "one Arrow-batched numpy kernel over the JVM tokens; no "
+    "shuffle.",
+    "doc_fingerprint": "one Arrow-batched numpy kernel over the text; no "
+    "shuffle.",
     "sim_topk": "corpus scans once; queries broadcast; per-query top-k via "
     "window rank over the scored partition.",
     "emb_neardup": "blocked matmul in mapInPandas over a broadcast matrix; "
@@ -82,9 +87,9 @@ NOTES = {
     "gopher_quality": "zero-shuffle per-row projection (r12 "
     "optimization): the top-bigram rule is an in-row sorted-run fold, "
     "no explode, no join.",
-    "segment_dedup": "one shuffle on segment md5 resolves the "
-    "corpus-wide first occurrence via a min-struct agg (map-side "
-    "combinable -> popular-segment skew collapses per task).",
+    "segment_dedup": "one shuffle on segment md5; rank() over "
+    "(doc_id, pos) inside it marks the corpus-wide first occurrence — "
+    "no aggregate per segment and no join back; one re-group on doc_id.",
     "bm25": "explode filtered to query terms BEFORE the shuffle; "
     "df/avgdl scalar aggregates broadcast back; corpus scanned once. "
     "(The Cross BroadcastNestedLoop is the ONE-ROW (n, avgdl) scalar "

@@ -428,12 +428,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if "neardup" in steps:
         from xenoeye_spark.datapipe.dedup import (
-            lsh_candidate_pairs, minhash_signatures_expr,
+            lsh_candidate_pairs, minhash_signatures,
             ngram_jaccard_pairs,
         )
         from xenoeye_spark.datapipe.graph import dedup_groups
 
-        sigs = minhash_signatures_expr(docs)
+        sigs = minhash_signatures(docs, num_hashes=64)
         cand = lsh_candidate_pairs(sigs, bands=16, sig_len=64)
         pairs = ngram_jaccard_pairs(
             docs, n=3, threshold=args.threshold, candidates=cand

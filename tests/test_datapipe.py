@@ -15,7 +15,7 @@ from xenoeye_spark.datapipe.dedup import (
     ngram_jaccard_pairs,
 )
 from xenoeye_spark.datapipe.similarity import brute_force_topk, lsh_bucket_topk
-from xenoeye_spark.datapipe.text import hamming64, language_id, simhash64, text_stats
+from xenoeye_spark.datapipe.text import hamming64, language_id, simhash60, text_stats
 
 
 WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -59,11 +59,16 @@ def test_ngram_jaccard_finds_mutant_pairs(spark):
 
 def test_minhash_lsh_recall_vs_exact(spark):
     """LSH candidates must recover (nearly) all true pairs at J>=0.5 with
-    64 hashes / 16 bands (s-curve threshold ~ (1/16)^(1/4) ~ 0.5)."""
+    64 hashes / 16 bands (s-curve threshold ~ (1/16)^(1/4) ~ 0.5). The
+    signature stage is ONE Python eval node (the numpy kernel) with no
+    xxhash64 in it — the family the DuckDB oracle re-derives."""
     docs = _corpus(spark, n=15)
     exact = {(r["id_a"], r["id_b"])
              for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()}
     sigs = minhash_signatures(docs, n=3, num_hashes=64)
+    plan = sigs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "xxhash64" not in plan
     cands = lsh_candidate_pairs(sigs, bands=16)
     verified = {(r["id_a"], r["id_b"])
                 for r in ngram_jaccard_pairs(
@@ -75,7 +80,7 @@ def test_minhash_lsh_recall_vs_exact(spark):
 
 def test_simhash_properties(spark):
     docs = _corpus(spark, n=5)
-    out = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
+    out = {r["doc_id"]: r["simhash"] for r in simhash60(docs).collect()}
     assert out[0] == out[9998]  # identical text -> identical fingerprint
     ham = spark.createDataFrame(
         [(out[0], out[1]), (out[0], out[4])], "a long, b long"
@@ -91,7 +96,7 @@ def test_simhash_neardup_equals_bruteforce(spark):
     from xenoeye_spark.datapipe.text import simhash_neardup_pairs
 
     docs = _corpus(spark, n=12)
-    fps = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
+    fps = {r["doc_id"]: r["simhash"] for r in simhash60(docs).collect()}
     ids = sorted(fps)
     expected = {
         (a, b): bin((fps[a] ^ fps[b]) & ((1 << 64) - 1)).count("1")
@@ -293,118 +298,135 @@ def test_lsh_dropped_bucket_stats(spark):
     assert stats2 == {}  # guard disabled -> nothing computed
 
 
-def test_minhash_expr_twin_recall_and_purity(spark):
-    """The pure-expression 31-bit MinHash twin (the oracle-checkable
-    family) must behave like the xxhash64+pandas-UDF path: near-full LSH
-    recall at J>=0.5 with 64 hashes / 16 bands, verification admits no
-    false accepts, and the plan stays entirely JVM-side (no Python eval
-    node in the signature stage)."""
-    from xenoeye_spark.datapipe.dedup import minhash_signatures_expr
+# Pure-Python replays of the oracle-exact similarity families. Tokens
+# split on Java's \s class, [ \t\n\x0B\f\r] (what Spark's split()
+# and the kernels' JVM tokenizer use); NBSP, U+2003 and the rest of
+# Unicode whitespace are token characters. A char hashes as its code
+# point, non-BMP included.
+_JAVA_WS = "[ \t\n\x0b\f\r]+"
 
-    docs = _corpus(spark, n=15)
-    sigs = minhash_signatures_expr(docs, n=3, num_hashes=64)
-    plan = sigs._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "Arrow" not in plan  # pure codegen
-    exact = {(r["id_a"], r["id_b"])
-             for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()}
-    cands = lsh_candidate_pairs(sigs, bands=16, sig_len=64)
-    verified = {(r["id_a"], r["id_b"])
-                for r in ngram_jaccard_pairs(
-                    docs, n=3, threshold=0.5, candidates=cands).collect()}
-    recall = len(verified & exact) / max(len(exact), 1)
-    assert recall >= 0.9
-    assert verified <= exact
+
+def _poly(s, m=31, p=1000000007):
+    acc = 0
+    for ch in s:
+        acc = (acc * m + ord(ch)) % p
+    return acc
+
+
+def _simhash_replay(text):
+    import re
+
+    toks = [t for t in re.split(_JAVA_WS, text or "") if t]
+    hs = [_poly(t, 31, 1073741789) * (1 << 30) + _poly(t, 131, 1073741783)
+          for t in toks]
+    fp = 0
+    for b in range(60):
+        ones = sum((h >> b) & 1 for h in hs)
+        if 2 * ones > len(hs):
+            fp |= 1 << b
+    return fp
+
+
+def _winnow_replay(text, k=8, w=4):
+    text = text or ""
+    if len(text) >= k:
+        grams = [_poly(text[i:i + k]) for i in range(len(text) - k + 1)]
+    elif text:
+        grams = [_poly(text)]
+    else:
+        grams = []
+    if len(grams) >= w:
+        grams = [min(grams[i:i + w]) for i in range(len(grams) - w + 1)]
+    sel = sorted(set(grams))
+    return _poly(",".join(str(x) for x in sel)), len(sel)
+
+
+def _minhash_replay(text, n, num_hashes, seed=42):
+    import re
+
+    from xenoeye_spark.datapipe.dedup import minhash_params31
+
+    a, b = minhash_params31(num_hashes, seed)
+    # _with_tokens: split(text, '\\s+') with no trim and no empties
+    # dropped, so leading/trailing whitespace yields '' tokens
+    toks = re.split(_JAVA_WS, text) if text is not None else []
+    hs = {_poly(" ".join(toks[i:i + n])) for i in range(len(toks) - n + 1)}
+    return [min(((int(a[p]) * x + int(b[p])) % 2147483647 for x in hs),
+                default=2147483647) for p in range(num_hashes)]
 
 
 def test_simhash_expr_matches_python_replay(spark):
-    """The 60-bit expression fingerprint must equal a direct numpy
-    replay of its definition (two char polynomials, majority votes),
-    and stay entirely JVM-side."""
-    from xenoeye_spark.datapipe.text import SIMHASH_EXPR_BITS, simhash_expr
-
+    """The 60-bit fingerprint (simhash60, what the simhash_expr query
+    runs) must equal a direct replay of its definition (two char
+    polynomials, majority votes)."""
     docs = _corpus(spark, n=6)
-    out = simhash_expr(docs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "Arrow" not in plan
-
-    def poly(s, m, p):
-        acc = 0
-        for ch in s:
-            acc = (acc * m + ord(ch)) % p
-        return acc
-
-    def replay(text):
-        toks = [t for t in text.strip().split() if t]
-        hs = [poly(t, 31, 1073741789) * (1 << 30) + poly(t, 131, 1073741783)
-              for t in toks]
-        fp = 0
-        for b in range(SIMHASH_EXPR_BITS):
-            ones = sum((h >> b) & 1 for h in hs)
-            if 2 * ones > len(hs):
-                fp |= 1 << b
-        return fp
-
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    got = {r["doc_id"]: r["simhash"] for r in out.collect()}
+    got = {r["doc_id"]: r["simhash"] for r in simhash60(docs).collect()}
     for did, text in texts.items():
-        assert got[did] == replay(text), did
-
-
-def test_simhash_neardup_expr_equals_bruteforce(spark):
-    """Banded candidates over the 60-bit expr fingerprints are exact for
-    radius <= bands-1, matching brute-force hamming pairs."""
-    from xenoeye_spark.datapipe.text import simhash_expr, simhash_neardup_pairs
-
-    docs = _corpus(spark, n=12)
-    fps = {r["doc_id"]: r["simhash"]
-           for r in simhash_expr(docs).collect()}
-    ids = sorted(fps)
-    brute = {
-        (a, b)
-        for i, a in enumerate(ids) for b in ids[i + 1:]
-        if bin(fps[a] ^ fps[b]).count("1") <= 3
-    }
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_neardup_pairs(
-            docs, radius=3, bands=4,
-            fingerprints=simhash_expr(docs), fp_bits=60,
-        ).collect()
-    }
-    assert got == brute
+        assert got[did] == _simhash_replay(text), did
 
 
 def test_doc_fingerprint_expr_matches_python_replay(spark):
-    """The expression winnowing twin must equal a direct replay of its
+    """The winnowing kernel (doc_fingerprint, what the
+    doc_fingerprint_expr query runs) must equal a direct replay of its
     definition: poly gram hashes, window-of-4 minima, sorted distinct,
     poly digest of the joined selection."""
-    from xenoeye_spark.datapipe.text import doc_fingerprint_expr
+    from xenoeye_spark.datapipe.text import doc_fingerprint
 
     docs = _corpus(spark, n=5)
-
-    def poly(s):
-        acc = 0
-        for ch in s:
-            acc = (acc * 31 + ord(ch)) % 1000000007
-        return acc
-
-    def replay(text, k=8, w=4):
-        if len(text) >= k:
-            grams = [poly(text[i:i + k]) for i in range(len(text) - k + 1)]
-        elif text:
-            grams = [poly(text)]
-        else:
-            grams = []
-        if len(grams) >= w:
-            grams = [min(grams[i:i + w]) for i in range(len(grams) - w + 1)]
-        sel = sorted(set(grams))
-        return poly(",".join(str(x) for x in sel)), len(sel)
-
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     got = {r["doc_id"]: (r["fp_digest"], r["fp_size"])
-           for r in doc_fingerprint_expr(docs).collect()}
+           for r in doc_fingerprint(docs).collect()}
     for did, text in texts.items():
-        assert got[did] == replay(text), did
+        assert got[did] == _winnow_replay(text), did
+
+
+# dirty input: every case where a Python tokenizer (re's Unicode \s,
+# str.strip()/split()) and the JVM's disagree, plus the empty, short
+# and NULL contracts
+_DIRTY_DOCS = [
+    (1, "  lead and trail spaces here  "),
+    (2, "a\xa0b c d e"),
+    (3, "a b c d e"),
+    (4, "\xa0nbsp at ends  inside\u2003x y\xa0"),
+    (5, "\u2003em space\u2003doc with words\u2003"),
+    (6, "vt\x0bsplit here now ok"),
+    (7, "emoji \U0001F600 in the middle of text"),
+    (8, "\u00e9 \u4e2d bmp non ascii chars here"),
+    (9, ""),
+    (10, "two toks"),
+    (11, None),
+    (12, "\t tab\tled\ntext with\r\nbreaks \x0c ff"),
+    (13, "short"),
+]
+
+
+def test_similarity_kernels_dirty_input(spark):
+    """The MinHash, SimHash and winnowing kernels on dirty input equal
+    the pure-Python replays of the oracle family with the JVM's
+    tokenizer (the expression twins' outputs, which they replaced):
+    NBSP / U+2003 are token characters, \x0B splits, leading/trailing
+    spaces make '' tokens for MinHash, code points hash whole (U+1F600
+    is one char), and empty / short / NULL docs give the all-2^31-1
+    signature, SimHash 0 and winnowing (0, 0)."""
+    from xenoeye_spark.datapipe.text import doc_fingerprint
+
+    docs = spark.createDataFrame(_DIRTY_DOCS, "doc_id long, text string")
+    texts = dict(_DIRTY_DOCS)
+    for n in (1, 3):
+        got = {r[0]: list(r[1])
+               for r in minhash_signatures(docs, n=n, num_hashes=8).collect()}
+        for did, text in texts.items():
+            assert got[did] == _minhash_replay(text, n, 8), (n, did)
+    sh = {r[0]: r[1] for r in simhash60(docs).collect()}
+    fp = {r[0]: (r[2], r[3]) for r in doc_fingerprint(docs).collect()}
+    for did, text in texts.items():
+        assert sh[did] == _simhash_replay(text), did
+        assert fp[did] == _winnow_replay(text), did
+    # the JVM tokenizer, not Python's: NBSP joins, so these differ
+    assert got[2] != got[3]
+    assert sh[11] == 0 and fp[11] == (0, 0) and fp[9] == (0, 0)
+    assert got[11] == [2147483647] * 8 and got[10] == [2147483647] * 8
 
 
 # ---------------------------------------------------------------- graph CC

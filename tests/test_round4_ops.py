@@ -166,6 +166,28 @@ def test_segment_dedup_cross_doc_first_occurrence(spark):
     assert got[3].kept_digest == hashlib.md5(b"").hexdigest()
 
 
+def test_segment_dedup_null_id_claims_nothing(spark):
+    """A NULL doc id holds no first occurrence: with rows (NULL, A),
+    (1, A), (2, A), doc 1 keeps both paragraphs, doc 2 keeps none, and
+    the NULL row keeps its own text."""
+    import hashlib
+
+    a = "first paragraph here\n\nsecond paragraph there"
+    docs = spark.createDataFrame(
+        [(None, a), (1, a), (2, a)], "doc_id long, text string"
+    )
+    got = {r.doc_id: r for r in segment_dedup(
+        docs, F.split(F.col("text"), "\n\n")
+    ).collect()}
+    assert (got[1].n_segments, got[1].n_kept) == (2, 2)
+    assert (got[2].n_segments, got[2].n_kept) == (2, 0)
+    assert (got[None].n_segments, got[None].n_kept) == (2, 2)
+    assert got[1].kept_digest == got[None].kept_digest == hashlib.md5(
+        a.replace("\n\n", " ").encode()
+    ).hexdigest()
+    assert got[2].kept_digest == hashlib.md5(b"").hexdigest()
+
+
 def test_token_chunks_segmenter(spark):
     docs = spark.createDataFrame([Row(doc_id=0, text="a b c d e f g")])
     [r] = docs.select(token_chunks(F.col("text"), 3).alias("c")).collect()

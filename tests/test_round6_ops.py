@@ -1151,10 +1151,10 @@ def test_incremental_dedup_fused_table_matches_builders(spark):
     """r12 optimization: incremental_dedup computes signatures and the
     verify shingle table from ONE staged shingle-string array per side
     (sig_and_shingle_table). The fused columns must be bit-identical to
-    the standalone builders (minhash_signatures_expr / shingle_table)
+    the standalone builders (minhash_signatures / shingle_table)
     they replaced — including the empty/short-doc contracts."""
     from xenoeye_spark.datapipe.dedup import (
-        minhash_signatures_expr, shingle_table, sig_and_shingle_table,
+        minhash_signatures, shingle_table, sig_and_shingle_table,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
@@ -1166,7 +1166,7 @@ def test_incremental_dedup_fused_table_matches_builders(spark):
     fused = {r["_id"]: (sorted(r["_sh"]), r["_sz"], list(r["signature"]))
              for r in sig_and_shingle_table(docs, n=3).collect()}
     sig = {r["doc_id"]: list(r["signature"])
-           for r in minhash_signatures_expr(docs, n=3).collect()}
+           for r in minhash_signatures(docs, n=3, num_hashes=64).collect()}
     sh = {r["_id"]: (sorted(r["_sh"]), r["_sz"])
           for r in shingle_table(docs, 3).collect()}
     assert set(fused) == set(sig) == set(sh)

@@ -96,9 +96,9 @@ def test_decompress_text_on_stream(spark):
 
 
 def test_simhash_expr_on_stream(spark):
-    from xenoeye_spark.datapipe.text import simhash_expr
+    from xenoeye_spark.datapipe.text import simhash60
 
-    _drive(spark, simhash_expr, DOCS_SCHEMA, DOC_ROWS)
+    _drive(spark, simhash60, DOCS_SCHEMA, DOC_ROWS)
 
 
 def test_warc_documents_on_stream(spark):

@@ -12,7 +12,7 @@ from xenoeye_spark.datapipe.dedup import (
     minhash_signatures,
     lsh_candidate_pairs,
 )
-from xenoeye_spark.datapipe.text import text_stats, language_id, simhash64
+from xenoeye_spark.datapipe.text import text_stats, language_id, simhash60
 from xenoeye_spark.datapipe.similarity import brute_force_topk
 
 __all__ = [
@@ -22,6 +22,6 @@ __all__ = [
     "lsh_candidate_pairs",
     "text_stats",
     "language_id",
-    "simhash64",
+    "simhash60",
     "brute_force_topk",
 ]

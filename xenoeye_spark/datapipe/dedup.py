@@ -6,14 +6,18 @@ Four tiers, all shuffle-frugal:
                             16-byte key, the canonical 100-TB first pass.
 2. ngram_jaccard_pairs    — exact token-shingle Jaccard for candidate pairs
                             (self-join; use only after blocking/LSH at scale).
-3. minhash_signatures +   — MinHash (polynomial permutations over shingle
-   lsh_candidate_pairs      hashes) then banded LSH: near-dup candidates via
+3. minhash_signatures +   — MinHash ((a*x + b) mod 2^31-1 permutations over
+   lsh_candidate_pairs      char-polynomial shingle hashes, one numpy
+                            kernel) then banded LSH: near-dup candidates via
                             groupBy on (band, band-hash) — turns O(n^2) into
                             a shuffle on bucket keys.
-4. simhash (datapipe.text)— 64-bit fingerprints; hamming-radius dup classes.
+4. simhash60 (datapipe.text) — 60-bit fingerprints; hamming-radius dup
+                            classes.
 
 All hashes are deterministic (fixed seeds, pure integer arithmetic) so runs
-are reproducible across cluster sizes.
+are reproducible across cluster sizes, and the MinHash, SimHash and
+winnowing families are exact in int64, so the DuckDB oracles re-derive
+every signature, fingerprint and digest.
 """
 
 from __future__ import annotations
@@ -25,12 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xenoeye_spark.datapipe.util import spread, ws_tokens
-
-# Mersenne prime modulus for the permutation family (classic MinHash form
-# a*x+b mod p; p > 2^32 keeps collisions negligible on 32-bit shingle hashes)
-_MERSENNE_P = (1 << 61) - 1
-_MAX_HASH = (1 << 32) - 1
+from xenoeye_spark.datapipe.util import (
+    POLY_P, char_polys, poly_pows, segment_starts, spread, ws_tokens,
+)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -396,18 +397,10 @@ def ngram_jaccard_pairs(
     return out.filter(F.col("jaccard") >= F.lit(threshold))
 
 
-def _minhash_params(num_hashes: int, seed: int = 42):
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE_P, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, _MERSENNE_P, size=num_hashes, dtype=np.int64)
-    return a, b
-
-
-# 31-bit permutation family for the pure-expression twin: every product
-# a*x (a < 2^31, x < _POLY_P < 2^30) stays under 2^61, so the arithmetic
-# is exact int64 in ANY engine — no numpy wraparound semantics to
-# replicate, which is what makes this variant oracle-checkable in SQL.
-_POLY_P = 1_000_000_007
+# The MinHash family, exact in int64 in any engine: the shingle's char
+# polynomial mod POLY_P (< 2^30), then 31-bit permutations
+# (a*x + b) mod 2^31-1, each product a*x < 2^61. The DuckDB oracle
+# re-derives both verbatim (__spark_entry__.py dedup_minhash_lsh_expr).
 _PERM_P31 = (1 << 31) - 1
 
 
@@ -418,70 +411,49 @@ def minhash_params31(num_hashes: int, seed: int = 42):
     return a, b
 
 
-def minhash_signatures_expr(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Whole-stage-codegen MinHash twin of ``minhash_signatures``: zero
-    Python, zero Arrow transfer — the entire signature is built-in
-    higher-order functions, so Catalyst fuses shingling, hashing, and the
-    64 permutations into one generated stage.
+def _minhash_kernel(n: int, num_hashes: int, seed: int):
+    """The MinHash pandas UDF: ``_toks`` (array<string>, the JVM
+    tokenizer's output) -> array<long> signature.
 
-    The base shingle hash is a character polynomial mod 1e9+7 (instead of
-    xxhash64) and the permutations are (a*x + b) mod 2^31-1 with 31-bit
-    constants; both are plain int64 arithmetic with no overflow, hence
-    expressible verbatim in DuckDB SQL — this variant exists to make the
-    full MinHash+LSH pipeline independently oracle-checkable
-    (__spark_entry__.py dedup_minhash_lsh_expr). Same signature contract
-    as ``minhash_signatures`` (array<long> of num_hashes; empty docs get
-    the all-max signature), so ``lsh_candidate_pairs`` consumes either.
-    """
-    hashes, sig = minhash_sig_exprs(n, num_hashes, seed)
-    return (
-        _with_tokens(docs, text_col)
-        .select(F.col(id_col), F.expr(hashes).alias("_h"))
-        .select(F.col(id_col), F.expr(sig).alias("signature"))
-    )
-
-
-def minhash_sig_exprs(
-    n: int = 3, num_hashes: int = 64, seed: int = 42
-) -> tuple[str, str]:
-    """The expression pair behind ``minhash_signatures_expr``, exposed
-    so callers that must compute the signature ALONGSIDE other per-doc
-    columns in ONE lineage can (the streaming incremental dedup: a
-    second pass over a stream would be a stateful self-join). Returns
-    (hashes_sql over a staged ``_toks`` column, sig_sql over a staged
-    ``_h`` column) — stage each as a real column, in that order (the
-    no-CSE trap)."""
+    The shingles are the ``n``-token windows joined by one space, the
+    strings ``sig_and_shingle_table`` builds for the Jaccard table. A
+    shingle's polynomial is composed from its tokens' polynomials
+    (``poly(x + ' ' + y) = poly(x) * 31^(len y + 1) + 32 * 31^len y +
+    poly(y)``), so no shingle string is ever built in Python. The
+    permutation table is computed once per DISTINCT shingle hash of the
+    Arrow batch, and each doc's signature is a gather-min over it. A doc
+    with fewer than ``n`` tokens, or NULL text, gets the all-2^31-1
+    signature."""
     a_params, b_params = minhash_params31(num_hashes, seed)
-    # tokens projected once into _toks — an inlined split re-evaluates per
-    # shingle index inside the transform lambda (see _shingle_hash_col)
-    inner = "_toks" if n == 1 else (
-        f"CASE WHEN size(_toks) >= {n} THEN "
-        f"transform(sequence(0, size(_toks) - {n}), "
-        f"i -> array_join(slice(_toks, i + 1, {n}), ' ')) "
-        f"ELSE cast(array() as array<string>) END"
-    )
-    poly = (
-        "aggregate(transform(split(s, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * 31 + x) % {_POLY_P})"
-    )
-    hashes = f"array_distinct(transform({inner}, s -> {poly}))"
-    a_lit = "array(" + ", ".join(f"{int(x)}L" for x in a_params) + ")"
-    b_lit = "array(" + ", ".join(f"{int(x)}L" for x in b_params) + ")"
-    sig = (
-        f"transform(sequence(0, {num_hashes - 1}), p -> "
-        f"CASE WHEN size(_h) = 0 THEN {_PERM_P31}L ELSE "
-        f"array_min(transform(_h, x -> "
-        f"(element_at({a_lit}, p + 1) * x + element_at({b_lit}, p + 1)) "
-        f"% {_PERM_P31})) END)"
-    )
-    return hashes, sig
+    empty = np.full(num_hashes, _PERM_P31, dtype=np.int64)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def minhash(toks: pd.Series) -> pd.Series:
+        arrs = [() if t is None else t for t in toks]
+        counts = np.fromiter(map(len, arrs), np.int64, len(arrs))
+        tok_h, tok_len = char_polys(
+            [t for a in arrs for t in a], (31, POLY_P)
+        )
+        start, owner = segment_starts(counts, n)
+        h = tok_h[start]
+        if len(start):
+            pw = poly_pows(31, POLY_P, int(tok_len.max()) + 2)
+            for j in range(1, n):
+                t = start + j
+                h = (h * pw[tok_len[t] + 1] % POLY_P
+                     + 32 * pw[tok_len[t]] + tok_h[t]) % POLY_P
+        uniq, inv = np.unique(h, return_inverse=True)
+        perm = (
+            a_params[:, None] * uniq[None, :] + b_params[:, None]
+        ) % _PERM_P31
+        n_sh = np.bincount(owner, minlength=len(arrs))
+        ends = np.cumsum(n_sh)
+        return pd.Series([
+            perm[:, inv[e - c:e]].min(axis=1) if c else empty
+            for c, e in zip(n_sh.tolist(), ends.tolist())
+        ])
+
+    return minhash
 
 
 def minhash_signatures(
@@ -491,56 +463,28 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 42,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash signature per doc: array<long> of length num_hashes.
-
-    Shingle base hash = crc32-like xxhash64 (Spark built-in, JVM-side);
-    permutations applied in a vectorized pandas UDF over the shingle-hash
-    arrays (Arrow batches, numpy modular arithmetic — no per-row Python).
-    """
-    a_params, b_params = _minhash_params(num_hashes, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(hashes: pd.Series) -> pd.Series:
-        # shingles repeat heavily across documents, so compute the
-        # permutation table once per UNIQUE shingle hash in the Arrow
-        # batch, then take per-doc minima by gather — same arithmetic
-        # (identical int64 wrap behavior), ~|unique|/|total| of the work
-        arrs = [
-            np.asarray(a, dtype=np.int64) & _MAX_HASH
-            if a is not None and len(a)
-            else np.empty(0, dtype=np.int64)
-            for a in hashes
-        ]
-        nonempty = [a for a in arrs if len(a)]
-        empty_sig = np.full(num_hashes, _MAX_HASH, dtype=np.int64)
-        if not nonempty:
-            return pd.Series([empty_sig] * len(arrs))
-        flat = np.concatenate(nonempty)
-        uniq, inv = np.unique(flat, return_inverse=True)
-        # (a*x + b) mod p over (num_hashes, n_unique)
-        vals_u = (
-            a_params[:, None] * uniq[None, :] + b_params[:, None]
-        ) % _MERSENNE_P
-        out = []
-        pos = 0
-        for a in arrs:
-            if len(a) == 0:
-                out.append(empty_sig)
-                continue
-            idx = inv[pos : pos + len(a)]
-            pos += len(a)
-            out.append(vals_u[:, idx].min(axis=1))
-        return pd.Series(out)
-
-    if shingles is not None:
-        return shingles.select(
-            F.col("_id").alias(id_col), minhash(F.col("_sh")).alias("signature")
-        )
+    """MinHash signature per doc: array<long> of ``num_hashes`` minima
+    over the doc's distinct ``n``-token shingles (``_minhash_kernel``).
+    Tokens come from the JVM tokenizer (``_with_tokens``), so the
+    shingles are exactly the ones the Jaccard table hashes; empty docs
+    get the all-max signature. The family is oracle-exact (see
+    ``_PERM_P31``)."""
+    kernel = _minhash_kernel(n, num_hashes, seed)
     return _with_tokens(docs, text_col).select(
-        F.col(id_col),
-        minhash(_shingle_hash_col("_toks", n)).alias("signature"),
+        F.col(id_col), kernel(F.col("_toks")).alias("signature")
+    )
+
+
+def band_hashes(bands: int, sig_len: int) -> "F.Column":
+    """array<long>: the banded-LSH bucket key of each of ``bands``
+    slices of ``signature`` (``ceil(sig_len / bands)`` values each,
+    comma-joined and xxhash64-ed). The one definition batch and stream
+    LSH bucket with, so they pair alike."""
+    rows = (sig_len + bands - 1) // bands
+    return F.expr(
+        f"transform(sequence(0, {bands - 1}), b -> xxhash64(array_join("
+        f"slice(signature, b * {rows} + 1, {rows}), ',')))"
     )
 
 
@@ -580,18 +524,12 @@ def lsh_candidate_pairs(
     """
     if sig_len is None:
         sig_len = signatures.select(F.size("signature").alias("s")).first()["s"]
-    rows_per_band = (sig_len + bands - 1) // bands
 
     from pyspark import StorageLevel
 
     banded = signatures.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> xxhash64(array_join(slice(signature, b * {rows_per_band} + 1, {rows_per_band}), ',')))"
-            )
-        ).alias("band", "bucket"),
+        F.posexplode(band_hashes(bands, sig_len)).alias("band", "bucket"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # persisted unconditionally: the banded table feeds BOTH sides of the
     # self-join (plus the size gate and optional stats job), and upstream
@@ -662,37 +600,40 @@ def segment_dedup(
     every later copy anywhere in the corpus is dropped.
 
     Shape at scale: explode segments -> ONE shuffle hash-partitioned on
-    the segment digest (min_by resolves the global first occurrence with
-    map-side partial aggregation — no window, no skew on popular
-    segments) -> broadcast-free join back on (digest) filtered to this
-    doc's claim -> re-group on doc_id. Cardinalities are bounded by total
-    segment count; nothing is quadratic.
+    the segment digest, where ``rank()`` ordered by (doc_id, position)
+    marks each digest's first occurrence -> re-group on doc_id. No
+    aggregate per digest and no join back to the segments. The trade
+    (``substring_dedup``'s): one digest is one window partition, so a
+    segment repeated across many docs is sorted whole by one task where
+    a map-side-combined aggregate would have folded it per map task.
+    Cardinalities are bounded by total segment count; nothing is
+    quadratic.
+
+    Dirty ids: copies of one doc id tie at rank 1, so every copy keeps
+    a segment the id holds first. A NULL doc id claims nothing: its
+    rows sort after every id (they never hold a first occurrence) and
+    keep all their own segments.
 
     Output per doc: n_segments, n_kept, kept_digest (md5 of the joined
     kept segments in original order; md5('') for docs left empty).
     """
+    from pyspark.sql import Window
+
     segs = docs.select(
         F.col(id_col),
         F.posexplode_outer(segments_col).alias("_pos", "_seg"),
-    ).select(
-        id_col, "_pos", "_seg", F.md5(F.col("_seg")).alias("_h")
     )
-    # global first occurrence per digest: one agg, map-side combinable
-    first = segs.groupBy("_h").agg(
-        F.min(F.struct(id_col, "_pos")).alias("_first")
-    ).select(
-        "_h",
-        F.col(f"_first.{id_col}").alias("_fid"),
-        F.col("_first._pos").alias("_fpos"),
+    # a zero-segment doc explodes to one null row: its null digest
+    # partition keeps nothing, and the doc still reaches the output (n=0)
+    first = Window.partitionBy(F.md5(F.col("_seg"))).orderBy(
+        F.col(id_col).asc_nulls_last(), "_pos"
     )
-    kept_flag = (
-        (F.col("_fid") == F.col(id_col)) & (F.col("_fpos") == F.col("_pos"))
-    )
-    # LEFT join: a zero-segment doc explodes to one null row whose null
-    # digest matches nothing — it must still reach the output (n=0)
-    marked = segs.join(first, "_h", "left").select(
+    marked = segs.select(
         id_col, "_pos", "_seg",
-        (kept_flag & F.col("_seg").isNotNull()).alias("_keep"),
+        (
+            (F.col(id_col).isNull() | (F.rank().over(first) == 1))
+            & F.col("_seg").isNotNull()
+        ).alias("_keep"),
     )
     return marked.groupBy(id_col).agg(
         F.count(F.col("_seg")).alias("n_segments"),
@@ -950,17 +891,11 @@ def lsh_candidate_pairs_cross(
                 "an empty batch (incremental_dedup does)"
             )
         sig_len = row["s"]
-    rows_per_band = (sig_len + bands - 1) // bands
-    band_expr = (
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> xxhash64(array_join(slice(signature, "
-        f"b * {rows_per_band} + 1, {rows_per_band}), ',')))"
-    )
 
     def banded(sigs: DataFrame) -> DataFrame:
         return sigs.select(
             F.col(id_col),
-            F.posexplode(F.expr(band_expr)).alias("band", "bucket"),
+            F.posexplode(band_hashes(bands, sig_len)).alias("band", "bucket"),
         )
 
     nb = banded(new_sigs)
@@ -993,29 +928,22 @@ def sig_and_shingle_table(
     id_col: str = "doc_id",
     seed: int = 42,
 ) -> DataFrame:
-    """ONE staged projection computing BOTH hash families from a single
-    materialized shingle-string array (r12 optimization): the expensive
-    part of a dedup pass is tokenize + n-token window array_join, which
-    MinHash signatures (char-poly base hash) and the Jaccard-verify
-    shingle table (xxhash64) previously each recomputed from the raw
-    text. Output (_id, _sh array<long>, _sz, signature array<long>) —
-    _sh/_sz bit-identical to ``shingle_table``, signature bit-identical
-    to ``minhash_signatures_expr`` (same string array, same hash
-    expressions; pinned by test). Persisted on the batch side like
-    ``shingle_table``."""
-    _, sig_sql = minhash_sig_exprs(n, num_hashes, seed)
+    """ONE staged projection computing BOTH per-doc dedup columns from a
+    single JVM tokenization: the Jaccard-verify shingle table (xxhash64
+    of the materialized shingle strings) and the MinHash signature
+    (``_minhash_kernel`` over the same tokens). Output (_id, _sh
+    array<long>, _sz, signature array<long>) — _sh/_sz bit-identical to
+    ``shingle_table``, signature bit-identical to
+    ``minhash_signatures`` (pinned by test). Persisted on the batch
+    side like ``shingle_table``."""
     strs = "_toks" if n == 1 else (
         f"CASE WHEN size(_toks) >= {n} THEN "
         f"transform(sequence(0, size(_toks) - {n}), "
         f"i -> array_join(slice(_toks, i + 1, {n}), ' ')) "
         f"ELSE cast(array() as array<string>) END"
     )
-    poly = (
-        "aggregate(transform(split(s, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * 31 + x) % {_POLY_P})"
-    )
-    # each array materialized before the next references it — the house
-    # lambda-CSE rule (_shingle_hash_col)
+    # the shingle array materialized before the hash transform
+    # references it — the house lambda-CSE rule (_shingle_hash_col)
     staged = (
         _with_tokens(docs, text_col)
         .withColumn("_sstr", F.expr(strs))
@@ -1024,15 +952,11 @@ def sig_and_shingle_table(
             F.array_distinct(
                 F.expr("transform(_sstr, s -> xxhash64(s))")
             ).alias("_sh"),
-            F.array_distinct(
-                F.expr(f"transform(_sstr, s -> {poly})")
-            ).alias("_h"),
+            _minhash_kernel(n, num_hashes, seed)(F.col("_toks"))
+            .alias("signature"),
         )
     )
-    out = staged.select(
-        "_id", "_sh", F.size("_sh").alias("_sz"),
-        F.expr(sig_sql).alias("signature"),
-    )
+    out = staged.select("_id", "_sh", F.size("_sh").alias("_sz"), "signature")
     return out if docs.isStreaming else out.persist()
 
 
@@ -1054,8 +978,7 @@ def incremental_dedup(
     operators assume the whole corpus re-deduplicates at once; at
     100 TB nobody re-runs that per day).
 
-    MinHash-LSH (the oracle-checkable expression variant) buckets both
-    sides; the (band, bucket) equi-join yields candidates; exact
+    MinHash-LSH buckets both sides; the (band, bucket) equi-join yields candidates; exact
     n-gram Jaccard verifies them; each new doc reports its BEST corpus
     match (highest jaccard, ties to the lowest corpus id).
 

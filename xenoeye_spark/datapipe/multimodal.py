@@ -284,7 +284,7 @@ PHASH_SCHEMA = T.StructType([
 
 def image_perceptual_hash(media: DataFrame, fake: bool = False) -> DataFrame:
     """Perceptual image hashes for pixel-level near-dup detection —
-    the multimodal sibling of simhash64 (crops/re-encodes/small edits
+    the multimodal sibling of simhash60 (crops/re-encodes/small edits
     move few bits; unrelated images differ in ~32). Two standard
     64-bit hashes per image (public constructions: dHash/aHash,
     Krawetz), each PINNED to an all-integer definition an independent
@@ -302,8 +302,8 @@ def image_perceptual_hash(media: DataFrame, fake: bool = False) -> DataFrame:
     Each hash ships as two NON-NEGATIVE 32-bit halves in BIGINT
     columns (``*_hi`` = bits 0..31 with bit k weighted 2^(31-k),
     ``*_lo`` = bits 32..63): no 64-bit sign games anywhere, so the
-    driver oracle rebuilds every bit exactly — unlike simhash64,
-    which needs a width-reduced oracle twin.
+    driver oracle rebuilds every bit exactly, as it does for simhash60's
+    60-bit fingerprints.
 
     One Arrow-batched mapInPandas stage over the real decoders
     (``fake=True`` for arbitrary test bytes), no shuffle; O(own

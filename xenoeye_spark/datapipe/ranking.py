@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 from xenoeye_spark.datapipe.util import WS_TOKENS_SQL as _TOKENIZE
 from xenoeye_spark.datapipe.util import ws_tokens
 
-# the 31/2^30-7 char polynomial used across the oracle-checkable twins
-# (simhash_expr, doc_fingerprint_expr): every intermediate stays < 2^60,
-# exact in int64, and DuckDB re-derives it verbatim.
+# the 31/2^30-35 char polynomial (simhash60's first family): every
+# intermediate stays < 2^60, exact in int64, and DuckDB re-derives it
+# verbatim.
 KMV_P, KMV_M = 1_073_741_789, 31
 # KMV needs UNIFORM hashes; the raw polynomial maps structured token
 # families ("w1x","w2x",...) onto tight arithmetic progressions (step 31)

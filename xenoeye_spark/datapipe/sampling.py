@@ -600,8 +600,7 @@ def _gram_bucket_expr(
       re-derivable in any engine: the ORACLE-EXACT family every gate
       query uses.
     - "xxhash64": Spark's native codegen hash — measured ~4x faster
-      end-to-end on the gram kernel (the production fast path, same
-      doc_fingerprint/doc_fingerprint_expr pairing as elsewhere).
+      end-to-end on the gram kernel (the production fast path).
       Bucket assignments differ from "poly", so fit and apply must use
       the SAME hash_fn; cross-engine oracles can't re-derive it.
     """

@@ -1,10 +1,14 @@
 """Text analysis operators — pure Column expressions (JVM-side) except
-where bit-twiddling genuinely needs numpy (simhash).
+where per-token or per-gram hashing genuinely needs numpy (SimHash,
+winnowing).
 
-- text_stats   : token/char counts, punctuation & stopword ratios, a
-                 composite quality score
-- language_id  : n-gram/stopword-heuristic language guess
-- simhash64    : 64-bit SimHash fingerprint over token xxhashes
+- text_stats      : token/char counts, punctuation & stopword ratios, a
+                    composite quality score
+- language_id     : n-gram/stopword-heuristic language guess
+- simhash60       : 60-bit SimHash fingerprint over two char polynomials
+                    per token (oracle-exact)
+- doc_fingerprint : winnowing over char-polynomial k-gram hashes
+                    (oracle-exact)
 """
 
 from __future__ import annotations
@@ -16,7 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xenoeye_spark.datapipe.util import spread, ws_tokens
+from xenoeye_spark.datapipe.util import (
+    POLY_P, char_chunks, char_polys, poly_pows, segment_starts,
+    segment_sums, spread, ws_tokens,
+)
 
 # Minimal deterministic stopword sets per language (public common words).
 STOPWORDS = {
@@ -168,81 +175,50 @@ def corpus_report(
     )
 
 
-def simhash64(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: sign-sum of token xxhash64
-    bits. Token hashing stays JVM-side; the bit-vote runs vectorized in an
-    Arrow pandas UDF."""
-
-    @F.pandas_udf(T.LongType())
-    def simhash(hashes: pd.Series) -> pd.Series:
-        out = np.zeros(len(hashes), dtype=np.int64)
-        for i, arr in enumerate(hashes):
-            if arr is None or len(arr) == 0:
-                continue
-            h = np.asarray(arr, dtype=np.uint64)
-            # bits (n_tokens, 64) -> votes per bit position
-            bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int32)
-            votes = bits.sum(axis=0) * 2 - len(h)  # +1/-1 per token
-            fp = np.uint64(0)
-            for b in np.flatnonzero(votes > 0):
-                fp |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(fp)
-        return pd.Series(out)
-
-    tok_hashes = F.expr(
-        f"transform(filter(split(trim({text_col}), '\\\\s+'), t -> t != ''), t -> xxhash64(t))"
-    )
-    return spread(docs).select(
-        F.col(id_col), simhash(tok_hashes).alias("simhash")
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints, pure expression."""
     return F.bit_count(a.bitwiseXOR(b))
 
 
 # two coprime char-polynomial families; each yields < 2^30, so the packed
-# 60-bit token hash (p1 * 2^30 + p2) and every intermediate product stay
-# exact in int64 — the property that makes the twin SQL-oracle-checkable
+# 60-bit token hash (p1 * 2^30 + p2) stays exact in int64 — the property
+# that lets the DuckDB oracle re-derive every fingerprint bit
 _SIMHASH_P1, _SIMHASH_M1 = 1_073_741_789, 31
 _SIMHASH_P2, _SIMHASH_M2 = 1_073_741_783, 131
-SIMHASH_EXPR_BITS = 60
+SIMHASH_BITS = 60
 
 
-def simhash_expr(
+@F.pandas_udf(T.LongType())
+def _simhash_kernel(toks: pd.Series) -> pd.Series:
+    """array<string> tokens -> 60-bit SimHash: bit b is set iff strictly
+    more than half of the doc's tokens have bit b of their packed
+    two-polynomial hash set. One vote count per bit over the whole
+    Arrow batch (a prefix sum per bit); empty or NULL docs give 0."""
+    arrs = [() if t is None else t for t in toks]
+    counts = np.fromiter(map(len, arrs), np.int64, len(arrs))
+    h1, h2, _ = char_polys(
+        [t for a in arrs for t in a],
+        (_SIMHASH_M1, _SIMHASH_P1), (_SIMHASH_M2, _SIMHASH_P2),
+    )
+    h = h1 << 30 | h2
+    fp = np.zeros(len(arrs), np.int64)
+    for b in range(SIMHASH_BITS):
+        ones = segment_sums(h >> b & 1, counts)
+        fp |= (2 * ones > counts).astype(np.int64) << b
+    return pd.Series(fp)
+
+
+def simhash60(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Pure-expression SimHash twin of ``simhash64``: a 60-bit
-    fingerprint from two 30-bit char polynomials per token, bit votes and
-    packing all in higher-order functions — zero Python, fully inside
-    WholeStageCodegen, and (unlike xxhash64) re-derivable verbatim in
-    DuckDB SQL (__spark_entry__.py simhash_expr oracle). Same vote
-    semantics as ``simhash64``: bit b is set iff strictly more than half
-    of the tokens have bit b set; empty docs fingerprint to 0."""
-    poly1 = (
-        "aggregate(transform(split(t, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * {_SIMHASH_M1} + x) % {_SIMHASH_P1})"
-    )
-    poly2 = (
-        "aggregate(transform(split(t, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * {_SIMHASH_M2} + x) % {_SIMHASH_P2})"
-    )
-    tok_hashes = (
-        f"transform(filter(split(trim({text_col}), '\\\\s+'), t -> t != ''), "
-        f"t -> {poly1} * {1 << 30}L + {poly2})"
-    )
-    fp = (
-        f"aggregate(sequence(0, {SIMHASH_EXPR_BITS - 1}), 0L, (acc, b) -> "
-        "acc + IF(2 * size(filter(_th, h -> shiftright(h, b) % 2 = 1)) "
-        "> size(_th), shiftleft(1L, b), 0L))"
-    )
-    return (
-        spread(docs)
-        .select(F.col(id_col), F.expr(tok_hashes).alias("_th"))
-        .select(F.col(id_col), F.expr(fp).alias("simhash"))
+    """60-bit SimHash per doc over its whitespace tokens (the JVM
+    tokenizer ``ws_tokens``). A token hashes to two 30-bit char
+    polynomials packed into 60 bits; the fingerprint's bit b is the
+    majority vote of the tokens' bit b (``_simhash_kernel``). Exact in
+    int64, so the DuckDB oracle re-derives every fingerprint
+    (__spark_entry__.py simhash_expr). Empty docs fingerprint to 0."""
+    return spread(docs).select(
+        F.col(id_col), _simhash_kernel(_tokens(F.col(text_col))).alias("simhash")
     )
 
 
@@ -252,30 +228,23 @@ def simhash_neardup_pairs(
     bands: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fingerprints: DataFrame | None = None,
-    fp_bits: int = 64,
 ) -> DataFrame:
-    """SimHash near-duplicate pairs: (id_a < id_b, hamming <= radius).
+    """SimHash near-duplicate pairs: (id_a < id_b, hamming <= radius)
+    over ``simhash60`` fingerprints.
 
     EXACT (no recall loss) for ``radius <= bands - 1`` by pigeonhole:
     at most ``radius`` differing bits cannot touch all ``bands`` disjoint
-    bit blocks, so every qualifying pair is equal on at least one block.
-    Candidates therefore come from an equi-join keyed by (band, block) —
-    the same shuffle shape as MinHash banding — and a popcount verifies.
-
-    ``fingerprints``: precomputed (id_col, simhash) frame — e.g. the
-    oracle-checkable ``simhash_expr`` twin — with ``fp_bits`` giving its
-    width (band blocks split fp_bits evenly). Default: ``simhash64``.
+    bit blocks (``SIMHASH_BITS // bands`` bits each), so every qualifying
+    pair is equal on at least one block. Candidates therefore come from
+    an equi-join keyed by (band, block) — the same shuffle shape as
+    MinHash banding — and a popcount verifies.
     """
     if radius > bands - 1:
         raise ValueError(
             f"radius {radius} needs > {radius} bands for exact candidates"
         )
-    fp = (
-        fingerprints if fingerprints is not None
-        else simhash64(docs, text_col, id_col)
-    )
-    width = fp_bits // bands
+    fp = simhash60(docs, text_col, id_col)
+    width = SIMHASH_BITS // bands
     mask = (1 << width) - 1
     from pyspark import StorageLevel
 
@@ -290,9 +259,8 @@ def simhash_neardup_pairs(
         ).alias("band", "block"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # persisted: the self-join consumes the banded table on BOTH sides and
-    # the fingerprint stage upstream is the expensive part (UDF bit-votes
-    # or the 60x-per-token expression twin) — without this, a broadcast of
-    # one side re-runs that lineage from scratch (measured ~4x on the twin)
+    # the fingerprint kernel upstream is the expensive part — without
+    # this, a broadcast of one side re-runs that lineage from scratch
     a = banded.alias("a")
     b = banded.alias("b")
     cands = (
@@ -444,55 +412,90 @@ def token_count(
     )
 
 
-def doc_fingerprint_expr(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Oracle-checkable winnowing twin of ``doc_fingerprint``: gram
-    hashes come from the 30-bit char polynomial (SQL-expressible, unlike
-    xxhash64) and the sliding window-min runs as expressions — O(len *
-    window) interpreted slices, the cost the flagship avoids with its
-    Arrow kernel, accepted here because this variant exists to let DuckDB
-    re-derive every selected fingerprint verbatim. Same selection
-    semantics: k-char grams, window-of-``window`` minima, sorted distinct;
-    the digest is the same polynomial over the comma-joined selection."""
-    t = text_col
-    poly = (
-        "aggregate(transform(split(s, ''), ch -> ascii(ch)), 0L, "
-        "(acc, x) -> (acc * 31 + x) % 1000000007)"
-    )
+_FP_SCHEMA = T.StructType([
+    T.StructField("fingerprint", T.ArrayType(T.LongType())),
+    T.StructField("fp_digest", T.LongType()),
+    T.StructField("fp_size", T.IntegerType()),
+])
+_POW10 = 10 ** np.arange(1, 10, dtype=np.int64)
 
-    def poly_of(expr: str) -> str:
-        return poly.replace("split(s, '')", f"split({expr}, '')")
 
-    grams = (
-        f"CASE WHEN length({t}) >= {k} THEN "
-        f"transform(sequence(1, length({t}) - {k} + 1), "
-        f"i -> {poly_of(f'substring({t}, i, {k})')}) "
-        f"ELSE CASE WHEN length({t}) > 0 THEN array({poly_of(t)}) "
-        f"ELSE cast(array() as array<bigint>) END END"
-    )
-    winmin = (
-        f"CASE WHEN size(_g) >= {window} THEN "
-        f"transform(sequence(1, size(_g) - {window} + 1), "
-        f"i -> array_min(slice(_g, i, {window}))) ELSE _g END"
-    )
-    digest = poly_of("concat_ws(',', cast(fingerprint as array<string>))")
-    return (
-        spread(docs).select(F.col(id_col), F.expr(grams).alias("_g"))
-        .select(
-            F.col(id_col),
-            F.array_sort(F.array_distinct(F.expr(winmin))).alias("fingerprint"),
-        )
-        .select(
-            F.col(id_col),
-            F.expr(digest).alias("fp_digest"),
-            F.size("fingerprint").alias("fp_size"),
-        )
-    )
+def _winnow_kernel(k: int, window: int):
+    """The winnowing pandas UDF: text -> (fingerprint, fp_digest,
+    fp_size), over the char polynomial mod ``POLY_P``.
+
+    Per ``char_chunks`` chunk of the Arrow batch: the k-gram hashes of
+    every position by k Horner steps over the chunk's code points, the
+    window minima by ``window - 1`` shifted ``minimum`` passes, and the
+    sorted distinct selection of every doc by one ``np.unique`` over
+    (doc, hash) keys. The digest — the polynomial of the comma-joined
+    decimal selection — is composed arithmetically: each value's digit
+    string hashes in ten vectorized steps and is shifted by 31^(chars
+    after it). A doc shorter than k hashes whole; empty or NULL text
+    gives (``[]``, 0, 0)."""
+    P = POLY_P
+
+    def chunk(texts: list[str]):
+        lens = np.fromiter(map(len, texts), np.int64, len(texts))
+        codes = np.frombuffer(
+            "".join(texts).encode("utf-32-le"), np.uint32
+        ).astype(np.int64)
+        # the k-gram hash at every flat position; each doc keeps its own
+        g = np.zeros(max(len(codes) - k + 1, 0), np.int64)
+        for j in range(k):
+            g = (g * 31 + codes[j:j + len(g)]) % P
+        start, own = segment_starts(lens, k)
+        # per doc: its k-grams, or its whole-text hash when shorter
+        short = (lens > 0) & (lens < k)
+        n_g = np.where(lens >= k, lens - k + 1, short.astype(np.int64))
+        goff = np.cumsum(n_g) - n_g
+        gv = np.empty(int(n_g.sum()), np.int64)
+        gv[goff[own] + start - (np.cumsum(lens) - lens)[own]] = g[start]
+        gv[goff[short]] = char_polys(
+            [t for t, s in zip(texts, short) if s], (31, P)
+        )[0]
+        # window minima where a doc has >= window grams, else its grams
+        m = gv[: max(len(gv) - window + 1, 0)].copy()
+        for j in range(1, window):
+            np.minimum(m, gv[j:j + len(m)], out=m)
+        wstart, wown = segment_starts(n_g, window)
+        few = np.repeat(n_g < window, n_g)
+        own = np.concatenate((wown, np.repeat(np.arange(len(texts)), n_g)[few]))
+        key = np.unique(own << 30 | np.concatenate((m[wstart], gv[few])))
+        own, sel = key >> 30, key & ((1 << 30) - 1)
+        size = np.bincount(own, minlength=len(texts))
+        # digest: the polynomial of "v1,v2,...": value i has d_i digits
+        # and r_i chars after it in its doc's string
+        d = 1 + np.searchsorted(_POW10, sel, "right")
+        pw = poly_pows(31, P, 10)
+        pn = np.zeros(len(sel), np.int64)
+        for pos in range(10):
+            pn += np.where(pos < d, (48 + sel // 10 ** pos % 10) * pw[pos], 0)
+        ce = np.cumsum(d + 1)
+        last = np.cumsum(size) - 1
+        r = np.repeat(ce[last[size > 0]], size[size > 0]) - ce
+        first = np.zeros(len(sel), bool)
+        first[(last + 1 - size)[size > 0]] = True
+        pw = poly_pows(31, P, int(r.max(initial=0)) + 12)
+        terms = pn % P * pw[r] % P + np.where(first, 0, 44 * pw[r + d] % P)
+        digest = segment_sums(terms, size) % P
+        return np.split(sel, np.cumsum(size)[:-1]), digest, size
+
+    @F.pandas_udf(_FP_SCHEMA)
+    def winnow(texts: pd.Series) -> pd.DataFrame:
+        texts = ["" if t is None else t for t in texts]
+        lens = np.fromiter(map(len, texts), np.int64, len(texts))
+        parts = [chunk(texts[lo:hi]) for lo, hi in char_chunks(lens)]
+        none = np.empty(0, np.int64)
+        return pd.DataFrame({
+            "fingerprint": [f for p in parts for f in p[0]],
+            "fp_digest": np.concatenate([none, *(p[1] for p in parts)]),
+            "fp_size": np.concatenate([none, *(p[2] for p in parts)])
+            .astype(np.int32),
+        })
+
+    return winnow
+
 
 
 def doc_fingerprint(
@@ -507,45 +510,19 @@ def doc_fingerprint(
     ``window`` hashes, keep each window's minimum — the selected hash set
     identifies the document robustly under edits.
 
-    Gram hashing (substring + xxhash64) stays JVM-side so fingerprints
-    are reproducible against the JVM hash; the sliding window-min runs
-    vectorized in an Arrow pandas UDF (the expression form allocates a
-    slice per window — O(len*window) interpreted — and was this
-    operator's hot spot). Output: sorted distinct fingerprint array +
-    a 64-bit digest (xxhash64 of the joined set) for equality probes.
+    Gram hashes are the char polynomial mod 1e9+7 over code points, so
+    the DuckDB oracle re-derives every selection (__spark_entry__.py
+    doc_fingerprint_expr); the whole computation is one numpy kernel
+    (``_winnow_kernel``). Output: the sorted distinct selection
+    ``fingerprint``, ``fp_digest`` (the same polynomial over the
+    comma-joined selection) for equality probes, and ``fp_size``.
     """
-    t = text_col
-    grams = (
-        f"CASE WHEN length({t}) >= {k} THEN "
-        f"transform(sequence(1, length({t}) - {k} + 1), i -> xxhash64(substring({t}, i, {k}))) "
-        f"ELSE CASE WHEN length({t}) > 0 THEN array(xxhash64({t})) "
-        f"ELSE cast(array() as array<bigint>) END END"
+    out = spread(docs).select(
+        F.col(id_col),
+        _winnow_kernel(k, window)(F.col(text_col)).alias("_f"),
     )
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def window_min_fp(grams_s: pd.Series) -> pd.Series:
-        out = []
-        for arr in grams_s:
-            if arr is None or len(arr) == 0:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            a = np.asarray(arr, dtype=np.int64)
-            if len(a) >= window:
-                a = np.lib.stride_tricks.sliding_window_view(a, window).min(axis=1)
-            out.append(np.unique(a))  # == sorted distinct
-        return pd.Series(out)
-
-    staged = spread(docs).select(F.col(id_col), F.expr(grams).alias("_grams"))
-    return staged.select(
-        F.col(id_col),
-        window_min_fp(F.col("_grams")).alias("fingerprint"),
-    ).select(
-        F.col(id_col),
-        F.col("fingerprint"),
-        F.xxhash64(
-            F.concat_ws(",", F.col("fingerprint").cast("array<string>"))
-        ).alias("fp_digest"),
-        F.size("fingerprint").alias("fp_size"),
+    return out.select(
+        F.col(id_col), "_f.fingerprint", "_f.fp_digest", "_f.fp_size"
     )
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +49,87 @@ def ws_tokens_sql(col_name: str) -> str:
     """The same tokenizer as a Spark-SQL expression string (for use
     inside F.expr-composed higher-order expressions)."""
     return WS_TOKENS_SQL.format(c=col_name)
+
+
+# The char polynomial (multiplier 31) modulus of MinHash shingles and
+# winnowing grams: < 2^30, so every product below stays exact in int64.
+POLY_P = 1_000_000_007
+# Chars per polynomial pass: bounds the per-char int64 temporaries of
+# char_polys to a few tens of MB whatever the Arrow batch holds.
+_POLY_CHUNK = 1 << 21
+
+
+def poly_pows(mul: int, mod: int, n: int) -> np.ndarray:
+    """``[mul^0, ..., mul^(n-1)] % mod`` as int64 (at least one entry),
+    built by doubling; ``mod < 2^31`` keeps every product exact."""
+    p = np.ones(1, np.int64)
+    while len(p) < n:
+        p = np.concatenate((p, p * pow(mul, len(p), mod) % mod))
+    return p
+
+
+def char_chunks(lens: np.ndarray) -> list[tuple[int, int]]:
+    """``(lo, hi)`` ranges over consecutive strings of ``lens`` chars,
+    ~``_POLY_CHUNK`` chars each (a longer string makes its own chunk);
+    none for no strings."""
+    ends = np.cumsum(lens)
+    cuts = np.searchsorted(
+        ends, np.arange(_POLY_CHUNK, ends[-1] if len(ends) else 0,
+                        _POLY_CHUNK), "right"
+    )
+    b = np.unique(np.concatenate(([0], cuts, [len(lens)])))
+    return list(zip(b[:-1].tolist(), b[1:].tolist()))
+
+
+def char_polys(strs, *families: tuple[int, int]) -> list[np.ndarray]:
+    """The char polynomial of every string, once per ``(mul, mod)``
+    family: the fold ``acc = (acc * mul + code point) % mod`` from 0,
+    so ``''`` hashes to 0. This is the base hash of the oracle-exact
+    similarity family (MinHash shingles, SimHash tokens, winnowing
+    grams): the DuckDB oracles fold ``ascii()`` of each char the same
+    way, and Spark's ``ascii()`` of a one-char string is the same code
+    point (non-BMP included).
+
+    Vectorized over the batch: a string's fold equals
+    ``sum(code_i * mul^(len-1-i)) % mod``, so every family is one
+    gather-multiply and one prefix sum over the code points of a
+    ``char_chunks`` chunk (``mod < 2^30``: each term < 2^51, each
+    reduced term < 2^30). Returns one int64 array per family, plus the
+    code-point lengths last."""
+    strs = list(strs)
+    lens = np.fromiter(map(len, strs), np.int64, len(strs))
+    outs = [np.zeros(len(strs), np.int64) for _ in families]
+    pows = [poly_pows(m, p, int(lens.max(initial=0))) for m, p in families]
+    for lo, hi in char_chunks(lens):
+        ln = lens[lo:hi]
+        codes = np.frombuffer(
+            "".join(strs[lo:hi]).encode("utf-32-le"), np.uint32
+        ).astype(np.int64)
+        e = np.cumsum(ln)
+        exp = np.repeat(e - 1, ln) - np.arange(len(codes))
+        for out, pw, (_, mod) in zip(outs, pows, families):
+            cs = np.concatenate(([0], np.cumsum(codes * pw[exp] % mod)))
+            out[lo:hi] = (cs[e] - cs[e - ln]) % mod
+    return [*outs, lens]
+
+
+def segment_starts(counts: np.ndarray, width: int = 1) -> tuple:
+    """For segments of ``counts`` items laid end to end, every start of
+    a ``width``-item run that fits inside its segment: returns (flat
+    start index, owning segment). ``width=1`` enumerates every item."""
+    m = np.maximum(counts - (width - 1), 0)
+    owner = np.repeat(np.arange(len(counts)), m)
+    offs = np.cumsum(counts) - counts
+    first = np.cumsum(m) - m
+    return offs[owner] + np.arange(len(owner)) - first[owner], owner
+
+
+def segment_sums(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Sum of ``vals`` over consecutive segments of ``counts`` items
+    (0 for an empty segment); int64-exact below 2^63 per prefix."""
+    cs = np.concatenate(([0], np.cumsum(vals, dtype=np.int64)))
+    ends = np.cumsum(counts)
+    return cs[ends] - cs[ends - counts]
 
 
 def spread(

@@ -114,24 +114,18 @@ def incremental_dedup_stream(
     from pyspark.sql import types as T
 
     from xenoeye_spark.datapipe.dedup import (
-        _shingle_hash_col, _with_tokens, minhash_sig_exprs,
-        minhash_signatures_expr, shingle_table,
+        band_hashes, sig_and_shingle_table,
     )
 
-    # ---- static side, computed once at stream construction
-    sig_old = minhash_signatures_expr(
-        corpus, n=n, num_hashes=num_hashes,
-        text_col=text_col, id_col=id_col, seed=seed,
+    # ---- static side, computed once at stream construction: signature
+    # and shingle table from one staged tokenization (the batch
+    # operator's own builder)
+    tbl_old = sig_and_shingle_table(
+        corpus, n, num_hashes, text_col, id_col, seed
     )
-    rows_per_band = (num_hashes + bands - 1) // bands
-    band_expr = (
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> xxhash64(array_join(slice(signature, "
-        f"b * {rows_per_band} + 1, {rows_per_band}), ',')))"
-    )
-    corpus_banded = sig_old.select(
-        F.col(id_col).alias("_old_id"),
-        F.posexplode(F.expr(band_expr)).alias("band", "bucket"),
+    corpus_banded = tbl_old.select(
+        F.col("_id").alias("_old_id"),
+        F.posexplode(band_hashes(bands, num_hashes)).alias("band", "bucket"),
     )
     if max_bucket_size is not None:
         sizes = corpus_banded.groupBy("band", "bucket").agg(
@@ -141,7 +135,7 @@ def incremental_dedup_stream(
             sizes.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz"),
             ["band", "bucket"], "leftsemi",
         )
-    sh_old = shingle_table(corpus, n, text_col, id_col).select(
+    sh_old = tbl_old.select(
         F.col("_id").alias("_old_id"), F.col("_sh").alias("_sh_o"),
         F.col("_sz").alias("_sz_o"),
     )
@@ -151,27 +145,15 @@ def incremental_dedup_stream(
     # a stream-stream self-join whose hash-join state grows with every
     # doc ever ingested (no watermark bounds it). The shingle array
     # rides through the 16-row banded explode instead: bands x array
-    # duplication per doc, a bounded width cost, zero state. Builders
-    # are the batch operator's own (_shingle_hash_col on the same
-    # _with_tokens staging + minhash_sig_exprs), so digests and
-    # signatures compare like for like.
-    hashes_sql, sig_sql = minhash_sig_exprs(n, num_hashes, seed)
-    staged = (
-        _with_tokens(stream, text_col)
-        .select(
-            F.col(id_col),
-            _shingle_hash_col("_toks", n).alias("_sh_n"),
-            F.expr(hashes_sql).alias("_h"),
-        )
-        .select(
-            F.col(id_col), F.col("_sh_n"),
-            F.expr(sig_sql).alias("signature"),
-        )
-    )
-    new_banded = staged.select(
-        F.col(id_col),
-        F.col("_sh_n"),
-        F.posexplode(F.expr(band_expr)).alias("band", "bucket"),
+    # duplication per doc, a bounded width cost, zero state. The builder
+    # and the band hash are the batch operator's own, so digests,
+    # signatures and buckets compare like for like.
+    new_banded = sig_and_shingle_table(
+        stream, n, num_hashes, text_col, id_col, seed
+    ).select(
+        F.col("_id").alias(id_col),
+        F.col("_sh").alias("_sh_n"),
+        F.posexplode(band_hashes(bands, num_hashes)).alias("band", "bucket"),
     )
 
     # LEFT stream-static joins: a doc with no bucket collision (or an
