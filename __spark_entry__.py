@@ -1795,8 +1795,8 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     log importance weight in integer micro-nats, top-200 by weight.
     The single floor() per BUCKET absorbs the engines' ln() ulp
     difference; everything after it is int64 arithmetic, so the oracle
-    re-derives every weight exactly (hash family = the kmv-proven
-    31-poly/Knuth-mix fold)."""
+    re-derives every weight exactly (gram buckets = crc32 of the gram's
+    UTF-8 bytes mod 1024, which the oracle folds in SQL)."""
     from xenoeye_spark.datapipe.sampling import dsir_weights
 
     docs = _t(spark, sf_dir, "documents")
@@ -1861,7 +1861,8 @@ def q_hash_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-nat weights, the dsir fixed-point contract), then classify
     every document (hash_linear_classify). The whole model — every
     (label, bucket) weight incl. the unseen-bucket floors, the priors,
-    the argmax with the smallest-label tie rule — re-derives in SQL."""
+    the argmax with the smallest-label tie rule — re-derives in SQL,
+    gram buckets (crc32 mod 1024) included."""
     from xenoeye_spark.datapipe.ranking import (
         hash_linear_classify, hash_nb_fit,
     )
@@ -3063,6 +3064,46 @@ def _iplist_cond(col: str, cidrs: list[str]) -> str:
     return "(" + " OR ".join(parts) + ")"
 
 
+# The oracles' token separator: Java's \s class spelled out, because
+# RE2's \s (DuckDB's string_split_regex) lacks \x0B.
+ORACLE_WS = "'[ \\t\\n\\x0B\\f\\r]+'"
+
+
+def crc32_table() -> list[int]:
+    """The 256-entry byte table of reflected CRC-32 (polynomial
+    0xEDB88320, zlib's and Spark's crc32)."""
+    table = []
+    for n in range(256):
+        c = n
+        for _ in range(8):
+            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
+        table.append(c)
+    return table
+
+
+# DuckDB 1.0 has no crc32, so the gram-bucket oracles fold it in SQL:
+# CRC32_CTE is a one-row CTE holding the byte table, cross-joined so the
+# fold's lambda captures the column (the dsir_sample oracle at sf0.01
+# took 0.84 s so, 28.6 s with the list literal inside the lambda).
+CRC32_CTE = (
+    "crc AS (SELECT CAST(["
+    + ", ".join(map(str, crc32_table()))
+    + "] AS BIGINT[]) AS tb)"
+)
+
+
+def crc32_sql(hex_col: str) -> str:
+    """crc32 of the bytes whose upper-case hex string is ``hex_col``
+    (``hex(encode(s))`` for a VARCHAR's UTF-8 bytes), as a DuckDB
+    expression over CRC32_CTE's ``tb``: equals ``zlib.crc32``."""
+    byte = f"CAST('0x' || substr({hex_col}, 2 * i + 1, 2) AS BIGINT)"
+    return (
+        f"xor(list_reduce(list_prepend(CAST(4294967295 AS BIGINT), "
+        f"list_transform(range(0, len({hex_col}) // 2), i -> {byte})), "
+        f"(c, b) -> xor(c >> 8, tb[(xor(c, b) & 255) + 1])), 4294967295)"
+    )
+
+
 def oracle_sql() -> dict[str, str]:
     shingles = (
         "list_distinct(list_transform("
@@ -3203,7 +3244,7 @@ FROM documents GROUP BY 1
 """,
         "dedup_ngram_jaccard": f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), sh AS (
   SELECT doc_id, {shingles} AS s FROM toks
@@ -3224,7 +3265,7 @@ WHERE CASE WHEN len(list_distinct(a.s || b.s)) = 0 THEN 0
         # same fixpoint).
         "dedup_groups": f"""
 WITH RECURSIVE toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents WHERE doc_id < 2500
 ), sh AS (
   SELECT doc_id, {shingles} AS s FROM toks
@@ -3300,7 +3341,7 @@ WITH RECURSIVE base AS (
   SELECT b.* FROM base b JOIN ex USING (doc_id)
 ), qw AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t,
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^.,;:!?''"()\\[\\]]', '', 'g')) AS n_punct
   FROM d1
@@ -3318,7 +3359,7 @@ WITH RECURSIVE base AS (
               + (1.0 - least(qm.punct_ratio * 5.0, 1.0)) * 0.3
               + least(qm.stopword_ratio * 5.0, 1.0) * 0.3, 6) >= 0.55
 ), toks2 AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM d2
 ), sh2 AS (
   SELECT doc_id, {shingles} AS s FROM toks2
@@ -3461,7 +3502,7 @@ FROM fp
         # bit votes, packing — then 4x15-bit banding + popcount verify.
         "simhash_expr": f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), th AS (
   SELECT doc_id, list_transform(t, tok ->
@@ -3484,7 +3525,7 @@ FROM th
 """,
         "simhash_neardup_expr": f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents WHERE doc_id < 500
 ), th AS (
   SELECT doc_id, list_transform(t, tok ->
@@ -3525,7 +3566,7 @@ FROM cand WHERE bit_count(xor(fa, fb)) <= 3
         # bucket cap, and exact string-set Jaccard verification.
         "dedup_minhash_lsh_expr": (lambda perms: f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents WHERE doc_id < 2500
 ), sh AS (
   SELECT doc_id, {shingles} AS s FROM toks
@@ -3571,7 +3612,7 @@ SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j WHERE jac >= 0.35
         "text_stats": f"""
 WITH w AS (
   SELECT doc_id, text,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t,
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^.,;:!?''"()\\[\\]]', '', 'g')) AS n_punct
   FROM documents
@@ -3596,7 +3637,7 @@ FROM m
         "text_langid": f"""
 WITH w AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(lower(text)), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), s AS (
   SELECT doc_id, {lang_scores} FROM w
@@ -3610,7 +3651,7 @@ SELECT doc_id, {lang_case} AS lang_guess FROM b
         "corpus_report": f"""
 WITH w AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(lower(text)), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), s AS (
   SELECT doc_id, {lang_scores} FROM w
@@ -3620,7 +3661,7 @@ WITH w AS (
   SELECT doc_id, {lang_case} AS lang_guess FROM b
 ), m0 AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t,
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^.,;:!?''"()\\[\\]]', '', 'g')) AS n_punct
   FROM documents
@@ -3654,7 +3695,7 @@ GROUP BY lang_guess
         "stratified_sample": f"""
 WITH w AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(lower(text)), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), s AS (
   SELECT doc_id, {lang_scores} FROM w
@@ -3754,11 +3795,11 @@ WITH d AS (
 SELECT event_type, round(SUM(value * sampling_rate), 6) AS sum_scaled
 FROM w JOIN d USING (dev_ip) GROUP BY 1
 """,
-        "token_count": r"""
+        "token_count": rf"""
 SELECT doc_id,
-       len(list_filter(string_split_regex(trim(text), '\s+'), x -> x != ''))
+       len(list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != ''))
          AS n_ws_tokens,
-       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]+'))
+       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]{{1,3}}|[^A-Za-z0-9\s]+'))
          AS n_bpe_tokens
 FROM documents
 """,
@@ -3916,10 +3957,10 @@ SELECT p.purchase_id, p.user_id,
 FROM p JOIN c ON p.user_id = c.user_id AND c.t BETWEEN p.w_start AND p.w_end
 GROUP BY 1, 2
 """,
-        "gopher_quality": """
+        "gopher_quality": f"""
 WITH toks AS (
   SELECT doc_id, text,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), m AS (
   SELECT doc_id,
@@ -3959,10 +4000,10 @@ FROM j
 """,
         # segment_dedup: 20-token chunks; parallel unnests zip pos+seg;
         # corpus-wide first occurrence = min(doc_id*100000 + pos) per md5.
-        "segment_dedup": """
+        "segment_dedup": f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), chunks AS (
   SELECT doc_id,
@@ -3996,7 +4037,7 @@ GROUP BY 1
         "bm25": f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), base AS (
   SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl,
@@ -4019,12 +4060,12 @@ SELECT doc_id, round(sum(sc), 6) AS bm25,
        CAST(count(*) AS BIGINT) AS n_terms_matched
 FROM s GROUP BY 1
 """,
-        "vocab_topk": """
+        "vocab_topk": f"""
 SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
 FROM (
   SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(text), '\\s+'),
+         unnest(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
                             x -> x != '')) AS token
   FROM documents
 )
@@ -4032,7 +4073,7 @@ GROUP BY token ORDER BY n_occurrences DESC, token ASC LIMIT 30
 """,
         # kmv_distinct: the whole sketch — polynomial hash, Knuth
         # finalizer, k-th minimum, estimate — re-derived bit-for-bit.
-        "kmv_distinct": """
+        "kmv_distinct": f"""
 WITH h AS (
   SELECT DISTINCT source,
     list_reduce(
@@ -4041,7 +4082,7 @@ WITH h AS (
       (acc, x) -> (acc * 31 + x) % 1073741789) * 2654435761 % 1073741789 AS hh
   FROM (
     SELECT source,
-           unnest(list_filter(string_split_regex(trim(text), '\\s+'),
+           unnest(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
                               x -> x != '')) AS tok
     FROM documents
   )
@@ -4061,10 +4102,10 @@ FROM r GROUP BY 1
         # contamination: joins on the shingle STRINGS (the operator joins
         # on xxhash64 of them) — an independent formulation whose match
         # also vouches for the hash step.
-        "contamination": """
+        "contamination": f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), sh AS (
   SELECT doc_id,
@@ -4107,10 +4148,10 @@ FROM documents GROUP BY 1
 """,
         # tfidf_topterms: same tf * ln(N/df) arithmetic, same
         # (score desc, term asc) ranking, re-run by DuckDB windows.
-        "tfidf_topterms": """
+        "tfidf_topterms": f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), tf AS (
   SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tfv
@@ -4160,10 +4201,10 @@ FROM c
 """,
         # bigram_lm: the whole smoothed model retrained in SQL — same
         # counts, same vocab, same ln/avg arithmetic.
-        "bigram_lm": """
+        "bigram_lm": f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), tr_bg AS (
   SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM (
@@ -4290,10 +4331,10 @@ FROM assign a LEFT JOIN w USING (vec_id)
      [(float((c * c).sum())) for c in _ivf_fixed_centroids()]),
         # chunk_docs: same windows via DuckDB's 1-based INCLUSIVE list
         # slicing; integer-ceil window count, trailing short chunk kept.
-        "chunk_docs": r"""
+        "chunk_docs": rf"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '')
            AS toks
   FROM documents
 ), nz AS (
@@ -4312,7 +4353,7 @@ FROM c, unnest(generate_series(0, nc - 1)) AS g(i)
 """,
         # repetition: re-derive token and 3-gram duplicate fractions from
         # scratch; LEFT JOINs keep empty/short docs with zeroed stats.
-        "repetition": r"""
+        "repetition": rf"""
 WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 4 = 0
@@ -4321,7 +4362,7 @@ WITH p AS (
   FROM documents
 ), t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '')
            AS toks
   FROM p
 ), tc AS (
@@ -4513,7 +4554,7 @@ FROM d
         "best_of_class": f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '')
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '')
            AS t,
          length(text) AS n_chars,
          length(regexp_replace(text, '[^.,;:!?''"()\\[\\]]', '', 'g'))
@@ -4564,10 +4605,10 @@ FROM ranked WHERE rn = 1
         # mask_spans: (doc,pos) hash threshold -> islands -> spans, the
         # whole pipeline re-run in SQL (all hash terms positive, so %
         # agrees across engines).
-        "mask_spans": r"""
+        "mask_spans": rf"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '')
            AS toks
   FROM documents
 ), e AS (
@@ -4601,10 +4642,10 @@ FROM sp
         # next-fit-decreasing bins over (n_tokens desc, cid), the
         # writer's shard = floor(rank/4096) over (bin_id, cid) order,
         # and the span hash/island arithmetic on the chunk text.
-        "training_prep": r"""
+        "training_prep": rf"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '')
            AS toks
   FROM documents
 ), nz AS (
@@ -4639,7 +4680,7 @@ WITH t AS (
   FROM packed
 ), ct AS (
   SELECT cid,
-         list_filter(string_split_regex(trim(chunk_text), '\s+'),
+         list_filter(string_split_regex(trim(chunk_text), {ORACLE_WS}),
                      x -> x != '') AS toks
   FROM chunks
 ), e AS (
@@ -4922,9 +4963,9 @@ FROM s
         # bpe_pairs: same two-level aggregation — word counts, then
         # char pairs over distinct words — with the total order making
         # LIMIT 100 deterministic on both engines.
-        "bpe_pairs": r"""
+        "bpe_pairs": rf"""
 WITH w AS (
-  SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
+  SELECT unnest(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
                 x -> x != '')) AS word
   FROM documents
 ), wc AS (
@@ -4945,9 +4986,9 @@ LIMIT 100
         # leftmost merge (leftmost non-overlapping on both engines),
         # then the post-merge pair table. chr(1)/chr(2) sentinels;
         # words containing them are dropped identically on both sides.
-        "bpe_steps": r"""
+        "bpe_steps": rf"""
 WITH w AS (
-  SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
+  SELECT unnest(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
                 x -> x != '')) AS word
   FROM documents
 ), wc AS (
@@ -5006,7 +5047,7 @@ SELECT * FROM (
         # fuzzy_dedup_pairs).
         "fuzzy_dedup": f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents WHERE doc_id < 2500
 ), sh AS (
   SELECT doc_id, {shingles} AS s FROM toks
@@ -5127,22 +5168,17 @@ SELECT doc_id, title, text,
   CAST(length(text) AS BIGINT) AS text_chars
 FROM decoded
 """,
-        # dsir_sample: the whole recipe re-derived — kmv-proven hash
-        # fold per gram, add-one smoothing, ONE floor per bucket into
-        # integer micro-nats, int64 weight sums, (weight desc, id asc)
-        # top-200.
-        "dsir_sample": """
-WITH toks AS (
+        # dsir_sample: the whole recipe re-derived — crc32 of every
+        # gram's UTF-8 bytes folded in SQL, add-one smoothing, ONE
+        # floor per bucket into integer micro-nats, int64 weight sums,
+        # (weight desc, id asc) top-200.
+        "dsir_sample": f"""
+WITH {CRC32_CTE}, toks AS (
   SELECT doc_id, lang,
-    list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+    list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
-), occ AS (
-  SELECT doc_id, lang,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        list_transform(string_split(gram, ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1073741789) * 2654435761 % 1073741789
-      % 1024 AS bucket
+), grams AS (
+  SELECT doc_id, lang, hex(encode(gram)) AS h
   FROM (
     SELECT doc_id, lang,
       unnest(list_concat(t,
@@ -5150,6 +5186,9 @@ WITH toks AS (
         AS gram
     FROM toks
   )
+), occ AS (
+  SELECT doc_id, lang, {crc32_sql("h")} % 1024 AS bucket
+  FROM grams CROSS JOIN crc
 ), doc_counts AS (
   SELECT doc_id, bucket, count(*) AS cnt FROM occ GROUP BY 1, 2
 ), raw_b AS (
@@ -5208,21 +5247,16 @@ SELECT doc_id,
 FROM kx
 """,
         # hash_classify: the full NB model re-derived — per-(label,
-        # bucket) counts over the kmv-proven hash fold, label-window
-        # totals, one floor per weight, integer scores, smallest-label
-        # argmax tie rule.
-        "hash_classify": """
-WITH toks AS (
+        # bucket) counts over the SQL crc32 fold, label-window totals,
+        # one floor per weight, integer scores, smallest-label argmax
+        # tie rule.
+        "hash_classify": f"""
+WITH {CRC32_CTE}, toks AS (
   SELECT doc_id, lang,
-    list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+    list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
-), occ AS (
-  SELECT doc_id, lang,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        list_transform(string_split(gram, ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1073741789) * 2654435761 % 1073741789
-      % 1024 AS bucket
+), grams AS (
+  SELECT doc_id, lang, hex(encode(gram)) AS h
   FROM (
     SELECT doc_id, lang,
       unnest(list_concat(t,
@@ -5230,6 +5264,9 @@ WITH toks AS (
         AS gram
     FROM toks
   )
+), occ AS (
+  SELECT doc_id, lang, {crc32_sql("h")} % 1024 AS bucket
+  FROM grams CROSS JOIN crc
 ), cnts AS (
   SELECT lang, bucket, count(*) AS cb FROM occ GROUP BY 1, 2
 ), lt AS (
@@ -5473,10 +5510,10 @@ FROM urls u LEFT JOIN canon c USING (doc_id)
         # ppl_split (NEW r11): the bigram_lm oracle's whole-model
         # retrain feeding the quantile_bucket oracle's cuts + CASE —
         # the CCNet perplexity-tercile recipe composed end-to-end.
-        "ppl_split": """
+        "ppl_split": f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), tr_bg AS (
   SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM (
@@ -5585,10 +5622,10 @@ FROM r WHERE domain_rank <= 15
 """,
         # token_budget: inclusive running token sum per language over
         # the same total order; integer sums are engine-exact.
-        "token_budget": r"""
+        "token_budget": rf"""
 WITH t AS (
   SELECT doc_id, lang, n_chars,
-         len(list_filter(string_split_regex(trim(text), '\s+'),
+         len(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
              x -> x != '')) AS n_tokens
   FROM documents
 ), c AS (
@@ -5697,7 +5734,7 @@ GROUP BY b.query_id
         # arithmetic; every value bit-exact.
         "count_min": (lambda rows: f"""
 WITH tok AS (
-  SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'),
+  SELECT unnest(list_filter(string_split_regex(trim(text), {ORACLE_WS}),
                 x -> x != '')) AS token
   FROM documents
 ), exact AS (
@@ -5792,7 +5829,7 @@ SELECT query_id, vec_id, pq_dist, rank FROM r WHERE rank <= 10
         "hll_distinct": (lambda A, M, QB, KM, KP, C1, C2, M2: f"""
 WITH toks AS (
   SELECT lang,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), th AS (
   SELECT lang,
@@ -5852,7 +5889,7 @@ FROM ex e JOIN agg a USING (lang) ORDER BY lang
         "bloom_contam": (lambda rows, k, mbits: f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+         list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), th AS (
   SELECT doc_id,
@@ -5984,7 +6021,7 @@ SELECT query_id, vec_id, pq_dist, rank FROM r WHERE rank <= 10
         # gate, exact-Jaccard verify, argmax by (jac desc, id asc).
         "incremental_dedup": (lambda perms: f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '') AS t
+  SELECT doc_id, list_filter(string_split_regex(trim(text), {ORACLE_WS}), x -> x != '') AS t
   FROM documents
 ), sh AS (
   SELECT doc_id, {shingles} AS s FROM toks

@@ -170,7 +170,8 @@ NOTES = {
     "html_extract": "page synthesis + the whole strip chain are ONE "
     "pure JVM projection over one scan — zero shuffles, zero Python; "
     "regex cost linear in page bytes.",
-    "dsir_sample": "the published two-pass shape: fit scans each "
+    "dsir_sample": "the published two-pass shape (grams bucket by the "
+    "native crc32, no interpreted per-char fold): fit scans each "
     "corpus once into bucket-keyed counts (map-side combine bounds "
     "both shuffles at O(n_buckets x partitions); totals are window "
     "sums over the n_buckets-row table, NOT scalar aggs that would "
@@ -183,7 +184,8 @@ NOTES = {
     "dedup_lines": "pure row-local higher-order expressions over one "
     "scan — zero shuffles, zero Python; O(lines^2) per row, both "
     "factors document-local.",
-    "hash_classify": "fit = one gram pass into (label, bucket) counts "
+    "hash_classify": "grams bucket by the native crc32 (no interpreted "
+    "per-char fold); fit = one gram pass into (label, bucket) counts "
     "(map-side combine bounds the shuffle at O(L x B x partitions)) + "
     "a label-column-only prior scan; the L x B model domain is the "
     "one reviewed BNL (dimension-tiny cross join); inference = one "

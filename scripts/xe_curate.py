@@ -53,8 +53,8 @@ gate / oracle suite):
   exact_dedup   — keep each exact text's lowest-id copy
   quality       — Gopher-style rules + composite score cut
   classify      — learned quality filter: score every doc under a
-                  hashed linear model (hash_linear_classify, xxhash64
-                  production kernel) and keep docs whose argmax label
+                  hashed linear model (hash_linear_classify, crc32
+                  gram buckets) and keep docs whose argmax label
                   is in --classifier-keep; the model is loaded from
                   --classifier-model when that path exists, else
                   fitted (hash_nb_fit) on --classifier-target's
@@ -372,9 +372,8 @@ def main(argv: list[str] | None = None) -> int:
             hash_linear_classify, hash_nb_fit,
         )
 
-        # xxhash64 is the production kernel (DEPLOY.md rule); the fit
-        # tables carry hash_fn/n_buckets provenance, so a saved model
-        # fitted with other settings raises instead of mis-scoring
+        # the fit tables carry hash_fn/n_buckets provenance, so a saved
+        # model fitted with other settings raises instead of mis-scoring
         model = None
         if args.classifier_model and os.path.exists(args.classifier_model):
             model = spark.read.parquet(args.classifier_model)
@@ -382,9 +381,7 @@ def main(argv: list[str] | None = None) -> int:
             lab = spark.read.parquet(
                 f"{args.classifier_target}/documents.parquet"
             )
-            model = hash_nb_fit(
-                lab, args.classifier_label, hash_fn="xxhash64"
-            )
+            model = hash_nb_fit(lab, args.classifier_label)
             if args.classifier_model:
                 model.write.mode("overwrite").parquet(
                     args.classifier_model
@@ -393,7 +390,7 @@ def main(argv: list[str] | None = None) -> int:
         allow = [s.strip() for s in args.classifier_keep.split(",")
                  if s.strip()]
         keep = (
-            hash_linear_classify(docs, model, hash_fn="xxhash64")
+            hash_linear_classify(docs, model)
             .filter(F.col("label").isin(allow))
             .select("doc_id")
         )
@@ -475,10 +472,7 @@ def main(argv: list[str] | None = None) -> int:
 
         tgt = spark.read.parquet(f"{args.dsir_target}/documents.parquet")
         keep = (
-            # xxhash64: the production gram kernel (DEPLOY.md rule);
-            # fit and apply run inline here so they agree by
-            # construction
-            dsir_weights(docs, tgt, hash_fn="xxhash64")
+            dsir_weights(docs, tgt)
             .orderBy(F.col("logw_micro").desc(), F.col("doc_id").asc())
             .limit(args.dsir_keep)
             .select("doc_id")

@@ -288,13 +288,13 @@ def test_curate_classify_step_fit_and_save(spark, tmp_path, capsys):
     assert 0 < c["classify"] < c["quality"]   # a real cut, not a no-op
     kept = spark.read.parquet(str(out / "documents.parquet"))
     assert kept.count() == c["classify"]
-    # the model was persisted with its kernel provenance (xxhash64 —
-    # the DEPLOY.md production rule the CLI hard-codes)
+    # the model was persisted with its kernel provenance (crc32, the
+    # one gram family)
     model = spark.read.parquet(model_path)
     assert {"label", "bucket", "w_micro", "bias_micro",
             "hash_fn", "n_buckets"} <= set(model.columns)
     provs = model.select("hash_fn", "n_buckets").distinct().collect()
-    assert [(r.hash_fn, r.n_buckets) for r in provs] == [("xxhash64", 1024)]
+    assert [(r.hash_fn, r.n_buckets) for r in provs] == [("crc32", 1024)]
 
 
 def test_curate_classify_step_saved_model_reuse(spark, tmp_path, capsys):

@@ -347,9 +347,7 @@ def _minhash_replay(text, n, num_hashes, seed=42):
     from xenoeye_spark.datapipe.dedup import minhash_params31
 
     a, b = minhash_params31(num_hashes, seed)
-    # _with_tokens: split(text, '\\s+') with no trim and no empties
-    # dropped, so leading/trailing whitespace yields '' tokens
-    toks = re.split(_JAVA_WS, text) if text is not None else []
+    toks = [t for t in re.split(_JAVA_WS, text or "") if t]
     hs = {_poly(" ".join(toks[i:i + n])) for i in range(len(toks) - n + 1)}
     return [min(((int(a[p]) * x + int(b[p])) % 2147483647 for x in hs),
                 default=2147483647) for p in range(num_hashes)]
@@ -406,8 +404,8 @@ def test_similarity_kernels_dirty_input(spark):
     the pure-Python replays of the oracle family with the JVM's
     tokenizer (the expression twins' outputs, which they replaced):
     NBSP / U+2003 are token characters, \x0B splits, leading/trailing
-    spaces make '' tokens for MinHash, code points hash whole (U+1F600
-    is one char), and empty / short / NULL docs give the all-2^31-1
+    spaces make no token, code points hash whole (U+1F600 is one
+    char), and empty / short / NULL docs give the all-2^31-1
     signature, SimHash 0 and winnowing (0, 0)."""
     from xenoeye_spark.datapipe.text import doc_fingerprint
 
@@ -427,6 +425,52 @@ def test_similarity_kernels_dirty_input(spark):
     assert got[2] != got[3]
     assert sh[11] == 0 and fp[11] == (0, 0) and fp[9] == (0, 0)
     assert got[11] == [2147483647] * 8 and got[10] == [2147483647] * 8
+
+
+def test_minhash_lsh_dirty_text_matches_oracle(spark):
+    """The MinHash/LSH pipeline (q_dedup_minhash_lsh_expr's) equals its
+    DuckDB oracle on copies that differ from their source only in
+    whitespace: outer spaces, a tab run, a \x0B between tokens, and
+    "", whitespace-only and NULL docs. Both sides trim and drop empty
+    tokens, and both split on the same whitespace class."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import _minhash_lsh_pairs, oracle_sql
+
+    rng = np.random.RandomState(11)
+    rows = []
+    for i in range(6):
+        toks = [WORDS[j] for j in rng.randint(0, len(WORDS), 12)]
+        text = " ".join(toks)
+        rows += [
+            (10 * i, text),
+            (10 * i + 1, "   " + text + "  "),
+            (10 * i + 2, "\t " + " ".join(toks[:6]) + "\t\t"
+             + " ".join(toks[6:]) + " "),
+            (10 * i + 3, text.replace(" ", "\x0b", 1)),
+        ]
+    rows += [(100, ""), (101, "   "), (102, None)]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    got = sorted(
+        (r.id_a, r.id_b, r.jaccard)
+        for r in _minhash_lsh_pairs(
+            spark.createDataFrame(rows, "doc_id long, text string")
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(
+        tuple(r)
+        for r in con.execute(oracle_sql()["dedup_minhash_lsh_expr"])
+        .fetchall()
+    )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want])
+    # every whitespace variant is an exact duplicate of its source
+    assert {(a, b) for a, b, j in got if j == 1.0} >= {
+        (10 * i, 10 * i + k) for i in range(6) for k in (1, 2, 3)
+    }
 
 
 # ---------------------------------------------------------------- graph CC

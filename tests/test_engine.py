@@ -414,6 +414,8 @@ def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
     stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
     eng.builders(stream)  # builds the plan; the spy sees the kwargs
     assert seen.get("buckets") is None
+    # silent_watch off (bounded drains) arms no idle-compaction timer
+    assert seen.get("idle_timeout_sec") is None
     expect = 8 * max(1, spark.sparkContext.defaultParallelism)
     [alerts] = built
     plan = alerts._jdf.queryExecution().analyzed().toString()
@@ -483,3 +485,78 @@ def test_engine_idle_mavg_query_is_paced(spark, tmp_path):
         assert min(gaps) >= 0.9, gaps
     finally:
         eng.stop([q])
+
+
+def test_engine_mavg_ages_idle_keys(spark, tmp_path, monkeypatch):
+    """The Engine's mavg state ages a key out once it has been silent
+    for the section's window (try_reset_db parity), while an alarmed
+    key that goes silent still reaches GONE. Drives the bucket fn the
+    Engine builds, under a fake clock."""
+    import pickle
+
+    import pandas as pd
+
+    from tests.test_streaming import _FakeGroupState
+    from xenoeye_spark.streaming import mavg_stream as ms
+
+    root = tmp_path / "modir"
+    mo = root / "border"
+    mo.mkdir(parents=True)
+    (mo / "mo.conf").write_text("""
+{
+  "filter": "proto 6",
+  "mavg": [ {"name": "m1", "fields": ["src host", "octets"], "time": 2,
+             "overlimit": [ {"name": "hi", "default": [100],
+                             "back2norm-time": 1} ]} ]
+}
+""")
+    fns: list = []
+    keys: list = []
+    real = ms.make_mavg_bucket_fn
+
+    def spy(key_cols, *a, **kw):
+        keys.append(key_cols)
+        fns.append(real(key_cols, *a, **kw))
+        return fns[-1]
+
+    monkeypatch.setattr(ms, "make_mavg_bucket_fn", spy)
+    t1 = BASE * 10**9
+    clock = {"now": t1}
+    monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
+
+    df = spark.createDataFrame(
+        _flows_rows(),
+        "ts long, ip4_src_addr long, ip4_dst_addr long, in_bytes long, "
+        "protocol long, l4_dst_port long",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    eng = Engine(
+        str(root), exp_dir=str(tmp_path / "exp"),
+        state_dir=str(tmp_path / "state"), checkpoint_root=None,
+        run_scripts=False,
+    )
+    (tmp_path / "flows").mkdir()
+    eng.builders(spark.readStream.schema(df.schema).parquet(
+        str(tmp_path / "flows")))
+    [fn], [[k]] = fns, keys
+    state = _FakeGroupState()
+
+    def batch(rows):
+        pdf = pd.DataFrame(rows, columns=[k, "_ts_ns", "_val"])
+        out = list(fn((0,), iter([pdf]), state))
+        events = pd.concat(out) if out else pd.DataFrame(columns=[k])
+        table = pickle.loads(bytes(state.get[0]))[1]
+        return {(r[k], r.event) for _, r in events.iterrows()}, table
+
+    # 1: "idle" stays under the limit, "loud" breaches it
+    ev, _ = batch([("idle", t1, 10.0), ("loud", t1, 1e6)])
+    assert ("loud", "NEW") in ev
+    # 2: 3 s later only "busy" has flows; "idle" has been silent past
+    # the 2 s window and leaves the state, the alarmed key stays
+    clock["now"] += 3 * 10**9
+    _, table = batch([("busy", clock["now"], 1.0)])
+    assert ("idle",) not in table
+    assert ("loud",) in table and ("busy",) in table
+    # 3: past back2norm the silent alarmed key reaches GONE
+    clock["now"] += 2 * 10**9
+    ev, _ = batch([("busy", clock["now"], 1.0)])
+    assert ("loud", "GONE") in ev

@@ -307,6 +307,15 @@ def test_substring_dedup_one_window_shuffle(plans):
     assert re.fullmatch(r"_id#\d+L?", right), plan
 
 
+def test_gram_kernel_is_native(plans):
+    """The gated dsir_sample and hash_classify plans bucket grams with
+    Spark's native crc32: no interpreted per-char ArrayAggregate fold
+    (``aggregate(...)`` in the plan string) anywhere in them."""
+    for name in ("dsir_sample", "hash_classify"):
+        assert "crc32(" in plans[name], name
+        assert "aggregate(" not in plans[name], (name, plans[name])
+
+
 def _parquet_scans_run(df) -> int:
     """Parquet scans that running ``df`` executes: a cached relation's
     subplan counts once, however many scans of the cache the plan has

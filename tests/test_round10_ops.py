@@ -401,10 +401,16 @@ def test_url_dedup_streaming_composition(spark, tmp_path):
 
 # ----------------------------------- fit/apply hash-consistency guards
 
+def _stamped(table, family: str):
+    return table.withColumn("hash_fn", F.lit(family))
+
+
 def test_dsir_ratio_provenance_guard(spark):
-    """r10: a saved ratio table stamps hash_fn/n_buckets; re-applying
-    with mismatched kernel settings raises instead of silently
-    mis-bucketing. Legacy tables without the columns still apply."""
+    """A saved ratio table stamps hash_fn/n_buckets; a table fitted by
+    another gram family (every pre-crc32 table says 'poly' or
+    'xxhash64') or applied with another n_buckets raises, naming what
+    differs, instead of silently mis-bucketing. Tables without the
+    columns still apply."""
     from xenoeye_spark.datapipe.sampling import dsir_fit, dsir_weights
 
     raw = spark.createDataFrame(
@@ -415,9 +421,10 @@ def test_dsir_ratio_provenance_guard(spark):
                                 "doc_id long, text string")
     ratio = dsir_fit(raw, tgt, n_buckets=32)
     assert {"hash_fn", "n_buckets"} <= set(ratio.columns)
-    with pytest.raises(Exception, match="hash_fn"):
-        dsir_weights(raw, ratio=ratio, n_buckets=32,
-                     hash_fn="xxhash64").collect()
+    for family in ("poly", "xxhash64"):
+        with pytest.raises(Exception, match=f"hash_fn={family}"):
+            dsir_weights(raw, ratio=_stamped(ratio, family),
+                         n_buckets=32).collect()
     with pytest.raises(Exception, match="n_buckets"):
         dsir_weights(raw, ratio=ratio, n_buckets=64).collect()
     # legacy shape (no provenance columns) passes unguarded
@@ -438,15 +445,15 @@ def test_classifier_provenance_guard(spark):
          (1, "violin sonata tempo", "music")],
         "doc_id long, text string, lang string",
     )
-    model = hash_nb_fit(df, "lang", n_buckets=64, hash_fn="xxhash64")
+    model = hash_nb_fit(df, "lang", n_buckets=64)
     assert {"hash_fn", "n_buckets"} <= set(model.columns)
-    with pytest.raises(Exception, match="hash_fn"):
-        hash_linear_classify(df, model, n_buckets=64).collect()
+    for family in ("poly", "xxhash64"):
+        with pytest.raises(Exception, match=f"hash_fn={family}"):
+            hash_linear_classify(df, _stamped(model, family),
+                                 n_buckets=64).collect()
     with pytest.raises(Exception, match="n_buckets"):
-        hash_linear_classify(df, model, n_buckets=32,
-                             hash_fn="xxhash64").collect()
-    ok = hash_linear_classify(df, model, n_buckets=64,
-                              hash_fn="xxhash64").collect()
+        hash_linear_classify(df, model, n_buckets=32).collect()
+    ok = hash_linear_classify(df, model, n_buckets=64).collect()
     assert {r.doc_id: r.label for r in ok} == {0: "tech", 1: "music"}
 
 

@@ -259,6 +259,18 @@ def _poly(tok: str) -> int:
     return acc * KMV_MIX % KMV_P
 
 
+def test_kmv_poly_sql_spelling():
+    """The one spelling of the interpreted char-polynomial fold behind
+    kmv_distinct, its stream twin and the Count-Min sketch: the string
+    is pinned so the timed kmv_distinct plan cannot drift."""
+    from xenoeye_spark.datapipe.ranking import kmv_poly_sql
+
+    assert kmv_poly_sql("t") == (
+        "aggregate(transform(split(t, ''), ch -> ascii(ch)), 0L, "
+        "(acc, x) -> (acc * 31 + x) % 1073741789)"
+    )
+
+
 def test_kmv_underfull_is_exact(spark):
     docs = spark.createDataFrame([
         Row(doc_id=0, src="x", text="a b c a"),

@@ -1,5 +1,5 @@
 """Round-9 additions: HTML text extraction (incl. adversarial fuzz),
-DSIR importance weights (fit/apply split, hash_fn fast path), weighted
+DSIR importance weights (fit/apply split, the crc32 gram family), weighted
 mixture interleave (+ shard-writer composition), within-doc line
 dedup, the hashed NB/linear classifier (twin, quality-filter demo),
 JSONL ingest (roundtrip, quarantine, garbage fuzz), and the
@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import re
+import zlib
 from collections import Counter
 
 import pytest
@@ -88,19 +89,15 @@ def test_html_extract_matches_python_twin(spark):
 
 def _py_dsir(raw: list[tuple[int, str]], target: list[str],
              n_buckets: int) -> dict[int, tuple[int, int]]:
-    """Literal python twin: same hash fold, add-one smoothing, one
-    floor per bucket, integer weight sums."""
-    P, M, MIX = 1_073_741_789, 31, 2_654_435_761
+    """Literal python twin: same gram hash (crc32 of the UTF-8 bytes),
+    add-one smoothing, one floor per bucket, integer weight sums."""
 
     def grams(text: str) -> list[str]:
         t = [x for x in re.split(r"\s+", text.strip()) if x]
         return t + [f"{a} {b}" for a, b in zip(t, t[1:])]
 
     def bucket(g: str) -> int:
-        acc = 0
-        for ch in g:
-            acc = (acc * M + ord(ch)) % P
-        return acc * MIX % P % n_buckets
+        return zlib.crc32(g.encode()) % n_buckets
 
     raw_occ = {i: Counter(bucket(g) for g in grams(t)) for i, t in raw}
     raw_b: Counter = Counter()
@@ -304,17 +301,12 @@ def test_hash_nb_classifier_twin(spark):
     assert {r.label for r in rows} == {"music", "tech"}
 
     # python twin
-    P, M, MIX = 1_073_741_789, 31, 2_654_435_761
-
     def grams(t):
         w = t.split()
         return w + [f"{a} {b}" for a, b in zip(w, w[1:])]
 
     def bucket(g):
-        acc = 0
-        for ch in g:
-            acc = (acc * M + ord(ch)) % P
-        return acc * MIX % P % B
+        return zlib.crc32(g.encode()) % B
 
     cnt: dict = {}
     ndocs: Counter = Counter()
@@ -435,10 +427,10 @@ def test_hash_linear_classify_validates_model_shape(spark):
         hash_linear_classify(df, bad)
 
 
-def test_gram_hash_fn_fast_path(spark):
-    """hash_fn='xxhash64' (the measured ~4x-faster native kernel) keeps
-    every semantic property: dsir fit/apply equality, steering toward
-    the target, classifier separability; bad names raise."""
+def test_gram_crc32_one_family(spark):
+    """The one gram family keeps every semantic property on its own:
+    dsir fit/apply equality, steering toward the target, classifier
+    separability."""
     from xenoeye_spark.datapipe.ranking import (
         hash_linear_classify, hash_nb_fit,
     )
@@ -453,24 +445,82 @@ def test_gram_hash_fn_fast_path(spark):
     tgt = spark.createDataFrame(
         [(9, "spark shuffle broadcast join")], "doc_id long, text string"
     )
-    ratio = dsir_fit(raw, tgt, n_buckets=64, hash_fn="xxhash64")
+    ratio = dsir_fit(raw, tgt, n_buckets=64)
+    assert {r.hash_fn for r in ratio.select("hash_fn").collect()} == {
+        "crc32"}
     inline = {r.doc_id: r.logw_micro for r in dsir_weights(
-        raw, tgt, n_buckets=64, hash_fn="xxhash64").collect()}
+        raw, tgt, n_buckets=64).collect()}
     applied = {r.doc_id: r.logw_micro for r in dsir_weights(
-        raw, ratio=ratio, n_buckets=64, hash_fn="xxhash64").collect()}
+        raw, ratio=ratio, n_buckets=64).collect()}
     assert inline == applied
     assert min(inline[0], inline[2]) > inline[1]      # steering holds
 
     lab = raw.withColumn(
         "lang", F.when(F.col("doc_id") == 1, "music").otherwise("tech")
     )
-    model = hash_nb_fit(lab, "lang", n_buckets=64, hash_fn="xxhash64")
+    model = hash_nb_fit(lab, "lang", n_buckets=64)
     pred = {r.doc_id: r.label for r in hash_linear_classify(
-        lab, model, n_buckets=64, hash_fn="xxhash64").collect()}
+        lab, model, n_buckets=64).collect()}
     assert pred == {0: "tech", 1: "music", 2: "tech"}
 
-    with pytest.raises(ValueError, match="hash_fn"):
-        dsir_fit(raw, tgt, hash_fn="md5")
+
+# dirty gram corpus: non-ASCII, non-BMP, NBSP (not whitespace to either
+# tokenizer), outer/inner runs of whitespace, "", NULL, one token
+GRAM_DIRTY = [
+    (0, "é 中 café 中文"),
+    (1, "smile \U0001F600 \U0001F600x"),
+    (2, "a\u00a0b c\u00a0 d"),
+    (3, ""),
+    (4, None),
+    (5, "single"),
+    (6, "  \t lead  and\ttrail \n "),
+]
+
+
+def test_gram_buckets_are_zlib_crc32(spark):
+    """Every gram bucket is zlib.crc32 of the gram's UTF-8 bytes mod
+    n_buckets — the rule an external linear model re-buckets by."""
+    from xenoeye_spark.datapipe.sampling import _gram_bucket_occurrences
+
+    n = 97
+    df = spark.createDataFrame(GRAM_DIRTY, "doc_id long, text string")
+    got = Counter(
+        (r.doc_id, r.bucket)
+        for r in _gram_bucket_occurrences(df, "text", "doc_id", n).collect()
+    )
+    want: Counter = Counter()
+    for i, text in GRAM_DIRTY:
+        t = [x for x in re.split(r"[ \t\n\x0b\f\r]+",
+                                 (text or "").strip(" ")) if x]
+        for g in t + [f"{a} {b}" for a, b in zip(t, t[1:])]:
+            want[(i, zlib.crc32(g.encode()) % n)] += 1
+    assert got == want
+    assert {i for i, _ in got} == {0, 1, 2, 5, 6}
+
+
+def test_oracle_crc32_fold_matches_zlib():
+    """The DuckDB oracles' SQL crc32 (byte table + list_reduce fold)
+    equals zlib.crc32 on the dirty grams, and the byte table is the
+    one zlib uses."""
+    import duckdb
+
+    from __spark_entry__ import CRC32_CTE, crc32_sql, crc32_table
+
+    # zlib seeded with 0xFFFFFFFF starts its register at 0, so one byte
+    # b leaves exactly table[b] in it (complemented on the way out)
+    assert crc32_table() == [zlib.crc32(bytes([b]), 0xFFFFFFFF) ^ 0xFFFFFFFF
+                             for b in range(256)]
+    strs = ["", "a", "single", "é", "中文", "\U0001F600", "a\u00a0b",
+            "lead and", "x" * 300]
+    strs += [t for _, t in GRAM_DIRTY if t]
+    rows = duckdb.connect().execute(
+        f"WITH {CRC32_CTE}, s AS (SELECT unnest(?) AS g) "
+        f"SELECT g, {crc32_sql('hex(encode(g))')} FROM s CROSS JOIN crc",
+        [strs],
+    ).fetchall()
+    assert len(rows) == len(strs)
+    for g, c in rows:
+        assert c == zlib.crc32(g.encode()), g
 
 
 # ------------------------------------------------------------ jsonl ingest
@@ -631,10 +681,8 @@ def test_hash_classifier_learns_the_quality_rule(spark):
         "doc_id",
     )
     assert 1 < labeled.filter("label_true = 'good'").count() < 499
-    model = hash_nb_fit(labeled, "label_true", n_buckets=2048,
-                        hash_fn="xxhash64")
-    pred = hash_linear_classify(labeled, model, n_buckets=2048,
-                                hash_fn="xxhash64")
+    model = hash_nb_fit(labeled, "label_true", n_buckets=2048)
+    pred = hash_linear_classify(labeled, model, n_buckets=2048)
     scored = labeled.join(pred, "doc_id")
     n = scored.count()
     agree = scored.filter("label_true = label").count()

@@ -222,11 +222,17 @@ def _shingle_hash_col(toks_col: str, n: int):
 
 
 def _with_tokens(docs: DataFrame, text_col: str) -> DataFrame:
-    """Project whitespace tokens once into ``_toks`` so every shingle
-    window reads the materialized array instead of re-splitting; spread
-    an under-partitioned scan first (shingle windows are the CPU-heavy
-    stage and must not run on one core)."""
-    return spread(docs).withColumn("_toks", F.split(F.col(text_col), r"\s+"))
+    """Project the whitespace tokens (``ws_tokens``, the tokenizer every
+    oracle mirrors) once into ``_toks`` so every shingle window reads
+    the materialized array instead of re-splitting; spread an
+    under-partitioned scan first (shingle windows are the CPU-heavy
+    stage and must not run on one core). Text with no tokens ("" or
+    whitespace only) gets NULL tokens, exactly as NULL text does."""
+    toks = F.col("_toks")
+    return (
+        spread(docs).withColumn("_toks", ws_tokens(text_col))
+        .withColumn("_toks", F.when(F.size(toks) > 0, toks))
+    )
 
 
 def shingle_table(

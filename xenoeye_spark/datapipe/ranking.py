@@ -34,19 +34,25 @@ KMV_P, KMV_M = 1_073_741_789, 31
 KMV_MIX = 2_654_435_761
 
 
+def kmv_poly_sql(col: str) -> str:
+    """The 31-multiplier char polynomial mod KMV_P of string ``col``, as
+    a Spark-SQL expression (an interpreted per-char fold): the one
+    spelling behind ``kmv_token_hashes`` and the Count-Min sketch."""
+    return (
+        f"aggregate(transform(split({col}, ''), ch -> ascii(ch)), 0L, "
+        f"(acc, x) -> (acc * {KMV_M} + x) % {KMV_P})"
+    )
+
+
 def kmv_token_hashes(text_col: str) -> "F.Column":
     """The deterministic token->hash expression (31-multiplier char
     polynomial * Knuth mix, mod P) — the ONE definition shared by batch
     ``kmv_distinct`` and ``streaming.kmv_stream``, so the stream
     sketches exactly what the batch operator sketches (and the DuckDB
     oracle mirrors verbatim)."""
-    poly = (
-        "aggregate(transform(split(t, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * {KMV_M} + x) % {KMV_P})"
-    )
     return F.expr(
         f"transform({_TOKENIZE.format(c=text_col)}, "
-        f"t -> ({poly}) * {KMV_MIX} % {KMV_P})"
+        f"t -> ({kmv_poly_sql('t')}) * {KMV_MIX} % {KMV_P})"
     )
 
 
@@ -891,7 +897,6 @@ def hash_nb_fit(
     label_col: str = "lang",
     text_col: str = "text",
     n_buckets: int = 1024,
-    hash_fn: str = "poly",
 ) -> DataFrame:
     """Train a multinomial Naive Bayes classifier over hashed
     unigram+bigram buckets — the classic linear baseline in exactly the
@@ -900,7 +905,8 @@ def hash_nb_fit(
     any EXTERNALLY trained linear model exported to the same table.
     Public recipe throughout (McCallum & Nigam AAAI'98 workshop NB;
     hashing trick per Weinberger et al. ICML'09); features and hash
-    family are the DSIR ones (sampling._gram_bucket_expr).
+    family are the DSIR ones (sampling._gram_bucket_expr: crc32 of each
+    gram mod n_buckets).
 
     Weights are integer micro-nats with add-one smoothing, ONE floor
     per (label, bucket) — the dsir_fit fixed-point contract, so the
@@ -912,9 +918,10 @@ def hash_nb_fit(
     Returns the TOTAL (L x n_buckets)-row model (label, bucket,
     w_micro, bias_micro): unseen buckets carry the smoothed floor —
     NB's unseen-feature penalty is load-bearing, never zero. The
-    model carries its provenance (``hash_fn``, ``n_buckets`` columns,
-    r10) so classifying with mismatched kernel settings raises
-    instead of silently mis-bucketing.
+    model carries its provenance (``hash_fn`` = crc32 and ``n_buckets``
+    columns) so classifying with another bucket count, or with a model
+    fitted by another hash family, raises instead of silently
+    mis-bucketing.
 
     Scale shape: ONE gram pass over the corpus into (label, bucket)
     counts (map-side combine bounds the shuffle at O(L x B x
@@ -925,7 +932,7 @@ def hash_nb_fit(
     from pyspark.sql import Window
 
     from xenoeye_spark.datapipe.sampling import (
-        DSIR_LR_SCALE, _gram_bucket_occurrences,
+        DSIR_LR_SCALE, GRAM_HASH, _gram_bucket_occurrences,
     )
 
     if n_buckets < 2 or n_buckets > 1_000_000:
@@ -934,8 +941,7 @@ def hash_nb_fit(
         )
     b = F.lit(float(n_buckets))
     cnts = (
-        _gram_bucket_occurrences(docs, text_col, label_col, n_buckets,
-                                 hash_fn)
+        _gram_bucket_occurrences(docs, text_col, label_col, n_buckets)
         .groupBy(label_col, "bucket")
         .agg(F.count(F.lit(1)).alias("cb"))
     )
@@ -974,7 +980,7 @@ def hash_nb_fit(
                     / (F.col("n_total") + F.col("n_labels"))
                 )
             ).cast("long").alias("bias_micro"),
-            F.lit(hash_fn).alias("hash_fn"),
+            F.lit(GRAM_HASH).alias("hash_fn"),
             F.lit(n_buckets).cast("int").alias("n_buckets"),
         )
     )
@@ -986,11 +992,11 @@ def hash_linear_classify(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 1024,
-    hash_fn: str = "poly",
 ) -> DataFrame:
     """Score every document under a hashed linear model (label, bucket,
     w_micro, bias_micro — hash_nb_fit output or any exported linear /
-    fasttext-style classifier re-bucketed to the shared hash family)
+    fasttext-style classifier re-bucketed to the shared hash family,
+    ``zlib.crc32(gram.encode()) % n_buckets``)
     and emit the argmax label:
 
         score(d, c) = bias(c) + sum over gram occurrences g in d
@@ -1023,15 +1029,14 @@ def hash_linear_classify(
             " — expected hash_nb_fit's (label, bucket, w_micro, "
             "bias_micro) shape"
         )
-    # fit/apply hash-consistency guard (r10): a saved model fitted
-    # with different hash_fn/n_buckets raises instead of silently
-    # scoring against the wrong buckets
+    # fit/apply consistency guard: a saved model fitted by another
+    # hash family or n_buckets raises instead of silently scoring
+    # against the wrong buckets
     model = _guard_kernel_provenance(
-        model, "w_micro", hash_fn, n_buckets, "hash_linear_classify"
+        model, "w_micro", n_buckets, "hash_linear_classify"
     ).select("label", "bucket", "w_micro", "bias_micro")
     doc_counts = (
-        _gram_bucket_occurrences(docs, text_col, id_col, n_buckets,
-                                 hash_fn)
+        _gram_bucket_occurrences(docs, text_col, id_col, n_buckets)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -582,43 +582,28 @@ DSIR_BUCKETS = 1024
 DSIR_LR_SCALE = 1_000_000
 
 
-def _gram_bucket_expr(
-    tokens_col: str, n_buckets: int, hash_fn: str = "poly"
-) -> F.Column:
+# The one gram hash family, stamped into every fit table as its
+# ``hash_fn`` provenance column.
+GRAM_HASH = "crc32"
+
+
+def _gram_bucket_expr(tokens_col: str, n_buckets: int) -> F.Column:
     """Unigram+bigram hashed-feature buckets over an ALREADY-TOKENIZED
     array column, as ONE array expression (narrow, JVM): tokens ++
-    space-joined adjacent pairs, each hashed mod ``n_buckets``.
+    space-joined adjacent pairs, each hashed to
+
+        bucket(g) = crc32(g) % n_buckets
+
+    Spark's codegen'd ``crc32`` over the gram's UTF-8 bytes, equal to
+    Python's ``zlib.crc32(g.encode())`` — native speed, and any engine
+    (the DuckDB oracles fold it from a 256-entry table) re-derives it.
     Hashing inside the array means the explode that follows carries
     INTs, not gram strings — the shuffle is (id, bucket) pairs with
     map-side combine, never text. Callers stage the tokenizer as a
     column first (the char_entropy pattern: Catalyst does not CSE a
     tokenizer repeated across expression sites).
-
-    ``hash_fn``:
-    - "poly" (default): the shared 31-poly/Knuth-mix fold
-      (ranking.KMV_P/KMV_M/KMV_MIX) — interpreted per char, but
-      re-derivable in any engine: the ORACLE-EXACT family every gate
-      query uses.
-    - "xxhash64": Spark's native codegen hash — measured ~4x faster
-      end-to-end on the gram kernel (the production fast path).
-      Bucket assignments differ from "poly", so fit and apply must use
-      the SAME hash_fn; cross-engine oracles can't re-derive it.
     """
-    from xenoeye_spark.datapipe.ranking import KMV_M, KMV_MIX, KMV_P
-
     t = tokens_col
-    if hash_fn == "poly":
-        poly = (
-            f"aggregate(transform(split(g, ''), ch -> ascii(ch)), 0L, "
-            f"(acc, x) -> (acc * {KMV_M} + x) % {KMV_P})"
-        )
-        kernel = f"({poly}) * {KMV_MIX} % {KMV_P} % {n_buckets}"
-    elif hash_fn == "xxhash64":
-        kernel = f"pmod(xxhash64(g), {n_buckets})"
-    else:
-        raise ValueError(
-            f"hash_fn must be 'poly' or 'xxhash64', got {hash_fn!r}"
-        )
     return F.expr(
         f"transform("
         f"  concat("
@@ -627,14 +612,13 @@ def _gram_bucket_expr(
         f"             slice({t}, 2, greatest(size({t}) - 1, 0)),"
         f"             (a, b) -> concat(a, ' ', b))"
         f"  ),"
-        f"  g -> {kernel}"
+        f"  g -> crc32(g) % {n_buckets}"
         f")"
     )
 
 
 def _gram_bucket_occurrences(
     df: DataFrame, text_col: str, id_col: str | None, n_buckets: int,
-    hash_fn: str = "poly",
 ) -> DataFrame:
     """(id, bucket) — or bucket-only when ``id_col`` is None — one row
     per gram OCCURRENCE (multiplicity matters to the weights)."""
@@ -644,9 +628,7 @@ def _gram_bucket_occurrences(
     staged = df.select(*cols)
     return staged.select(
         *([F.col(id_col)] if id_col else []),
-        F.explode(
-            _gram_bucket_expr("_t", n_buckets, hash_fn)
-        ).alias("bucket"),
+        F.explode(_gram_bucket_expr("_t", n_buckets)).alias("bucket"),
     )
 
 
@@ -655,7 +637,6 @@ def dsir_fit(
     target: DataFrame,
     text_col: str = "text",
     n_buckets: int = DSIR_BUCKETS,
-    hash_fn: str = "poly",
 ) -> DataFrame:
     """The FIT pass of DSIR (Xie et al., NeurIPS 2023 — public
     recipe): estimate the hashed unigram+bigram bucket distributions
@@ -669,9 +650,10 @@ def dsir_fit(
     either corpus get the smoothed-floor ratio, so the table is total
     over the feature space and can be saved and re-applied to any
     later batch (the published fit-once / apply-many shape). The table
-    carries its provenance (``hash_fn``, ``n_buckets`` columns, r10)
-    so a later apply with mismatched kernel settings raises instead of
-    silently mis-bucketing.
+    carries its provenance (``hash_fn`` = GRAM_HASH and ``n_buckets``
+    columns) so a later apply with another bucket count, or a table
+    fitted by another hash family, raises instead of silently
+    mis-bucketing.
 
     Scale shape: each corpus is scanned ONCE — a narrow JVM gram
     projection feeding a bucket-keyed count whose map-side combine
@@ -687,21 +669,20 @@ def dsir_fit(
             f"dsir_fit: n_buckets must be in [2, 1e6], got {n_buckets}"
         )
     raw_b = (
-        _gram_bucket_occurrences(raw, text_col, None, n_buckets, hash_fn)
+        _gram_bucket_occurrences(raw, text_col, None, n_buckets)
         .groupBy("bucket").agg(F.count(F.lit(1)).alias("rb"))
     )
     tgt_b = (
-        _gram_bucket_occurrences(target, text_col, None, n_buckets, hash_fn)
+        _gram_bucket_occurrences(target, text_col, None, n_buckets)
         .groupBy("bucket").agg(F.count(F.lit(1)).alias("tb"))
     )
     return _dsir_ratio_from_counts(
-        raw.sparkSession, raw_b.join(tgt_b, "bucket", "full"),
-        n_buckets, hash_fn,
+        raw.sparkSession, raw_b.join(tgt_b, "bucket", "full"), n_buckets
     )
 
 
 def _dsir_ratio_from_counts(
-    spark, counts_b: DataFrame, n_buckets: int, hash_fn: str
+    spark, counts_b: DataFrame, n_buckets: int
 ) -> DataFrame:
     """dsir_fit's smoothing/total/ratio tail over prebuilt per-bucket
     occurrence counts (bucket, rb, tb; absent buckets and NULL counts
@@ -735,30 +716,31 @@ def _dsir_ratio_from_counts(
                 / ((F.col("rb") + F.lit(1.0)) / (F.col("rtot") + b))
             )
         ).cast("long").alias("lr"),
-        F.lit(hash_fn).alias("hash_fn"),
+        F.lit(GRAM_HASH).alias("hash_fn"),
         F.lit(n_buckets).cast("int").alias("n_buckets"),
     )
 
 
 def _guard_kernel_provenance(
-    table: DataFrame, value_col: str, hash_fn: str, n_buckets: int,
-    who: str,
+    table: DataFrame, value_col: str, n_buckets: int, who: str,
 ) -> DataFrame:
-    """Fit/apply hash-consistency guard (r10): when a saved fit table
+    """Fit/apply consistency guard for saved fit tables: when a table
     carries provenance columns (hash_fn / n_buckets — dsir_fit and
-    hash_nb_fit stamp both), an apply with different kernel settings
-    raises per-row instead of silently mis-bucketing; the check rides
-    the existing ``value_col`` projection (lazy, no extra action) and
-    the provenance columns are dropped after. Pre-r10 tables without
-    the columns pass unguarded (documented legacy shape)."""
+    hash_nb_fit stamp both), a table fitted by another hash family
+    (every table saved before crc32 became the one family stamps
+    'poly' or 'xxhash64') or with another n_buckets raises per-row
+    instead of silently mis-bucketing; the check rides the existing
+    ``value_col`` projection (lazy, no extra action) and the provenance
+    columns are dropped after. Tables without the columns (external
+    models) pass unguarded."""
     checks = []
     if "hash_fn" in table.columns:
         checks.append(
-            (F.col("hash_fn") != F.lit(hash_fn),
+            (F.col("hash_fn") != F.lit(GRAM_HASH),
              F.concat(F.lit(f"{who}: table was fitted with hash_fn="),
                       F.col("hash_fn"),
-                      F.lit(f" but apply uses {hash_fn!r} — grams "
-                            "would land in different buckets")))
+                      F.lit(f" but grams are bucketed by {GRAM_HASH} — "
+                            "refit the table")))
         )
     if "n_buckets" in table.columns:
         checks.append(
@@ -782,7 +764,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     n_buckets: int = DSIR_BUCKETS,
     ratio: DataFrame | None = None,
-    hash_fn: str = "poly",
     target_cond: "F.Column | None" = None,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -849,28 +830,22 @@ def dsir_weights(
         )
         occ = staged.select(
             "_tgt",
-            F.explode(
-                _gram_bucket_expr("_t", n_buckets, hash_fn)
-            ).alias("bucket"),
+            F.explode(_gram_bucket_expr("_t", n_buckets)).alias("bucket"),
         )
         counts_b = occ.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("rb"),
             F.count(F.when(F.col("_tgt"), F.lit(1))).alias("tb"),
         )
-        ratio = _dsir_ratio_from_counts(
-            raw.sparkSession, counts_b, n_buckets, hash_fn
-        )
+        ratio = _dsir_ratio_from_counts(raw.sparkSession, counts_b, n_buckets)
         # fall through to the shared apply below (provenance guard
         # included), exactly like an inline target= fit
-    # A saved ratio= table must come from a fit with the SAME
-    # n_buckets AND hash_fn — the apply hashes grams here, and a
-    # mismatched table silently mis-buckets. dsir_fit stamps both as
-    # provenance columns (r10) and the guard below raises on
-    # mismatch; pre-r10 tables without the columns pass unguarded.
-    # hash_fn="xxhash64" is the ~4x-faster production kernel; "poly"
-    # (default) is the oracle-exact family (DEPLOY.md).
+    # A saved ratio= table must come from a crc32 fit with the SAME
+    # n_buckets — the apply hashes grams here, and a mismatched table
+    # silently mis-buckets. dsir_fit stamps both as provenance columns
+    # and the guard below raises on mismatch; tables without the
+    # columns pass unguarded.
     if ratio is None:
-        ratio = dsir_fit(raw, target, text_col, n_buckets, hash_fn)
+        ratio = dsir_fit(raw, target, text_col, n_buckets)
     else:
         missing = {"bucket", "lr"} - set(ratio.columns)
         if missing:
@@ -878,11 +853,9 @@ def dsir_weights(
                 f"dsir_weights: ratio= lacks columns {sorted(missing)}"
                 " — expected dsir_fit's (bucket, lr) shape"
             )
-    ratio = _guard_kernel_provenance(
-        ratio, "lr", hash_fn, n_buckets, "dsir_weights"
-    )
+    ratio = _guard_kernel_provenance(ratio, "lr", n_buckets, "dsir_weights")
     doc_counts = (
-        _gram_bucket_occurrences(raw, text_col, id_col, n_buckets, hash_fn)
+        _gram_bucket_occurrences(raw, text_col, id_col, n_buckets)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

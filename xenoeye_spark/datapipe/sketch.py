@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xenoeye_spark.datapipe.ranking import KMV_M, KMV_P
+from xenoeye_spark.datapipe.ranking import KMV_P, kmv_poly_sql
 from xenoeye_spark.datapipe.util import ws_tokens_sql
 
 # d affine maps over the polynomial hash — odd multipliers, fixed
@@ -47,13 +47,6 @@ CMS_ROWS: list[tuple[int, int]] = [
     (2_027_382_041, 905_208_493),
 ]
 CMS_WIDTH = 512
-
-def _poly_sql(col: str) -> str:
-    return (
-        f"aggregate(transform(split({col}, ''), ch -> ascii(ch)), 0L, "
-        f"(acc, x) -> (acc * {KMV_M} + x) % {KMV_P})"
-    )
-
 
 def _bucket_sql(x: str, row: int, width: int) -> str:
     a, b = CMS_ROWS[row]
@@ -68,7 +61,7 @@ def _token_hashes(
     maps are a narrow posexplode over a 4-element array."""
     toks = df.select(
         F.explode(F.expr(ws_tokens_sql(text_col))).alias("t")
-    ).select(F.expr(_poly_sql("t")).alias("_x"))
+    ).select(F.expr(kmv_poly_sql("t")).alias("_x"))
     buckets = ", ".join(
         _bucket_sql("_x", i, width) for i in range(len(CMS_ROWS))
     )
@@ -126,7 +119,7 @@ def cms_estimate(
     probe_cells = probes.select(
         "token",
         "exact_cnt",
-        F.expr(_poly_sql("token")).alias("_x"),
+        F.expr(kmv_poly_sql("token")).alias("_x"),
     ).select(
         "token",
         "exact_cnt",
@@ -222,7 +215,7 @@ def with_shingle_hashes(
     transform re-evaluates the per-char polynomial once per shingle
     index, O(tokens x shingles) hashing per doc (measured 22s vs 2.4s
     on the sf0.1 sketch pass)."""
-    th = f"transform({ws_tokens_sql(text_col)}, t -> {_poly_sql('t')})"
+    th = f"transform({ws_tokens_sql(text_col)}, t -> {kmv_poly_sql('t')})"
     staged = docs.withColumn("_th_tmp", F.expr(th))
     sh = (
         f"CASE WHEN size(_th_tmp) >= {n} THEN "

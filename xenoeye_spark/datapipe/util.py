@@ -29,18 +29,13 @@ def env_int(name: str, default: int) -> int:
 # Every text operator (text.py, dedup.py, ranking.py) and every DuckDB
 # oracle mirrors this exact expression — one definition, or a future
 # delimiter tweak silently desynchronizes operators from their oracles.
+# Java's \s is [ \t\n\x0B\f\r]; the oracles spell that class out
+# (ORACLE_WS), since RE2's \s lacks \x0B.
 WS_TOKENS_SQL = "filter(split(trim({c}), '\\\\s+'), t -> t != '')"
 
 
 def ws_tokens(text_col: Column | str) -> Column:
-    """Whitespace tokens with empties dropped (Column form).
-
-    Known boundary: ``\\s`` here is Java's class, which includes
-    U+000B (vertical tab); the DuckDB oracle's RE2 ``\\s`` does not —
-    a document containing a bare \\x0B tokenizes differently across
-    the engines. The gate corpora contain none, and crawl text
-    reaches the tokenizer after extract_html_text, whose explicit
-    HTML_WS class has already collapsed \\x0B into plain spaces."""
+    """Whitespace tokens with empties dropped (Column form)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 

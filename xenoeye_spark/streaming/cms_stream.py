@@ -48,10 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from xenoeye_spark.datapipe.ranking import KMV_M, KMV_P
-from xenoeye_spark.datapipe.sketch import (
-    CMS_ROWS, CMS_WIDTH, _bucket_sql, _poly_sql,
-)
+from xenoeye_spark.datapipe.ranking import KMV_M, KMV_P, kmv_poly_sql
+from xenoeye_spark.datapipe.sketch import CMS_ROWS, CMS_WIDTH, _bucket_sql
 from xenoeye_spark.datapipe.util import ws_tokens_sql
 from xenoeye_spark.streaming.wutil import (
     precombine_map_in_pandas, session_timezone, set_window_timeout,
@@ -98,7 +96,7 @@ def precombined_input(
         )
         .select(
             "window_start", ts_col,
-            F.expr(_poly_sql("_t")).alias("_x"),
+            F.expr(kmv_poly_sql("_t")).alias("_x"),
         )
         .select(
             "window_start", ts_col,
