@@ -1909,6 +1909,49 @@ def test_mavg_bucketed_idle_purge_in_data_path(monkeypatch):
     assert lw2 == lw and ("k2",) in table
 
 
+def test_mavg_idle_purge_survives_lagging_event_time(monkeypatch):
+    """The idle purge ages keys by the wall clock of the batches that
+    carried them, not by their flow timestamps: with every flow stamped
+    a year behind the wall clock (a replayed spool, a backlog after a
+    restart, an exporter with a late clock), a key absent from one
+    batch keeps its EWMA, and it ages out only after a window of wall
+    time without rows."""
+    import pickle
+
+    import pandas as pd
+
+    from xenoeye_spark.streaming import mavg_stream as ms
+
+    t_ev = BASE * 10**9
+    clock = {"now": t_ev + 365 * 86400 * 10**9}
+    monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
+    fn = ms.make_mavg_bucket_fn(
+        ["k"], window_sec=2, threshold=1e18, back2norm_sec=1,
+        idle_timeout_sec=2,
+    )
+    state = _FakeGroupState()
+
+    def batch(rows):
+        _drive_bucket_fn(
+            fn, pd.DataFrame(rows, columns=["k", "_ts_ns", "_val"]), state
+        )
+        return pickle.loads(bytes(state.get[0]))[1]
+
+    batch([("a", t_ev, 10.0), ("b", t_ev, 10.0)])
+    # 1 s of wall time later only b has flows; the walk runs
+    clock["now"] += 10**9
+    table = batch([("b", t_ev + 10**8, 10.0)])
+    assert ("a",) in table and table[("a",)][0] == 10.0
+    # a's next flow, 1 s of event time on, decays the kept value
+    clock["now"] += 10**9
+    table = batch([("a", t_ev + 10**9, 10.0)])
+    assert table[("a",)][0] == pytest.approx(10.0 - 0.5 * 10.0 + 10.0)
+    # 2.5 s of wall time with no rows for a: it ages out
+    clock["now"] += int(2.5 * 10**9)
+    table = batch([("b", t_ev + 2 * 10**9, 10.0)])
+    assert ("a",) not in table and ("b",) in table
+
+
 def test_mavg_bucketed_rocksdb_restore(spark, tmp_path):
     """r9: bucketed state under RocksDBStateStoreProvider — the store it
     would run on at carrier scale — survives a stop + restart from the

@@ -177,11 +177,10 @@ class Engine:
                     thresholds=per_key,
                     under=under,
                     silent_watch=self.silent_watch,
-                    # try_reset_db parity: a key silent for one window
-                    # ages out of its bucket's state. Its compaction
-                    # timer would keep a bounded (availableNow) run
-                    # alive, so it rides with the watch: silent_watch
-                    # off is the bounded-drain mode, which arms none
+                    # try_reset_db parity: a key with no rows for one
+                    # window of wall time ages out of its bucket's
+                    # state. silent_watch off is the bounded-drain
+                    # mode, which arms no timer (mavg_alert_stream)
                     idle_timeout_sec=mavg.time if self.silent_watch else None,
                     buckets=mavg.buckets,
                 )

@@ -174,7 +174,7 @@ def _time_now_ns() -> int:
 # hash(key) % buckets and keep ONE state row per bucket — a dict of
 # per-key state tuples — so the protocol cost is paid per BUCKET and
 # the per-key work inside is plain python over the bucket's slice.
-# State per bucket is O(keys_in_bucket) (~50 bytes per entry pickled);
+# State per bucket is O(keys_in_bucket) (~60 bytes per entry pickled);
 # hash bucketing keeps it even. The silent-watch timeout walks the
 # bucket's alarmed keys exactly like the reference's act thread walks
 # its tries, and idle keys age out at each tick (try_reset_db parity,
@@ -228,8 +228,16 @@ def make_mavg_bucket_fn(
 ):
     """applyInPandasWithState fn over BUCKET groups: state is one pickled
     (last_walk_ns, {key_tuple: (n, t_prev, alarm, below_since,
-    first_seen, limit)}) per bucket; each key's rows replay through
-    replay_rows in time order.
+    first_seen, limit, seen_ns)}) per bucket; each key's rows replay
+    through replay_rows in time order.
+
+    Idle purge clock: ``seen_ns`` is the wall clock of the batch that
+    last carried rows for the key, and a key ages out once the wall
+    clock is ``idle_timeout_sec`` past it. ``t_prev`` is event time,
+    which lags the wall clock on a backlog, a replayed spool or an
+    exporter with a late clock; comparing the two would purge (and
+    restart the EWMA of) every key absent from a batch. Entries saved
+    without ``seen_ns`` age from the blob's ``last_walk_ns``.
 
     Silent keys (r9): a GROUP timeout fires only when the BUCKET gets no
     data for the whole interval — with thousands of keys per bucket that
@@ -278,7 +286,8 @@ def make_mavg_bucket_fn(
             state.setTimeoutDuration(idle_timeout_sec * 1000)
 
     def _walk_silent(
-        table: dict, seen: set, now_ns: int, events: list[tuple]
+        table: dict, seen: set, now_ns: int, last_walk: int,
+        events: list[tuple],
     ) -> None:
         """silent_transition + idle purge for every key WITHOUT rows this
         tick; mutates ``table`` in place, appends to ``events``."""
@@ -293,13 +302,12 @@ def make_mavg_bucket_fn(
                     back2norm_ns, under,
                 )
                 events.extend(ev)
-                st = (*core, st[5])
+                st = (*core, *st[5:])
                 table[k] = st
             if (
                 idle_ns is not None
                 and st[2] == S_NONE
-                and st[1] is not None
-                and now_ns - st[1] >= idle_ns
+                and now_ns - (st[6] if len(st) > 6 else last_walk) >= idle_ns
             ):
                 drop.append(k)  # try_reset_db: age the idle key out
         for k in drop:
@@ -317,9 +325,9 @@ def make_mavg_bucket_fn(
             if not state.exists:
                 state.remove()
                 return
-            _lw, table = _load_blob(bytes(state.get[0]))
+            last_walk, table = _load_blob(bytes(state.get[0]))
             now_ns = int(_time_now_ns())
-            _walk_silent(table, set(), now_ns, events)
+            _walk_silent(table, set(), now_ns, last_walk, events)
             _save(state, now_ns, table)
             if events:
                 yield pd.DataFrame(events, columns=cols)
@@ -346,6 +354,7 @@ def make_mavg_bucket_fn(
             if "_limit" in rows.columns else None
         )
 
+        now_ns = int(_time_now_ns())
         seen: set = set()
         for s, e in zip(starts, ends):
             k = _native_key(tuple(arr[s] for arr in karrs))
@@ -363,13 +372,12 @@ def make_mavg_bucket_fn(
                 st[:5], ts_arr[s:e], val_arr[s:e], k, limit,
                 window_sec, window_ns, back2norm_ns, under,
             )
-            table[k] = (*core, float(limit))
+            table[k] = (*core, float(limit), now_ns)
             events.extend(kev)
         # data-path silent walk: a busy bucket never times out as a
         # GROUP, so this is where its silent keys transition/age out
-        now_ns = int(_time_now_ns())
         if walk_gate_ns is not None and now_ns - last_walk >= walk_gate_ns:
-            _walk_silent(table, seen, now_ns, events)
+            _walk_silent(table, seen, now_ns, last_walk, events)
             last_walk = now_ns
         _save(state, last_walk, table)
         if events:
@@ -434,10 +442,13 @@ def mavg_alert_stream(
 
     ``silent_watch`` (default on) arms a processing-time timeout for every
     bucket holding an alarmed key so back-to-normal fires even when the
-    key goes silent — the reference's act-thread behavior. Note for
-    availableNow test runs: armed timeouts keep the query alive, so
-    bounded drains should either pass silent_watch=False or stop() after
-    a short awaitTermination.
+    key goes silent — the reference's act-thread behavior.
+    ``idle_timeout_sec`` ages a key out of its bucket once it has had no
+    rows for that long by the wall clock (try_reset_db parity), and arms
+    the same timeout for buckets that go quiet. Note for availableNow
+    runs: armed timeouts keep the query alive, so bounded drains should
+    either pass silent_watch=False and no idle_timeout_sec, or stop()
+    after a short awaitTermination.
 
     ``buckets``: the state op groups by ``hash(key) %% buckets``, holding
     one pickled {key: state} dict per bucket — the reference's
