@@ -115,9 +115,9 @@ def run_mavg_probe(spark, reps: int) -> dict:
     FOR — EWMA alerting at carrier key cardinality — as a tracked bench
     number instead of a SCALE.md one-off. 50M flows / 500k keys (100
     events per key, 1s apart) through mavg_alert_stream(buckets=64)
-    with a map-side-joined per-key limit and ONE planted alarm, drained
-    availableNow from parquet with a fresh checkpoint per rep (state
-    build included). Median of ``reps`` after one small untimed warm-up
+    with a per-key limit from the thresholds dict and ONE planted
+    alarm, drained availableNow from parquet with a fresh checkpoint
+    per rep (state build included). Median of ``reps`` after one small untimed warm-up
     drain; each rep asserts the single correct NEW event so a wrong
     answer can never post a throughput figure."""
     import glob as g
@@ -145,10 +145,6 @@ def run_mavg_probe(spark, reps: int) -> dict:
         return d
 
     def drain(src, nkeys):
-        limits = spark.range(nkeys).select(
-            F.col("id").alias("k"),
-            F.when(F.col("id") == 7, 0.05).otherwise(1e18).alias("limit"),
-        )
         ckpt = tempfile.mkdtemp(prefix="mavg_probe_ckpt_")
         stream = (
             spark.readStream.schema("k long, ts timestamp, v double")
@@ -156,7 +152,7 @@ def run_mavg_probe(spark, reps: int) -> dict:
         )
         alerts = mavg_alert_stream(
             stream, ["k"], "v", window_sec=10, threshold=1e18,
-            silent_watch=False, buckets=buckets, limits_df=limits,
+            thresholds={(7,): 0.05}, silent_watch=False, buckets=buckets,
         )
         events: list = []
         t0 = time.perf_counter()

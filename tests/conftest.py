@@ -54,7 +54,6 @@ _SLOW_TESTS = {
     "test_match_bucketed6_equals_match_expr6_50k",
     "test_hist_quantile_stream_matches_python_twin",
     "test_mavg_bucketed_equivalent_to_per_key",
-    "test_mavg_limits_df_equivalent_to_dict",
     "test_curate_end_to_end",
     "test_hll_bloom_scale_smoke_500k",
     "test_session_window_agg_closes_sessions",
@@ -82,7 +81,7 @@ _SLOW_TESTS = {
     "test_write_training_shards",
     "test_mfreq_exact_streaming_matches_scalar_replay",
     "test_stream_precombine_cuts_state_input_volume",
-    "test_mavg_bucketed_limits_df_and_validation",
+    "test_mavg_bucketed_thresholds_and_validation",
     "test_kmv_prefilter_1m_tokens_per_group",
     "test_substring_dedup_50k_docs_boilerplate",
     "test_mavg_bucketed_high_cardinality",

@@ -414,11 +414,14 @@ def test_engine_mavg_buckets_auto(spark, tmp_path, monkeypatch):
     stream = spark.readStream.schema(df.schema).parquet(str(src_dir))
     eng.builders(stream)  # builds the plan; the spy sees the kwargs
     assert seen.get("buckets") is None
-    # silent_watch off (bounded drains) arms no idle-compaction timer
-    assert seen.get("idle_timeout_sec") is None
     expect = 8 * max(1, spark.sparkContext.defaultParallelism)
     [alerts] = built
     plan = alerts._jdf.queryExecution().analyzed().toString()
+    # silent_watch off (bounded drains) arms no timeout of any kind
+    assert seen["silent_watch"] is False
+    assert re.findall(r"NoTimeout|ProcessingTimeTimeout", plan) == [
+        "NoTimeout"
+    ], plan
     got = re.findall(r"pmod\(xxhash64\([^)]*\), (?:cast\()?(\d+)", plan)
     assert got == [str(expect)], plan
 

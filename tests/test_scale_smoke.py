@@ -444,10 +444,9 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     because state outgrows memory). 120k distinct keys through
     mavg_alert_stream's default layout in one micro-batch: every key
     lands in one of the 8 x cores bucket rows (nothing collapses to the
-    driver), idle-TTL compaction then removes every idle key on the
-    next run (try_reset_db parity), and per-key limits arrive via the
-    map-side limits_df join — the at-scale path past the ~1e6
-    closure-dict bound (SURVEY §7.3).
+    driver), the silent-key watch's idle TTL (one window) then removes
+    every idle key on the next run (try_reset_db parity), and the
+    per-key limit from the thresholds dict fires the one planted alarm.
     """
     import glob as g
     import os
@@ -462,12 +461,9 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     stage = tempfile.mkdtemp(prefix="mavg_hc_src_")
     ckpt = tempfile.mkdtemp(prefix="mavg_hc_ckpt_")
 
-    # every key rate = 1.0/10s against limit 1e18 (silent) except key 7,
-    # whose map-side-joined limit 0.05 must fire NEW
-    limits_df = spark.range(n_keys).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") == 7, 0.05).otherwise(1e18).alias("limit"),
-    )
+    # every key rate = 1.0 per 1 s window against limit 1e18 (silent)
+    # except key 7, whose own limit 0.05 must fire NEW
+    window = 1
 
     def stage_batch(df, tag):
         d = tempfile.mkdtemp(prefix=f"mavg_hc_{tag}_")
@@ -481,8 +477,8 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
             .parquet(stage)
         )
         alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=1e18,
-            idle_timeout_sec=1, silent_watch=False, limits_df=limits_df,
+            stream, ["k"], "v", window_sec=window, threshold=1e18,
+            thresholds={(7,): 0.05},
         )
         q = (
             alerts.writeStream
@@ -544,10 +540,10 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     so = with_input[-1]["stateOperators"][0]
     # 120k keys fill every bucket: one state row per bucket
     assert so["numRowsTotal"] == 8 * spark.sparkContext.defaultParallelism
-    # exactly one alarm: key 7 breached ITS OWN joined limit
+    # exactly one alarm: key 7 breached ITS OWN limit
     assert [(r["k"], r["event"]) for r in events] == [(7, "NEW")]
     assert events[0]["threshold"] == pytest.approx(0.05)
-    assert events[0]["rate"] == pytest.approx(0.1)
+    assert events[0]["rate"] == pytest.approx(1.0 / window)
 
     time.sleep(2.5)  # let the 1s idle TTL elapse
     stage_batch(
@@ -562,7 +558,7 @@ def test_mavg_high_cardinality_state_bounded(spark, tmp_path):
     prog = run_retry(events2)
     assert prog
     # TTL compaction: the idle keys are gone and their buckets with them
-    # (with silent_watch=False nothing walks key 7's alarm, so its
+    # (key 7's alarm is still in its 30 s back2norm grace, so its
     # bucket stays); at most that bucket and the new key's remain. The
     # removal batch may land before or after the input-carrying one, so
     # take the smallest observed footprint of the run.
@@ -619,8 +615,8 @@ def test_mavg_bucketed_high_cardinality(spark):
     """r8: bucketed state at carrier key cardinality — 120k distinct
     keys through 64 buckets in one micro-batch. The state store holds
     at most 64 rows (one pickled key-table per bucket, the reference's
-    per-thread-trie layout), the map-side-joined limit still fires the
-    one planted alarm, and wall time is printed beside the per-key
+    per-thread-trie layout), the per-key limit still fires the one
+    planted alarm, and wall time is printed beside the per-key
     figure recorded in SCALE.md §Round-7 (~44s at this size on the
     per-key layout: 120k groups x ~0.4ms protocol cost)."""
     import glob as g
@@ -635,10 +631,6 @@ def test_mavg_bucketed_high_cardinality(spark):
     base = 1_700_000_000
     stage = tempfile.mkdtemp(prefix="mavg_bkt_src_")
     ckpt = tempfile.mkdtemp(prefix="mavg_bkt_ckpt_")
-    limits_df = spark.range(n_keys).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") == 7, 0.05).otherwise(1e18).alias("limit"),
-    )
     d = tempfile.mkdtemp(prefix="mavg_bkt_stage_")
     spark.range(n_keys).select(
         F.col("id").alias("k"),
@@ -655,7 +647,7 @@ def test_mavg_bucketed_high_cardinality(spark):
     )
     alerts = mavg_alert_stream(
         stream, ["k"], "v", window_sec=10, threshold=1e18,
-        silent_watch=False, limits_df=limits_df, buckets=64,
+        thresholds={(7,): 0.05}, silent_watch=False, buckets=64,
     )
     t0 = time.time()
     q = (

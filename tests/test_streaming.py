@@ -1529,8 +1529,7 @@ def test_incremental_dedup_stream_matches_batch(spark, tmp_path):
 
 def test_mavg_limits_dict_bound_guard(spark, monkeypatch):
     """r7: a thresholds dict past LIMITS_DICT_MAX rides the pickled
-    closure into every task — the stream refuses it and points at the
-    map-side limits_df join (SURVEY §7.3)."""
+    closure into every task — the stream refuses it (SURVEY §7.3)."""
     from xenoeye_spark.streaming import mavg_stream
 
     monkeypatch.setattr(mavg_stream, "LIMITS_DICT_MAX", 10)
@@ -1538,67 +1537,8 @@ def test_mavg_limits_dict_bound_guard(spark, monkeypatch):
         [("k1", float(BASE), 1.0)], "k string, ts double, v double"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     big = {(f"k{i}",): 1.0 for i in range(11)}
-    with pytest.raises(ValueError, match="limits_df"):
+    with pytest.raises(ValueError, match="pickled closure"):
         mavg_alert_stream(flows, ["k"], "v", 10, 1.0, thresholds=big)
-
-
-def test_mavg_limits_df_equivalent_to_dict(spark, tmp_path):
-    """r7: per-key limits via the map-side limits_df join replay the
-    exact event sequence of the closure-dict path, INCLUDING the
-    back2norm walk on later batches — the resolved limit is persisted
-    in state, so a key whose later rows lose the join (or a silent-key
-    timeout) still holds its own limit."""
-    burst = [("k1", float(BASE + i), 1000.0) for i in range(10)]
-    quiet = [("k1", float(BASE + 100 + i * 10), 0.001) for i in range(10)]
-    dirs = _write_batches(spark, str(tmp_path / "src"), [burst, quiet])
-
-    def run(limits_kw):
-        collected = []
-
-        def build(stream, ckpt, out):
-            alerts = mavg_alert_stream(
-                stream, ["k"], "v", window_sec=10, threshold=1e18,
-                back2norm_sec=20, silent_watch=False, **limits_kw,
-            )
-
-            def sink(df, epoch):
-                out.extend(df.collect())
-
-            return (
-                alerts.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-
-        _run_stream_over_dirs(spark, dirs, build, collected)
-        return sorted(
-            [(r["event"], r["rate"], r["threshold"], r["ts_ns"])
-             for r in collected],
-            key=lambda t: t[3],
-        )
-
-    via_dict = run({"thresholds": {("k1",): 50.0}})
-    lim_df = spark.createDataFrame([("k1", 50.0)], "k string, limit double")
-    via_join = run({"limits_df": lim_df})
-    assert via_dict == via_join
-    events = [e for e, *_ in via_join]
-    assert events[0] == "NEW" and "GONE" in events
-    # every event carries the per-key limit, not the 1e18 default
-    assert all(t == 50.0 for _, _, t, _ in via_join)
-
-
-def test_mavg_limits_df_rejects_duplicate_keys(spark):
-    """r7 review fix: a duplicated limits_df key would multiply its
-    flow rows through the left join and double-count the EWMA — the
-    stream refuses it at build time."""
-    flows = spark.createDataFrame(
-        [("k1", float(BASE), 1.0)], "k string, ts double, v double"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    dup = spark.createDataFrame(
-        [("k1", 5.0), ("k1", 7.0), ("k2", 1.0)], "k string, limit double"
-    )
-    with pytest.raises(ValueError, match="duplicate key"):
-        mavg_alert_stream(flows, ["k"], "v", 10, 1.0, limits_df=dup)
 
 
 def _per_key_reference(batches, window_sec, threshold, back2norm_sec):
@@ -1676,12 +1616,11 @@ def test_mavg_bucketed_equivalent_to_per_key(spark, tmp_path):
     assert run(buckets=4) == want
 
 
-def test_mavg_bucketed_limits_df_and_validation(spark, tmp_path):
-    """Bucketed mode resolves per-key limits from the map-side join and
-    refuses buckets < 1."""
+def test_mavg_bucketed_thresholds_and_validation(spark, tmp_path):
+    """Bucketed mode resolves per-key limits from the thresholds dict
+    and refuses buckets < 1."""
     burst = [("k1", float(BASE + i), 1000.0) for i in range(10)]
     dirs = _write_batches(spark, str(tmp_path / "src"), [burst])
-    lim_df = spark.createDataFrame([("k1", 50.0)], "k string, limit double")
 
     flows = spark.createDataFrame(
         [("k1", float(BASE), 1.0)], "k string, ts double, v double"
@@ -1695,7 +1634,7 @@ def test_mavg_bucketed_limits_df_and_validation(spark, tmp_path):
         alerts = mavg_alert_stream(
             stream, ["k"], "v", window_sec=10, threshold=1e18,
             back2norm_sec=20, silent_watch=False, buckets=8,
-            limits_df=lim_df,
+            thresholds={("k1",): 50.0},
         )
 
         def sink(df, epoch):
@@ -1734,19 +1673,20 @@ def test_mavg_config_bucket_knobs(spark, tmp_path):
 
 def test_mavg_bucketed_idle_purge(spark, tmp_path):
     """r8: bucketed try_reset_db parity — idle keys age out of the
-    bucket table at the TTL tick, so a key silent past the TTL restarts
-    its EWMA from scratch, and the alarmed-key walk still reaches GONE
-    from inside a bucket."""
+    bucket table at the watch tick once silent for the window (the
+    idle TTL), so a key silent past it restarts its EWMA from scratch,
+    and the alarmed-key walk still reaches GONE from inside a bucket."""
     b1 = [("k1", float(BASE + i), 100.0) for i in range(5)]
     b2 = [("k1", float(BASE + 1000), 7.0)]
     dirs = _write_batches(spark, str(tmp_path / "src"), [b1, b2])
 
     collected = []
+    window = 1
 
     def build(stream, ckpt, out):
         alerts = mavg_alert_stream(
-            stream, ["k"], "v", window_sec=10, threshold=0.0,
-            idle_timeout_sec=1, silent_watch=False, buckets=8,
+            stream, ["k"], "v", window_sec=window, threshold=0.0,
+            buckets=8,
         )
 
         def sink(df, epoch):
@@ -1778,9 +1718,8 @@ def test_mavg_bucketed_idle_purge(spark, tmp_path):
         q.awaitTermination(60)
         time_mod.sleep(2)  # let the 1s idle TTL tick purge the bucket
     final = max(collected, key=lambda r: r["ts_ns"])
-    # with live state the dt >= T reset gives the same rate, so also
-    # assert the purge actually removed the bucket's state rows
-    assert final["rate"] == pytest.approx(7.0 / 10, rel=1e-6)
+    # with live state the dt >= T reset gives the same rate
+    assert final["rate"] == pytest.approx(7.0 / window, rel=1e-6)
 
 
 class _FakeGroupState:
@@ -1882,8 +1821,7 @@ def test_mavg_bucketed_idle_purge_in_data_path(monkeypatch):
     monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
 
     fn = ms.make_mavg_bucket_fn(
-        ["k"], window_sec=2, threshold=1e18, back2norm_sec=1,
-        silent_watch=False, idle_timeout_sec=1,
+        ["k"], window_sec=1, threshold=1e18, back2norm_sec=1,
     )
     # seed with a PRE-R9 blob (bare table, no last_walk header)
     state = _FakeGroupState()
@@ -1894,7 +1832,8 @@ def test_mavg_bucketed_idle_purge_in_data_path(monkeypatch):
     def batch(rows):
         return pd.DataFrame(rows, columns=["k", "_ts_ns", "_val"])
 
-    # k2 keeps the bucket busy 5s later; k1 idle past the 1s TTL -> purged
+    # k2 keeps the bucket busy 5s later; k1 idle past the 1s window ->
+    # purged
     clock["now"] = t1 + 5 * 10**9
     _drive_bucket_fn(fn, batch([("k2", t1 + 5 * 10**9, 1.0)]), state)
     lw, table = pickle.loads(bytes(state.get[0]))
@@ -1927,7 +1866,6 @@ def test_mavg_idle_purge_survives_lagging_event_time(monkeypatch):
     monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
     fn = ms.make_mavg_bucket_fn(
         ["k"], window_sec=2, threshold=1e18, back2norm_sec=1,
-        idle_timeout_sec=2,
     )
     state = _FakeGroupState()
 
@@ -1950,6 +1888,162 @@ def test_mavg_idle_purge_survives_lagging_event_time(monkeypatch):
     clock["now"] += int(2.5 * 10**9)
     table = batch([("b", t_ev + 2 * 10**9, 10.0)])
     assert ("a",) not in table and ("b",) in table
+
+
+def test_mavg_alarm_walk_runs_on_the_event_clock(monkeypatch):
+    """The alarmed-key walk reads a silent key at its own event clock
+    moved on by the wall time since its last batch, so flows stamped
+    far from the wall clock alarm like flows stamped at it: a key that
+    breaches every third 1 s batch stays alarmed with its flows a year
+    behind the clock (instead of flapping NEW / GONE), and a key that
+    breaches once and goes silent reaches GONE with its flows an hour
+    ahead of the clock (instead of a negative dt inflating its decayed
+    value). Another key keeps the bucket busy in every batch."""
+    import pandas as pd
+
+    from xenoeye_spark.streaming import mavg_stream as ms
+
+    wall0 = BASE * 10**9
+    clock = {"now": wall0}
+    monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
+
+    def run(offset_ns, k_batches, n_batches):
+        clock["now"] = wall0
+        fn = ms.make_mavg_bucket_fn(
+            ["k"], window_sec=2, threshold=10.0, back2norm_sec=1,
+        )
+        state = _FakeGroupState()
+        events = []
+        for i in range(n_batches):
+            t = clock["now"] + offset_ns
+            rows = [("o", t, 0.001)] + ([("k", t, 100.0)] if i in k_batches
+                                         else [])
+            out = _drive_bucket_fn(
+                fn, pd.DataFrame(rows, columns=["k", "_ts_ns", "_val"]),
+                state,
+            )
+            if out is not None:
+                events += [r.event for r in out.itertuples() if r.k == "k"]
+            clock["now"] += 10**9
+        return events
+
+    year, hour = 365 * 86400 * 10**9, 3600 * 10**9
+    every_third = {0, 3, 6}
+    assert run(0, every_third, 9) == ["NEW", "UPDATE", "UPDATE"]
+    assert run(-year, every_third, 9) == ["NEW", "UPDATE", "UPDATE"]
+    assert run(0, {0}, 6) == ["NEW", "GONE"]
+    assert run(hour, {0}, 6) == ["NEW", "GONE"]
+
+
+def test_mavg_walk_and_replay_share_one_transition(monkeypatch):
+    """The silent walk takes the same alarm step as a flow: an
+    underlimit key in its back2norm grace (ALMOST_GONE) that breaches
+    again while silent goes back to UPDATE and drops its grace, so a
+    later normal flow starts a fresh grace instead of ending the alarm
+    with GONE at once."""
+    import pickle
+
+    import pandas as pd
+
+    from xenoeye_spark.streaming import mavg_stream as ms
+
+    t0 = BASE * 10**9
+    clock = {"now": t0}
+    monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
+    fn = ms.make_mavg_bucket_fn(
+        ["k"], window_sec=2, threshold=10.0, back2norm_sec=10, under=True,
+    )
+    state = _FakeGroupState()
+    events = []
+
+    def batch(at_s, rows):
+        clock["now"] = t0 + at_s * 10**9
+        out = _drive_bucket_fn(fn, pd.DataFrame(
+            [(k, clock["now"], v) for k, v in rows],
+            columns=["k", "_ts_ns", "_val"],
+        ), state)
+        if out is not None:
+            events.extend(r.event for r in out.itertuples() if r.k == "k")
+        return pickle.loads(bytes(state.get[0]))[1]
+
+    batch(0, [("k", 100.0)])            # inside the start-up grace
+    batch(3, [("k", 1.0)])              # rate 0.5 < 10: NEW
+    table = batch(4, [("k", 100.0)])    # back above the limit
+    assert table[("k",)][2] == ms.S_ALMOST_GONE
+    table = batch(6, [("o", 100.0)])    # k silent, decays below: breach
+    assert table[("k",)][2] == ms.S_UPDATE
+    assert table[("k",)][3] is None
+    batch(15, [("k", 100.0)])           # a fresh grace, no GONE yet
+    assert events == ["NEW"]
+
+
+def test_mavg_saved_blob_layout_loads_and_walks(monkeypatch):
+    """A bucket blob in the saved entry layout (n, t_prev, alarm,
+    below_since, first_seen, limit, seen_ns) under a last-walk header
+    loads and walks: its silent alarmed key reaches GONE on its event
+    clock and its idle key ages out."""
+    import pickle
+
+    import pandas as pd
+
+    from xenoeye_spark.streaming import mavg_stream as ms
+
+    t_ev = BASE * 10**9
+    wall = t_ev + 365 * 86400 * 10**9
+    clock = {"now": wall}
+    monkeypatch.setattr(ms, "_time_now_ns", lambda: clock["now"])
+    fn = ms.make_mavg_bucket_fn(
+        ["k"], window_sec=2, threshold=10.0, back2norm_sec=1,
+    )
+    state = _FakeGroupState()
+    state.update((pickle.dumps((wall, {
+        ("a",): (100.0, t_ev, ms.S_NEW, None, t_ev, 10.0, wall),
+        ("b",): (1.0, t_ev, ms.S_NONE, None, t_ev, 10.0, wall),
+    })),))
+
+    def batch(rows):
+        out = _drive_bucket_fn(fn, pd.DataFrame(
+            rows, columns=["k", "_ts_ns", "_val"]
+        ), state)
+        ev = [] if out is None else [(r.k, r.event) for r in out.itertuples()]
+        return ev, pickle.loads(bytes(state.get[0]))[1]
+
+    clock["now"] += 3 * 10**9
+    ev, table = batch([("c", t_ev + 3 * 10**9, 1.0)])
+    assert ev == [] and ("b",) not in table
+    assert table[("a",)][2] == ms.S_ALMOST_GONE
+    assert table[("a",)][3] == t_ev + 3 * 10**9   # the key's event clock
+    clock["now"] += 2 * 10**9
+    ev, table = batch([("c", t_ev + 5 * 10**9, 1.0)])
+    assert ev == [("a", "GONE")] and table[("a",)][2] == ms.S_NONE
+
+
+def test_mavg_event_ts_ns_is_exact_micros(spark, tmp_path):
+    """A NEW event's ts_ns is its flow's timestamp micros x 1000, the
+    spelling the batch mavg uses (ts_to_ns): float seconds x 1e9 is
+    off by tens of ns at current epochs."""
+    micros = BASE * 10**6 + 123_457
+    src = str(tmp_path / "src")
+    spark.range(1).select(
+        F.lit("k1").alias("k"),
+        F.timestamp_micros(F.lit(micros)).alias("ts"),
+        F.lit(1000.0).alias("v"),
+    ).write.parquet(src)
+    alerts = mavg_alert_stream(
+        spark.readStream.schema("k string, ts timestamp, v double")
+        .parquet(src),
+        ["k"], "v", 10, 1.0, silent_watch=False, buckets=1,
+    )
+    events: list = []
+    q = (
+        alerts.writeStream
+        .foreachBatch(lambda df, e: events.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    [ev] = events
+    assert ev["event"] == "NEW" and ev["ts_ns"] == micros * 1000
 
 
 def test_mavg_bucketed_rocksdb_restore(spark, tmp_path):

@@ -2,14 +2,12 @@
 
 CSV keyed by the mavg key-field tuple in declared order, last column the
 threshold; '#' comments and blank lines allowed; keys absent from the file
-fall back to the section's ``default``. Loaded both as a plain dict (for
-the stateful streaming op) and as a DataFrame (for the batch broadcast
-join in operators.mavg.mavg_overlimit).
+fall back to the section's ``default``. Loaded as a plain dict keyed by
+the typed key tuple (``coerce_limit_keys``), which the stateful
+streaming op reads per key.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def parse_limits_lines(lines, n_keys: int) -> dict[tuple, float]:
@@ -88,11 +86,3 @@ def norm_group_key(key: tuple) -> tuple:
         for p in key
     )
 
-
-def limits_df(
-    spark: SparkSession, limits: dict[tuple, float], key_cols: list[str]
-) -> DataFrame:
-    """dict -> (key_cols..., threshold) DataFrame for broadcast joins."""
-    rows = [(*k, v) for k, v in limits.items()]
-    schema = ", ".join(f"{k} string" for k in key_cols) + ", threshold double"
-    return spark.createDataFrame(rows, schema)

@@ -6,8 +6,11 @@ hierarchy into conjunctive filters (child filters evaluated under the
 parent's, netflow.c:213-244), and compiles EVERY standing computation —
 fwm windows, mavg overlimit levels (one keyed alert stream per
 aggregable field x limit level), and classifications — into
-Structured-Streaming writer builders over ONE shared decoded flow
-stream, mirroring §3.2's "N concurrent queries share the parsed DF".
+Structured-Streaming writer builders over one decoded flow DataFrame.
+That DataFrame is shared as a plan, not as data: each standing query is
+its own streaming query, so each reads and decodes the input on its own
+(N queries = N input passes), unlike the reference's one parse feeding
+every MO.
 
 Usage::
 
@@ -177,11 +180,6 @@ class Engine:
                     thresholds=per_key,
                     under=under,
                     silent_watch=self.silent_watch,
-                    # try_reset_db parity: a key with no rows for one
-                    # window of wall time ages out of its bucket's
-                    # state. silent_watch off is the bounded-drain
-                    # mode, which arms no timer (mavg_alert_stream)
-                    idle_timeout_sec=mavg.time if self.silent_watch else None,
                     buckets=mavg.buckets,
                 )
                 sink = AlertActionSink(

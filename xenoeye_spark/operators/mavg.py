@@ -28,9 +28,17 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def ts_to_ns(ts_col: str) -> Column:
+    """``ts_col`` as exact integer nanoseconds (micros * 1000), the one
+    spelling the batch and streaming mavg share: float seconds * 1e9
+    loses the low ~8 bits at 2024-era epochs and would desync from any
+    oracle."""
+    return F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(1000)
 
 
 def ewma_replay_py(times_ns: np.ndarray, vals: np.ndarray, window_ns: int):
@@ -98,13 +106,9 @@ def mavg_rates(
         row["rate"] = [n / window_sec]
         return pd.DataFrame(row)
 
-    # Exact integer nanoseconds (micros * 1000): float seconds * 1e9 loses
-    # the low ~8 bits at 2024-era epochs and would desync from any oracle.
     prepped = df.select(
         *key_cols,
-        (F.unix_micros(F.col(ts_col).cast("timestamp")) * F.lit(1000)).alias(
-            "_ts_ns"
-        ),
+        ts_to_ns(ts_col).alias("_ts_ns"),
         F.col(val_col).cast("double").alias("_val"),
     )
 

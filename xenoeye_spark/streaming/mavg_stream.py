@@ -9,7 +9,9 @@ Reference semantics reproduced (SURVEY.md §2.9):
   ``back2norm_time`` grace (monit-objects-mavg-act.c:342-444): the alert
   ends only after the rate has stayed below the limit for the grace period.
 - silent keys decay synthetically between batches (act:391-397): the state
-  carries (N, t_prev) so the next batch's first event applies the decay.
+  carries (N, t_prev) so the next batch's first event applies the decay,
+  and the watch reads an alarmed key that has no rows at the key's own
+  event clock moved on by the wall time since its last batch.
 
 Event ordering: the recurrence is order-sensitive, so each key's rows are
 sorted by timestamp before replay. Spark shuffles each micro-batch by the
@@ -36,16 +38,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from xenoeye_spark.operators.mavg import ts_to_ns
+
 # alert states (monit-objects.h:196-202)
 S_NONE, S_NEW, S_UPDATE, S_ALMOST_GONE, S_GONE = (
     "NONE", "NEW", "UPDATE", "ALMOST_GONE", "GONE",
 )
 
-# Per-key limits as a closure dict ride the pickled task binary — fine
-# to ~1e6 keys (SURVEY §7.3), pathological past it (the dict is
-# re-shipped per task, not once per executor). Beyond the bound the
-# limits must arrive as a DataFrame joined map-side into the flow rows
-# (``limits_df``), which scales like any equi-join.
+# Per-key limits are one closure dict built from the limits CSV
+# (monit-objects-mavg-limfile.c: one trie per limit level). It rides the
+# pickled task binary — fine to ~1e6 keys (SURVEY §7.3), pathological
+# past it (the dict is re-shipped per task, not once per executor), so
+# a bigger dict is refused when the stream is built.
 LIMITS_DICT_MAX = 1_000_000
 
 
@@ -59,6 +63,44 @@ def ewma_step(n: float, t_prev: int | None, t: int, v: float, window_ns: int):
     return n - (dt / window_ns) * n + float(v)
 
 
+def alarm_step(
+    alarm: str,
+    below_since: int | None,
+    first_seen: int,
+    n: float,
+    t: int,
+    key: tuple,
+    limit: float,
+    window_sec: int,
+    window_ns: int,
+    back2norm_ns: int,
+    under: bool,
+) -> tuple[str, int | None, tuple | None]:
+    """The alarm state machine (monit-objects-mavg-act.c:342-444): one
+    transition for the key's value ``n`` read at event time ``t``.
+    replay_rows calls it after every flow, the silent walk with the
+    decayed value of a key that had no rows. Returns (alarm,
+    below_since, event or None)."""
+    rate = n / window_sec
+    breach = (rate < limit) if under else (rate >= limit)
+    if under and t - first_seen < window_ns:
+        breach = False  # grace: first window after start (under.c:298-303)
+    if breach:
+        if alarm == S_NONE:
+            return S_NEW, None, (*key, S_NEW, rate, limit, t)
+        if alarm == S_ALMOST_GONE:
+            return S_UPDATE, None, None  # dipped but came back
+        return alarm, None, None
+    if alarm in (S_NEW, S_UPDATE):
+        return S_ALMOST_GONE, t, None
+    if (
+        alarm == S_ALMOST_GONE and below_since is not None
+        and t - below_since >= back2norm_ns
+    ):
+        return S_NONE, None, (*key, S_GONE, rate, limit, t)
+    return alarm, below_since, None
+
+
 def replay_rows(
     st: tuple,
     ts_arr,
@@ -70,8 +112,8 @@ def replay_rows(
     back2norm_ns: int,
     under: bool,
 ) -> tuple[tuple, list[tuple]]:
-    """Shared per-key replay: EWMA decay + alarm state machine over rows
-    already sorted by time. ``st`` = (n, t_prev, alarm, below_since,
+    """Shared per-key replay: EWMA decay + alarm_step over rows already
+    sorted by time. ``st`` = (n, t_prev, alarm, below_since,
     first_seen); returns (new_st, events)."""
     n, t_prev, alarm, below_since, first_seen = st
     events: list[tuple] = []
@@ -81,78 +123,16 @@ def replay_rows(
             first_seen = t
         n = ewma_step(n, t_prev, t, float(v), window_ns)
         t_prev = t
-        rate = n / window_sec
-        breach = (rate < limit) if under else (rate >= limit)
-        if under and t - first_seen < window_ns:
-            breach = False  # grace: first window after start (under.c:298-303)
-        if breach:
-            below_since = None
-            if alarm == S_NONE:
-                alarm = S_NEW
-                events.append((*key, S_NEW, rate, limit, t))
-            elif alarm == S_ALMOST_GONE:
-                alarm = S_UPDATE  # dipped but came back
-        else:
-            if alarm in (S_NEW, S_UPDATE):
-                alarm = S_ALMOST_GONE
-                below_since = t
-            elif alarm == S_ALMOST_GONE and below_since is not None:
-                if t - below_since >= back2norm_ns:
-                    alarm = S_NONE
-                    below_since = None
-                    events.append((*key, S_GONE, rate, limit, t))
+        alarm, below_since, ev = alarm_step(
+            alarm, below_since, first_seen, n, t, key, limit,
+            window_sec, window_ns, back2norm_ns, under,
+        )
+        if ev is not None:
+            events.append(ev)
     # steady-state notification refresh (act:427-433)
     if alarm in (S_NEW, S_UPDATE) and not events:
         events.append((*key, S_UPDATE, n / window_sec, limit, t_prev))
     return (float(n), t_prev, alarm, below_since, first_seen), events
-
-
-def silent_transition(
-    st: tuple,
-    now_ns: int,
-    key: tuple,
-    limit: float,
-    window_sec: int,
-    window_ns: int,
-    back2norm_ns: int,
-    under: bool,
-) -> tuple[tuple, list[tuple], bool]:
-    """Alarm bookkeeping for a key with NO rows since ``st``: apply the
-    synthetic decay (value keeps decaying while silent, act:391-397) and
-    walk the state machine at ``now_ns``. Returns (new_st, events,
-    keep_watching). The reference's act thread does this at ~10Hz for
-    every alarmed key (monit-objects-mavg-act.c:342-444)."""
-    n, t_prev, alarm, below_since, first_seen = st
-    if alarm == S_NONE or t_prev is None:
-        return st, [], False
-    dt = now_ns - t_prev
-    n_dec = 0.0 if dt >= window_ns else n - (dt / window_ns) * n
-    rate = n_dec / window_sec
-    breach = (rate < limit) if under else (rate >= limit)
-    if breach:
-        return st, [], True
-    if below_since is None:
-        return (n, t_prev, S_ALMOST_GONE, now_ns, first_seen), [], True
-    if now_ns - below_since >= back2norm_ns:
-        return (
-            (n, t_prev, S_NONE, None, first_seen),
-            [(*key, S_GONE, rate, limit, now_ns)],
-            False,
-        )
-    return (n, t_prev, S_ALMOST_GONE, below_since, first_seen), [], True
-
-
-def resolve_limit(
-    joined: float | None, stored: float | None, dict_limit: float
-) -> float:
-    """ONE definition of the per-key limit precedence (SURVEY §7.3):
-    map-side-joined value > limit persisted in state > closure dict /
-    default."""
-    if joined is not None:
-        return float(joined)
-    if stored is not None:
-        return stored
-    return dict_limit
 
 
 def _time_now_ns() -> int:
@@ -177,9 +157,9 @@ def _time_now_ns() -> int:
 # State per bucket is O(keys_in_bucket) (~60 bytes per entry pickled);
 # hash bucketing keeps it even. The silent-watch timeout walks the
 # bucket's alarmed keys exactly like the reference's act thread walks
-# its tries, and idle keys age out at each tick (try_reset_db parity,
-# purge granularity = the tick period instead of an exact per-key
-# timeout).
+# its tries, and keys idle for a window age out at each tick
+# (try_reset_db parity, purge granularity = the tick period instead of
+# an exact per-key timeout).
 # ---------------------------------------------------------------------------
 
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
@@ -223,31 +203,38 @@ def make_mavg_bucket_fn(
     back2norm_sec: int = 30,
     thresholds: dict[tuple, float] | None = None,
     under: bool = False,
-    idle_timeout_sec: int | None = None,
     silent_watch: bool = True,
 ):
     """applyInPandasWithState fn over BUCKET groups: state is one pickled
     (last_walk_ns, {key_tuple: (n, t_prev, alarm, below_since,
     first_seen, limit, seen_ns)}) per bucket; each key's rows replay
-    through replay_rows in time order.
-
-    Idle purge clock: ``seen_ns`` is the wall clock of the batch that
-    last carried rows for the key, and a key ages out once the wall
-    clock is ``idle_timeout_sec`` past it. ``t_prev`` is event time,
-    which lags the wall clock on a backlog, a replayed spool or an
-    exporter with a late clock; comparing the two would purge (and
-    restart the EWMA of) every key absent from a batch. Entries saved
-    without ``seen_ns`` age from the blob's ``last_walk_ns``.
+    through replay_rows in time order. ``limit`` is the one the key last
+    ran with (the thresholds dict is the source) and ``seen_ns`` the wall
+    clock of the last batch that carried rows for it.
 
     Silent keys (r9): a GROUP timeout fires only when the BUCKET gets no
     data for the whole interval — with thousands of keys per bucket that
     is never, so the hasTimedOut branch alone would strand alarmed keys
-    that go silent (no GONE) and never age idle keys out. The data path
-    therefore also walks the table entries that received no rows this
-    batch (silent_transition for alarmed keys, idle-TTL purge for stale
-    ones), gated to one walk per watch tick by ``last_walk_ns`` stored
-    in the blob — the same cadence the reference's act thread walks its
-    tries at (monit-objects-mavg-act.c:342-444)."""
+    that go silent (no GONE) and never age idle keys out. With
+    ``silent_watch`` on, the data path therefore also walks the table
+    entries that received no rows this batch, gated to one walk per
+    watch tick by ``last_walk_ns`` stored in the blob — the same cadence
+    the reference's act thread walks its tries at
+    (monit-objects-mavg-act.c:342-444):
+
+    - an alarmed key takes one alarm_step at its event clock moved on by
+      the wall time since its last batch (``t_prev + now - seen_ns``),
+      so decay and the back2norm grace compare event time with event
+      time even when flows are stamped far from the wall clock (a
+      backlog, a replayed spool, an exporter with a skewed clock);
+    - a key with no alarm at the walk and no rows for one window of
+      wall time ages out (try_reset_db parity); without the reset it
+      would restart at V on its next flow anyway (ewma_step's dt >= T).
+      A key whose alarm ends in this walk leaves at the next one.
+
+    Entries saved without ``seen_ns`` walk at the wall clock and age from
+    the blob's ``last_walk_ns``. With the watch off nothing walks and no
+    timer is armed (bounded drains)."""
     import pickle
 
     window_ns = int(window_sec * 1e9)
@@ -257,14 +244,7 @@ def make_mavg_bucket_fn(
     # the actual crossing. A quarter-period poll capped at 5s bounds the
     # extra GONE latency at ~25% while timer fires stay = active alarms.
     watch_ms = int(max(min(back2norm_sec / 4, 5), 1) * 1000)
-    idle_ns = None if idle_timeout_sec is None else int(idle_timeout_sec * 1e9)
-    if silent_watch:
-        walk_gate_ns = watch_ms * 1_000_000
-    elif idle_ns is not None:
-        # purge granularity = the tick period (try_reset_db parity)
-        walk_gate_ns = int(max(min(idle_timeout_sec / 4, 5), 1) * 1e9)
-    else:
-        walk_gate_ns = None
+    watch_ns = watch_ms * 1_000_000
     thr = thresholds or {}
 
     def _load_blob(raw: bytes) -> tuple[int, dict]:
@@ -274,42 +254,45 @@ def make_mavg_bucket_fn(
         return obj
 
     def _save(state: GroupState, last_walk: int, table: dict) -> None:
-        """Persist the table and arm the timeout: the alarmed-key
-        act-thread watch wins, otherwise the idle-compaction TTL."""
+        """Persist the table; with the watch on, arm the alarmed-key
+        tick, or the idle TTL (one window) for a bucket with no alarm."""
         if not table:
             state.remove()
             return
         state.update((pickle.dumps((last_walk, table)),))
-        if silent_watch and any(st[2] != S_NONE for st in table.values()):
-            state.setTimeoutDuration(watch_ms)
-        elif idle_timeout_sec is not None:
-            state.setTimeoutDuration(idle_timeout_sec * 1000)
+        if silent_watch:
+            alarmed = any(st[2] != S_NONE for st in table.values())
+            state.setTimeoutDuration(
+                watch_ms if alarmed else window_ns // 1_000_000
+            )
 
     def _walk_silent(
         table: dict, seen: set, now_ns: int, last_walk: int,
         events: list[tuple],
     ) -> None:
-        """silent_transition + idle purge for every key WITHOUT rows this
-        tick; mutates ``table`` in place, appends to ``events``."""
+        """alarm_step + idle purge for every key WITHOUT rows this tick;
+        mutates ``table`` in place, appends to ``events``."""
         drop: list[tuple] = []
         for k, st in table.items():
             if k in seen:
                 continue
-            limit = resolve_limit(None, st[5], thr.get(k, threshold))
-            if silent_watch and st[2] != S_NONE:
-                core, ev, _watch = silent_transition(
-                    st[:5], now_ns, k, limit, window_sec, window_ns,
-                    back2norm_ns, under,
-                )
-                events.extend(ev)
-                st = (*core, *st[5:])
-                table[k] = st
-            if (
-                idle_ns is not None
-                and st[2] == S_NONE
-                and now_ns - (st[6] if len(st) > 6 else last_walk) >= idle_ns
-            ):
-                drop.append(k)  # try_reset_db: age the idle key out
+            n, t_prev, alarm, below_since, first_seen = st[:5]
+            seen_ns = st[6] if len(st) > 6 else None
+            if alarm == S_NONE:
+                idle_since = last_walk if seen_ns is None else seen_ns
+                if now_ns - idle_since >= window_ns:
+                    drop.append(k)  # try_reset_db: age the idle key out
+                continue
+            t = now_ns if seen_ns is None else t_prev + now_ns - seen_ns
+            alarm, below_since, ev = alarm_step(
+                alarm, below_since, first_seen,
+                ewma_step(n, t_prev, t, 0.0, window_ns), t, k,
+                thr.get(k, threshold), window_sec, window_ns,
+                back2norm_ns, under,
+            )
+            if ev is not None:
+                events.append(ev)
+            table[k] = (n, t_prev, alarm, below_since, *st[4:])
         for k in drop:
             del table[k]
 
@@ -349,25 +332,14 @@ def make_mavg_bucket_fn(
         karrs = [rows[kc].to_numpy() for kc in key_cols]
         ts_arr = rows["_ts_ns"].to_numpy()
         val_arr = rows["_val"].to_numpy()
-        lim_arr = (
-            rows["_limit"].to_numpy(dtype=float)
-            if "_limit" in rows.columns else None
-        )
 
         now_ns = int(_time_now_ns())
         seen: set = set()
         for s, e in zip(starts, ends):
             k = _native_key(tuple(arr[s] for arr in karrs))
             seen.add(k)
-            st = table.get(k, (0.0, None, S_NONE, None, None, None))
-            if lim_arr is None:
-                limit = thr.get(k, threshold)
-            else:
-                ok = lim_arr[s:e][~np.isnan(lim_arr[s:e])]
-                limit = resolve_limit(
-                    float(ok[0]) if len(ok) else None, st[5],
-                    thr.get(k, threshold),
-                )
+            st = table.get(k, (0.0, None, S_NONE, None, None))
+            limit = thr.get(k, threshold)
             core, kev = replay_rows(
                 st[:5], ts_arr[s:e], val_arr[s:e], k, limit,
                 window_sec, window_ns, back2norm_ns, under,
@@ -376,7 +348,7 @@ def make_mavg_bucket_fn(
             events.extend(kev)
         # data-path silent walk: a busy bucket never times out as a
         # GROUP, so this is where its silent keys transition/age out
-        if walk_gate_ns is not None and now_ns - last_walk >= walk_gate_ns:
+        if silent_watch and now_ns - last_walk >= watch_ns:
             _walk_silent(table, seen, now_ns, last_walk, events)
             last_walk = now_ns
         _save(state, last_walk, table)
@@ -384,29 +356,6 @@ def make_mavg_bucket_fn(
             yield pd.DataFrame(events, columns=cols)
 
     return fn
-
-
-def _validated_limits(
-    limits_df: DataFrame, key_cols: list[str], limit_col: str, out_col: str
-) -> DataFrame:
-    """Project the limits table for the map-side join, refusing
-    duplicate keys: a key appearing twice would MULTIPLY its flow rows
-    through the left join and double-count every flow in the EWMA —
-    silent false alarms, not an error. limits_df is static and
-    dimension-sized, so the distinctness check is two tiny driver-side
-    jobs at stream-build time."""
-    lim = limits_df.select(
-        *key_cols, F.col(limit_col).cast("double").alias(out_col)
-    )
-    n = lim.count()
-    nd = lim.select(*key_cols).distinct().count()
-    if n != nd:
-        raise ValueError(
-            f"limits_df has {n - nd} duplicate key row(s) over "
-            f"{key_cols}; a duplicated key would multiply its flow "
-            "rows through the limit join — deduplicate it first"
-        )
-    return lim
 
 
 def mavg_alert_stream(
@@ -419,44 +368,37 @@ def mavg_alert_stream(
     ts_col: str = "ts",
     thresholds: dict[tuple, float] | None = None,
     under: bool = False,
-    idle_timeout_sec: int | None = None,
     silent_watch: bool = True,
-    limits_df: DataFrame | None = None,
-    limit_col: str = "limit",
     buckets: int | None = None,
 ) -> DataFrame:
     """Wire the stateful fn onto a (streaming or batch-test) DataFrame.
 
     Output stream: key cols + event (NEW/UPDATE/GONE) + rate + threshold +
-    ts_ns. Feed to an alert sink / foreachBatch action runner
-    (monit-objects-mavg-act.c).
+    ts_ns (exact event-time nanoseconds, ``ts_to_ns``). Feed to an alert
+    sink / foreachBatch action runner (monit-objects-mavg-act.c).
 
-    Per-key limits, two tiers (SURVEY §7.3):
-    - ``thresholds`` dict — rides the pickled closure; refused past
-      LIMITS_DICT_MAX (~1e6) keys because the dict re-ships per task.
-    - ``limits_df`` (key cols + ``limit_col``) — joined map-side into
-      the flow rows before the state shuffle; scales like any equi-join
-      (Catalyst broadcasts it while small, shuffles it when not). The
-      resolved limit is persisted in state so silent-key walks keep
-      using it.
+    Per-key limits: the ``thresholds`` dict (the limits CSV, keyed by the
+    typed key tuple; ``threshold`` for keys absent from it). It rides the
+    pickled closure, so a dict past LIMITS_DICT_MAX (~1e6) keys is
+    refused.
 
-    ``silent_watch`` (default on) arms a processing-time timeout for every
-    bucket holding an alarmed key so back-to-normal fires even when the
-    key goes silent — the reference's act-thread behavior.
-    ``idle_timeout_sec`` ages a key out of its bucket once it has had no
-    rows for that long by the wall clock (try_reset_db parity), and arms
-    the same timeout for buckets that go quiet. Note for availableNow
-    runs: armed timeouts keep the query alive, so bounded drains should
-    either pass silent_watch=False and no idle_timeout_sec, or stop()
-    after a short awaitTermination.
+    ``silent_watch`` (default on) walks every bucket's keys that had no
+    rows on a processing-time tick, so back-to-normal fires even when an
+    alarmed key goes silent — the reference's act-thread behavior — and
+    ages out a key with no alarm once it has had no rows for one window
+    of wall time (try_reset_db parity); see make_mavg_bucket_fn for the
+    walk's clock. Off, no timer is armed and state is never compacted:
+    that is the mode for bounded drains, because armed timeouts keep an
+    availableNow query scheduling batches (the alternative is to stop()
+    after a short awaitTermination).
 
     ``buckets``: the state op groups by ``hash(key) %% buckets``, holding
     one pickled {key: state} dict per bucket — the reference's
     per-thread-trie layout (see the bucketed-state section comment).
     ``None`` means BUCKETS_PER_CORE x the session's default parallelism.
     Per-key events are those of a per-key time-ordered replay; the
-    trades are idle-key purge granularity (the watch/TTL tick instead of
-    an exact per-key timeout) and bucket-level state rewrite per batch
+    trades are idle-key purge granularity (the watch tick instead of an
+    exact per-key timeout) and bucket-level state rewrite per batch
     (any active key rewrites its bucket's blob — size buckets so a blob
     is ~thousands of keys). State-store partition count still bounds
     parallelism downstream.
@@ -477,8 +419,8 @@ def mavg_alert_stream(
     if thresholds is not None and len(thresholds) > LIMITS_DICT_MAX:
         raise ValueError(
             f"thresholds dict has {len(thresholds)} keys, past the "
-            f"{LIMITS_DICT_MAX} closure-shipping bound (SURVEY §7.3); "
-            "pass the limits as limits_df for a map-side join"
+            f"{LIMITS_DICT_MAX} bound: the dict rides every task's "
+            "pickled closure (SURVEY §7.3)"
         )
     if buckets is None:
         buckets = BUCKETS_PER_CORE * max(
@@ -488,24 +430,17 @@ def mavg_alert_stream(
         raise ValueError(f"buckets must be >= 1: {buckets}")
     prepped = flows.select(
         *key_cols,
-        (F.col(ts_col).cast("timestamp").cast("double") * F.lit(1e9))
-        .cast("long").alias("_ts_ns"),
+        ts_to_ns(ts_col).alias("_ts_ns"),
         F.col(val_col).cast("double").alias("_val"),
     )
-    if limits_df is not None:
-        lim = _validated_limits(limits_df, key_cols, limit_col, "_limit")
-        prepped = prepped.join(lim, key_cols, "left")
     fn = make_mavg_bucket_fn(
         key_cols, window_sec, threshold, back2norm_sec, thresholds,
-        under, idle_timeout_sec, silent_watch,
+        under, silent_watch,
     )
-    # timeouts serve the alarmed-key watch (silent keys must reach GONE,
-    # act-thread parity) and idle-state compaction. Request the timeout
-    # conf only when one of them is in play: a ProcessingTimeTimeout conf
-    # keeps availableNow/bounded runs scheduling batches even with no
-    # armed timers, which would make batch-drain usage hang to its
-    # awaitTermination bound.
-    use_timeouts = silent_watch or idle_timeout_sec is not None
+    # request the timeout conf only with the watch on: a
+    # ProcessingTimeTimeout conf keeps availableNow/bounded runs
+    # scheduling batches even with no armed timers, which would make
+    # batch-drain usage hang to its awaitTermination bound
     return (
         prepped.withColumn(
             "_bkt", F.pmod(F.xxhash64(*key_cols), F.lit(buckets))
@@ -518,7 +453,7 @@ def mavg_alert_stream(
             outputMode="append",
             timeoutConf=(
                 GroupStateTimeout.ProcessingTimeTimeout
-                if use_timeouts
+                if silent_watch
                 else GroupStateTimeout.NoTimeout
             ),
         )
